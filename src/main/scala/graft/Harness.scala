@@ -13,6 +13,16 @@ object Harness {
     * `local[SPARK_GRAFT_CPUS]` (default 32), shuffle partitions =
     * cpus (NOT the 200 default — see SURVEY §9 config row), AQE with
     * small-partition coalescing, UTC, no UI.
+    *
+    * Per-session artifact isolation is OFF. Spark 4.1 keys its codegen
+    * class cache on (context classloader, code), and with isolation on
+    * every session clone — one per Structured Streaming drain — gets a
+    * fresh executor classloader, so each drain recompiled all of its
+    * generated classes (14 Janino compiles per q_stream_window drain).
+    * graft never adds per-session jars, files or archives, so isolation
+    * guards nothing here; with it off a drain's cloned session shares
+    * the classloader and its classes come from the cache. The setting
+    * only takes effect at session creation, hence the builder.
     * @param warm run one tiny job to absorb session/codegen/committer
     *   init, so timed queries measure the queries (Bench-style mains) */
   def session(warm: Boolean = false): SparkSession = {
@@ -25,6 +35,7 @@ object Harness {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // opt into RELIABLE checkpoints for the iterative kernels from the

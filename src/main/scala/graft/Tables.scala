@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Testdata loaders (see TESTDATA.md).
   *
@@ -76,24 +83,76 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
     if (name == "events") {
-      // events.ts has shipped as parquet INT64 TIMESTAMP(NANOS) in some
-      // testdata generations (Spark refuses to read nanos natively) and as
-      // plain TIMESTAMP(MICROS) [isAdjustedToUTC=false → TIMESTAMP_NTZ] in
-      // others. Normalize both to a session-TZ (UTC) TimestampType so every
-      // downstream unix_micros/window expression sees one type, matching
-      // DuckDB's TIMESTAMP read of the same file.
+      // events.ts may be INT64 TIMESTAMP(NANOS), which Spark reads only
+      // as a raw long under this conf; normalizeTs handles every shape
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      raw.schema("ts").dataType match {
-        case LongType => // raw nanos → truncate to micros (DuckDB ns→µs behavior)
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType => // exact under the UTC session timezone
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case TimestampType => raw
-        case other => sys.error(s"unexpected events.ts type: $other")
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+      normalizeTs(parquet(spark, s"$sfDir/$name.parquet"))
+    } else parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** Normalize an events frame's `ts` to a session-TZ (UTC) TimestampType
+    * so every downstream unix_micros/window expression sees one type,
+    * matching DuckDB's TIMESTAMP read of the same file. events.ts has
+    * shipped as parquet INT64 TIMESTAMP(NANOS) in some testdata
+    * generations (read as a raw long under nanosAsLong) and as plain
+    * TIMESTAMP(MICROS) [isAdjustedToUTC=false → TIMESTAMP_NTZ] in
+    * others. Works on batch and streaming frames alike. */
+  def normalizeTs(raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    raw.schema("ts").dataType match {
+      case LongType => // raw nanos → truncate to micros (DuckDB ns→µs behavior)
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => // exact under the UTC session timezone
+        raw.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampType => raw
+      case other => sys.error(s"unexpected events.ts type: $other")
+    }
+  }
+
+  /** `spark.read.parquet(path)` without the schema-inference job.
+    *
+    * A schema-less parquet read runs Spark's schema merge as a 1-task
+    * job (~80 ms with its driver gaps) that opens ONE footer — the
+    * first data file by path when schema merging is off. This reads
+    * that same footer on the driver through Spark's own converter
+    * (keeping the Spark row-metadata schema and the session's
+    * nanosAsLong / NTZ / binary-as-string settings) and hands the
+    * schema to the reader, which then starts no job. Files are listed
+    * through the Hadoop FileSystem, so globs and cluster paths work.
+    *
+    * For flat layouts only: a path with `k=v` partition directories,
+    * or with no data file at all, falls back to Spark's own inference
+    * (and its partition discovery or its error). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // InMemoryFileIndex's rule: `_`/`.` names are metadata, not data
+    def hidden(p: Path) = {
+      val n = p.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }
+    def entries(st: FileStatus): Seq[FileStatus] =
+      st +: (if (!st.isDirectory) Nil
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(f => hidden(f.getPath)).flatMap(entries))
+    val (dirs, files) = Option(fs.globStatus(root)).map(_.toSeq)
+      .getOrElse(Nil).flatMap(entries).partition(_.isDirectory)
+    if (dirs.exists(_.getPath.getName.contains("="))) None // partitioned
+    else files.minByOption(_.getPath.toString).map { first =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(first, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
   }
 }

@@ -62,11 +62,13 @@ object StreamingGate extends graft.QueryPack {
     base.toString
   }
 
+  /** Shuffle (and so state-store) partitions of every drain. */
+  private val StatePartitions = 8
+
   /** Run a streaming query to completion and read back its sink dir.
     *
-    * State parallelism is pinned per drain via
-    * `graft.stream.state.partitions` (default 8): every stateful
-    * operator keeps one state store per shuffle partition (a
+    * State parallelism is pinned per drain to [[StatePartitions]]: every
+    * stateful operator keeps one state store per shuffle partition (a
     * stream-stream join keeps FOUR — keyToNumValues +
     * keyWithIndexToValue per side) and every micro-batch pays a
     * per-store open/commit floor, so at the session's 32 partitions a
@@ -82,17 +84,24 @@ object StreamingGate extends graft.QueryPack {
     * are partition-count-invariant — the oracles and the streaming
     * specs hold at any setting.
     *
-    * Fixed-cost floor (r8 measurement): the residual ~0.7-2.4 s per
-    * drain is the trigger lifecycle itself (stream planning, file
-    * index, the data batch, the watermark-finalize batch, sink
-    * read-back — 4-6 Spark jobs per drain), NOT storage. All three
-    * candidate knobs were measured on the 4 slowest drains at sf0.1
-    * and refuted: state partitions 8→4 gains ~5% (store open/commit
-    * is already amortized at 8), the RocksDB provider is ~15% SLOWER
-    * at these state sizes (native store open per batch dominates its
-    * benefit), and tmpfs-backed checkpoint/state/sink dirs change
-    * nothing (the page cache already absorbs the I/O). At deployment
-    * scale the floor amortizes: it is per-trigger, not per-row. */
+    * Fixed-cost floor: the residual ~0.7-2.4 s per drain (r8, sf0.1)
+    * was NOT storage. All three storage knobs were measured on the 4
+    * slowest drains and refuted: state partitions 8→4 gains ~5% (store
+    * open/commit is already amortized at 8), the RocksDB provider is
+    * ~15% SLOWER at these state sizes (native store open per batch
+    * dominates its benefit), and tmpfs-backed checkpoint/state/sink
+    * dirs change nothing (the page cache already absorbs the I/O).
+    * Part of the floor was per-drain codegen: each drain runs on a
+    * cloned session, which under per-session artifact isolation got a
+    * fresh classloader and so missed the codegen cache and recompiled
+    * every generated class (14 Janino compiles per q_stream_window
+    * drain). Harness.session turns the isolation off and a repeated
+    * drain now compiles nothing (StreamingSpec asserts it). Sink and
+    * state readbacks go through [[graft.Tables.parquet]], so they no
+    * longer run a schema-inference job each. What remains is the
+    * trigger lifecycle itself: stream planning, file index, the data
+    * batch, the watermark-finalize batch and the sink read-back. At
+    * deployment scale it amortizes: it is per-trigger, not per-row. */
   private def drain(s: SparkSession, stream: DataFrame,
       mode: String)(sink: (DataFrame, Long) => Unit): Unit =
     drainImpl(s, stream, mode, None)(sink)
@@ -108,9 +117,8 @@ object StreamingGate extends graft.QueryPack {
   private def drainImpl(s: SparkSession, stream: DataFrame,
       mode: String, ckpt: Option[String])(
       sink: (DataFrame, Long) => Unit): Unit = {
-    val parts = sys.props.getOrElse("graft.stream.state.partitions", "8")
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     try {
       val w0 = stream.writeStream
         .outputMode(mode)
@@ -141,7 +149,7 @@ object StreamingGate extends graft.QueryPack {
       : DataFrame = {
     recoverState(state)
     if (new java.io.File(state).exists())
-      s.read.parquet(state)
+      Tables.parquet(s, state)
         .select(cols.map { case (from, to, _) => col(from).as(to) }: _*)
     else s.createDataFrame(new java.util.ArrayList[Row](),
       org.apache.spark.sql.types.StructType(cols.map { case (_, to, t) =>
@@ -187,7 +195,7 @@ object StreamingGate extends graft.QueryPack {
     val CTX = Extras.PACK_CTX
     val toks = Extras.seqPackToks(batch)
     val prior =
-      if (new java.io.File(state).exists()) Some(s.read.parquet(state))
+      if (new java.io.File(state).exists()) Some(Tables.parquet(s, state))
       else None
     val off = prior.map(_.select(col("source"), col("cum_tok").as("off")))
       .getOrElse(toks.limit(0).select(col("source"), col("tok").as("off")))
@@ -301,7 +309,7 @@ object StreamingGate extends graft.QueryPack {
       count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bsk).agg(
           expr(s"kll_merge_agg_bigint(sk, $k) FILTER (WHERE sk IS NOT NULL)")
             .as("sk"),
@@ -332,7 +340,7 @@ object StreamingGate extends graft.QueryPack {
     // parquet reads per batch.
     val prior: Option[DataFrame] =
       if (exists)
-        Some(batch.sparkSession.read.parquet(state).localCheckpoint())
+        Some(Tables.parquet(batch.sparkSession, state).localCheckpoint())
       else None
     val replayed = prior.exists { p =>
       p.agg(max(col("last_id"))).collect()(0).getLong(0) >= id
@@ -373,7 +381,7 @@ object StreamingGate extends graft.QueryPack {
       count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bsk).agg(
           expr(s"hll_union_agg(sk, false) FILTER (WHERE sk IS NOT NULL)")
             .as("sk"),
@@ -388,7 +396,7 @@ object StreamingGate extends graft.QueryPack {
       .agg(max(col("us")).as("last_us"), count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bc)
           .groupBy(col("event_type"))
           .agg(max(col("last_us")).as("last_us"), sum(col("n")).as("n"))
@@ -411,7 +419,7 @@ object StreamingGate extends graft.QueryPack {
         count(lit(1)).as("n_rows"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bc)
           .groupBy(col("zcell"))
           .agg(min(col("min_a")).as("min_a"), max(col("max_a")).as("max_a"),
@@ -464,7 +472,7 @@ object StreamingGate extends graft.QueryPack {
     val bg = Dedup.gramSplits(batch)
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bg).distinct()
       } else bg
     swapState(merged, state)
@@ -493,7 +501,7 @@ object StreamingGate extends graft.QueryPack {
       .select(col("split"), col("sk"), col("n_docs"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bstate)
           .groupBy(col("split"))
           .agg(
@@ -524,7 +532,7 @@ object StreamingGate extends graft.QueryPack {
         terms.map(t => coalesce(col(s"dfl_$t"), lit(0L)).as(s"dfl_$t")): _*)
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         val aggs = sum(col("sdl")).as("sdl") +:
           terms.map(t => sum(col(s"dfl_$t")).as(s"dfl_$t"))
         prior.unionByName(bs).agg(sum(col("nd")).as("nd"), aggs: _*)
@@ -544,7 +552,7 @@ object StreamingGate extends graft.QueryPack {
     val bc = Similarity.dimMoments(Similarity.dimCells(batch))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bc)
           .groupBy(col("dim"))
           .agg(sum(col("n")).as("n"),
@@ -564,7 +572,7 @@ object StreamingGate extends graft.QueryPack {
       .agg(count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bc)
           .groupBy(col("key"), col("jtype"))
           .agg(sum(col("n")).as("n"))
@@ -578,7 +586,7 @@ object StreamingGate extends graft.QueryPack {
       .agg(count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = batch.sparkSession.read.parquet(state)
+        val prior = Tables.parquet(batch.sparkSession, state)
         prior.unionByName(bc)
           .groupBy(col("event_type"), col("bin"))
           .agg(sum(col("n")).as("n"))
@@ -617,7 +625,7 @@ object StreamingGate extends graft.QueryPack {
       .groupBy(col("reason")).agg(count(lit(1)).as("n"))
     val merged =
       if (new java.io.File(state).exists()) {
-        val prior = s.read.parquet(state)
+        val prior = Tables.parquet(s, state)
         prior.unionByName(bc)
           .groupBy(col("reason")).agg(sum(col("n")).as("n"))
       } else bc
@@ -650,7 +658,7 @@ object StreamingGate extends graft.QueryPack {
         (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldMediaGate(state))
@@ -684,7 +692,7 @@ object StreamingGate extends graft.QueryPack {
       drain(s, enriched, "append") { (batch, _) =>
         batch.write.mode("append").parquet(out)
       }
-      s.read.parquet(out).orderBy(col("event_id"))
+      Tables.parquet(s, out).orderBy(col("event_id"))
     }),
 
     // ST1/ST4 + A1 shape: event-time tumbling-window aggregation run AS
@@ -699,7 +707,7 @@ object StreamingGate extends graft.QueryPack {
         "complete") { (batch, _) =>
         batch.write.mode("overwrite").parquet(out)
       }
-      s.read.parquet(out).orderBy(col("window_start_us"), col("event_type"))
+      Tables.parquet(s, out).orderBy(col("window_start_us"), col("event_type"))
     }),
 
     // ST5/K1/J8: the reference's whole incremental loop — scrape batch →
@@ -775,7 +783,7 @@ object StreamingGate extends graft.QueryPack {
         s"q_stream_dedup expects a single-file replay (one micro-batch); " +
           s"saw ${nonEmptyBatches.get()} non-empty batches — watermark-exact " +
           "dedup is no longer guaranteed under this data layout")
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"))
         .orderBy(col("event_id"))
@@ -828,7 +836,7 @@ object StreamingGate extends graft.QueryPack {
       writeFile(ev.filter(col("event_id") % 2 === 1)
         .unionByName(ev.filter(col("event_id") % 4 === 0)), "f2", t0 + 2000)
       writeFile(ev.filter(col("event_id") % 8 === 1), "f3", t0 + 4000)
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       def stream() = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
         .dropDuplicates("event_id")
@@ -849,7 +857,7 @@ object StreamingGate extends graft.QueryPack {
         "q_stream_restart: the first drain must die on batch 1 — " +
           "the replay no longer produces multiple micro-batches")
       drainFrom(s, stream(), "append", ckpt)(sink(false))
-      s.read.parquet(out + "/b*")
+      Tables.parquet(s, out + "/b*")
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"))
         .orderBy(col("event_id"))
@@ -883,7 +891,7 @@ object StreamingGate extends graft.QueryPack {
       drain(s, assigned.toDF(), "append") { (batch, _) =>
         batch.write.mode("append").parquet(out)
       }
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
           min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"))
@@ -927,7 +935,7 @@ object StreamingGate extends graft.QueryPack {
       drain(s, joined, "append") { (batch, _) =>
         batch.write.mode("append").parquet(out)
       }
-      s.read.parquet(out).orderBy(col("view_id"), col("buy_id"))
+      Tables.parquet(s, out).orderBy(col("view_id"), col("buy_id"))
     }),
 
     // CONTINUOUS heavy-hitter monitoring: the Misra–Gries summary as
@@ -962,7 +970,7 @@ object StreamingGate extends graft.QueryPack {
         recoverState(state)
         val (prior, pn) =
           if (new java.io.File(state).exists()) {
-            val st = batch.sparkSession.read.parquet(state).collect()
+            val st = Tables.parquet(batch.sparkSession, state).collect()
             (st.map(x => x.getString(0) -> x.getLong(1)).toSeq,
               if (st.isEmpty) 0L else st(0).getLong(2))
           } else (Seq.empty[(String, Long)], 0L)
@@ -980,7 +988,7 @@ object StreamingGate extends graft.QueryPack {
           .toDF("item", "est", "n"), state)
       }
       recoverState(state)
-      val st = s.read.parquet(state)
+      val st = Tables.parquet(s, state)
         .select(col("item"), col("est"), col("n"))
       val exact = Tables(s, d, "events").select(item.as("item"))
         .groupBy(col("item")).agg(count(lit(1)).as("exact_cnt"))
@@ -1019,7 +1027,7 @@ object StreamingGate extends graft.QueryPack {
       // dir) — the monitor reports nothing, it does not throw
       val st =
         if (new java.io.File(state).exists())
-          s.read.parquet(state)
+          Tables.parquet(s, state)
             .select(expr("kll_sketch_get_quantile_bigint(sk, 0.5)").as("med"),
               col("n"))
         else s.range(0).select(lit(null).cast("bigint").as("med"),
@@ -1086,7 +1094,7 @@ object StreamingGate extends graft.QueryPack {
       writeFile(ev.filter(col("event_id") % 3 === 0), "f1", t0)
       writeFile(ev.filter(col("event_id") % 3 === 1), "f2", t0 + 2000)
       writeFile(ev.filter(col("event_id") % 3 === 2), "f3", t0 + 4000)
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       def stream() = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       def sink(dieAtBatch1: Boolean): (DataFrame, Long) => Unit =
@@ -1110,7 +1118,7 @@ object StreamingGate extends graft.QueryPack {
       // sketches into an EMPTY (non-null) KLL buffer, which
       // get_quantile rejects — the CaseWhen short-circuit keeps the
       // empty-stream path from ever evaluating it
-      val st = s.read.parquet(state)
+      val st = Tables.parquet(s, state)
         .select(when(col("n") > 0L,
           expr("kll_sketch_get_quantile_bigint(sk, 0.5)")).as("med"),
           col("n"))
@@ -1152,7 +1160,7 @@ object StreamingGate extends graft.QueryPack {
       recoverState(state)
       val st =
         if (new java.io.File(state).exists())
-          s.read.parquet(state)
+          Tables.parquet(s, state)
             .select(when(col("n") > 0L,
               expr("hll_sketch_estimate(sk)")).as("est"), col("n"))
         else s.range(0).select(lit(null).cast("bigint").as("est"),
@@ -1189,7 +1197,7 @@ object StreamingGate extends graft.QueryPack {
         (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldGramSet(state))
@@ -1227,7 +1235,7 @@ object StreamingGate extends graft.QueryPack {
         (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldBm25Stats(state, terms))
@@ -1273,7 +1281,7 @@ object StreamingGate extends graft.QueryPack {
         (newDocs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (newDocs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (newDocs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
@@ -1281,7 +1289,7 @@ object StreamingGate extends graft.QueryPack {
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
       }
-      s.read.parquet(out + "/b*").orderBy(col("doc_id"))
+      Tables.parquet(s, out + "/b*").orderBy(col("doc_id"))
     }),
 
     // STREAMING TOKENIZER ENCODE — the THIRTIETH oracle-gated drain:
@@ -1318,7 +1326,7 @@ object StreamingGate extends graft.QueryPack {
           (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
           (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
           (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000)))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
@@ -1326,7 +1334,7 @@ object StreamingGate extends graft.QueryPack {
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
       }
-      s.read.parquet(out + "/b*").orderBy(col("doc_id"))
+      Tables.parquet(s, out + "/b*").orderBy(col("doc_id"))
     }),
 
     // STREAMING BPE TOKENIZE — the THIRTY-THIRD oracle-gated drain and
@@ -1356,7 +1364,7 @@ object StreamingGate extends graft.QueryPack {
           (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
           (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
           (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000)))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
@@ -1364,7 +1372,7 @@ object StreamingGate extends graft.QueryPack {
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
       }
-      s.read.parquet(out + "/b*").orderBy(col("doc_id"))
+      Tables.parquet(s, out + "/b*").orderBy(col("doc_id"))
     }),
 
     // STREAMING INDEX DELETION — the THIRTY-FIRST oracle-gated drain
@@ -1401,7 +1409,7 @@ object StreamingGate extends graft.QueryPack {
           "f1", t0),
         () => stageFile(root, src, delIds.filter(col("did") % 18 =!= 4),
           "f2", t0 + 2000)))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       // ADVICE r14: track the last batchId actually committed instead
@@ -1411,13 +1419,13 @@ object StreamingGate extends graft.QueryPack {
       // final state; -1 (no batches) degrades to the pre graph.
       val lastB = new java.util.concurrent.atomic.AtomicLong(-1L)
       drain(s, stream, "append") { (batch, id) =>
-        val cur = s.read.parquet(s"$state/b${id - 1}")
+        val cur = Tables.parquet(s, s"$state/b${id - 1}")
         Similarity.repairStep(nodes, cur, batch.select(col("did")))
           .write.mode("overwrite").parquet(s"$state/b$id")
         lastB.set(math.max(lastB.get(), id))
         ()
       }
-      s.read.parquet(s"$state/b${lastB.get()}")
+      Tables.parquet(s, s"$state/b${lastB.get()}")
         .orderBy(col("src"), col("dst"))
     }),
 
@@ -1454,17 +1462,17 @@ object StreamingGate extends graft.QueryPack {
           t0),
         () => stageFile(root, src, qs.filter(col("qid") % 2 =!= 0), "f2",
           t0 + 2000)))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
-        val idxN = s.read.parquet(s"$root/idx_nodes")
-        val idxG = s.read.parquet(s"$root/idx_g")
+        val idxN = Tables.parquet(s, s"$root/idx_nodes")
+        val idxG = Tables.parquet(s, s"$root/idx_g")
         Similarity.serveTopK(idxN, idxG, batch)
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
       }
-      s.read.parquet(s"$out/b*").orderBy(col("qid"), col("rk"))
+      Tables.parquet(s, s"$out/b*").orderBy(col("qid"), col("rk"))
     }),
 
     // SERVE + MAINTAIN INTERLEAVED — the THIRTY-FOURTH oracle-gated
@@ -1512,12 +1520,12 @@ object StreamingGate extends graft.QueryPack {
         () => stageFile(root, src, qFile("pre"), "f1", t0),
         () => stageFile(root, src, dFile, "f2", t0 + 2000),
         () => stageFile(root, src, qFile("post"), "f3", t0 + 4000)))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
-        val curN = s.read.parquet(s"$state/n${id - 1}")
-        val curG = s.read.parquet(s"$state/g${id - 1}")
+        val curN = Tables.parquet(s, s"$state/n${id - 1}")
+        val curG = Tables.parquet(s, s"$state/g${id - 1}")
         val dels = batch.filter(col("kind") === "d").select(col("did"))
         // deletes apply BEFORE serving within a batch (documented
         // order; under maxFilesPerTrigger=1 a batch is pure anyway)
@@ -1538,8 +1546,8 @@ object StreamingGate extends graft.QueryPack {
         if (!qrows.isEmpty) {
           val ph = qrows.select(col("phase")).first().getString(0)
           Similarity.serveTopK(
-              s.read.parquet(s"$state/n$id"),
-              s.read.parquet(s"$state/g$id"),
+              Tables.parquet(s, s"$state/n$id"),
+              Tables.parquet(s, s"$state/g$id"),
               qrows.drop("phase"))
             .select(lit(ph).as("phase"), col("qid"), col("rk"),
               col("nid"), col("sim"))
@@ -1547,7 +1555,7 @@ object StreamingGate extends graft.QueryPack {
         }
         ()
       }
-      s.read.parquet(s"$out/b*")
+      Tables.parquet(s, s"$out/b*")
         .orderBy(col("phase"), col("qid"), col("rk"))
     }),
 
@@ -1595,7 +1603,7 @@ object StreamingGate extends graft.QueryPack {
           else docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
         (slice, s"f$k", t0 + 2000L * k)
       }: _*)
-      val sch = s.read.parquet(src.getPath + "/f0.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f0.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldSeqPack(state, out))
@@ -1612,7 +1620,7 @@ object StreamingGate extends graft.QueryPack {
           ("o_n_tokens", "n_tokens", LongType)))
         .filter(col("seq_id") >= 0L)
       Extras.seqPackReport(
-        s.read.parquet(out + "/b*").unionByName(flush))
+        Tables.parquet(s, out + "/b*").unionByName(flush))
     }),
 
     // STREAMING MEDIA-IDENTITY ADMISSION — the TWENTY-EIGHTH
@@ -1643,7 +1651,7 @@ object StreamingGate extends graft.QueryPack {
         (newDocs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (newDocs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (newDocs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append") { (batch, id) =>
@@ -1651,7 +1659,7 @@ object StreamingGate extends graft.QueryPack {
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
       }
-      s.read.parquet(out + "/b*").orderBy(col("img_id"))
+      Tables.parquet(s, out + "/b*").orderBy(col("img_id"))
     }),
 
     // STREAMING VECTOR ADMISSION — the TWENTY-FIFTH oracle-gated
@@ -1687,7 +1695,7 @@ object StreamingGate extends graft.QueryPack {
             (newVecs.filter(col("vec_id") % 3 === 0), "f1", t0),
             (newVecs.filter(col("vec_id") % 3 === 1), "f2", t0 + 2000),
             (newVecs.filter(col("vec_id") % 3 === 2), "f3", t0 + 4000))
-          val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+          val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
           val stream = s.readStream.schema(sch)
             .option("maxFilesPerTrigger", 1).parquet(src.getPath)
           drain(s, stream, "append") { (batch, id) =>
@@ -1695,7 +1703,7 @@ object StreamingGate extends graft.QueryPack {
               .write.mode("overwrite").parquet(s"$out/b$id")
             ()
           }
-          s.read.parquet(out + "/b*")
+          Tables.parquet(s, out + "/b*")
             .orderBy(col("qid"), col("rk"))
       }
     }),
@@ -1733,7 +1741,7 @@ object StreamingGate extends graft.QueryPack {
         (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
         (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
         (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldGramTheta(state, LG_K))
@@ -1800,7 +1808,7 @@ object StreamingGate extends graft.QueryPack {
         (ev.filter(col("vec_id") % 3 === 0), "f1", t0),
         (ev.filter(col("vec_id") % 3 === 1), "f2", t0 + 2000),
         (ev.filter(col("vec_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = s.read.parquet(src.getPath + "/f1.parquet").schema
+      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(src.getPath)
       drain(s, stream, "append")(foldDimMoments(state))
@@ -1924,7 +1932,7 @@ object StreamingGate extends graft.QueryPack {
           .agg(count(lit(1)).as("n"))
         val merged =
           if (new java.io.File(state).exists())
-            batch.sparkSession.read.parquet(state)
+            Tables.parquet(batch.sparkSession, state)
               .unionByName(bc)
               .groupBy(col("item"), col("label"))
               .agg(sum(col("n")).as("n"))
@@ -1979,7 +1987,7 @@ object StreamingGate extends graft.QueryPack {
       drain(s, stream, "append")(
         graft.streaming.AlertSink.writeAlerts(alertDir))
       if (new java.io.File(alertDir).exists())
-        s.read.parquet(alertDir).select(col("event_id"), col("alert"))
+        Tables.parquet(s, alertDir).select(col("event_id"), col("alert"))
           .orderBy(col("event_id"))
       else s.createDataFrame(new java.util.ArrayList[Row](),
         org.apache.spark.sql.types.StructType(Seq(

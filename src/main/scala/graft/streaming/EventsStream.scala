@@ -23,32 +23,22 @@ object EventsStream {
     * the same shape as the batch `Tables(_, _, "events")`.
     *
     * A streaming parquet source needs its schema up front, and events.ts
-    * has shipped both as INT64 TIMESTAMP(NANOS) (Spark refuses to read
-    * nanos natively → legacy long + truncate) and as TIMESTAMP(MICROS)
-    * [NTZ] across testdata generations — so discover the file's actual
-    * ts type from the batch footer (a driver-side metadata read) and
-    * build the matching stream schema + normalization, mirroring
-    * Tables' batch-side dispatch exactly. */
+    * has shipped in more than one physical type across testdata
+    * generations — so discover the file's actual ts type from its
+    * footer (a driver-side metadata read, no Spark job) and normalize
+    * through the same [[graft.Tables.normalizeTs]] as the batch read. */
   def replay(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet")
+    val tsType = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
       .schema("ts").dataType
     val rawSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = spark.readStream.schema(rawSchema)
+    graft.Tables.normalizeTs(spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    tsType match {
-      case LongType => // raw nanos → truncate to micros (DuckDB ns→µs read)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => // exact under the UTC session timezone
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => sys.error(s"unexpected events.ts type: $other")
-    }
+      .parquet(sfDir))
   }
 
   /** Event-time tumbling-window aggregation with a 2h watermark —
@@ -187,7 +177,8 @@ object EventsStream {
       batch: DataFrame, batchId: Long): Unit = {
     val fs = new java.io.File(target)
     val merged =
-      if (fs.exists()) Relational.merge(spark.read.parquet(target), batch, key)
+      if (fs.exists())
+        Relational.merge(graft.Tables.parquet(spark, target), batch, key)
       else batch
     swapIntoPlace(target, merged, batchId)
   }
@@ -205,7 +196,7 @@ object EventsStream {
     import org.apache.spark.sql.expressions.Window
     val fs = new java.io.File(target)
     val all =
-      if (fs.exists()) spark.read.parquet(target).unionByName(batch)
+      if (fs.exists()) graft.Tables.parquet(spark, target).unionByName(batch)
       else batch
     val w = Window.partitionBy(col(key))
       .orderBy(col(ts).desc, col(tiebreak).desc)

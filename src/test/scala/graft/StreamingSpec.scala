@@ -136,6 +136,31 @@ class StreamingSpec extends AnyFunSuite {
       (3L, 60L, 6L, "c")))
   }
 
+  test("a repeated AvailableNow drain compiles no new codegen classes") {
+    // each drain runs on a cloned session; with per-session artifact
+    // isolation off (TestSpark, Harness.session) the clone shares the
+    // classloader the codegen cache is keyed on, so a second identical
+    // drain finds every generated class already compiled
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_codegen_sink").toString + "/win"
+    val sink: (DataFrame, Long) => Unit =
+      (batch, _) => batch.write.mode("overwrite").parquet(out)
+    def drainOnce(): Unit = {
+      val q = EventsStream.windowedAgg(EventsStream.replay(spark, TestSpark.sf))
+        .writeStream.outputMode("complete")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink).start()
+      assert(q.awaitTermination(120000), "drain did not self-terminate")
+    }
+    drainOnce()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drainOnce()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0)
+  }
+
   test("q_stream_window (oracle-gated streaming entry) equals batch twin") {
     val streamed = graft.operators.StreamingGate
       .queries("q_stream_window")(spark, TestSpark.sf)

@@ -11,6 +11,8 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // as in Harness.session: drains reuse the codegen cache
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
