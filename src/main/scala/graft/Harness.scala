@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session construction + inter-query housekeeping for the
-  * harness mains (Bench / Verify / RunQuery / TimeQuery / Smoke).
+  * harness mains (Bench / Verify / TimeQuery / Smoke).
   * Previously each main hand-maintained an identical builder block and
   * housekeeping sequence; a fix landing in one copy and not another
   * (e.g. the BPE memo clear) silently skews that entry point's

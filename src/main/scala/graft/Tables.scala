@@ -35,16 +35,23 @@ object Tables {
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val out =
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-    // -Dgraft.spread.explain: dump the spread frame's own plan to
-    // stderr (VERDICT r15 item 5 — several spread sites sit directly
-    // behind an eager localCheckpoint, so the REPARTITION_BY_NUM
-    // evidence never reaches the consumer query's final plan; this
-    // hook makes it reviewable without changing any query).
-    if (sys.props.contains("graft.spread.explain"))
-      System.err.println(s"== spread plan [key=$key] ==\n" +
-        out.queryExecution.executedPlan.toString)
+    // several spread sites sit directly behind an eager
+    // localCheckpoint, so the REPARTITION_BY_NUM evidence never
+    // reaches the consumer query's final plan; dump it here
+    explain(s"spread plan [key=$key]", out)
     out
   }
+
+  /** `-Dgraft.explain`: print `df`'s executed plan to stderr under
+    * `== label ==`. The one plan-dump switch, read per call; it covers
+    * the frames a query's own final plan cannot show — each
+    * [[spread]] frame and each [[graft.operators.Iterate.cut]] frame
+    * before its checkpoint truncates the lineage. Print only: no query
+    * changes. */
+  def explain(label: => String, df: DataFrame): Unit =
+    if (sys.props.contains("graft.explain"))
+      System.err.println(s"== $label ==\n" + df.queryExecution.executedPlan.toString)
+
   /** Run two INDEPENDENT eager build chains (collect/localCheckpoint-
     * bounded, no shared mutable state) concurrently on a 2-thread
     * pool — the q_ann_ivfpq_lloyd arm-pool device (guide §2.6

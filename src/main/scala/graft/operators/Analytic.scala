@@ -69,6 +69,11 @@ object Analytic extends graft.QueryPack {
       .filter(col("osz") <= cap)
       .select(col("ok"), col("pk"))
 
+  /** The megabasket cap (`graft.cf.order.cap`, default 64), read on
+    * every call so a spec can set it between queries; both CF queries
+    * and their oracles take it from here. */
+  private def cfOrderCap: Int = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+
   /** The capped cosine top-5 item-item CF pipeline over (ok, pk)
     * baskets — ONE definition shared by q_item_cf (the trained
     * operator) and q_cf_holdout (its holdout gate), so the evaluated
@@ -221,7 +226,7 @@ object Analytic extends graft.QueryPack {
     // of exact counts, and ranking is a per-item window over each
     // item's candidate list (never a global sort).
     "q_item_cf" -> ((s, d) => {
-      val cap = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+      val cap = cfOrderCap
       val li = Tables(s, d, "lineitem")
         .filter(col("l_orderkey") % 8 === 0)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -634,7 +639,7 @@ object Analytic extends graft.QueryPack {
     // operator; the holdout check is one pair-keyed left join;
     // output is the eval-summary grid (one row).
     "q_cf_holdout" -> ((s, d) => {
-      val cap = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+      val cap = cfOrderCap
       def baskets(residue: Int): DataFrame = {
         val raw = Tables(s, d, "lineitem")
           .filter(col("l_orderkey") % 16 === residue)
@@ -2599,7 +2604,7 @@ object Analytic extends graft.QueryPack {
 
     // same train slice, cap, floor and rank; holdout pair-join check
     "q_cf_holdout" -> {
-      val cap = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+      val cap = cfOrderCap
       s"""WITH tli AS (
          |  SELECT DISTINCT ok, pk FROM (
          |    SELECT l_orderkey AS ok, l_partkey AS pk
@@ -2810,7 +2815,7 @@ object Analytic extends graft.QueryPack {
 
     // basket cap + cosine + per-item rank restated term-for-term
     "q_item_cf" -> {
-      val cap = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+      val cap = cfOrderCap
       s"""WITH li AS (
          |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
          |  FROM lineitem WHERE l_orderkey % 8 = 0),

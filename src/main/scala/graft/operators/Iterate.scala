@@ -55,15 +55,9 @@ object Iterate {
   @volatile private var lastDir: String = null
 
   def cut(df: DataFrame): DataFrame = {
-    // -Dgraft.cut.explain: dump the frame's own plan to stderr before
-    // the checkpoint truncates it (print only — the spread.explain
-    // device of VERDICT r15 item 5 extended to every cut site, so
-    // per-round plan shapes of iterative kernels are reviewable even
-    // though the consumer query's final plan shows only ExistingRDD
-    // scans of the checkpointed rounds).
-    if (sys.props.contains("graft.cut.explain"))
-      System.err.println("== cut plan ==\n" +
-        df.queryExecution.executedPlan.toString)
+    // the consumer query's final plan shows only ExistingRDD scans of
+    // the checkpointed rounds, so per-round plan shapes are dumped here
+    graft.Tables.explain("cut plan", df)
     val s = df.sparkSession
     s.conf.getOption("graft.checkpoint.dir") match {
       case Some(dir) if dir.nonEmpty =>

@@ -64,8 +64,6 @@ object Similarity extends graft.QueryPack {
     * the Spark and oracle SQL. */
   val planes: Seq[Seq[Int]] = planesFor(N_PLANES)
 
-  private val planesSpark: String =
-    planes.map(_.mkString("array(", ",", ")")).mkString("array(", ",", ")")
   private val planesDuck: String =
     planes.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
@@ -312,20 +310,9 @@ object Similarity extends graft.QueryPack {
         .withColumn("rk", row_number().over(wa))
         .filter(col("rk") <= 3)
         .select(col("width").as("awidth"), col("aqid"), col("anid"))
-      val wW = Window.partitionBy(col("width"))
-      exact
-        .select(col("qid"), col("nid"),
-          explode(typedlit(Seq(2, 4, 8))).as("width"))
-        .join(approx,
-          col("width") === col("awidth") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"),
-          "left_outer")
-        .groupBy(col("width"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-        .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-        .withColumn("macro_recall",
-          round(sum(col("n_hits")).over(wW).cast("double") /
-            (lit(3.0) * count(lit(1)).over(wW)), 6))
+      recallAt3(exact.select(col("qid"), col("nid"),
+            explode(typedlit(Seq(2, 4, 8))).as("width")),
+          approx, Seq("width" -> "awidth"))
         .select(col("width").cast("long").as("width"), col("qid"),
           col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
         .orderBy(col("width"), col("qid"))
@@ -366,25 +353,11 @@ object Similarity extends graft.QueryPack {
     // lists and scans ~nprobe/sqrt(N) of the data, a fraction that
     // SHRINKS as the corpus grows because nlist tracks sqrt(N).
     "q_ann_ivf" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = loadEmbeddings(s, d)
       val cents = sampledCentroids(s, d, sqrtK(Tables(s, d, "embeddings").count()))
       val assigned = e.withColumn("arr", centroidSimsArr(cents))
         .withColumn("centroid_id", array_max(col("arr")).getField("negcid") * -1)
-      val cand = assigned.select(col("vec_id").as("nid"),
-        col("embedding").as("nv"), col("nrm").as("nnrm"), col("centroid_id"))
-      val probes = assigned.filter(col("vec_id") < 10)
-        .withColumn("p", explode(slice(reverse(array_sort(col("arr"))), 1, 2)))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          col("nrm").as("qnrm"), (col("p.negcid") * -1).as("probe_cid"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-      cand.join(broadcast(probes),
-          col("centroid_id") === col("probe_cid") && col("qid") =!= col("nid"))
-        .withColumn("sim", round(dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm")), 9))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select(col("qid"), col("rk"), col("nid"), col("centroid_id"), col("sim"))
-        .orderBy(col("qid"), col("rk"))
+      ivfProbeTop3(assigned).orderBy(col("qid"), col("rk"))
     }),
 
     // Two-level IVF (IVF-within-IVF) — the scale refinement of
@@ -400,9 +373,8 @@ object Similarity extends graft.QueryPack {
     // stage, so the whole two-stage assignment restates in plain SQL
     // and the oracle stays exact. Queries probe the top-2 lists
     // WITHIN their routed group (the two-level probe path); the tail
-    // is q_ann_ivf's verbatim.
+    // is [[ivfProbeTop3]], shared with q_ann_ivf.
     "q_ann_ivf2" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = loadEmbeddings(s, d)
       val k2 = sqrtK(Tables(s, d, "embeddings").count())
       val model = graft.plans.VectorExpressions.twoLevelModel(
@@ -413,20 +385,7 @@ object Similarity extends graft.QueryPack {
           col("embedding"), col("nrm"), model))
         .withColumn("centroid_id",
           array_max(col("arr")).getField("negcid") * -1)
-      val cand = assigned.select(col("vec_id").as("nid"),
-        col("embedding").as("nv"), col("nrm").as("nnrm"), col("centroid_id"))
-      val probes = assigned.filter(col("vec_id") < 10)
-        .withColumn("p", explode(slice(reverse(array_sort(col("arr"))), 1, 2)))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          col("nrm").as("qnrm"), (col("p.negcid") * -1).as("probe_cid"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-      cand.join(broadcast(probes),
-          col("centroid_id") === col("probe_cid") && col("qid") =!= col("nid"))
-        .withColumn("sim", round(dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm")), 9))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select(col("qid"), col("rk"), col("nid"), col("centroid_id"), col("sim"))
-        .orderBy(col("qid"), col("rk"))
+      ivfProbeTop3(assigned).orderBy(col("qid"), col("rk"))
     }),
 
     // Incremental ANN admission — the vector twin of
@@ -553,19 +512,9 @@ object Similarity extends graft.QueryPack {
         .withColumn("rk", row_number().over(wa))
         .filter(col("rk") <= 3)
         .select(col("nprobe").as("anprobe"), col("aqid"), col("anid"))
-      val wN = Window.partitionBy(col("nprobe"))
-      exact
-        .select(col("qid"), col("nid"),
-          explode(typedlit(Seq(1, 2, 4))).as("nprobe"))
-        .join(approx,
-          col("nprobe") === col("anprobe") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"), "left_outer")
-        .groupBy(col("nprobe"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-        .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-        .withColumn("macro_recall",
-          round(sum(col("n_hits")).over(wN).cast("double") /
-            (lit(3.0) * count(lit(1)).over(wN)), 6))
+      recallAt3(exact.select(col("qid"), col("nid"),
+            explode(typedlit(Seq(1, 2, 4))).as("nprobe")),
+          approx, Seq("nprobe" -> "anprobe"))
         .select(col("nprobe").cast("long").as("nprobe"), col("qid"),
           col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
         .orderBy(col("nprobe"), col("qid"))
@@ -584,38 +533,10 @@ object Similarity extends graft.QueryPack {
     // order-independent and oracle-exact; codes argmin on raw doubles
     // with lowest-k tie-break (the struct-max trick, as in IVF).
     "q_ann_pq" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val cb = pqCodebook(s, d)
       val e = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      def sub(m: Int) = slice(col("embedding"), m * PQ_SUB + 1, PQ_SUB)
-      // ||sub - cw||² = (sub·sub + cw·cw) - sub·cw·2 — reuses the
-      // codegen'd dot kernel; identical association in the oracle SQL.
-      def d2(m: Int, k: Int): Column = {
-        val cw = typedlit(cb(m)(k))
-        (dot(sub(m), sub(m)) + dot(cw, cw)) - dot(sub(m), cw) * 2.0d
-      }
-      val withCodes = (0 until PQ_M).foldLeft(e) { (df, m) =>
-        df.withColumn(s"c$m",
-          array_max(array((0 until PQ_K).map(k =>
-            struct((d2(m, k) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
-            .getField("negk") * -1)
-      }
-      val cand = withCodes.select(
-        Seq(col("vec_id").as("nid")) ++ (0 until PQ_M).map(m => col(s"c$m")): _*)
-      val queries = withCodes.filter(col("vec_id") < 10).select(
-        Seq(col("vec_id").as("qid")) ++ (0 until PQ_M).map(m =>
-          array((0 until PQ_K).map(k =>
-            round(d2(m, k), 9).cast(org.apache.spark.sql.types.DecimalType(18, 9))): _*)
-            .as(s"dtab$m")): _*)
-      val approx = (0 until PQ_M).map(m =>
-        element_at(col(s"dtab$m"), (col(s"c$m") + 1).cast("int"))).reduce(_ + _)
-      val w = Window.partitionBy(col("qid")).orderBy(col("approx"), col("nid"))
-      cand.crossJoin(broadcast(queries))
-        .filter(col("qid") =!= col("nid"))
-        .withColumn("approx", approx)
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
+      adcTop3(e, e.filter(col("vec_id") < 10), col("embedding"),
+          pqCodebook(s, d), lists = None)
         .select(col("qid"), col("rk"), col("nid"),
           col("approx").cast("double").as("approx_d2"))
         .orderBy(col("qid"), col("rk"))
@@ -723,18 +644,7 @@ object Similarity extends graft.QueryPack {
         .select(col("qid"),
           (lit(1000000L) + col("qid") * 10 + col("c")).as("nid"),
           explode(typedlit(Seq(0, 1, 2))).as("rnd"))
-      val wW = org.apache.spark.sql.expressions.Window.partitionBy(col("rnd"))
-      truth
-        .join(ranked,
-          col("rnd") === col("arnd") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"),
-          "left_outer")
-        .groupBy(col("rnd"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-        .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-        .withColumn("macro_recall",
-          round(sum(col("n_hits")).over(wW).cast("double") /
-            (lit(3.0) * count(lit(1)).over(wW)), 6))
+      recallAt3(truth, ranked, Seq("rnd" -> "arnd"))
         .select(col("rnd").cast("long").as("rnd"), col("qid"),
           col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
         .orderBy(col("rnd"), col("qid"))
@@ -754,7 +664,6 @@ object Similarity extends graft.QueryPack {
     // on the edge key — the bounded navigating-search cost that makes
     // graph indexes the production default at corpus scale.
     "q_ann_beam" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val nodes = nnNodes(plantedCorpus(s, d)
         .withColumn("bucket", bucketCol(col("embedding"))))
       val g = nnSearchGraph(nnDescentEdges(nodes, rounds = 2).last)
@@ -809,10 +718,10 @@ object Similarity extends graft.QueryPack {
       // chain (√N sample → ring seed → √N descent → routed-entry
       // walk) are independent given `nodes` — the merged lower walk
       // below is the first consumer that needs both. Build them
-      // concurrently ([[inParallel]], guide §2.6): each is a
+      // concurrently ([[Tables.inParallel]], guide §2.6): each is a
       // checkpoint-bounded serial driver loop whose planning gaps and
       // job tails otherwise strictly serialize.
-      val (g, entryL) = inParallel(
+      val (g, entryL) = Tables.inParallel(
         nnSearchGraph(nnDescentEdges(nodes, rounds = 2).last), {
           val (up, nU) = upperLayer(nodes)
           val ring = ringSeed(up, nU)
@@ -1045,10 +954,10 @@ object Similarity extends graft.QueryPack {
       // the FRESH rebuild (full 2-round descent over the survivors)
       // are the two arms under comparison — independent by
       // construction (both read only the checkpointed aliveN / gPre /
-      // delIds frames). Build them concurrently ([[inParallel]],
+      // delIds frames). Build them concurrently ([[Tables.inParallel]],
       // guide §2.6) instead of serializing two checkpoint-bounded
       // driver loops.
-      val (gInc, gReb) = inParallel(
+      val (gInc, gReb) = Tables.inParallel(
         repairStep(nodes, gPre, delIds),
         nnSearchGraph(nnDescentEdges(aliveN, rounds = 2).last))
       val stats = gInc.agg(count(lit(1)).as("n_inc"))
@@ -1292,14 +1201,8 @@ object Similarity extends graft.QueryPack {
       val cb = pqCodebook(s, d)
       val e = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      def sub(m: Int) = slice(col("embedding"), m * PQ_SUB + 1, PQ_SUB)
-      def d2(m: Int, k: Int): Column = {
-        val cw = typedlit(cb(m)(k))
-        (dot(sub(m), sub(m)) + dot(cw, cw)) - dot(sub(m), cw) * 2.0d
-      }
       val best = (0 until PQ_M).map { m =>
-        val b = array_max(array((0 until PQ_K).map(k =>
-          struct((d2(m, k) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
+        val b = pqNearest(col("embedding"), cb, m)
         struct(lit(m).cast("long").as("m"),
           (b.getField("negk") * -1).cast("long").as("code"),
           round(b.getField("negd") * -1.0d, 9).cast(DecimalType(18, 9))
@@ -1362,32 +1265,9 @@ object Similarity extends graft.QueryPack {
       val K = 8; val ITERS = 2
       val e = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      // d² = (v·v + c·c) − v·c·2 with left-to-right dot folds, evaluated
-      // by the same one-node kernel as the cosine quantizers (plan size
-      // independent of K; here K=8 is a model constant, but the
-      // assignment shape is shared with the sqrt-K paths).
-      def assign(cents: Seq[(Int, Seq[Double])]): DataFrame =
-        e.withColumn("best",
-            array_min(graft.plans.VectorExpressions.centroidL2(col("v"), cents)))
-          .withColumn("cluster", col("best.k"))
-      def sums(a: DataFrame): DataFrame =
-        a.groupBy(col("cluster"))
-          .agg(graft.functions.VecSum.vecSumScaled(col("v"), DIM).as("sums"),
-            count(lit(1)).as("n"))
-      var cents: Seq[(Int, Seq[Double])] =
-        e.filter(col("vec_id").between(10, 10 + K - 1))
-          .collect()
-          .map(r => ((r.getLong(0) - 10).toInt, r.getSeq[Double](1).toSeq))
-          .sortBy(_._1).toSeq
-      var it = 1
-      while (it < ITERS) { // K rows per round cross the driver, nothing else
-        cents = sums(assign(cents)).collect()
-          .map(r => (r.getInt(0), r.getSeq[Long](1).toSeq
-            .map(sv => sv.toDouble / r.getLong(2).toDouble / 1000000.0)))
-          .sortBy(_._1).toSeq
-        it += 1
-      }
-      sums(assign(cents))
+      // ITERS-1 collected rounds (K rows per round cross the driver,
+      // nothing else); the last round's sums stay in-plan
+      lloydSums(e, col("v"), lloyd(e, col("v"), K, ITERS - 1))
         .select(col("cluster").cast("long").as("cluster"),
           posexplode(col("sums")).as(Seq("pos", "sv")), col("n"))
         .select(col("cluster"), (col("pos") + 1).cast("long").as("dim"),
@@ -1853,13 +1733,7 @@ object Similarity extends graft.QueryPack {
         .withColumn("nrm", norm(col("embedding")))
         .persist()
       val surv1 = c.filter(col("nrm") > 0.0d)
-      def centsFrom(k: Int): Array[(Long, Seq[Double], Double)] =
-        surv1.filter(col("vec_id") >= 10)
-          .orderBy(col("vec_id")).limit(k)
-          .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
-          .sortBy(_._1)
-      val cents = centsFrom(sqrtK(surv1.count()))
+      val cents = firstCentroids(surv1, sqrtK(surv1.count()))
       val assigned = surv1.withColumn("centroid_id",
         array_max(centroidSimsArr(cents)).getField("negcid") * -1)
       val l = assigned.select(col("centroid_id"), col("vec_id").as("id_a"),
@@ -1904,10 +1778,129 @@ object Similarity extends graft.QueryPack {
     })
   )
 
+  // ---- IVF probe scan and recall@3 grading (the ANN sweeps) ---------
+
+  /** The IVF probe scan of q_ann_ivf and q_ann_ivf2: each query
+    * (vec_id < 10) probes the top-2 lists of its `arr` (the per-list
+    * (sim, negcid) structs of the quantizer), and the candidates in
+    * those lists rank by round-9 cosine desc, then nid. `assigned`
+    * carries embedding, nrm, arr and centroid_id. Returns qid, rk
+    * (BIGINT, ≤ 3), nid, centroid_id, sim. */
+  private def ivfProbeTop3(assigned: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cand = assigned.select(col("vec_id").as("nid"),
+      col("embedding").as("nv"), col("nrm").as("nnrm"), col("centroid_id"))
+    val probes = assigned.filter(col("vec_id") < 10)
+      .withColumn("p", explode(slice(reverse(array_sort(col("arr"))), 1, 2)))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        col("nrm").as("qnrm"), (col("p.negcid") * -1).as("probe_cid"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
+    cand.join(broadcast(probes),
+        col("centroid_id") === col("probe_cid") && col("qid") =!= col("nid"))
+      .withColumn("sim", round(dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm")), 9))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 3)
+      .select(col("qid"), col("rk"), col("nid"), col("centroid_id"), col("sim"))
+  }
+
+  /** Recall@3 grading of the ANN sweeps: `truth` (keys, qid, nid — 3
+    * exact neighbors per query) left-joined to `approx` (its keys
+    * under the paired names, aqid, anid), per (keys, qid): n_exact,
+    * n_hits, recall = n_hits / 3 and the key cell's macro_recall. */
+  private def recallAt3(truth: DataFrame, approx: DataFrame,
+      keys: Seq[(String, String)]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cell = keys.map(k => col(k._1))
+    val w = Window.partitionBy(cell: _*)
+    truth
+      .join(approx,
+        keys.map { case (t, a) => col(t) === col(a) }.reduce(_ && _) &&
+          col("qid") === col("aqid") && col("nid") === col("anid"),
+        "left_outer")
+      .groupBy(cell :+ col("qid"): _*)
+      .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+      .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
+      .withColumn("macro_recall",
+        round(sum(col("n_hits")).over(w).cast("double") /
+          (lit(3.0) * count(lit(1)).over(w)), 6))
+  }
+
   // ---- product quantization (q_ann_pq) --------------------------------
   private val PQ_M = 4              // subspaces
   private val PQ_K = 4              // codewords per subspace
   private val PQ_SUB = DIM / PQ_M   // dims per subspace
+
+  /** PQ_M × K codewords; codeword (m, k) is a PQ_SUB-dim slice. */
+  private type Codebook = Array[Array[Seq[Double]]]
+
+  // The one PQ/ADC kernel: q_ann_pq, q_pq_distortion, the IVF-PQ scans
+  // and their codebook training all encode, tabulate and rank through
+  // pqSub/pqD2/pqNearest/pqCode/adcTop3, so the formula the oracles
+  // restate — association, tie-break, round-9 DECIMAL cells — has one
+  // definition.
+
+  /** Subspace m of the vector column `enc`. */
+  private def pqSub(enc: Column, m: Int): Column = slice(enc, m * PQ_SUB + 1, PQ_SUB)
+
+  /** ||sub − cw||² = (sub·sub + cw·cw) − sub·cw·2 — reuses the
+    * codegen'd dot kernel; identical association in the oracle SQL. */
+  private def pqD2(enc: Column, m: Int, cw: Seq[Double]): Column = {
+    val sub = pqSub(enc, m); val c = typedlit(cw)
+    (dot(sub, sub) + dot(c, c)) - dot(sub, c) * 2.0d
+  }
+
+  /** Nearest codeword of subspace m as struct(negd, negk): argmin on
+    * raw doubles with lowest-k tie-break (the struct-max trick, as in
+    * IVF). */
+  private def pqNearest(enc: Column, cb: Codebook, m: Int): Column =
+    array_max(array(cb(m).indices.map(k =>
+      struct((pqD2(enc, m, cb(m)(k)) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
+
+  private def pqCode(enc: Column, cb: Codebook, m: Int): Column =
+    pqNearest(enc, cb, m).getField("negk") * -1
+
+  /** The ADC top-3 scan. Candidates are ENCODED once into PQ_M codes (a
+    * map-side projection over literal codewords); each query builds its
+    * PQ_M × K distance table ONCE on the broadcast side, with cells
+    * rounded to 9 places and cast to DECIMAL(18,9) so the lookup-sum is
+    * order-independent and oracle-exact; a candidate then costs PQ_M
+    * array lookups + PQ_M−1 adds instead of a 64-dim scan. Both frames
+    * carry `vec_id` and the column `enc` names. `lists` = (candidate
+    * list column, query probe column) restricts each query to the
+    * inverted lists it probes (IVF-PQ, an equi-join); None scans every
+    * other vector. Returns qid, nid, the list column, `approx` (the
+    * DECIMAL sum) and rk (BIGINT, ≤ 3, by approx then nid). */
+  private def adcTop3(cand: DataFrame, queries: DataFrame, enc: Column,
+      cb: Codebook, lists: Option[(String, String)]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.DecimalType
+    val ms = 0 until PQ_M
+    val codes = cand.select(Seq(col("vec_id").as("nid")) ++
+      lists.map(l => col(l._1)) ++ ms.map(m => pqCode(enc, cb, m).as(s"c$m")): _*)
+    val tables = queries.select(Seq(col("vec_id").as("qid")) ++
+      lists.map(l => col(l._2)) ++ ms.map(m =>
+        array(cb(m).map(cw => round(pqD2(enc, m, cw), 9).cast(DecimalType(18, 9))).toSeq: _*)
+          .as(s"dtab$m")): _*)
+    val approx = ms.map(m =>
+      element_at(col(s"dtab$m"), (col(s"c$m") + 1).cast("int"))).reduce(_ + _)
+    val notSelf = col("qid") =!= col("nid")
+    val w = Window.partitionBy(col("qid")).orderBy(col("approx"), col("nid"))
+    codes.join(broadcast(tables),
+        lists.fold(notSelf) { case (c, p) => col(c) === col(p) && notSelf })
+      .withColumn("approx", approx)
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 3)
+  }
+
+  /** `df`'s vectors in column `v`, collected in vec_id order — the
+    * bounded driver fetch every sampled codebook starts from. */
+  private def vecRows(df: DataFrame, v: Column): Array[Seq[Double]] =
+    df.select(col("vec_id"), v).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).map(_._2)
+
+  /** Codeword (m, k) = the m-th PQ_SUB slice of rows(k). */
+  private def pqSlices(rows: Array[Seq[Double]], k: Int): Codebook =
+    Array.tabulate(PQ_M, k)((m, i) => rows(i).slice(m * PQ_SUB, (m + 1) * PQ_SUB))
 
   /** PQ codebook: codeword (m,k) = the m-th 16-dim slice of the
     * embedding of vec_id 10+k — deterministic sampled codewords (same
@@ -1924,14 +1917,78 @@ object Similarity extends graft.QueryPack {
     * PQ_K=4 keeps the oracle-restated codebook small; the per-candidate
     * cost is M lookups regardless of PQ_K, so a fixed PQ_K creates no
     * quadratic term at 100×. */
-  private def pqCodebook(s: SparkSession, d: String,
-      nCodes: Int = PQ_K): Array[Array[Seq[Double]]] = {
-    val rows = loadEmbeddings(s, d)
-      .filter(col("vec_id").between(10, 9 + nCodes))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
-    Array.tabulate(PQ_M, nCodes)((m, k) =>
-      rows(k)._2.slice(m * PQ_SUB, (m + 1) * PQ_SUB))
+  private def pqCodebook(s: SparkSession, d: String, nCodes: Int = PQ_K): Codebook =
+    pqSlices(vecRows(loadEmbeddings(s, d).filter(col("vec_id").between(10, 9 + nCodes)),
+      col("embedding")), nCodes)
+
+  // ---- Lloyd (q_kmeans, the IVF-PQ coarse quantizer) ------------------
+
+  /** One exact Lloyd round over the vector column `v` of `corpus`: the
+    * kernel assignment (d² = (v·v + c·c) − v·c·2 with left-to-right dot
+    * folds, ties → lowest cid; one codegen node, so the plan does not
+    * grow with K) plus the fixed-point VecSum re-estimation
+    * (order-independent Long sums — reproducible and oracle-exact).
+    * Returns (cluster, sums, n), one row per non-empty cluster. */
+  private def lloydSums(corpus: DataFrame, v: Column,
+      cents: Seq[(Int, Seq[Double])]): DataFrame =
+    corpus.withColumn("best",
+        array_min(graft.plans.VectorExpressions.centroidL2(v, cents)))
+      .withColumn("cluster", col("best.k"))
+      .groupBy(col("cluster"))
+      .agg(graft.functions.VecSum.vecSumScaled(v, DIM).as("sums"),
+        count(lit(1)).as("n"))
+
+  /** Decode a fixed-point VecSum cell: sums / n / 1e6 per dim. */
+  private def fixedMean(sums: Seq[Long], n: Long): Seq[Double] =
+    sums.map(sv => sv.toDouble / n.toDouble / 1000000.0)
+
+  /** `rounds` collected Lloyd rounds over `corpus` at K = k: seeds are
+    * the vectors of vec_id 10..10+k-1 (cid = vec_id − 10), each round
+    * is one [[lloydSums]]. Returns the TRAINED centroids (what FAISS
+    * calls the coarse quantizer after train()); empty clusters drop
+    * out, keeping their seed cid labels on the survivors. Driver
+    * traffic: k rows per round — the sampledCentroids collect bound. */
+  private def lloyd(corpus: DataFrame, v: Column, k: Int,
+      rounds: Int): Seq[(Int, Seq[Double])] = {
+    val seeds = corpus
+      .filter(col("vec_id") >= 10 && col("vec_id") < lit(10L + k))
+      .select(col("vec_id"), v).collect()
+      .map(r => ((r.getLong(0) - 10).toInt, r.getSeq[Double](1).toSeq))
+      .sortBy(_._1).toSeq
+    (1 to rounds).foldLeft(seeds) { (c, _) =>
+      lloydSums(corpus, v, c).collect()
+        .map(r => (r.getInt(0), fixedMean(r.getSeq[Long](1).toSeq, r.getLong(2))))
+        .sortBy(_._1).toSeq
+    }
+  }
+
+  // ---- IVF-PQ (q_ann_ivfpq and its recall sweeps) --------------------
+
+  /** Residual v − c(v) as column `enc`: `df` joined on `cidCol` to the
+    * broadcast centroid dim `centDim` (ccid, cvec). */
+  private def withResidual(df: DataFrame, centDim: DataFrame, cidCol: String): DataFrame =
+    df.join(broadcast(centDim), col(cidCol) === col("ccid"))
+      .withColumn("enc", zip_with(col("embedding"), col("cvec"), (a, b) => a - b))
+      .drop("ccid", "cvec")
+
+  /** Exact L2 top-3 (qid, nid) for the queries vec_id < 10 of `corpus`
+    * — the truth side of the IVF-PQ recall sweeps, from a 10-row
+    * broadcast join (the documented offline-evaluation shape). */
+  private def exactL2Top3(corpus: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val q = corpus.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        col("nrm").as("qnrm"))
+    val cand = corpus.select(col("vec_id").as("nid"),
+      col("embedding").as("nv"), col("nrm").as("nnrm"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("d2"), col("nid"))
+    cand.join(broadcast(q), col("qid") =!= col("nid"))
+      .withColumn("d2", round(
+        col("qnrm") * col("qnrm") + col("nnrm") * col("nnrm")
+          - dot(col("qv"), col("nv")) * 2.0d, 9))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 3)
+      .select(col("qid"), col("nid"))
   }
 
   /** Codewords per subspace for the COMPOSED IVF-PQ scan. PQ_K = 4 is
@@ -1964,8 +2021,6 @@ object Similarity extends graft.QueryPack {
   private def ivfpqTopk(s: SparkSession, d: String,
       corpus: DataFrame, nCodes: Int = IVFPQ_K,
       residual: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val nIdx = Tables(s, d, "embeddings").count()
     val k2 = sqrtK(nIdx)
     // totality: the model needs codeword-source vec_ids (10..10+K raw;
@@ -1999,7 +2054,7 @@ object Similarity extends graft.QueryPack {
       .withColumn("p", explode(slice(reverse(array_sort(col("arr"))), 1, 2)))
       .withColumn("probe_cid", col("p.negcid") * -1)
 
-    // (encodeCol, codebook, candFrame, probeFrame): the RAW variant
+    // (candidates, probes, codebook): the RAW variant
     // quantizes vectors directly; the RESIDUAL variant (FAISS IVFPQ
     // by_residual=true, the production default) quantizes v − c(v) —
     // the codebook spends its bits on within-list displacement instead
@@ -2016,94 +2071,23 @@ object Similarity extends graft.QueryPack {
     // finding). Residuals come through the KERNEL assignment as a
     // K-row bounded collect, so the codebook cannot drift from the
     // scan's own routing.
-    val (cand0, probes0, cb) =
-      if (!residual) {
-        (assigned, probeBase, pqCodebook(s, d, nCodes))
-      } else {
+    val (cand, probes, cb) =
+      if (!residual) (assigned, probeBase, pqCodebook(s, d, nCodes))
+      else {
         import s.implicits._
         val centDim = leaves.map { case (cid, v, _) => (cid, v) }.toSeq
           .toDF("ccid", "cvec")
-        def withRes(df: DataFrame, cidCol: String): DataFrame =
-          df.join(broadcast(centDim), col(cidCol) === col("ccid"))
-            .withColumn("enc",
-              zip_with(col("embedding"), col("cvec"), (a, b) => a - b))
-            .drop("ccid", "cvec")
-        val cbRes: Array[Array[Seq[Double]]] = {
-          val rows = withRes(
-            assigned.filter(
-              col("vec_id") >= 10L + k2 && col("vec_id") < 10L + k2 + nCodes),
-            "centroid_id")
-            .select(col("vec_id"), col("enc")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-            .sortBy(_._1)
-          Array.tabulate(PQ_M, nCodes)((m, k) =>
-            rows(k)._2.slice(m * PQ_SUB, (m + 1) * PQ_SUB))
-        }
-        (withRes(assigned, "centroid_id"), withRes(probeBase, "probe_cid"),
-          cbRes)
+        val cbRes = pqSlices(vecRows(withResidual(
+          assigned.filter(
+            col("vec_id") >= 10L + k2 && col("vec_id") < 10L + k2 + nCodes),
+          centDim, "centroid_id"), col("enc")), nCodes)
+        (withResidual(assigned, centDim, "centroid_id"),
+          withResidual(probeBase, centDim, "probe_cid"), cbRes)
       }
-    val encCol = if (residual) col("enc") else col("embedding")
-    def sub(m: Int) = slice(encCol, m * PQ_SUB + 1, PQ_SUB)
-    def d2(m: Int, k: Int): Column = {
-      val cw = typedlit(cb(m)(k))
-      (dot(sub(m), sub(m)) + dot(cw, cw)) - dot(sub(m), cw) * 2.0d
-    }
-    val withCodes = (0 until PQ_M).foldLeft(cand0) { (df, m) =>
-      df.withColumn(s"c$m",
-        array_max(array((0 until nCodes).map(k =>
-          struct((d2(m, k) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
-          .getField("negk") * -1)
-    }
-    val cand = withCodes.select(
-      Seq(col("vec_id").as("nid"), col("centroid_id")) ++
-        (0 until PQ_M).map(m => col(s"c$m")): _*)
-    val probes = probes0
-      .select(
-        Seq(col("vec_id").as("qid"), col("probe_cid")) ++
-          (0 until PQ_M).map(m =>
-            array((0 until nCodes).map(k =>
-              round(d2(m, k), 9).cast(DecimalType(18, 9))): _*)
-              .as(s"dtab$m")): _*)
-    val approx = (0 until PQ_M).map(m =>
-      element_at(col(s"dtab$m"), (col(s"c$m") + 1).cast("int"))).reduce(_ + _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx"), col("nid"))
-    cand.join(broadcast(probes),
-        col("centroid_id") === col("probe_cid") && col("qid") =!= col("nid"))
-      .withColumn("approx", approx)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+    adcTop3(cand, probes, if (residual) col("enc") else col("embedding"), cb,
+        Some(("centroid_id", "probe_cid")))
       .select(col("qid"), col("rk"), col("nid"), col("centroid_id"),
         col("approx").cast("double").as("approx_d2"))
-  }
-
-  /** Two exact Lloyd rounds over `corpus` (the q_kmeans unroll at
-    * K = k2): seeds are the embeddings of vec_id 10..10+k2-1, each
-    * round is one kernel assignment (exact d² = (v·v + c·c) − v·c·2,
-    * ties → lowest cid) plus one fixed-point VecSum re-estimation
-    * (order-independent Long sums — reproducible and oracle-exact).
-    * Returns the TRAINED centroids (what FAISS calls the coarse
-    * quantizer after train()); empty clusters drop out, keeping their
-    * seed cid labels on the survivors. Driver traffic: k2 rows per
-    * round — the sampledCentroids collect bound. */
-  private def lloydCentroids(corpus: DataFrame, k2: Int): Seq[(Int, Seq[Double])] = {
-    def assign(c: Seq[(Int, Seq[Double])]): DataFrame =
-      corpus.withColumn("best",
-          array_min(graft.plans.VectorExpressions.centroidL2(col("embedding"), c)))
-        .withColumn("cluster", col("best.k"))
-    def reest(a: DataFrame): Seq[(Int, Seq[Double])] =
-      a.groupBy(col("cluster"))
-        .agg(graft.functions.VecSum.vecSumScaled(col("embedding"), DIM).as("sums"),
-          count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).toSeq
-          .map(sv => sv.toDouble / r.getLong(2).toDouble / 1000000.0)))
-        .sortBy(_._1).toSeq
-    val c0 = corpus
-      .filter(col("vec_id") >= 10 && col("vec_id") < lit(10L + k2))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => ((r.getLong(0) - 10).toInt, r.getSeq[Double](1).toSeq))
-      .sortBy(_._1).toSeq
-    reest(assign(reest(assign(c0))))
   }
 
   /** The Lloyd-trained IVF-PQ recall sweep (VERDICT r11 item 1) —
@@ -2112,8 +2096,8 @@ object Similarity extends graft.QueryPack {
     * underperforms raw under *sampled* centroids (non-Lloyd centroids
     * don't shrink residuals; Similarity's residual-curve comment named
     * the cause). Layout: single-level IVF (the classic FAISS IVF) at
-    * nlist = ⌈√N⌉, centroids from [[lloydCentroids]] (two exact
-    * q_kmeans rounds over the planted corpus), index assignment +
+    * nlist = ⌈√N⌉, centroids from [[lloyd]] (two exact q_kmeans
+    * rounds over the planted corpus), index assignment +
     * nprobe=2 probes by exact d² under the trained model, then the
     * q_ann_ivfpq ADC scan at code budgets K ∈ {4, 16} for BOTH
     * variants in one frame, scored against the exact L2 top-3 — so
@@ -2128,8 +2112,6 @@ object Similarity extends graft.QueryPack {
     * recall curves), probe equi-joins with the 10-row query side
     * broadcast, grid-sized output (2×2×10). */
   private def ivfpqLloydRecall(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     import s.implicits._
     val nIdx = Tables(s, d, "embeddings").count()
     val k2 = sqrtK(nIdx)
@@ -2143,7 +2125,7 @@ object Similarity extends graft.QueryPack {
         col("id").cast("double").as("recall"),
         col("id").cast("double").as("macro_recall"))
     val corpus = plantedCorpus(s, d).persist()
-    val cents = lloydCentroids(corpus, k2)
+    val cents = lloyd(corpus, col("embedding"), k2, rounds = 2)
     // index assignment + nprobe=2 probes under the TRAINED model
     val arr = graft.plans.VectorExpressions.centroidL2(col("embedding"), cents)
     val assigned = corpus.withColumn("arr", arr)
@@ -2155,156 +2137,72 @@ object Similarity extends graft.QueryPack {
       .withColumn("probe_cid", col("p.k"))
       .drop("arr", "p")
     val centDim = cents.toDF("ccid", "cvec")
-    def withRes(df: DataFrame, cidCol: String): DataFrame =
-      df.join(broadcast(centDim), col(cidCol) === col("ccid"))
-        .withColumn("enc",
-          zip_with(col("embedding"), col("cvec"), (a, b) => a - b))
-        .drop("ccid", "cvec")
     // codebooks (sampled, prefix-nested: K=4 is the first 4 rows of
     // K=16): raw from ids 10..10+K-1, residual from the beyond-range
     // sources' encodings under the trained assignment
-    def slices(rows: Array[(Long, Seq[Double])], ck: Int): Array[Array[Seq[Double]]] =
-      Array.tabulate(PQ_M, ck)((m, k) =>
-        rows(k)._2.slice(m * PQ_SUB, (m + 1) * PQ_SUB))
-    val rawRows = corpus
-      .filter(col("vec_id") >= 10 && col("vec_id") < lit(10L + IVFPQ_K))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
-    val resRows = withRes(
+    val rawRows = vecRows(corpus
+      .filter(col("vec_id") >= 10 && col("vec_id") < lit(10L + IVFPQ_K)),
+      col("embedding"))
+    val resRows = vecRows(withResidual(
         assigned.filter(col("vec_id") >= lit(10L + k2) &&
-          col("vec_id") < lit(10L + k2 + IVFPQ_K)), "centroid_id")
-      .select(col("vec_id"), col("enc")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1)
+          col("vec_id") < lit(10L + k2 + IVFPQ_K)), centDim, "centroid_id"),
+      col("enc"))
     // per-subspace codebook Lloyd (FAISS ProductQuantizer::train): two
-    // rounds of per-m argmin assignment (same d² form, ties → lowest
-    // code) + fixed-point VecSum re-estimation over the 16-dim
+    // rounds of per-m argmin assignment (the kernel's d² and lowest-code
+    // tie-break) + fixed-point VecSum re-estimation over the 16-dim
     // subvectors; an EMPTY code cell keeps its previous-round codeword
     // (the COALESCE rule, restated by the oracle's grid join). Both
     // variants train identically on their own encodings, so the
     // residual-vs-raw comparison stays fair. Driver traffic:
-    // PQ_M × ck rows per round.
-    def trainCb(encFrame: DataFrame, encCol: Column,
-        seed: Array[Array[Seq[Double]]], ck: Int): Array[Array[Seq[Double]]] = {
-      var cb = seed
-      def subOf(m: Int) = slice(encCol, m * PQ_SUB + 1, PQ_SUB)
-      (1 to 2).foreach { _ =>
-        val cbNow = cb
-        def d2t(m: Int, k: Int): Column = {
-          val cw = typedlit(cbNow(m)(k))
-          (dot(subOf(m), subOf(m)) + dot(cw, cw)) - dot(subOf(m), cw) * 2.0d
-        }
-        val cells = encFrame.select(explode(array((0 until PQ_M).map { m =>
-            val code = array_max(array((0 until ck).map(k =>
-              struct((d2t(m, k) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
-              .getField("negk") * -1
-            struct(lit(m).as("m"), code.as("code"), subOf(m).as("sub"))
-          }: _*)).as("a"))
+    // PQ_M × K rows per round.
+    def trainCb(encFrame: DataFrame, enc: Column, seed: Codebook): Codebook =
+      (1 to 2).foldLeft(seed) { (cb, _) =>
+        val cells = encFrame.select(explode(array((0 until PQ_M).map(m =>
+            struct(lit(m).as("m"), pqCode(enc, cb, m).as("code"),
+              pqSub(enc, m).as("sub"))): _*)).as("a"))
           .select(col("a.m").as("m"), col("a.code").as("code"),
             col("a.sub").as("sub"))
           .groupBy(col("m"), col("code"))
           .agg(graft.functions.VecSum.vecSumScaled(col("sub"), PQ_SUB).as("sums"),
             count(lit(1)).as("n"))
           .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toSeq
-            .map(sv => sv.toDouble / r.getLong(3).toDouble / 1000000.0)))
-          .map(t => (t._1, t._2) -> t._3).toMap
-        cb = Array.tabulate(PQ_M, ck)((m, k) =>
-          cells.getOrElse((m, k), cbNow(m)(k)))
+          .map(r => (r.getInt(0), r.getInt(1)) ->
+            fixedMean(r.getSeq[Long](2).toSeq, r.getLong(3)))
+          .toMap
+        Array.tabulate(PQ_M, cb(0).length)((m, k) =>
+          cells.getOrElse((m, k), cb(m)(k)))
       }
-      cb
-    }
-    // one ADC pass (the ivfpqTopk scan at a single level) per cell
+    // one trained-codebook ADC pass (the ivfpqTopk scan at a single
+    // level) per sweep arm
     def adcTop(variant: String, ck: Int): DataFrame = {
       val residual = variant == "residual"
-      val encFrameForTrain =
-        if (residual) withRes(assigned, "centroid_id") else assigned
-      val encColForTrain = if (residual) col("enc") else col("embedding")
-      val cb = trainCb(encFrameForTrain, encColForTrain,
-        slices(if (residual) resRows else rawRows, ck), ck)
-      val (cand0, probes0) =
-        if (!residual) (assigned, probeBase)
-        else (withRes(assigned, "centroid_id"), withRes(probeBase, "probe_cid"))
-      val encCol = if (residual) col("enc") else col("embedding")
-      def sub(m: Int) = slice(encCol, m * PQ_SUB + 1, PQ_SUB)
-      def d2(m: Int, k: Int): Column = {
-        val cw = typedlit(cb(m)(k))
-        (dot(sub(m), sub(m)) + dot(cw, cw)) - dot(sub(m), cw) * 2.0d
-      }
-      val withCodes = (0 until PQ_M).foldLeft(cand0) { (df, m) =>
-        df.withColumn(s"c$m",
-          array_max(array((0 until ck).map(k =>
-            struct((d2(m, k) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
-            .getField("negk") * -1)
-      }
-      val cand = withCodes.select(
-        Seq(col("vec_id").as("nid"), col("centroid_id")) ++
-          (0 until PQ_M).map(m => col(s"c$m")): _*)
-      val probes = probes0.select(
-        Seq(col("vec_id").as("qid"), col("probe_cid")) ++
-          (0 until PQ_M).map(m =>
-            array((0 until ck).map(k =>
-              round(d2(m, k), 9).cast(DecimalType(18, 9))): _*)
-              .as(s"dtab$m")): _*)
-      val approx = (0 until PQ_M).map(m =>
-        element_at(col(s"dtab$m"), (col(s"c$m") + 1).cast("int"))).reduce(_ + _)
-      val w = Window.partitionBy(col("qid")).orderBy(col("approx"), col("nid"))
-      cand.join(broadcast(probes),
-          col("centroid_id") === col("probe_cid") && col("qid") =!= col("nid"))
-        .withColumn("approx", approx)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      val (cand, probes, enc) =
+        if (!residual) (assigned, probeBase, col("embedding"))
+        else (withResidual(assigned, centDim, "centroid_id"),
+          withResidual(probeBase, centDim, "probe_cid"), col("enc"))
+      val cb = trainCb(cand, enc, pqSlices(if (residual) resRows else rawRows, ck))
+      adcTop3(cand, probes, enc, cb, Some(("centroid_id", "probe_cid")))
         .select(lit(variant).as("avariant"), lit(ck.toLong).as("a_code_k"),
           col("qid").as("aqid"), col("nid").as("anid"))
     }
     // The four sweep arms are independent experiments whose codebook
     // training is collect-bounded (2 sequential driver rounds each):
-    // run them from a small thread pool (guide §2.6 overlap-
-    // independent-jobs) so one arm's Lloyd collects back-fill the
-    // executors another arm's tail leaves idle. Arms never share
-    // mutable state (each trains its own cb array off the persisted
+    // run them concurrently (Tables.inParallelSeq, guide §2.6
+    // overlap-independent-jobs) so one arm's Lloyd collects back-fill
+    // the executors another arm's tail leaves idle. Arms never share
+    // mutable state (each trains its own codebook off the persisted
     // corpus); result rows are identical to the sequential build, the
     // union order is fixed by the arms list.
-    val arms = for (v <- Seq("raw", "residual"); ck <- Seq(4, 16))
-      yield (v, ck)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(arms.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val approxTop =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          arms.map { case (v, ck) =>
-            scala.concurrent.Future(adcTop(v, ck)) }),
-        scala.concurrent.duration.Duration.Inf).reduce(_ unionByName _)
-      finally pool.shutdown()
-    val q = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"))
-    val cand = corpus.select(col("vec_id").as("nid"),
-      col("embedding").as("nv"), col("nrm").as("nnrm"))
-    val wx = Window.partitionBy(col("qid")).orderBy(col("d2x"), col("nid"))
-    val exact = cand.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("d2x", round(
-        col("qnrm") * col("qnrm") + col("nnrm") * col("nnrm")
-          - dot(col("qv"), col("nv")) * 2.0d, 9))
-      .withColumn("rk", row_number().over(wx))
-      .filter(col("rk") <= 3)
+    val approxTop = Tables.inParallelSeq(
+      for (v <- Seq("raw", "residual"); ck <- Seq(4, 16))
+        yield () => adcTop(v, ck)).reduce(_ unionByName _)
+    val exact = exactL2Top3(corpus)
       .select(col("qid"), col("nid"),
         explode(typedlit(Seq("raw", "residual"))).as("variant"))
       .select(col("variant"), col("qid"), col("nid"),
         explode(typedlit(Seq(4L, 16L))).as("code_k"))
-    val wV = Window.partitionBy(col("variant"), col("code_k"))
-    exact
-      .join(approxTop,
-        col("variant") === col("avariant") &&
-          col("code_k") === col("a_code_k") &&
-          col("qid") === col("aqid") && col("nid") === col("anid"),
-        "left_outer")
-      .groupBy(col("variant"), col("code_k"), col("qid"))
-      .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-      .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-      .withColumn("macro_recall",
-        round(sum(col("n_hits")).over(wV).cast("double") /
-          (lit(3.0) * count(lit(1)).over(wV)), 6))
+    recallAt3(exact, approxTop,
+        Seq("variant" -> "avariant", "code_k" -> "a_code_k"))
       .orderBy(col("variant"), col("code_k"), col("qid"))
   }
 
@@ -2315,39 +2213,15 @@ object Similarity extends graft.QueryPack {
     * design rationale. */
   private def ivfpqRecallCurve(s: SparkSession, d: String,
       residual: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = plantedCorpus(s, d)
     val approxTop = Seq(4, 16).map { ck =>
       ivfpqTopk(s, d, corpus, ck, residual)
         .select(lit(ck.toLong).as("a_code_k"),
           col("qid").as("aqid"), col("nid").as("anid"))
     }.reduce(_ unionByName _)
-    val q = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"))
-    val cand = corpus.select(col("vec_id").as("nid"),
-      col("embedding").as("nv"), col("nrm").as("nnrm"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2"), col("nid"))
-    val exact = cand.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("d2", round(
-        col("qnrm") * col("qnrm") + col("nnrm") * col("nnrm")
-          - dot(col("qv"), col("nv")) * 2.0d, 9))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("qid"), col("nid"),
-        explode(typedlit(Seq(4L, 16L))).as("code_k"))
-    val wK = Window.partitionBy(col("code_k"))
-    exact
-      .join(approxTop,
-        col("code_k") === col("a_code_k") &&
-          col("qid") === col("aqid") && col("nid") === col("anid"),
-        "left_outer")
-      .groupBy(col("code_k"), col("qid"))
-      .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-      .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-      .withColumn("macro_recall",
-        round(sum(col("n_hits")).over(wK).cast("double") /
-          (lit(3.0) * count(lit(1)).over(wK)), 6))
+    recallAt3(exactL2Top3(corpus).select(col("qid"), col("nid"),
+        explode(typedlit(Seq(4L, 16L))).as("code_k")),
+      approxTop, Seq("code_k" -> "a_code_k"))
       .orderBy(col("code_k"), col("qid"))
   }
 
@@ -2372,18 +2246,12 @@ object Similarity extends graft.QueryPack {
         DataFrame)] = {
     val e = loadEmbeddings(s, d)
     val index = e.filter(!(col("vec_id") % 7 === 3))
-    def centsFrom(k: Int): Array[(Long, Seq[Double], Double)] =
-      index.filter(col("vec_id") >= 10)
-        .orderBy(col("vec_id")).limit(k)
-        .select(col("vec_id"), col("embedding"), col("nrm")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
-        .sortBy(_._1)
     val k2 = sqrtK(index.count())
-    lazy val leaves = centsFrom(k2)
+    lazy val leaves = firstCentroids(index, k2)
     if (k2 == 0 || leaves.isEmpty) None
     else {
       val model = graft.plans.VectorExpressions.twoLevelModel(
-        centsFrom(sqrtK(k2.toLong)), leaves)
+        firstCentroids(index, sqrtK(k2.toLong)), leaves)
       val cand = index.withColumn("arr",
           graft.plans.VectorExpressions.twoLevelCentroidCosines(
             col("embedding"), col("nrm"), model))
@@ -3136,18 +3004,7 @@ object Similarity extends graft.QueryPack {
       .select(col("qid"),
         (lit(1000000L) + col("qid") * 10 + col("c")).as("nid"),
         explode(typedlit(beams)).as("beam"))
-    val wW = Window.partitionBy(col("beam"))
-    truth
-      .join(ranked,
-        col("beam") === col("abeam") && col("qid") === col("aqid") &&
-          col("nid") === col("anid"),
-        "left_outer")
-      .groupBy(col("beam"), col("qid"))
-      .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
-      .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
-      .withColumn("macro_recall",
-        round(sum(col("n_hits")).over(wW).cast("double") /
-          (lit(3.0) * count(lit(1)).over(wW)), 6))
+    recallAt3(truth, ranked, Seq("beam" -> "abeam"))
       .select(col("beam").cast("long").as("beam"), col("qid"),
         col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
       .orderBy(col("beam"), col("qid"))
@@ -3187,28 +3044,6 @@ object Similarity extends graft.QueryPack {
       .withColumn("rk", row_number().over(wE))
       .filter(col("rk") === 1)
       .select(col("qid"), col("node"))
-  }
-
-  /** Walk-family lineage-cut cadence (VERDICT r14 item 4): cut every
-    * N hops (>= hops = final-only, the default). Read per call so
-    * the A/B runs under sysprop sweeps; results are cadence-invariant
-    * (localCheckpoint is pure lineage surgery), only cost moves.
-    * HISTORY: the r15 row-state kernel measured default 1 (cut every
-    * hop) best — its per-hop union+distinct DOUBLED the plan tree per
-    * uncut hop (sf0.01 cadence 1/2/3/7 = 21.2/23.4/26.7/99.2 s family
-    * min-sums). The r16 array-state kernel grows the plan LINEARLY
-    * per hop, so the economics inverted: mid-walk cuts now only break
-    * the one-execution broadcast-exchange reuse and add per-cut jobs.
-    * DEFAULT no-mid-cut — MEASURED r16 (CadenceAB sweep, cpus=32,
-    * sf0.1, min-sums over beam/layered/delete/filtered: cadence
-    * 1/2/3/off = 15.7/14.5/14.1/14.2 s — every-hop cuts now LOSE
-    * ~10%, off ties cadence-3 within noise; off is kept as the
-    * default for the broadcast-reuse argument above). */
-  private def walkCkptEvery: Int = {
-    val n = sys.props.get("graft.walk.ckpt.every")
-      .map(_.trim.toInt).getOrElse(Int.MaxValue)
-    require(n >= 1, s"graft.walk.ckpt.every must be >= 1, got $n")
-    n
   }
 
   /** [[beamWalk]] with the entry frame SUPPLIED — the hook
@@ -3257,7 +3092,7 @@ object Similarity extends graft.QueryPack {
       .withColumn("beam", explode(typedlit(beams)))
       .select(col("beam"), col("qid"), col("qv"), col("qnrm"),
         array_sort(array_distinct(col("vis")), visOrd).as("vis"))
-    (1 to hops).foreach { h =>
+    (1 to hops).foreach { _ =>
       // One linear pass per hop — `state` flows through ONCE (explode
       // carrying vis → joins → regroup), so the hop plan NEVER
       // references the previous state twice and the tree grows
@@ -3297,13 +3132,14 @@ object Similarity extends graft.QueryPack {
         .agg(first(col("qv")).as("qv"), first(col("qnrm")).as("qnrm"),
           array_sort(array_distinct(concat(first(col("vis")),
             collect_list(col("cand")))), visOrd).as("vis"))
-      // cadence knob kept for the CadenceAB instrument: with the
-      // linear-plan hop above the default is NO mid-walk cut — one
-      // execution end to end, broadcast exchanges reused across hops
-      if (h % walkCkptEvery == 0 && h < hops)
-        state = state.localCheckpoint()
     }
-    // final cut: consumers slice the result several ways (recall
+    // NO mid-walk cut: the hop above grows the plan linearly, so the
+    // walk runs as one execution with its broadcast exchanges reused
+    // across hops, and a cut would only break that reuse and add jobs.
+    // Measured r16 (cpus=32, sf0.1, min-sums over q_ann_beam/layered/
+    // delete/filtered): cutting every 1/2/3 hops vs never = 15.7/14.5/
+    // 14.1/14.2 s.
+    // Final cut: consumers slice the result several ways (recall
     // joins, per-arm filters) — materialize the grid-sized walk once
     state.localCheckpoint()
       .select(col("beam"), col("qid"), explode(col("vis")).as("v"))
@@ -3326,11 +3162,6 @@ object Similarity extends graft.QueryPack {
 
   private def sqrtK(n: Long): Int = math.ceil(math.sqrt(n.toDouble)).toInt
 
-  /** Paired-index-build overlap — see [[graft.Tables.inParallel]]
-    * (the q_ann_ivfpq_lloyd arm-pool device, guide §2.6). */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) =
-    graft.Tables.inParallel(fa, fb)
-
   /** K DETERMINISTIC sampled centroids (the embeddings of vec_id
     * 10..10+K-1) — IVF-style coarse quantization with sampled centroids
     * instead of Lloyd iterations, which keeps the DuckDB oracles exact.
@@ -3342,6 +3173,16 @@ object Similarity extends graft.QueryPack {
       .filter(col("vec_id") >= 10 && col("vec_id") < lit(10L + k))
       .select(col("vec_id"), col("embedding"), col("nrm"))
       .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
+      .sortBy(_._1)
+
+  /** The first k rows of `frame` with vec_id ≥ 10 as centroids — the
+    * [[sampledCentroids]] rule over a SUBSET (quality survivors, the
+    * stored index side), where ids are not contiguous. */
+  private def firstCentroids(frame: DataFrame, k: Int): Array[(Long, Seq[Double], Double)] =
+    frame.filter(col("vec_id") >= 10)
+      .orderBy(col("vec_id")).limit(k)
+      .select(col("vec_id"), col("embedding"), col("nrm")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq, r.getDouble(2)))
       .sortBy(_._1)
 

@@ -295,6 +295,50 @@ class CentroidPlanSpec extends AnyFunSuite {
       "all rows landed on one codeword — vacuous distortion surface")
   }
 
+  test("q_ann_pq equals a plain-Scala recompute of the ADC top-3 scan") {
+    import graft.Tables
+    // the same house constants and codebook as q_pq_distortion, outside
+    // IVF: every vector's codes, each query's round-9 DECIMAL cell sums
+    // over them, and the per-query top-3 by (approx, nid)
+    val M = 4; val K = 4; val SUB = 16
+    def r9(v: Double) = java.math.BigDecimal.valueOf(v)
+      .setScale(9, java.math.RoundingMode.HALF_UP)
+    val rows = Tables(spark, TestSpark.sf, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+    val cbRows = rows.filter { case (id, _) => id >= 10 && id < 10 + K }
+      .map(_._2)
+    def d2(v: Array[Double], m: Int, k: Int): Double = {
+      val a = v.slice(m * SUB, (m + 1) * SUB)
+      val c = cbRows(k).slice(m * SUB, (m + 1) * SUB)
+      def dot(x: Array[Double], y: Array[Double]) =
+        x.indices.foldLeft(0.0)((s, i) => s + x(i) * y(i))
+      (dot(a, a) + dot(c, c)) - dot(a, c) * 2.0
+    }
+    val codes = rows.map { case (id, v) =>
+      id -> (0 until M).map(m => (0 until K).minBy(k => (d2(v, m, k), k)))
+    }.toMap
+    val expected = rows.filter(_._1 < 10).toSeq.flatMap { case (qid, q) =>
+      rows.filter(_._1 != qid).map { case (nid, _) =>
+        nid -> (0 until M).map(m => r9(d2(q, m, codes(nid)(m))))
+          .reduce(_ add _)
+      }.sortBy { case (nid, approx) => (approx, nid) }.take(3)
+        .zipWithIndex.map { case ((nid, approx), i) =>
+          (qid, i + 1L, nid, approx.doubleValue())
+        }
+    }
+    val actual = graft.operators.Similarity
+      .queries("q_ann_pq")(spark, TestSpark.sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    assert(actual == expected,
+      s"first diff: ${actual.zip(expected).find { case (a, b) => a != b }}")
+    // non-vacuous: ten queries, and the ADC sums actually separate rows
+    assert(actual.map(_._1).distinct.size == 10)
+    assert(actual.map(_._4).distinct.size > 1, "every ADC sum is equal")
+  }
+
   test("q_dim_audit equals a plain-Scala fixed-point moment recompute; plant detected") {
     import graft.Tables
     val rows = Tables(spark, TestSpark.sf, "embeddings")

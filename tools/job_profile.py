@@ -3,7 +3,7 @@
 
 Usage:
   JAVA_EXTRA="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///tmp/evlog" \
-    tools/run.sh graft.RunQuery q_ann_beam /root/testdata/sf0.1 1
+    tools/run.sh graft.TimeQuery <sfDir> q_ann_beam 1
   python3 tools/job_profile.py /tmp/evlog/<app-id>
 
 Prints every job (submit->end wall ms, call site) in order, then a
