@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry on
   * sf0.001 and prints the row count (driver checks rows > 0). */

@@ -48,20 +48,12 @@ object Dedup extends graft.QueryPack {
     * the DuckDB oracles below restate the same inverted-index-with-cap
     * computation, so greenness is structural at any df distribution.
     *
-    * Like `graft.lsh.planes`, the cap is a library configuration
-    * (`graft.shingle.df.cap` sysprop / `GRAFT_SHINGLE_DF_CAP` env,
-    * default 1000), read ONCE at object init: both the Spark plans and
-    * the generated DuckDB oracle SQL rebuild from the same constant,
-    * so any setting stays oracle-consistent by construction — and
-    * DedupSpec runs the ngram kernel under a cap low enough to
-    * actually FIRE on the testdata, proving the capped path itself
-    * (not just the cap-idle path) keeps both engines in agreement. */
-  private val SHINGLE_DF_CAP: Int =
-    sys.props.get("graft.shingle.df.cap")
-      .orElse(sys.env.get("GRAFT_SHINGLE_DF_CAP"))
-      .map(_.toInt).getOrElse(1000)
-
-  private def toks(c: Column): Column = split(lower(c), " ")
+    * Both the Spark plans and the generated DuckDB oracle SQL build
+    * from this one constant, so they agree by construction — and
+    * DedupSpec passes the ngram kernel a `cap` low enough to actually
+    * FIRE on the testdata, proving the capped path itself (not just
+    * the cap-idle path) keeps both engines in agreement. */
+  private val SHINGLE_DF_CAP = 1000
 
   /** Word-trigram shingles (distinct, first-seen order) — semantics of
     * `array_distinct(transform(sequence(1, greatest(n-2,1)), i ->

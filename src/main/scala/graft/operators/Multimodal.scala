@@ -728,7 +728,6 @@ object Multimodal extends graft.QueryPack {
     // surfaces in two queries at once.
     "q_media_pipeline" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables(s, d, "documents")
       val info = docs.select(col("doc_id")).as[Long]
         .mapPartitions(_.grouped(64).flatMap(_.flatMap { id =>
@@ -789,7 +788,7 @@ object Multimodal extends graft.QueryPack {
 
   /** Group-size cap for the pHash pair frames — a hash shared by more
     * images than this is a DEGENERATE asset class that fans out
-    * quadratically (the `graft.shingle.df.cap` discipline). Sysprop so
+    * quadratically (Dedup's shingle df cap discipline). Sysprop so
     * MultimodalSpec can exercise the cut at a second value (cap=2);
     * read per call so engine and oracle always agree. */
   private def phashGroupCap: Int =

@@ -774,13 +774,7 @@ object Similarity extends graft.QueryPack {
           col("nid"))
         .withColumn("beam", explode(typedlit(Seq(1, 2, 4, 8))))
       val wW = Window.partitionBy(col("entry"), col("beam"))
-      truth
-        .join(ranked,
-          col("beam") === col("abeam") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"),
-          "left_outer")
-        .groupBy(col("beam"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+      hitCounts(truth, ranked, annPairs, "beam", "qid")
         .withColumn("entry",
           when(col("qid") < 0, lit("global")).otherwise(lit("layered")))
         .withColumn("qid",
@@ -898,13 +892,7 @@ object Similarity extends graft.QueryPack {
         .groupBy(col("abeam").as("dbeam"), col("aqid").as("dqid"))
         .agg(count(lit(1)).as("nd"))
       val wW = Window.partitionBy(col("arm"), col("beam"))
-      truth
-        .join(ranked,
-          col("beam") === col("abeam") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"),
-          "left_outer")
-        .groupBy(col("beam"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+      hitCounts(truth, ranked, annPairs, "beam", "qid")
         .join(delTop,
           col("beam") === col("dbeam") && col("qid") === col("dqid"),
           "left_outer")
@@ -993,16 +981,9 @@ object Similarity extends graft.QueryPack {
         .unionByName(struth.select((col("qid") + OFF).as("qid"),
           (col("nid") + OFF).as("nid")))
         .withColumn("beam", explode(typedlit(Seq(2, 4))))
-      truthAll
-        .join(ranked,
-          col("beam") === col("abeam") && col("qid") === col("aqid") &&
-            col("nid") === col("anid"),
-          "left_outer")
-        .withColumn("arm",
-          when(col("qid") >= OFF, lit("rebuild"))
-            .otherwise(lit("incremental")))
-        .groupBy(col("arm"), col("beam"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+      val armed = truthAll.withColumn("arm",
+        when(col("qid") >= OFF, lit("rebuild")).otherwise(lit("incremental")))
+      hitCounts(armed, ranked, annPairs, "arm", "beam")
         .crossJoin(broadcast(stats))
         .select(col("arm"), col("beam").cast("long").as("beam"),
           col("n_exact"), col("n_hits"),
@@ -1153,14 +1134,10 @@ object Similarity extends graft.QueryPack {
           explode(typedlit(Seq("postfilter", "induced"))))
         .withColumn("beam", explode(typedlit(beams)))
       val wW = Window.partitionBy(col("strategy"), col("pred"), col("beam"))
-      truth
-        .join(ranked,
-          col("strategy") === col("rs") && col("pred") === col("rp") &&
-            col("beam") === col("rb") && col("qid") === col("rq") &&
-            col("nid") === col("rnid"),
-          "left_outer")
-        .groupBy(col("strategy"), col("pred"), col("beam"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("rnid")).as("n_hits"))
+      hitCounts(truth, ranked,
+          Seq("strategy" -> "rs", "pred" -> "rp", "beam" -> "rb",
+            "qid" -> "rq", "nid" -> "rnid"),
+          "strategy", "pred", "beam", "qid")
         .join(counts,
           col("strategy") === col("cs") && col("pred") === col("cp") &&
             col("beam") === col("cb") && col("qid") === col("cq"),
@@ -1527,13 +1504,10 @@ object Similarity extends graft.QueryPack {
         .filter(col("ark") <= col("ak"))
         .select(col("abits"), col("ak"), col("aqid"), col("anid"))
       val wB = Window.partitionBy(col("n_bits"), col("k"))
-      exact
-        .join(approx,
-          col("n_bits") === col("abits") && col("k") === col("ak") &&
-            col("qid") === col("aqid") && col("nid") === col("anid"),
-          "left_outer")
-        .groupBy(col("n_bits"), col("k"), col("qid"))
-        .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+      hitCounts(exact, approx,
+          Seq("n_bits" -> "abits", "k" -> "ak", "qid" -> "aqid",
+            "nid" -> "anid"),
+          "n_bits", "k", "qid")
         .withColumn("recall",
           round(col("n_hits").cast("double") / col("n_exact"), 6))
         .withColumn("macro_recall",
@@ -1803,6 +1777,23 @@ object Similarity extends graft.QueryPack {
       .select(col("qid"), col("rk"), col("nid"), col("centroid_id"), col("sim"))
   }
 
+  /** The hit count every recall grading shares: `truth` left-joined to
+    * `approx` on the (truth, approx) column `pairs` — the neighbor pair
+    * last — and grouped by the truth columns `by`: n_exact (truth rows)
+    * and n_hits (truth rows the approx side returned). */
+  private def hitCounts(truth: DataFrame, approx: DataFrame,
+      pairs: Seq[(String, String)], by: String*): DataFrame =
+    truth
+      .join(approx,
+        pairs.map { case (t, a) => col(t) === col(a) }.reduce(_ && _),
+        "left_outer")
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_exact"), count(col(pairs.last._2)).as("n_hits"))
+
+  /** The (beam, qid, nid) pairs of the graph-walk sweeps' top-3. */
+  private val annPairs =
+    Seq("beam" -> "abeam", "qid" -> "aqid", "nid" -> "anid")
+
   /** Recall@3 grading of the ANN sweeps: `truth` (keys, qid, nid — 3
     * exact neighbors per query) left-joined to `approx` (its keys
     * under the paired names, aqid, anid), per (keys, qid): n_exact,
@@ -1810,15 +1801,9 @@ object Similarity extends graft.QueryPack {
   private def recallAt3(truth: DataFrame, approx: DataFrame,
       keys: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cell = keys.map(k => col(k._1))
-    val w = Window.partitionBy(cell: _*)
-    truth
-      .join(approx,
-        keys.map { case (t, a) => col(t) === col(a) }.reduce(_ && _) &&
-          col("qid") === col("aqid") && col("nid") === col("anid"),
-        "left_outer")
-      .groupBy(cell :+ col("qid"): _*)
-      .agg(count(lit(1)).as("n_exact"), count(col("anid")).as("n_hits"))
+    val w = Window.partitionBy(keys.map(k => col(k._1)): _*)
+    hitCounts(truth, approx, keys ++ Seq("qid" -> "aqid", "nid" -> "anid"),
+        keys.map(_._1) :+ "qid": _*)
       .withColumn("recall", round(col("n_hits").cast("double") / 3.0, 6))
       .withColumn("macro_recall",
         round(sum(col("n_hits")).over(w).cast("double") /

@@ -130,13 +130,6 @@ object StreamingGate extends graft.QueryPack {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** The q_stream_drift state fold: merge a micro-batch's (event_type,
-    * bin) rows into the persistent count state by summation — the
-    * mergeable count monoid, so the final state is independent of how
-    * the stream was batched (asserted across batchings in
-    * StatefulStreamingSpec). State stays grid-sized (types × bins)
-    * at any stream length; the staged-swap tail is the single-writer
-    * harness convention the other streaming sinks share. */
   /** Read a parquet state dir renamed to the caller's output column
     * names, or the schema-correct empty frame when the stream never
     * delivered a batch (empty-input totality: a monitor on an empty
@@ -165,13 +158,6 @@ object StreamingGate extends graft.QueryPack {
       ("n", "n", LongType)))
   }
 
-  /** The q_stream_freshness state fold: merge a micro-batch's
-    * (event_type, us) rows into per-type (last_us, n_events) state —
-    * a (MAX, SUM) monoid, the second member of the mergeable-state
-    * family next to foldBinCounts' counts. State is |types|-sized at
-    * any stream length and the fold is batching-invariant (max and
-    * sum are associative/commutative — asserted in
-    * StatefulStreamingSpec). */
   /** The q_stream_seq_pack state fold — the first ORDER-DEPENDENT
     * member of the fold family (every prior fold is a commutative
     * monoid; packing is not: a doc's sequence assignment depends on
@@ -363,6 +349,43 @@ object StreamingGate extends graft.QueryPack {
     }
   }
 
+  /** The (sk, n) columns of the one-row KLL and HLL sketch states. */
+  private val sketchCols = {
+    import org.apache.spark.sql.types.{BinaryType, LongType}
+    Seq(("sk", "sk", BinaryType), ("n", "n", LongType))
+  }
+
+  /** The grading tail of both KLL quantile gates: the drained sketch's
+    * median must satisfy q_sketch_kll's exact rank window against the
+    * batch events table (±2·eps·n, eps the KLL bound for `k`), and the
+    * folded row count must equal the exact count. No state (an empty
+    * stream) grades to an empty frame. The n > 0 guard: an
+    * all-empty-batch history merges the NULL sketches into an EMPTY
+    * (non-null) KLL buffer, which get_quantile rejects — the CaseWhen
+    * short-circuit keeps that path from ever evaluating it. */
+  private def kllMedianContract(s: SparkSession, d: String, state: String,
+      k: Int): DataFrame = {
+    val eps = 2.296 / math.pow(k.toDouble, 0.9)
+    val st = readStateOr(s, state, sketchCols)
+      .select(when(col("n") > 0L,
+        expr("kll_sketch_get_quantile_bigint(sk, 0.5)")).as("med"),
+        col("n"))
+    val cents = Tables(s, d, "events")
+      .select(expr("cast(value * 100 as bigint)").as("cents"))
+    val band = lit(2.0 * eps) * col("n")
+    cents.crossJoin(broadcast(st))
+      .groupBy(col("med"), col("n"))
+      .agg(
+        sum(when(col("cents") < col("med"), 1L).otherwise(0L)).as("below"),
+        sum(when(col("cents") <= col("med"), 1L).otherwise(0L))
+          .as("at_or_below"),
+        count(lit(1)).as("n_exact"))
+      .select(col("n"),
+        (col("n") === col("n_exact")).as("counts_match"),
+        ((col("at_or_below") >= col("n") * 0.5 - band) &&
+          (col("below") + 1 <= col("n") * 0.5 + band)).as("within_bound"))
+  }
+
   /** The q_stream_hll state fold: merge a micro-batch's HLL sketch of
     * user_id into ONE persistent (sketch, count) row — the fourth
     * mergeable-summary fold next to KLL, Misra-Gries and the count/max
@@ -390,6 +413,13 @@ object StreamingGate extends graft.QueryPack {
     swapState(merged, state)
   }
 
+  /** The q_stream_freshness state fold: merge a micro-batch's
+    * (event_type, us) rows into per-type (last_us, n_events) state —
+    * a (MAX, SUM) monoid, the second member of the mergeable-state
+    * family next to foldBinCounts' counts. State is |types|-sized at
+    * any stream length and the fold is batching-invariant (max and
+    * sum are associative/commutative — asserted in
+    * StatefulStreamingSpec). */
   def foldTypeMax(state: String)(batch: DataFrame, id: Long): Unit = {
     recoverState(state)
     val bc = batch.groupBy(col("event_type"))
@@ -431,21 +461,7 @@ object StreamingGate extends graft.QueryPack {
 
   /** Stage one parquet file of a replayed multi-batch source: write
     * `df` as a single part file under `src/name.parquet` with a pinned
-    * mtime (file order = arrival order under maxFilesPerTrigger=1).
-    * Shared by the restart gates and the sliced-replay drains. */
-  /** Stage several replay files TOGETHER: each file's bytes and
-    * pinned mtime are exactly [[stageFile]]'s — arrival order is the
-    * mtimes, never the write schedule — so the independent
-    * scan+coalesce+write setup jobs can run concurrently
-    * (Tables.inParallelSeq, guide §2.6) instead of serializing
-    * per-file planning gaps and job tails. */
-  private def stageFiles(root: String, src: java.io.File,
-      files: (DataFrame, String, Long)*): Unit = {
-    graft.Tables.inParallelSeq(files.map { case (df, name, mt) =>
-      () => stageFile(root, src, df, name, mt) })
-    ()
-  }
-
+    * mtime (file order = arrival order under maxFilesPerTrigger=1). */
   private def stageFile(root: String, src: java.io.File,
       df: DataFrame, name: String, mtime: Long): Unit = {
     val tmp = new java.io.File(root, "tmp_" + name)
@@ -457,6 +473,73 @@ object StreamingGate extends graft.QueryPack {
     require(part.renameTo(dst), s"stage $name failed")
     dst.setLastModified(mtime)
     graft.Fs.deleteRec(tmp)
+  }
+
+  /** Stage a multi-batch replay source: slice i becomes
+    * `root/src/f<i>.parquet` with mtime t0 + 2000·i, so under
+    * maxFilesPerTrigger=1 micro-batch i is exactly slice i. Arrival
+    * order is the pinned mtimes, never the write schedule, so the
+    * slice writes and the caller's independent `alongside` setup
+    * writes (index and state snapshots) run together
+    * (Tables.inParallelSeq, guide §2.6) instead of serializing
+    * per-file planning gaps and job tails. Returns the staged dir
+    * for [[replayStaged]]. */
+  private def stageSlices(root: String, slices: Seq[DataFrame],
+      alongside: Seq[() => Unit] = Nil): String = {
+    val src = new java.io.File(root, "src")
+    src.mkdirs()
+    val t0 = System.currentTimeMillis() - 60000
+    Tables.inParallelSeq(alongside ++ slices.zipWithIndex.map {
+      case (df, i) => () => stageFile(root, src, df, s"f$i", t0 + 2000L * i)
+    })
+    src.getPath
+  }
+
+  /** The stream over a [[stageSlices]] dir: one staged file per
+    * micro-batch, schema from f0's footer. The restart gates call it
+    * once per drain over the same files. */
+  private def replayStaged(s: SparkSession, src: String): DataFrame =
+    s.readStream.schema(Tables.parquet(s, src + "/f0.parquet").schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+
+  /** [[stageSlices]] then [[replayStaged]]: the source of every
+    * single-run sliced drain. */
+  private[graft] def stagedReplay(s: SparkSession, root: String,
+      slices: Seq[DataFrame], alongside: Seq[() => Unit] = Nil): DataFrame =
+    replayStaged(s, stageSlices(root, slices, alongside))
+
+  /** The house three-way slicing of a replayed table: slice i holds
+    * the rows whose `key` % 3 = i. */
+  private def thirds(df: DataFrame, key: String): Seq[DataFrame] =
+    (0 until 3).map(i => df.filter(col(key) % 3 === i))
+
+  /** The restart gates' kill-and-resume protocol: drain `stream()`
+    * from the pinned checkpoint `root/ckpt` with `body` as the sink,
+    * plant a failure right after batch 1's body (once — the `killed`
+    * marker), require that the drain died there, then resume a second
+    * drain of a fresh `stream()` from the same checkpoint. The resumed
+    * drain re-runs the uncommitted batch 1, so `body` must be
+    * idempotent under replay. */
+  private def killAndResume(s: SparkSession, gate: String, root: String,
+      stream: () => DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
+    val ckpt = root + "/ckpt"
+    val marker = new java.io.File(root, "killed")
+    def sink(dieAtBatch1: Boolean): (DataFrame, Long) => Unit =
+      (batch, id) => {
+        body(batch, id)
+        if (dieAtBatch1 && id == 1 && marker.createNewFile())
+          sys.error(s"planted mid-drain failure ($gate)")
+      }
+    val died =
+      try { drainFrom(s, stream(), "append", ckpt)(sink(true)); false }
+      catch {
+        case _: org.apache.spark.sql.streaming.StreamingQueryException =>
+          true
+      }
+    require(died && marker.exists(),
+      s"$gate: the first drain must die on batch 1 — " +
+        "the replay no longer produces multiple micro-batches")
+    drainFrom(s, stream(), "append", ckpt)(sink(false))
   }
 
   /** The q_stream_ngram_novelty state fold: accrete a micro-batch's
@@ -580,6 +663,13 @@ object StreamingGate extends graft.QueryPack {
     swapState(merged, state)
   }
 
+  /** The q_stream_drift state fold: merge a micro-batch's (event_type,
+    * bin) rows into the persistent count state by summation — the
+    * mergeable count monoid, so the final state is independent of how
+    * the stream was batched (asserted across batchings in
+    * StatefulStreamingSpec). State stays grid-sized (types × bins)
+    * at any stream length; the staged-swap tail is the single-writer
+    * harness convention the other streaming sinks share. */
   def foldBinCounts(state: String)(batch: DataFrame, id: Long): Unit = {
     recoverState(state)
     val bc = batch.groupBy(col("event_type"), col("bin"))
@@ -649,20 +739,10 @@ object StreamingGate extends graft.QueryPack {
     // exactly q_image_gate's discipline at the aggregate grain.
     "q_stream_media_gate" -> ((s, d) => {
       val root = freshDir("q_stream_media_gate")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/mg"
       val docs = Tables(s, d, "documents").select(col("doc_id"))
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append")(foldMediaGate(state))
-      recoverState(state)
+      drain(s, stagedReplay(s, root, thirds(docs, "doc_id")), "append")(
+        foldMediaGate(state))
       import org.apache.spark.sql.types.{LongType, StringType}
       readStateOr(s, state, Seq(
         ("reason", "reason", StringType), ("n", "n", LongType)))
@@ -812,51 +892,21 @@ object StreamingGate extends graft.QueryPack {
     // dropDuplicatesWithinWatermark (q_stream_dedup's form).
     "q_stream_restart" -> ((s, d) => {
       val root = freshDir("q_stream_restart")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
-      val ckpt = root + "/ckpt"
-      val marker = new java.io.File(root, "killed")
       val ev = Tables(s, d, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      def writeFile(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = new java.io.File(root, "tmp_" + name)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-        val part = tmp.listFiles().find(f =>
-          f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file for $name"))
-        val dst = new java.io.File(src, name + ".parquet")
-        require(part.renameTo(dst), s"stage $name failed")
-        dst.setLastModified(mtime)
-        graft.Fs.deleteRec(tmp)
-      }
-      val t0 = System.currentTimeMillis() - 60000
-      writeFile(ev.filter(col("event_id") % 2 === 0), "f1", t0)
-      writeFile(ev.filter(col("event_id") % 2 === 1)
-        .unionByName(ev.filter(col("event_id") % 4 === 0)), "f2", t0 + 2000)
-      writeFile(ev.filter(col("event_id") % 8 === 1), "f3", t0 + 4000)
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-        .dropDuplicates("event_id")
-      def sink(dieAtBatch1: Boolean): (DataFrame, Long) => Unit =
-        (batch, id) => {
+      val src = stageSlices(root, Seq(
+        ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1)
+          .unionByName(ev.filter(col("event_id") % 4 === 0)),
+        ev.filter(col("event_id") % 8 === 1)))
+      killAndResume(s, "q_stream_restart", root,
+          () => replayStaged(s, src).dropDuplicates("event_id")) {
+        (batch, id) =>
           // batchId-keyed overwrite = idempotent under re-runs
           batch.write.mode("overwrite").parquet(s"$out/b$id")
-          if (dieAtBatch1 && id == 1 && marker.createNewFile())
-            sys.error("planted mid-drain failure (restart-recovery gate)")
-        }
-      val died =
-        try { drainFrom(s, stream(), "append", ckpt)(sink(true)); false }
-        catch {
-          case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-            true
-        }
-      require(died && marker.exists(),
-        "q_stream_restart: the first drain must die on batch 1 — " +
-          "the replay no longer produces multiple micro-batches")
-      drainFrom(s, stream(), "append", ckpt)(sink(false))
+      }
       Tables.parquet(s, out + "/b*")
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"))
@@ -1017,35 +1067,11 @@ object StreamingGate extends graft.QueryPack {
     // (the q_sketch_kll precedent). State writes ride swapState.
     "q_stream_quantile" -> ((s, d) => {
       val K = 200
-      val eps = 2.296 / math.pow(K.toDouble, 0.9)
       val state = freshDir("q_stream_quantile") + "/qs"
       val stream = EventsStream.replay(s, d)
         .select(expr("cast(value * 100 as bigint)").as("cents"))
       drain(s, stream, "append")(foldKll(state, K))
-      recoverState(state)
-      // an empty stream delivers ZERO micro-batches (no fold, no state
-      // dir) — the monitor reports nothing, it does not throw
-      val st =
-        if (new java.io.File(state).exists())
-          Tables.parquet(s, state)
-            .select(expr("kll_sketch_get_quantile_bigint(sk, 0.5)").as("med"),
-              col("n"))
-        else s.range(0).select(lit(null).cast("bigint").as("med"),
-          lit(0L).as("n"))
-      val cents = Tables(s, d, "events")
-        .select(expr("cast(value * 100 as bigint)").as("cents"))
-      val band = lit(2.0 * eps) * col("n")
-      cents.crossJoin(broadcast(st))
-        .groupBy(col("med"), col("n"))
-        .agg(
-          sum(when(col("cents") < col("med"), 1L).otherwise(0L)).as("below"),
-          sum(when(col("cents") <= col("med"), 1L).otherwise(0L))
-            .as("at_or_below"),
-          count(lit(1)).as("n_exact"))
-        .select(col("n"),
-          (col("n") === col("n_exact")).as("counts_match"),
-          ((col("at_or_below") >= col("n") * 0.5 - band) &&
-            (col("below") + 1 <= col("n") * 0.5 + band)).as("within_bound"))
+      kllMedianContract(s, d, state, K)
     }),
 
     // Restart-recovery over MERGED-SKETCH state — the EIGHTEENTH
@@ -1066,76 +1092,18 @@ object StreamingGate extends graft.QueryPack {
     // are spec'd by StatefulStreamingSpec's swapState kills.
     "q_stream_quantile_restart" -> ((s, d) => {
       val K = 200
-      val eps = 2.296 / math.pow(K.toDouble, 0.9)
       val root = freshDir("q_stream_quantile_restart")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
-      val ckpt = root + "/ckpt"
       val state = root + "/qs"
-      val marker = new java.io.File(root, "killed")
       val ev = Tables(s, d, "events")
         .select(expr("cast(value * 100 as bigint)").as("cents"),
           col("event_id"))
-      def writeFile(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = new java.io.File(root, "tmp_" + name)
-        df.select(col("cents")).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.getPath)
-        val part = tmp.listFiles().find(f =>
-          f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file for $name"))
-        val dst = new java.io.File(src, name + ".parquet")
-        require(part.renameTo(dst), s"stage $name failed")
-        dst.setLastModified(mtime)
-        graft.Fs.deleteRec(tmp)
-      }
-      val t0 = System.currentTimeMillis() - 60000
       // disjoint slices covering the table exactly once — a sketch
       // fold (unlike the dedup gate) must see every row exactly once
-      writeFile(ev.filter(col("event_id") % 3 === 0), "f1", t0)
-      writeFile(ev.filter(col("event_id") % 3 === 1), "f2", t0 + 2000)
-      writeFile(ev.filter(col("event_id") % 3 === 2), "f3", t0 + 4000)
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      def sink(dieAtBatch1: Boolean): (DataFrame, Long) => Unit =
-        (batch, id) => {
-          foldKllIdem(state, K)(batch, id)
-          if (dieAtBatch1 && id == 1 && marker.createNewFile())
-            sys.error("planted mid-drain failure (quantile restart gate)")
-        }
-      val died =
-        try { drainFrom(s, stream(), "append", ckpt)(sink(true)); false }
-        catch {
-          case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-            true
-        }
-      require(died && marker.exists(),
-        "q_stream_quantile_restart: the first drain must die on " +
-          "batch 1 — the replay no longer produces multiple micro-batches")
-      drainFrom(s, stream(), "append", ckpt)(sink(false))
-      recoverState(state)
-      // n > 0 guard: an all-empty-batch history merges the NULL
-      // sketches into an EMPTY (non-null) KLL buffer, which
-      // get_quantile rejects — the CaseWhen short-circuit keeps the
-      // empty-stream path from ever evaluating it
-      val st = Tables.parquet(s, state)
-        .select(when(col("n") > 0L,
-          expr("kll_sketch_get_quantile_bigint(sk, 0.5)")).as("med"),
-          col("n"))
-      val cents = Tables(s, d, "events")
-        .select(expr("cast(value * 100 as bigint)").as("cents"))
-      val band = lit(2.0 * eps) * col("n")
-      cents.crossJoin(broadcast(st))
-        .groupBy(col("med"), col("n"))
-        .agg(
-          sum(when(col("cents") < col("med"), 1L).otherwise(0L)).as("below"),
-          sum(when(col("cents") <= col("med"), 1L).otherwise(0L))
-            .as("at_or_below"),
-          count(lit(1)).as("n_exact"))
-        .select(col("n"),
-          (col("n") === col("n_exact")).as("counts_match"),
-          ((col("at_or_below") >= col("n") * 0.5 - band) &&
-            (col("below") + 1 <= col("n") * 0.5 + band)).as("within_bound"))
+      val src = stageSlices(root,
+        thirds(ev, "event_id").map(_.select(col("cents"))))
+      killAndResume(s, "q_stream_quantile_restart", root,
+        () => replayStaged(s, src))(foldKllIdem(state, K))
+      kllMedianContract(s, d, state, K)
     }),
 
     // Streaming distinct-cardinality monitor — the NINETEENTH
@@ -1157,14 +1125,9 @@ object StreamingGate extends graft.QueryPack {
       val state = freshDir("q_stream_hll") + "/hs"
       val stream = EventsStream.replay(s, d).select(col("user_id"))
       drain(s, stream, "append")(foldHll(state, LG_K))
-      recoverState(state)
-      val st =
-        if (new java.io.File(state).exists())
-          Tables.parquet(s, state)
-            .select(when(col("n") > 0L,
-              expr("hll_sketch_estimate(sk)")).as("est"), col("n"))
-        else s.range(0).select(lit(null).cast("bigint").as("est"),
-          lit(0L).as("n"))
+      val st = readStateOr(s, state, sketchCols)
+        .select(when(col("n") > 0L,
+          expr("hll_sketch_estimate(sk)")).as("est"), col("n"))
       val exact = Tables(s, d, "events")
         .agg(countDistinct(col("user_id")).as("exact_distinct"),
           count(lit(1)).as("n_exact"))
@@ -1188,20 +1151,10 @@ object StreamingGate extends graft.QueryPack {
     // leaking into the eval stream) without rescanning history.
     "q_stream_ngram_novelty" -> ((s, d) => {
       val root = freshDir("q_stream_ngram_novelty")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/gs"
       val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append")(foldGramSet(state))
-      recoverState(state)
+      drain(s, stagedReplay(s, root, thirds(docs, "doc_id")), "append")(
+        foldGramSet(state))
       import org.apache.spark.sql.types.StringType
       val grams = readStateOr(s, state, Seq(
         ("split", "split", StringType), ("g", "g", StringType)))
@@ -1226,20 +1179,10 @@ object StreamingGate extends graft.QueryPack {
     "q_stream_bm25_admission" -> ((s, d) => {
       val terms = Seq("dup", "vector", "query")
       val root = freshDir("q_stream_bm25_admission")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/bs"
       val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append")(foldBm25Stats(state, terms))
-      recoverState(state)
+      drain(s, stagedReplay(s, root, thirds(docs, "doc_id")), "append")(
+        foldBm25Stats(state, terms))
       import org.apache.spark.sql.types.LongType
       val stats = readStateOr(s, state,
         ("nd", "nd", LongType) +: ("sdl", "sdl", LongType) +:
@@ -1267,8 +1210,6 @@ object StreamingGate extends graft.QueryPack {
     // batch query: gated by the q_dedup_incremental oracle VERBATIM.
     "q_stream_dedup_admission" -> ((s, d) => {
       val root = freshDir("q_stream_dedup_admission")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val newDocs = Dedup.corpus(Tables(s, d, "documents"))
         .filter(col("doc_id") % 7 === 3)
@@ -1276,14 +1217,7 @@ object StreamingGate extends graft.QueryPack {
       val (hashedIdxRaw, bandedIdxRaw) = Dedup.dedupIndex(s, d)
       val hashedIdx = hashedIdxRaw.localCheckpoint()
       val bandedIdx = bandedIdxRaw.localCheckpoint()
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (newDocs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (newDocs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (newDocs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+      val stream = stagedReplay(s, root, thirds(newDocs, "doc_id"))
       drain(s, stream, "append") { (batch, id) =>
         Dedup.dedupAdmit(batch, hashedIdx, bandedIdx)
           .write.mode("overwrite").parquet(s"$out/b$id")
@@ -1307,8 +1241,6 @@ object StreamingGate extends graft.QueryPack {
     // vectors, minhash text and media identity).
     "q_stream_unigram_encode" -> ((s, d) => {
       val root = freshDir("q_stream_unigram_encode")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       // train (memoized) BEFORE the drain: the stream only applies —
       // the map is captured in the foreachBatch closure, so the drain
@@ -1319,17 +1251,10 @@ object StreamingGate extends graft.QueryPack {
       // explicitly so arrival order is unaffected.
       val docs = Tables(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val t0 = System.currentTimeMillis() - 60000
-      val (model, _) = Tables.inParallel(
+      val (model, src) = Tables.inParallel(
         TextAnalytics.trainedUnigramModelFor(s, d),
-        stageFiles(root, src,
-          (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-          (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-          (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000)))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append") { (batch, id) =>
+        stageSlices(root, thirds(docs, "doc_id")))
+      drain(s, replayStaged(s, src), "append") { (batch, id) =>
         TextAnalytics.unigramEncodeFrame(model)(batch)
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
@@ -1349,25 +1274,16 @@ object StreamingGate extends graft.QueryPack {
     // oracle gates it VERBATIM. Sixth served-model modality.
     "q_stream_bpe_encode" -> ((s, d) => {
       val root = freshDir("q_stream_bpe_encode")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       // training (collect-bounded argmax rounds) and the 3-file
       // staging are independent setup chains — overlapped, same
       // device as drain #30 above (Tables.inParallel, guide §2.6)
       val docs = Tables(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val t0 = System.currentTimeMillis() - 60000
-      val (merges, _) = Tables.inParallel(
+      val (merges, src) = Tables.inParallel(
         TextAnalytics.trainedBpeMergesFor(s, d),
-        stageFiles(root, src,
-          (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-          (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-          (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000)))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append") { (batch, id) =>
+        stageSlices(root, thirds(docs, "doc_id")))
+      drain(s, replayStaged(s, src), "append") { (batch, id) =>
         TextAnalytics.bpeEncodeFrame(merges)(batch)
           .write.mode("overwrite").parquet(s"$out/b$id")
         ()
@@ -1396,22 +1312,12 @@ object StreamingGate extends graft.QueryPack {
     // corpus), never visited-set- or history-sized.
     "q_stream_ann_delete" -> ((s, d) => {
       val root = freshDir("q_stream_ann_delete")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/g"
       val (nodes, delIds, gPre) = Similarity.deleteGraphParts(s, d)
-      val t0 = System.currentTimeMillis() - 60000
-      // three independent setup writes — run together
-      // (Tables.inParallelSeq, guide §2.6); mtimes pinned
-      Tables.inParallelSeq(Seq(
-        () => gPre.write.mode("overwrite").parquet(s"$state/b-1"),
-        () => stageFile(root, src, delIds.filter(col("did") % 18 === 4),
-          "f1", t0),
-        () => stageFile(root, src, delIds.filter(col("did") % 18 =!= 4),
-          "f2", t0 + 2000)))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+      val stream = stagedReplay(s, root,
+        Seq(delIds.filter(col("did") % 18 === 4),
+          delIds.filter(col("did") % 18 =!= 4)),
+        Seq(() => gPre.write.mode("overwrite").parquet(s"$state/b-1")))
       // ADVICE r14: track the last batchId actually committed instead
       // of hardcoding b1 — a source that delivers both files in one
       // trigger (or an extra empty trigger re-writing state from its
@@ -1446,25 +1352,12 @@ object StreamingGate extends graft.QueryPack {
     // |batch|·beam·degree rows of equi-joins.
     "q_stream_ann_search" -> ((s, d) => {
       val root = freshDir("q_stream_ann_search")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val (nodes, g, qs) = Similarity.serveIndexParts(s, d)
-      val t0 = System.currentTimeMillis() - 60000
-      // the four setup writes (index snapshot + staged query files)
-      // are independent jobs off checkpointed frames into their own
-      // dirs — run them together (Tables.inParallelSeq, guide §2.6);
-      // mtimes pinned, bytes identical
-      Tables.inParallelSeq(Seq(
-        () => nodes.write.mode("overwrite").parquet(s"$root/idx_nodes"),
-        () => g.write.mode("overwrite").parquet(s"$root/idx_g"),
-        () => stageFile(root, src, qs.filter(col("qid") % 2 === 0), "f1",
-          t0),
-        () => stageFile(root, src, qs.filter(col("qid") % 2 =!= 0), "f2",
-          t0 + 2000)))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+      val stream = stagedReplay(s, root,
+        Seq(qs.filter(col("qid") % 2 === 0), qs.filter(col("qid") % 2 =!= 0)),
+        Seq(() => nodes.write.mode("overwrite").parquet(s"$root/idx_nodes"),
+          () => g.write.mode("overwrite").parquet(s"$root/idx_g")))
       drain(s, stream, "append") { (batch, id) =>
         val idxN = Tables.parquet(s, s"$root/idx_nodes")
         val idxG = Tables.parquet(s, s"$root/idx_g")
@@ -1493,8 +1386,6 @@ object StreamingGate extends graft.QueryPack {
     // control-plane shape a serving tier actually receives.
     "q_stream_ann_serve_maintain" -> ((s, d) => {
       val root = freshDir("q_stream_ann_serve_maintain")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val state = root + "/st"
       val (nodes, delIds, gPre) = Similarity.deleteGraphParts(s, d)
@@ -1510,19 +1401,10 @@ object StreamingGate extends graft.QueryPack {
         lit(null).cast("array<double>").as("qv"),
         lit(null).cast("double").as("qnrm"),
         lit(null).cast("string").as("qblk"), col("did"))
-      val t0 = System.currentTimeMillis() - 60000
-      // five independent setup writes (state snapshot + staged feed)
-      // off checkpointed frames, own dirs / pinned mtimes — run
-      // together (Tables.inParallelSeq, guide §2.6)
-      Tables.inParallelSeq(Seq(
-        () => nodes.write.mode("overwrite").parquet(s"$state/n-1"),
-        () => gPre.write.mode("overwrite").parquet(s"$state/g-1"),
-        () => stageFile(root, src, qFile("pre"), "f1", t0),
-        () => stageFile(root, src, dFile, "f2", t0 + 2000),
-        () => stageFile(root, src, qFile("post"), "f3", t0 + 4000)))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+      val stream = stagedReplay(s, root,
+        Seq(qFile("pre"), dFile, qFile("post")),
+        Seq(() => nodes.write.mode("overwrite").parquet(s"$state/n-1"),
+          () => gPre.write.mode("overwrite").parquet(s"$state/g-1")))
       drain(s, stream, "append") { (batch, id) =>
         val curN = Tables.parquet(s, s"$state/n${id - 1}")
         val curG = Tables.parquet(s, s"$state/g${id - 1}")
@@ -1570,44 +1452,21 @@ object StreamingGate extends graft.QueryPack {
     // the batch q_seq_pack — gated by its oracle VERBATIM.
     "q_stream_seq_pack" -> ((s, d) => {
       val root = freshDir("q_stream_seq_pack")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val state = root + "/sp"
       val docs = Tables(s, d, "documents")
         .select(col("source"), col("doc_id"), col("text"))
       val mxRow = docs.agg(max(col("doc_id"))).first()
       val mx = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-      // slice count as a sysprop (default = the house 3-file replay):
-      // the r13 trigger-cost audit knob (VERDICT item 5). SeqPackSpec
-      // proves the fold is slicing-invariant (1/2/5 cuts), so the
-      // knob trades ONLY trigger count against per-trigger volume;
-      // MEASURED (sf0.1, cpus=16, warm session, 3 reps): 3.3/4.2/6.3 s
-      // at 2/3/5 slices — ~1.0 s per extra trigger (the state-store
-      // commit + micro-batch planning floor), while the data cost is
-      // flat (the 2-slice batches carry 2.5x the rows of the 5-slice
-      // ones at identical per-slice cost). The trigger-sizing
-      // contract at 100 TB follows: size micro-batches by the
-      // trigger floor, never by state — state is |sources|-sized at
-      // ANY slicing, so fewer, larger ordered slices are strictly
-      // cheaper until a single batch no longer fits the ingest
-      // window.
-      val slices =
-        sys.props.get("graft.seqpack.slices").map(_.toInt).getOrElse(3)
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src, (0 until slices).map { k =>
+      // 3 slices: 2/3/5 measured 3.3/4.2/6.3 s (sf0.1), ~1 s per trigger
+      val slices = 3
+      val stream = stagedReplay(s, root, (0 until slices).map { k =>
         val hi = if (k == slices - 1) Long.MaxValue else mx * (k + 1) / slices
         val lo = mx * k / slices
-        val slice =
-          if (k == 0) docs.filter(col("doc_id") <= hi)
-          else docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
-        (slice, s"f$k", t0 + 2000L * k)
-      }: _*)
-      val sch = Tables.parquet(s, src.getPath + "/f0.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+        if (k == 0) docs.filter(col("doc_id") <= hi)
+        else docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
+      })
       drain(s, stream, "append")(foldSeqPack(state, out))
-      recoverState(state)
       import org.apache.spark.sql.types.LongType
       import org.apache.spark.sql.types.StringType
       val flush = readStateOr(s, state, Seq(
@@ -1640,20 +1499,11 @@ object StreamingGate extends graft.QueryPack {
     // q_phash_admission oracle VERBATIM.
     "q_stream_phash_admission" -> ((s, d) => {
       val root = freshDir("q_stream_phash_admission")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val docs = Tables(s, d, "documents").select(col("doc_id"))
       val newDocs = docs.filter(col("doc_id") % 7 === 3)
       val idxh = Multimodal.phashIndex(s, docs).localCheckpoint()
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (newDocs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (newDocs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (newDocs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+      val stream = stagedReplay(s, root, thirds(newDocs, "doc_id"))
       drain(s, stream, "append") { (batch, id) =>
         Multimodal.phashAdmit(s, batch, idxh)
           .write.mode("overwrite").parquet(s"$out/b$id")
@@ -1681,8 +1531,6 @@ object StreamingGate extends graft.QueryPack {
     // codegen node; the probe join broadcasts the batch).
     "q_stream_ann_admission" -> ((s, d) => {
       val root = freshDir("q_stream_ann_admission")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val out = root + "/out"
       val newVecs = Similarity.loadEmbeddings(s, d)
         .filter(col("vec_id") % 7 === 3)
@@ -1690,14 +1538,7 @@ object StreamingGate extends graft.QueryPack {
         case None => Similarity.annAdmitEmpty(s)
         case Some((model, candRaw)) =>
           val cand = candRaw.localCheckpoint()
-          val t0 = System.currentTimeMillis() - 60000
-          stageFiles(root, src,
-            (newVecs.filter(col("vec_id") % 3 === 0), "f1", t0),
-            (newVecs.filter(col("vec_id") % 3 === 1), "f2", t0 + 2000),
-            (newVecs.filter(col("vec_id") % 3 === 2), "f3", t0 + 4000))
-          val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", 1).parquet(src.getPath)
+          val stream = stagedReplay(s, root, thirds(newVecs, "vec_id"))
           drain(s, stream, "append") { (batch, id) =>
             Similarity.annAdmitWith(model, cand, batch)
               .write.mode("overwrite").parquet(s"$out/b$id")
@@ -1732,20 +1573,10 @@ object StreamingGate extends graft.QueryPack {
     "q_stream_novelty_theta" -> ((s, d) => {
       val LG_K = 12
       val root = freshDir("q_stream_novelty_theta")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/ts"
       val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (docs.filter(col("doc_id") % 3 === 0), "f1", t0),
-        (docs.filter(col("doc_id") % 3 === 1), "f2", t0 + 2000),
-        (docs.filter(col("doc_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append")(foldGramTheta(state, LG_K))
-      recoverState(state)
+      drain(s, stagedReplay(s, root, thirds(docs, "doc_id")), "append")(
+        foldGramTheta(state, LG_K))
       import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
       val st = readStateOr(s, state, Seq(
         ("split", "split", StringType), ("sk", "sk", BinaryType),
@@ -1799,20 +1630,10 @@ object StreamingGate extends graft.QueryPack {
     // stream length; DECIMAL(38,0) sums stay exact forever.
     "q_stream_dim_audit" -> ((s, d) => {
       val root = freshDir("q_stream_dim_audit")
-      val src = new java.io.File(root, "src")
-      src.mkdirs()
       val state = root + "/dm"
       val ev = Tables(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val t0 = System.currentTimeMillis() - 60000
-      stageFiles(root, src,
-        (ev.filter(col("vec_id") % 3 === 0), "f1", t0),
-        (ev.filter(col("vec_id") % 3 === 1), "f2", t0 + 2000),
-        (ev.filter(col("vec_id") % 3 === 2), "f3", t0 + 4000))
-      val sch = Tables.parquet(s, src.getPath + "/f1.parquet").schema
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(src.getPath)
-      drain(s, stream, "append")(foldDimMoments(state))
-      recoverState(state)
+      drain(s, stagedReplay(s, root, thirds(ev, "vec_id")), "append")(
+        foldDimMoments(state))
       import org.apache.spark.sql.types.{DecimalType, LongType}
       val moments = readStateOr(s, state, Seq(
         ("dim", "dim", LongType),

@@ -526,7 +526,6 @@ object TextAnalytics extends graft.QueryPack {
     // discipline on a 20-row frame). Model-fit query: needs a
     // non-empty corpus (the BPE/LDA precondition class).
     "q_heaps_law" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
       val docs = Tables(s, d, "documents")
         .select(col("doc_id"),
           size(filter(tokens(col("text")), (w: Column) => length(w) > 0))
@@ -570,7 +569,6 @@ object TextAnalytics extends graft.QueryPack {
     // over the VOCAB frame with the (freq desc, word) total order; the
     // fit is the same round-9/DECIMAL grid OLS as q_heaps_law.
     "q_zipf" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
       val freq = Tables(s, d, "documents")
         .select(explode(tokens(col("text"))).as("w"))
         .filter(length(col("w")) > 0)

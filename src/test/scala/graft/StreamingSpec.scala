@@ -220,4 +220,22 @@ class StreamingSpec extends AnyFunSuite {
     val n = Tables(spark, TestSpark.sf, "events").count()
     assert(rows.length.toLong == n)
   }
+
+  test("staged replay: k slices drain as exactly k micro-batches, batch i holding slice i") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("staged_replay").toString
+    val ids = (0 until 3).map(i => (100L * i until 100L * i + 7).toSeq)
+    val slices = ids.map(r => spark.range(r.head, r.last + 1).toDF("id"))
+    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
+    val sink: (DataFrame, Long) => Unit = (batch, id) =>
+      seen.put(id, batch.collect().map(_.getLong(0)).sorted.toSeq)
+    graft.operators.StreamingGate.stagedReplay(spark, root, slices)
+      .writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", root + "/ckpt")
+      .foreachBatch(sink).start().awaitTermination()
+    assert(seen.asScala.toMap ==
+      ids.zipWithIndex.map { case (r, i) => i.toLong -> r }.toMap)
+  }
 }
