@@ -23,6 +23,16 @@ object Harness {
     * guards nothing here; with it off a drain's cloned session shares
     * the classloader and its classes come from the cache. The setting
     * only takes effect at session creation, hence the builder.
+    *
+    * `file://` goes through [[NioLocalFileSystem]] and [[NioLocalFs]]
+    * ([[Fs.nioLocalConf]]). Without the native Hadoop library the stock
+    * local filesystem forks a `chmod` per create and mkdir and two
+    * `readlink`s per FileContext rename; a streaming trigger's offset
+    * log, commit log and state deltas are all create-and-rename, so a
+    * q_stream_window drain forked 266 child processes. The nio
+    * versions write the same bytes and `.crc` files and fork none. Set
+    * on the builder so the SparkContext's Hadoop conf carries them
+    * before the first `FileSystem` for `file://` is created and cached.
     * @param warm run one tiny job to absorb session/codegen/committer
     *   init, so timed queries measure the queries (Bench-style mains) */
   def session(warm: Boolean = false): SparkSession = {
@@ -36,6 +46,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config(Fs.nioLocalConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // opt into RELIABLE checkpoints for the iterative kernels from the

@@ -4161,7 +4161,10 @@ object Similarity extends graft.QueryPack {
     // the greedy rounds unrolled as chained argmin CTEs (the BPE
     // unroll precedent): each round's max-sim frame excludes the
     // chosen set, LIMIT 1 under the (ms, vec_id) total order is the
-    // pick, sel accumulates
+    // pick, sel accumulates. e and every sel are MATERIALIZED: round i
+    // reads sel(i-1) three times, so inlined CTEs re-expand the whole
+    // chain per reference, 3^7-fold by sel8 (sf0.01: 829 s → 2.5 s on
+    // two DuckDB threads, same rows)
     "q_kcenter_seeds" -> {
       val rounds = (2 to 8).map { i =>
         s"""m$i AS (
@@ -4173,11 +4176,12 @@ object Similarity extends graft.QueryPack {
            |    AND x.vec_id NOT IN (SELECT vec_id FROM sel${i - 1})
            |  GROUP BY x.vec_id),
            |pick$i AS (SELECT vec_id, ms FROM m$i ORDER BY ms ASC, vec_id LIMIT 1),
-           |sel$i AS (SELECT * FROM sel${i - 1}
+           |sel$i AS MATERIALIZED (SELECT * FROM sel${i - 1}
            |          UNION ALL SELECT $i, vec_id, ms FROM pick$i)""".stripMargin
       }.mkString(",\n")
-      s"""WITH e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
-         |sel1(round, vec_id, max_sim) AS (
+      s"""WITH e AS MATERIALIZED (
+         |  SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
+         |sel1(round, vec_id, max_sim) AS MATERIALIZED (
          |  SELECT 1, CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)),
          |$rounds,
          |cov AS (

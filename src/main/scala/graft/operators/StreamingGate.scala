@@ -85,22 +85,28 @@ object StreamingGate extends graft.QueryPack {
     * specs hold at any setting.
     *
     * Fixed-cost floor: the residual ~0.7-2.4 s per drain (r8, sf0.1)
-    * was NOT storage. All three storage knobs were measured on the 4
-    * slowest drains and refuted: state partitions 8→4 gains ~5% (store
-    * open/commit is already amortized at 8), the RocksDB provider is
-    * ~15% SLOWER at these state sizes (native store open per batch
-    * dominates its benefit), and tmpfs-backed checkpoint/state/sink
-    * dirs change nothing (the page cache already absorbs the I/O).
-    * Part of the floor was per-drain codegen: each drain runs on a
-    * cloned session, which under per-session artifact isolation got a
-    * fresh classloader and so missed the codegen cache and recompiled
-    * every generated class (14 Janino compiles per q_stream_window
-    * drain). Harness.session turns the isolation off and a repeated
-    * drain now compiles nothing (StreamingSpec asserts it). Sink and
-    * state readbacks go through [[graft.Tables.parquet]], so they no
-    * longer run a schema-inference job each. What remains is the
-    * trigger lifecycle itself: stream planning, file index, the data
-    * batch, the watermark-finalize batch and the sink read-back. At
+    * was NOT storage I/O. State partitions 8→4 gain ~5%, the RocksDB
+    * provider is ~15% slower at these state sizes, and tmpfs-backed
+    * checkpoint/state/sink dirs change nothing. Two causes were
+    * per-call process and compile costs, and both are gone:
+    *  - Codegen: each drain runs on a cloned session, which under
+    *    per-session artifact isolation got a fresh classloader and
+    *    recompiled every generated class (14 Janino compiles per
+    *    q_stream_window drain). Harness.session turns the isolation
+    *    off; StreamingSpec asserts a repeated drain compiles nothing.
+    *  - Forks: every trigger writes an offset log, a commit log and a
+    *    state delta per partition, each a create plus a FileContext
+    *    rename. Without the native Hadoop library the stock local
+    *    filesystem forked `chmod` per create/mkdir and `readlink`
+    *    twice per rename: 266 child processes per q_stream_window
+    *    drain (JFR `jdk.ProcessStart`; 176 readlink, 90 chmod), and
+    *    state commit alone took ~0.7 s of its trigger. Harness.session
+    *    registers the java.nio local filesystem ([[graft.Fs]]), so a
+    *    drain forks none; LocalFsSpec asserts it.
+    * Sink and state readbacks go through [[graft.Tables.parquet]], so
+    * they run no schema-inference job. What remains is the trigger
+    * lifecycle itself: stream planning, file index, the data batch,
+    * the watermark-finalize batch and the sink read-back. At
     * deployment scale it amortizes: it is per-trigger, not per-row. */
   private def drain(s: SparkSession, stream: DataFrame,
       mode: String)(sink: (DataFrame, Long) => Unit): Unit =

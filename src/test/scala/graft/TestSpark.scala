@@ -13,6 +13,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       // as in Harness.session: drains reuse the codegen cache
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // and the fork-free local filesystem the mains register
+      .config(Fs.nioLocalConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
