@@ -69,10 +69,10 @@ object Analytic extends graft.QueryPack {
       .filter(col("osz") <= cap)
       .select(col("ok"), col("pk"))
 
-  /** The megabasket cap (`graft.cf.order.cap`, default 64), read on
-    * every call so a spec can set it between queries; both CF queries
-    * and their oracles take it from here. */
-  private def cfOrderCap: Int = sys.props.getOrElse("graft.cf.order.cap", "64").toInt
+  /** The megabasket cap: both CF queries and their oracles take it from
+    * here. [[itemCf]] and [[itemCfOracle]] take it as a parameter so a
+    * spec can lower it where testdata's small orders never reach it. */
+  private val CF_ORDER_CAP = 64
 
   /** The capped cosine top-5 item-item CF pipeline over (ok, pk)
     * baskets — ONE definition shared by q_item_cf (the trained
@@ -98,10 +98,52 @@ object Analytic extends graft.QueryPack {
       .filter(col("rk") <= 5)
   }
 
+  /** q_item_cf at basket cap `cap`: per part its top-5 co-ordered
+    * parts by basket cosine over the 8×-thinned (order, part) rows. */
+  private[graft] def itemCf(s: SparkSession, d: String,
+      cap: Int = CF_ORDER_CAP): DataFrame = {
+    val li = Tables(s, d, "lineitem")
+      .filter(col("l_orderkey") % 8 === 0)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+    cfTop5(li, cap)
+      .select(col("item"), col("rk").cast("long").as("rk"), col("rec"),
+        col("c_ij"), col("score"))
+      .orderBy(col("item"), col("rk"))
+  }
+
+  /** The q_item_cf oracle at basket cap `cap`: basket cap + cosine +
+    * per-item rank restated term for term. */
+  private[graft] def itemCfOracle(cap: Int = CF_ORDER_CAP): String =
+    s"""WITH $partLiDuck,
+       |sized AS (
+       |  SELECT ok, pk FROM (
+       |    SELECT ok, pk, COUNT(*) OVER (PARTITION BY ok) AS osz FROM li)
+       |  WHERE osz <= $cap),
+       |deg AS (SELECT pk, CAST(COUNT(*) AS BIGINT) AS c
+       |        FROM sized GROUP BY pk),
+       |pairs AS (
+       |  SELECT a.pk AS item, b.pk AS rec, CAST(COUNT(*) AS BIGINT) AS c_ij
+       |  FROM sized a JOIN sized b ON a.ok = b.ok AND a.pk <> b.pk
+       |  GROUP BY a.pk, b.pk HAVING COUNT(*) >= 2),
+       |scored AS (
+       |  SELECT item, rec, c_ij,
+       |    round(CAST(c_ij AS DOUBLE) /
+       |      sqrt(CAST(di.c * dj.c AS DOUBLE)), 9) AS score
+       |  FROM pairs
+       |  JOIN deg di ON di.pk = item
+       |  JOIN deg dj ON dj.pk = rec),
+       |ranked AS (
+       |  SELECT *, CAST(row_number() OVER (PARTITION BY item
+       |    ORDER BY score DESC, rec) AS BIGINT) AS rk
+       |  FROM scored)
+       |SELECT item, rk, rec, c_ij, score FROM ranked
+       |WHERE rk <= 5 ORDER BY item, rk""".stripMargin
+
   /** The shared part co-occurrence graph (8×-thinned orders, distinct
     * undirected u < v edges) consumed by q_triangles / q_kcore /
-    * q_bfs_distance — one definition, restated identically in each
-    * query's oracle prelude. */
+    * q_bfs_distance — one definition, with one DuckDB twin
+    * ([[partGraphDuck]]) that every part-graph oracle opens with. */
   private def partGraph(s: SparkSession, d: String): DataFrame = {
     val li = Tables(s, d, "lineitem")
       .filter(col("l_orderkey") % 8 === 0)
@@ -121,6 +163,55 @@ object Analytic extends graft.QueryPack {
       .select(col("a.pk").as("u"), col("b.pk").as("v"))
       .distinct()
   }
+
+  /** DuckDB twin of [[partGraph]]'s thinned (order, part) rows: li. */
+  private val partLiDuck: String =
+    s"""li AS (
+       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+       |  FROM lineitem WHERE l_orderkey % 8 = 0)""".stripMargin
+
+  /** DuckDB twin of [[partGraph]]: li and the undirected co-order edge
+    * set raw(u, v), u < v. */
+  private val partGraphDuck: String =
+    s"""$partLiDuck,
+       |raw AS (
+       |  SELECT DISTINCT a.pk AS u, b.pk AS v
+       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk)""".stripMargin
+
+  /** [[partGraphDuck]] with both edge directions, sym(src, dst). */
+  private val partSymDuck: String =
+    s"""$partGraphDuck,
+       |sym AS MATERIALIZED (
+       |  SELECT u AS src, v AS dst FROM raw
+       |  UNION ALL SELECT v, u FROM raw)""".stripMargin
+
+  /** [[partGraphDuck]] with each node's degree, deg(n, dg). */
+  private val partDegDuck: String =
+    s"""$partGraphDuck,
+       |deg AS (
+       |  SELECT n, CAST(COUNT(*) AS BIGINT) AS dg FROM (
+       |    SELECT u AS n FROM raw UNION ALL SELECT v FROM raw) t
+       |  GROUP BY n)""".stripMargin
+
+  /** DuckDB twin of [[trianglesPerNode]] over [[partDegDuck]]: the
+    * edges oriented low-to-high by the packed (degree, id) rank,
+    * ori(s, t, ot), and their triangles tri(a, b, c). */
+  private val partTrianglesDuck: String =
+    s"""$partDegDuck,
+       |ori AS (
+       |  SELECT
+       |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
+       |         THEN r.u ELSE r.v END AS s,
+       |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
+       |         THEN r.v ELSE r.u END AS t,
+       |    GREATEST(du.dg * 1000000000000 + r.u,
+       |             dv.dg * 1000000000000 + r.v) AS ot
+       |  FROM raw r JOIN deg du ON r.u = du.n JOIN deg dv ON r.v = dv.n),
+       |tri AS (
+       |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
+       |  FROM ori e1
+       |  JOIN ori e2 ON e1.s = e2.s AND e1.ot < e2.ot
+       |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t)""".stripMargin
 
   /** The symmetric customer↔supplier trade graph on packed-long node
     * ids (customers even, suppliers odd) shared by q_pagerank /
@@ -180,8 +271,36 @@ object Analytic extends graft.QueryPack {
     // jobs and broke exchange reuse between rounds. The final cut
     // still pins the frame for consumers that reference it more than
     // once (q_modularity joins labels onto BOTH edge endpoints).
-    lab.localCheckpoint()
+    lab.cut()
   }
+
+  /** DuckDB twin of [[lpaLabels]] over [[tradeEdges]]: the directed
+    * packed-id trade edges e and three label rounds l1..l3, each
+    * node's (cnt DESC, lab ASC) argmax over its neighbors' labels. */
+  private val lpaLabelsDuck: String =
+    s"""e0 AS (
+       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+       |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+       |l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
+       |c1 AS (SELECT e.dst AS node, l0.lab, COUNT(*) AS cnt
+       |       FROM e JOIN l0 ON l0.node = e.src GROUP BY e.dst, l0.lab),
+       |l1 AS (SELECT node, lab FROM (
+       |  SELECT node, lab, ROW_NUMBER() OVER (
+       |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c1)
+       |  WHERE rk = 1),
+       |c2 AS (SELECT e.dst AS node, l1.lab, COUNT(*) AS cnt
+       |       FROM e JOIN l1 ON l1.node = e.src GROUP BY e.dst, l1.lab),
+       |l2 AS (SELECT node, lab FROM (
+       |  SELECT node, lab, ROW_NUMBER() OVER (
+       |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c2)
+       |  WHERE rk = 1),
+       |c3 AS (SELECT e.dst AS node, l2.lab, COUNT(*) AS cnt
+       |       FROM e JOIN l2 ON l2.node = e.src GROUP BY e.dst, l2.lab),
+       |l3 AS (SELECT node, lab FROM (
+       |  SELECT node, lab, ROW_NUMBER() OVER (
+       |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c3)
+       |  WHERE rk = 1)""".stripMargin
 
   /** The zero-filled (type × day) burst grid + integer-moment z tail,
     * shared by q_burst_detect (batch counts) and q_stream_burst (the
@@ -208,6 +327,46 @@ object Analytic extends graft.QueryPack {
       .orderBy(col("event_type"), col("day"))
   }
 
+  /** DuckDB twin of [[burstZ]]'s moments: e, the per-(event_type, day)
+    * counts c, their zero-filled grid f and the integer moments m(nd,
+    * s1, s2). */
+  private val burstMomentsDuck: String =
+    s"""e AS (
+       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day
+       |  FROM events),
+       |c AS (
+       |  SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS cnt
+       |  FROM e GROUP BY event_type, day),
+       |f AS (
+       |  SELECT g.event_type, g.day, COALESCE(c.cnt, 0) AS cnt
+       |  FROM (SELECT t.event_type, d.day
+       |        FROM (SELECT DISTINCT event_type FROM e) t
+       |        CROSS JOIN (SELECT DISTINCT day FROM e) d) g
+       |  LEFT JOIN c ON g.event_type = c.event_type AND g.day = c.day),
+       |m AS (
+       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
+       |    CAST(SUM(cnt) AS BIGINT) AS s1,
+       |    CAST(SUM(cnt * cnt) AS BIGINT) AS s2
+       |  FROM f GROUP BY event_type)""".stripMargin
+
+  /** [[burstMomentsDuck]] with each grid day's z-score cut into the SAX
+    * symbols a-d, st(event_type, day, symbol). */
+  private val saxSymbolsDuck: String =
+    s"""$burstMomentsDuck,
+       |st AS (
+       |  SELECT event_type, day,
+       |    CASE WHEN z IS NULL THEN 'b'
+       |         WHEN z < -0.6745 THEN 'a'
+       |         WHEN z < 0.0 THEN 'b'
+       |         WHEN z < 0.6745 THEN 'c'
+       |         ELSE 'd' END AS symbol
+       |  FROM (
+       |    SELECT f.event_type, f.day,
+       |      CASE WHEN nd * s2 - s1 * s1 > 0 THEN
+       |        round(CAST(nd * cnt - s1 AS DOUBLE) /
+       |          sqrt(CAST(nd * s2 - s1 * s1 AS DOUBLE)), 9) END AS z
+       |    FROM f JOIN m USING (event_type)))""".stripMargin
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Item-item collaborative filtering (the Amazon item-to-item
@@ -218,24 +377,14 @@ object Analytic extends graft.QueryPack {
     // a basket larger than the cap is dropped BEFORE the self-join
     // (the megabasket is q_link_predict's hub-middle problem in basket
     // form: one order with B parts emits B^2 pairs — suppression is
-    // the published mitigation, and the cap rides the sysprop pattern
+    // the published mitigation, and the cap is an [[itemCf]] parameter
     // so the spec can exercise it where testdata's small orders
     // don't). Pair generation is an order-keyed hash equi-join (work
     // proportional to squared basket sizes, bounded by the cap), the
     // >=2-evidence floor drops noise pairs, scores are round-9 doubles
     // of exact counts, and ranking is a per-item window over each
     // item's candidate list (never a global sort).
-    "q_item_cf" -> ((s, d) => {
-      val cap = cfOrderCap
-      val li = Tables(s, d, "lineitem")
-        .filter(col("l_orderkey") % 8 === 0)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      cfTop5(li, cap)
-        .select(col("item"), col("rk").cast("long").as("rk"), col("rec"),
-          col("c_ij"), col("score"))
-        .orderBy(col("item"), col("rk"))
-    }),
+    "q_item_cf" -> ((s, d) => itemCf(s, d)),
 
     // HITS hubs & authorities (Kleinberg, JACM 1999) on the directed
     // customer→supplier trade graph — the link-analysis complement to
@@ -639,7 +788,7 @@ object Analytic extends graft.QueryPack {
     // operator; the holdout check is one pair-keyed left join;
     // output is the eval-summary grid (one row).
     "q_cf_holdout" -> ((s, d) => {
-      val cap = cfOrderCap
+      val cap = CF_ORDER_CAP
       def baskets(residue: Int): DataFrame = {
         val raw = Tables(s, d, "lineitem")
           .filter(col("l_orderkey") % 16 === residue)
@@ -2370,16 +2519,7 @@ object Analytic extends graft.QueryPack {
 
     // same symmetrized edge moments, same collapsed Pearson form
     "q_assortativity" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_orderkey % 8 = 0),
-        |raw AS (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (
-        |  SELECT n, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-        |    SELECT u AS n FROM raw UNION ALL SELECT v FROM raw) t
-        |  GROUP BY n),
+      s"""WITH $partDegDuck,
         |sym AS (
         |  SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
         |pairs AS (
@@ -2400,36 +2540,7 @@ object Analytic extends graft.QueryPack {
     // same hour grid, lag equi-join, exact integer deviations
     // the burst grid/z CTEs restated, then breakpoints + ordered agg
     "q_sax_words" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |c AS (
-        |  SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM e GROUP BY event_type, day),
-        |f AS (
-        |  SELECT g.event_type, g.day, COALESCE(c.cnt, 0) AS cnt
-        |  FROM (SELECT t.event_type, d.day
-        |        FROM (SELECT DISTINCT event_type FROM e) t
-        |        CROSS JOIN (SELECT DISTINCT day FROM e) d) g
-        |  LEFT JOIN c ON g.event_type = c.event_type AND g.day = c.day),
-        |m AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
-        |    CAST(SUM(cnt) AS BIGINT) AS s1,
-        |    CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-        |  FROM f GROUP BY event_type),
-        |st AS (
-        |  SELECT event_type, day,
-        |    CASE WHEN z IS NULL THEN 'b'
-        |         WHEN z < -0.6745 THEN 'a'
-        |         WHEN z < 0.0 THEN 'b'
-        |         WHEN z < 0.6745 THEN 'c'
-        |         ELSE 'd' END AS symbol
-        |  FROM (
-        |    SELECT f.event_type, f.day,
-        |      CASE WHEN nd * s2 - s1 * s1 > 0 THEN
-        |        round(CAST(nd * cnt - s1 AS DOUBLE) /
-        |          sqrt(CAST(nd * s2 - s1 * s1 AS DOUBLE)), 9) END AS z
-        |    FROM f JOIN m USING (event_type)))
+      s"""WITH $saxSymbolsDuck
         |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
         |  string_agg(symbol, '' ORDER BY day) AS sax_word,
         |  CAST(SUM(CASE WHEN symbol = 'a' THEN 1 ELSE 0 END) AS BIGINT)
@@ -2445,36 +2556,7 @@ object Analytic extends graft.QueryPack {
     // same z/symbol CTEs as q_sax_words, three LEADs over the per-type
     // day order, NULL-propagating concat dropped like Spark's
     "q_sax_motifs" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |c AS (
-        |  SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM e GROUP BY event_type, day),
-        |f AS (
-        |  SELECT g.event_type, g.day, COALESCE(c.cnt, 0) AS cnt
-        |  FROM (SELECT t.event_type, d.day
-        |        FROM (SELECT DISTINCT event_type FROM e) t
-        |        CROSS JOIN (SELECT DISTINCT day FROM e) d) g
-        |  LEFT JOIN c ON g.event_type = c.event_type AND g.day = c.day),
-        |m AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
-        |    CAST(SUM(cnt) AS BIGINT) AS s1,
-        |    CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-        |  FROM f GROUP BY event_type),
-        |st AS (
-        |  SELECT event_type, day,
-        |    CASE WHEN z IS NULL THEN 'b'
-        |         WHEN z < -0.6745 THEN 'a'
-        |         WHEN z < 0.0 THEN 'b'
-        |         WHEN z < 0.6745 THEN 'c'
-        |         ELSE 'd' END AS symbol
-        |  FROM (
-        |    SELECT f.event_type, f.day,
-        |      CASE WHEN nd * s2 - s1 * s1 > 0 THEN
-        |        round(CAST(nd * cnt - s1 AS DOUBLE) /
-        |          sqrt(CAST(nd * s2 - s1 * s1 AS DOUBLE)), 9) END AS z
-        |    FROM f JOIN m USING (event_type))),
+      s"""WITH $saxSymbolsDuck,
         |mw AS (
         |  SELECT event_type, symbol ||
         |    LEAD(symbol, 1) OVER (PARTITION BY event_type ORDER BY day) ||
@@ -2604,7 +2686,7 @@ object Analytic extends graft.QueryPack {
 
     // same train slice, cap, floor and rank; holdout pair-join check
     "q_cf_holdout" -> {
-      val cap = cfOrderCap
+      val cap = CF_ORDER_CAP
       s"""WITH tli AS (
          |  SELECT DISTINCT ok, pk FROM (
          |    SELECT l_orderkey AS ok, l_partkey AS pk
@@ -2695,30 +2777,7 @@ object Analytic extends graft.QueryPack {
 
     // the q_triangles orientation chain + degree join + one ratio
     "q_clustering_coeff" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_orderkey % 8 = 0),
-        |raw AS (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (
-        |  SELECT n, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-        |    SELECT u AS n FROM raw UNION ALL SELECT v FROM raw) t
-        |  GROUP BY n),
-        |ori AS (
-        |  SELECT
-        |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
-        |         THEN r.u ELSE r.v END AS s,
-        |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
-        |         THEN r.v ELSE r.u END AS t,
-        |    GREATEST(du.dg * 1000000000000 + r.u,
-        |             dv.dg * 1000000000000 + r.v) AS ot
-        |  FROM raw r JOIN deg du ON r.u = du.n JOIN deg dv ON r.v = dv.n),
-        |tri AS (
-        |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM ori e1
-        |  JOIN ori e2 ON e1.s = e2.s AND e1.ot < e2.ot
-        |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t),
+      s"""WITH $partTrianglesDuck,
         |tcnt AS (
         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri FROM (
         |    SELECT a AS node FROM tri
@@ -2814,35 +2873,7 @@ object Analytic extends graft.QueryPack {
         |ORDER BY kind, score DESC, node""".stripMargin,
 
     // basket cap + cosine + per-item rank restated term-for-term
-    "q_item_cf" -> {
-      val cap = cfOrderCap
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
-         |sized AS (
-         |  SELECT ok, pk FROM (
-         |    SELECT ok, pk, COUNT(*) OVER (PARTITION BY ok) AS osz FROM li)
-         |  WHERE osz <= $cap),
-         |deg AS (SELECT pk, CAST(COUNT(*) AS BIGINT) AS c
-         |        FROM sized GROUP BY pk),
-         |pairs AS (
-         |  SELECT a.pk AS item, b.pk AS rec, CAST(COUNT(*) AS BIGINT) AS c_ij
-         |  FROM sized a JOIN sized b ON a.ok = b.ok AND a.pk <> b.pk
-         |  GROUP BY a.pk, b.pk HAVING COUNT(*) >= 2),
-         |scored AS (
-         |  SELECT item, rec, c_ij,
-         |    round(CAST(c_ij AS DOUBLE) /
-         |      sqrt(CAST(di.c * dj.c AS DOUBLE)), 9) AS score
-         |  FROM pairs
-         |  JOIN deg di ON di.pk = item
-         |  JOIN deg dj ON dj.pk = rec),
-         |ranked AS (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY item
-         |    ORDER BY score DESC, rec) AS BIGINT) AS rk
-         |  FROM scored)
-         |SELECT item, rk, rec, c_ij, score FROM ranked
-         |WHERE rk <= 5 ORDER BY item, rk""".stripMargin
-    },
+    "q_item_cf" -> itemCfOracle(),
 
     "q_window_lag" ->
       """SELECT event_id, user_id,
@@ -3019,29 +3050,7 @@ object Analytic extends graft.QueryPack {
     // same packed-long trade graph as q_pagerank, three unrolled
     // rounds, same (cnt DESC, lab ASC) argmax tie order
     "q_label_propagation" ->
-      """WITH e0 AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        |l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
-        |c1 AS (SELECT e.dst AS node, l0.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l0 ON l0.node = e.src GROUP BY e.dst, l0.lab),
-        |l1 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c1)
-        |  WHERE rk = 1),
-        |c2 AS (SELECT e.dst AS node, l1.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l1 ON l1.node = e.src GROUP BY e.dst, l1.lab),
-        |l2 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c2)
-        |  WHERE rk = 1),
-        |c3 AS (SELECT e.dst AS node, l2.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l2 ON l2.node = e.src GROUP BY e.dst, l2.lab),
-        |l3 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c3)
-        |  WHERE rk = 1)
+      s"""WITH $lpaLabelsDuck
         |SELECT CASE WHEN lab % 2 = 0 THEN 'c' || CAST(lab // 2 AS VARCHAR)
         |            ELSE 's' || CAST(lab // 2 AS VARCHAR) END AS community,
         |  CAST(COUNT(*) AS BIGINT) AS n_nodes,
@@ -3055,29 +3064,7 @@ object Analytic extends graft.QueryPack {
     // same LPA CTE chain, then Newman's per-community Q terms on the
     // labeled directed edge frame
     "q_modularity" ->
-      """WITH e0 AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        |l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
-        |c1 AS (SELECT e.dst AS node, l0.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l0 ON l0.node = e.src GROUP BY e.dst, l0.lab),
-        |l1 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c1)
-        |  WHERE rk = 1),
-        |c2 AS (SELECT e.dst AS node, l1.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l1 ON l1.node = e.src GROUP BY e.dst, l1.lab),
-        |l2 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c2)
-        |  WHERE rk = 1),
-        |c3 AS (SELECT e.dst AS node, l2.lab, COUNT(*) AS cnt
-        |       FROM e JOIN l2 ON l2.node = e.src GROUP BY e.dst, l2.lab),
-        |l3 AS (SELECT node, lab FROM (
-        |  SELECT node, lab, ROW_NUMBER() OVER (
-        |    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rk FROM c3)
-        |  WHERE rk = 1),
+      s"""WITH $lpaLabelsDuck,
         |el AS (SELECT ls.lab AS slab, ld.lab AS dlab
         |       FROM e JOIN l3 ls ON ls.node = e.src
         |              JOIN l3 ld ON ld.node = e.dst),
@@ -3101,30 +3088,7 @@ object Analytic extends graft.QueryPack {
     // same 8×-thinned co-occurrence graph, same (degree, id) packed
     // orientation, same low-end wedge enumeration
     "q_triangles" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_orderkey % 8 = 0),
-        |raw AS (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (
-        |  SELECT n, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-        |    SELECT u AS n FROM raw UNION ALL SELECT v FROM raw) t
-        |  GROUP BY n),
-        |ori AS (
-        |  SELECT
-        |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
-        |         THEN r.u ELSE r.v END AS s,
-        |    CASE WHEN du.dg * 1000000000000 + r.u < dv.dg * 1000000000000 + r.v
-        |         THEN r.v ELSE r.u END AS t,
-        |    GREATEST(du.dg * 1000000000000 + r.u,
-        |             dv.dg * 1000000000000 + r.v) AS ot
-        |  FROM raw r JOIN deg du ON r.u = du.n JOIN deg dv ON r.v = dv.n),
-        |tri AS (
-        |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM ori e1
-        |  JOIN ori e2 ON e1.s = e2.s AND e1.ot < e2.ot
-        |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t)
+      s"""WITH $partTrianglesDuck
         |SELECT part, CAST(COUNT(*) AS BIGINT) AS n_tri FROM (
         |  SELECT a AS part FROM tri
         |  UNION ALL SELECT b FROM tri
@@ -3163,23 +3127,7 @@ object Analytic extends graft.QueryPack {
 
     // same zero-filled grid, same integer-moment z
     "q_burst_detect" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |c AS (
-        |  SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM e GROUP BY event_type, day),
-        |f AS (
-        |  SELECT g.event_type, g.day, COALESCE(c.cnt, 0) AS cnt
-        |  FROM (SELECT t.event_type, d.day
-        |        FROM (SELECT DISTINCT event_type FROM e) t
-        |        CROSS JOIN (SELECT DISTINCT day FROM e) d) g
-        |  LEFT JOIN c ON g.event_type = c.event_type AND g.day = c.day),
-        |m AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
-        |    CAST(SUM(cnt) AS BIGINT) AS s1,
-        |    CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-        |  FROM f GROUP BY event_type)
+      s"""WITH $burstMomentsDuck
         |SELECT f.event_type, f.day, f.cnt,
         |  CASE WHEN nd * s2 - s1 * s1 > 0 THEN
         |    round(CAST(nd * cnt - s1 AS DOUBLE) /
@@ -3385,9 +3333,7 @@ object Analytic extends graft.QueryPack {
            |  JOIN d$i ku ON e.u = ku.n
            |  JOIN d$i kv ON e.v = kv.n)""".stripMargin
       }.mkString(",\n")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
+      s"""WITH $partLiDuck,
          |r0 AS MATERIALIZED (
          |  SELECT DISTINCT a.pk AS u, b.pk AS v
          |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
@@ -3411,15 +3357,7 @@ object Analytic extends graft.QueryPack {
            |  SELECT * FROM d${i - 1}
            |  UNION ALL SELECT node, CAST($i AS BIGINT) FROM f$i)""".stripMargin
       }.mkString(",\n")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
-         |raw AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |sym AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM raw
-         |  UNION ALL SELECT v, u FROM raw),
+      s"""WITH $partSymDuck,
          |deg AS (SELECT src AS node, COUNT(*) AS dg FROM sym GROUP BY src),
          |hubs AS (SELECT node FROM deg ORDER BY dg DESC, node LIMIT $BFS_HUBS),
          |d0 AS MATERIALIZED (
@@ -3447,12 +3385,7 @@ object Analytic extends graft.QueryPack {
            |  WHERE node NOT IN (SELECT node FROM f$i)
            |  UNION ALL SELECT node, dist FROM f$i)""".stripMargin
       }.mkString(",\n")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
-         |raw AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
+      s"""WITH $partGraphDuck,
          |sym AS MATERIALIZED (
          |  SELECT u AS src, v AS dst, (u + v) % 9 + 1 AS wt FROM raw
          |  UNION ALL SELECT v, u, (u + v) % 9 + 1 FROM raw),
@@ -3486,15 +3419,7 @@ object Analytic extends graft.QueryPack {
     // same middle-keyed evidence join, same cap, same round-9 DECIMAL
     // Adamic-Adar sum, same ≥2 evidence floor and edge anti-join
     "q_link_predict" ->
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
-         |raw AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |sym AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM raw
-         |  UNION ALL SELECT v, u FROM raw),
+      s"""WITH $partSymDuck,
          |deg AS (SELECT src, COUNT(*) AS deg FROM sym GROUP BY src),
          |inc AS (
          |  SELECT s.dst AS m, d.deg AS dm, s.src AS e
@@ -3813,15 +3738,7 @@ object Analytic extends graft.QueryPack {
       val trace = (0 to WALK_STEPS).map { k =>
         s"SELECT walk, CAST($k AS BIGINT) AS step, cur AS node FROM w$k"
       }.mkString("\nUNION ALL ")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 8 = 0),
-         |raw AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |sym AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM raw
-         |  UNION ALL SELECT v, u FROM raw),
+      s"""WITH $partSymDuck,
          |adj AS MATERIALIZED (
          |  SELECT src, dst,
          |    row_number() OVER (PARTITION BY src ORDER BY dst) AS pos

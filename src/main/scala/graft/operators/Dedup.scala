@@ -196,6 +196,24 @@ object Dedup extends graft.QueryPack {
       .filter(col("hamming") <= 3)
   }
 
+  /** DuckDB twin of [[simhashPairs]]' fingerprint blocks over the planted
+    * corpus: fp(doc_id, sh) = the 32-char SimHash bitstring, and
+    * blocked = its four 8-bit pigeonhole blocks (blk, bits). Opens its
+    * oracle's WITH. */
+  private lazy val simhashBlockedDuck: String =
+    s"""WITH $corpusSqlDuck,
+       |fp AS (
+       |  SELECT doc_id,
+       |    array_to_string(list_transform(range(1, 33), i ->
+       |      CASE WHEN list_sum(list_transform(string_split(lower(text), ' '),
+       |        w -> CASE WHEN strpos('0123456789abcdef', substring(md5(w), i, 1)) - 1 >= 8
+       |                  THEN 1 ELSE -1 END)) >= 0
+       |           THEN '1' ELSE '0' END), '') AS sh
+       |  FROM corpus),
+       |blocked AS (
+       |  SELECT doc_id, sh, b AS blk, substring(sh, b * 8 + 1, 8) AS bits
+       |  FROM fp, unnest(range(0, 4)) AS t(b))""".stripMargin
+
   /** Distinct (split, trigram) cells under the q_split_hash md5 rule —
     * the shared kernel of the batch q_ngram_coverage and the
     * q_stream_ngram_novelty fold (one definition, two paths). */
@@ -226,6 +244,33 @@ object Dedup extends graft.QueryPack {
           col("n_seen").cast("double") / col("n_ngrams"), 9).as("novelty"))
       .orderBy(col("split"))
   }
+
+  /** DuckDB twin of [[gramSplits]] + [[noveltyReport]]: per eval split
+    * the distinct trigrams and how many the train split has seen,
+    * closed by the select-list tail `measures`. */
+  private[operators] def ngramCoverageDuck(measures: String): String =
+    s"""WITH sp AS (
+       |  SELECT text,
+       |    CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
+       |              AS INTEGER) < 58982 THEN 'train'
+       |         WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
+       |              AS INTEGER) < 62259 THEN 'val'
+       |         ELSE 'test' END AS split
+       |  FROM documents),
+       |grams AS (
+       |  SELECT DISTINCT split,
+       |    unnest(list_distinct(list_transform(
+       |      range(1, greatest(len(string_split(lower(text),' ')) - 2, 1) + 1),
+       |      i -> array_to_string((string_split(lower(text),' '))[i:i+2], ' '))))
+       |      AS g
+       |  FROM sp),
+       |train AS (SELECT g, 1 AS seen FROM grams WHERE split = 'train')
+       |SELECT e.split, CAST(COUNT(*) AS BIGINT) AS n_ngrams,
+       |  CAST(COUNT(train.seen) AS BIGINT) AS n_seen,
+       |$measures
+       |FROM grams e LEFT JOIN train ON train.g = e.g
+       |WHERE e.split <> 'train'
+       |GROUP BY e.split ORDER BY e.split""".stripMargin
 
   private[operators] val corpusSqlDuck: String =
     """corpus AS (
@@ -1430,6 +1475,28 @@ object Dedup extends graft.QueryPack {
        |    md5(array_to_string(sigs[b*$ROWS_PER_BAND+1 : b*$ROWS_PER_BAND+$ROWS_PER_BAND], '|')) AS bkey
        |  FROM sigs, unnest(range(0, $BANDS)) AS t(b))""".stripMargin
 
+  /** DuckDB twin of the components every clustering kernel converges
+    * to ([[clustersHybrid]], [[ccStars]]): edges = both directions of
+    * pairs(id_a, id_b), and reach(node, r) = every node each node
+    * reaches; cluster_id = MIN(r). */
+  private[operators] val componentsSqlDuck: String =
+    s"""edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM pairs
+       |  UNION ALL SELECT id_b, id_a FROM pairs),
+       |reach(node, r) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node)""".stripMargin
+
+  /** The q_dedup_clusters / q_cc_stars oracle: the n-gram pair graph's
+    * components, one truth for two physical strategies. */
+  private val dedupClustersSqlDuck: String =
+    s"""WITH RECURSIVE $corpusSqlDuck,
+       |$ngramPairsSqlDuck,
+       |$componentsSqlDuck
+       |SELECT node AS doc_id, MIN(r) AS cluster_id
+       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+
   /** Inverted-index-with-cap decontamination in DuckDB — the shared
     * oracle of q_decontaminate and q_decontaminate_bloom. */
   private val decontaminateSqlDuck: String =
@@ -1529,18 +1596,7 @@ object Dedup extends graft.QueryPack {
     // diff count over the two bitstrings — identical to popcount(xor).
     // the q_simhash_hamming pair CTEs swept over the radius grid
     "q_hamming_curve" ->
-      s"""WITH $corpusSqlDuck,
-         |fp AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_transform(range(1, 33), i ->
-         |      CASE WHEN list_sum(list_transform(string_split(lower(text), ' '),
-         |        w -> CASE WHEN strpos('0123456789abcdef', substring(md5(w), i, 1)) - 1 >= 8
-         |                  THEN 1 ELSE -1 END)) >= 0
-         |           THEN '1' ELSE '0' END), '') AS sh
-         |  FROM corpus),
-         |blocked AS (
-         |  SELECT doc_id, sh, b AS blk, substring(sh, b * 8 + 1, 8) AS bits
-         |  FROM fp, unnest(range(0, 4)) AS t(b)),
+      s"""$simhashBlockedDuck,
          |pairs AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
          |    len(list_filter(range(1, 33), i ->
@@ -1565,23 +1621,7 @@ object Dedup extends graft.QueryPack {
     // planted corpus, then the same rare-fp inverted join
     "q_winnow_overlap" ->
       s"""WITH $corpusSqlDuck,
-         |positions AS (
-         |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS i
-         |  FROM corpus),
-         |hashes AS (
-         |  SELECT doc_id, i,
-         |    CAST(list_sum(list_transform(range(0, 8), j ->
-         |      ascii(substr(text, CAST(i + j AS INTEGER), 1)) *
-         |      ([27512614111, 887503681, 28629151, 923521,
-         |        29791, 961, 31, 1])[CAST(j + 1 AS INTEGER)])) AS BIGINT)
-         |      % 1048576 AS h
-         |  FROM positions),
-         |wins AS (
-         |  SELECT doc_id, i, h,
-         |    MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-         |                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-         |    COUNT(*) OVER (PARTITION BY doc_id) AS nh
-         |  FROM hashes),
+         |${TextAnalytics.winnowDuck("corpus")},
          |fps AS (SELECT DISTINCT doc_id, fp FROM wins WHERE i <= nh - 3),
          |rare AS (
          |  SELECT doc_id, fp FROM (
@@ -1605,43 +1645,12 @@ object Dedup extends graft.QueryPack {
     // same md5 split rule as q_split_hash, same distinct-trigram form
     // as q_setsim_prefix, gram-keyed left join
     "q_ngram_coverage" ->
-      """WITH sp AS (
-        |  SELECT text,
-        |    CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-        |              AS INTEGER) < 58982 THEN 'train'
-        |         WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-        |              AS INTEGER) < 62259 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT split,
-        |    unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(string_split(lower(text),' ')) - 2, 1) + 1),
-        |      i -> array_to_string((string_split(lower(text),' '))[i:i+2], ' '))))
-        |      AS g
-        |  FROM sp),
-        |train AS (SELECT g, 1 AS seen FROM grams WHERE split = 'train')
-        |SELECT e.split, CAST(COUNT(*) AS BIGINT) AS n_ngrams,
-        |  CAST(COUNT(train.seen) AS BIGINT) AS n_seen,
-        |  round(CAST(1 AS DOUBLE) -
-        |    CAST(COUNT(train.seen) AS DOUBLE) / COUNT(*), 9) AS novelty
-        |FROM grams e LEFT JOIN train ON train.g = e.g
-        |WHERE e.split <> 'train'
-        |GROUP BY e.split ORDER BY e.split""".stripMargin,
+      ngramCoverageDuck(
+        """  round(CAST(1 AS DOUBLE) -
+          |    CAST(COUNT(train.seen) AS DOUBLE) / COUNT(*), 9) AS novelty""".stripMargin),
 
     "q_simhash_hamming" ->
-      s"""WITH $corpusSqlDuck,
-         |fp AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_transform(range(1, 33), i ->
-         |      CASE WHEN list_sum(list_transform(string_split(lower(text), ' '),
-         |        w -> CASE WHEN strpos('0123456789abcdef', substring(md5(w), i, 1)) - 1 >= 8
-         |                  THEN 1 ELSE -1 END)) >= 0
-         |           THEN '1' ELSE '0' END), '') AS sh
-         |  FROM corpus),
-         |blocked AS (
-         |  SELECT doc_id, sh, b AS blk, substring(sh, b * 8 + 1, 8) AS bits
-         |  FROM fp, unnest(range(0, 4)) AS t(b))
+      s"""$simhashBlockedDuck
          |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
          |  len(list_filter(range(1, 33), i ->
          |    substring(a.sh, i, 1) <> substring(b.sh, i, 1))) AS hamming
@@ -1688,17 +1697,7 @@ object Dedup extends graft.QueryPack {
     // reachable id, the unique fixpoint the Spark label propagation
     // converges to.
     "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $corpusSqlDuck,
-         |$ngramPairsSqlDuck,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION ALL SELECT id_b, id_a FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node)
-         |SELECT node AS doc_id, MIN(r) AS cluster_id
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
+      dedupClustersSqlDuck,
 
     // star contraction computes the SAME clusters as label propagation
     // — one declarative truth, two physical strategies, so the oracle
@@ -1706,17 +1705,7 @@ object Dedup extends graft.QueryPack {
     // pattern: the engine must reach the identical result down a
     // different execution path)
     "q_cc_stars" ->
-      s"""WITH RECURSIVE $corpusSqlDuck,
-         |$ngramPairsSqlDuck,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION ALL SELECT id_b, id_a FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node)
-         |SELECT node AS doc_id, MIN(r) AS cluster_id
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
+      dedupClustersSqlDuck,
 
     "q_dedup_ngram_jaccard" ->
       s"""WITH $corpusSqlDuck,

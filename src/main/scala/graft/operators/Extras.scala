@@ -1698,6 +1698,50 @@ object Extras extends graft.QueryPack {
     s"((((a >> $i) & 1) << ${2 * i}) + (((b >> $i) & 1) << ${2 * i + 1}))")
     .mkString(" + ")
 
+  /** DuckDB twin of the seq-pack token spans ([[seqPackToks]],
+    * [[seqPackSpans]]): per doc its token count, its running start
+    * offset within its source, and x = one row per 128-token sequence
+    * the doc touches. */
+  private val seqPackSpansDuck: String =
+    s"""toks AS (
+       |  SELECT source, doc_id,
+       |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS tok
+       |  FROM documents),
+       |spans AS (
+       |  SELECT source, doc_id, tok,
+       |    COALESCE(SUM(tok) OVER (PARTITION BY source ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS strt
+       |  FROM toks),
+       |x AS (
+       |  SELECT source, doc_id, tok, strt, strt + tok AS fin,
+       |    unnest(range(CAST(strt // 128 AS BIGINT),
+       |      CAST((strt + tok - 1) // 128 + 1 AS BIGINT))) AS seq_id
+       |  FROM spans WHERE tok > 0)""".stripMargin
+
+  /** The as-of oracles' input: clicks and purchases of events in one
+    * frame, merged(event_id, user_id, event_type, ts_us, is_click,
+    * p_ts). */
+  private val asofMergedDuck: String =
+    s"""merged AS (
+       |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
+       |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
+       |    CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts
+       |  FROM events WHERE event_type IN ('click', 'purchase'))""".stripMargin
+
+  /** The backward as-of join (q_asof_join, q_asof_join_native): each
+    * click's latest purchase at or before it. */
+  private val asofBackwardSqlDuck: String =
+    s"""WITH $asofMergedDuck
+       |SELECT event_id, user_id, ts_us, last_purchase_us FROM (
+       |  SELECT event_id, user_id, event_type, ts_us,
+       |    MAX(p_ts) OVER (PARTITION BY user_id
+       |                    ORDER BY ts_us, is_click, event_id
+       |                    ROWS UNBOUNDED PRECEDING) AS last_purchase_us
+       |  FROM merged) t
+       |WHERE event_type = 'click'
+       |ORDER BY event_id""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // decrement path and rescan path both stated; match pinned true
     "q_erasure_maintenance" ->
@@ -2213,21 +2257,7 @@ object Extras extends graft.QueryPack {
     // same prefix-sum spans, same bounded unnest over the seq range,
     // integer token arithmetic end-to-end
     "q_seq_pack" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS tok
-        |  FROM documents),
-        |spans AS (
-        |  SELECT source, doc_id, tok,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS strt
-        |  FROM toks),
-        |x AS (
-        |  SELECT source, doc_id, tok, strt, strt + tok AS fin,
-        |    unnest(range(CAST(strt // 128 AS BIGINT),
-        |      CAST((strt + tok - 1) // 128 + 1 AS BIGINT))) AS seq_id
-        |  FROM spans WHERE tok > 0),
+      s"""WITH $seqPackSpansDuck,
         |seg AS (
         |  SELECT source, seq_id, doc_id, strt,
         |    LEAST(fin, (seq_id + 1) * 128) -
@@ -2245,21 +2275,7 @@ object Extras extends graft.QueryPack {
 
     // the seg frame one GROUP BY earlier, reported at segment grain
     "q_seq_manifest" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS tok
-        |  FROM documents),
-        |spans AS (
-        |  SELECT source, doc_id, tok,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS strt
-        |  FROM toks),
-        |x AS (
-        |  SELECT source, doc_id, tok, strt, strt + tok AS fin,
-        |    unnest(range(CAST(strt // 128 AS BIGINT),
-        |      CAST((strt + tok - 1) // 128 + 1 AS BIGINT))) AS seq_id
-        |  FROM spans WHERE tok > 0)
+      s"""WITH $seqPackSpansDuck
         |SELECT source, CAST(seq_id AS BIGINT) AS seq_id, doc_id,
         |  CAST(GREATEST(strt, seq_id * 128) - seq_id * 128 AS BIGINT)
         |    AS off_in_seq,
@@ -2342,11 +2358,7 @@ object Extras extends graft.QueryPack {
     // (is_click DESC) so a same-instant purchase is inside the
     // CURRENT ROW..FOLLOWING frame — mirroring the inclusive rt >= lt.
     "q_asof_join_fwd" ->
-      """WITH merged AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts
-        |  FROM events WHERE event_type IN ('click', 'purchase'))
+      s"""WITH $asofMergedDuck
         |SELECT event_id, user_id, ts_us,
         |  CASE WHEN np - ts_us <= 7200000000 THEN np END AS next_purchase_us
         |FROM (
@@ -2401,26 +2413,10 @@ object Extras extends graft.QueryPack {
         |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     "q_asof_join" ->
-      """WITH merged AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts
-        |  FROM events WHERE event_type IN ('click', 'purchase'))
-        |SELECT event_id, user_id, ts_us, last_purchase_us FROM (
-        |  SELECT event_id, user_id, event_type, ts_us,
-        |    MAX(p_ts) OVER (PARTITION BY user_id
-        |                    ORDER BY ts_us, is_click, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS last_purchase_us
-        |  FROM merged) t
-        |WHERE event_type = 'click'
-        |ORDER BY event_id""".stripMargin,
+      asofBackwardSqlDuck,
 
     "q_asof_join_nearest" ->
-      """WITH merged AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
+      s"""WITH $asofMergedDuck,
         |framed AS (
         |  SELECT event_id, user_id, event_type, ts_us,
         |    MAX(p_ts) OVER (PARTITION BY user_id
@@ -2446,19 +2442,7 @@ object Extras extends graft.QueryPack {
 
     // identical oracle text, different (native) Spark execution path
     "q_asof_join_native" ->
-      """WITH merged AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts
-        |  FROM events WHERE event_type IN ('click', 'purchase'))
-        |SELECT event_id, user_id, ts_us, last_purchase_us FROM (
-        |  SELECT event_id, user_id, event_type, ts_us,
-        |    MAX(p_ts) OVER (PARTITION BY user_id
-        |                    ORDER BY ts_us, is_click, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS last_purchase_us
-        |  FROM merged) t
-        |WHERE event_type = 'click'
-        |ORDER BY event_id""".stripMargin,
+      asofBackwardSqlDuck,
 
     // three generated legs: grid thresholds, literal-array buckets
     "q_equi_depth_hist" -> {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Iterate.CutOps
 
 /** Multimodal-column operators (reference: image→Rekognition labels,
   * module/instagram/labels.js:51-80 = SURVEY.md M1/M2; generalized to the
@@ -627,44 +628,7 @@ object Multimodal extends graft.QueryPack {
     // (scale-0 fixed point, the r10 data-dependent-denominator house
     // rule). Copies map to their source text via the id − 1,000,000
     // fixture rule before the gram join.
-    "q_crossmodal_dedup" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      def src(c: Column) =
-        when(c >= 1000000L, c - 1000000L).otherwise(c)
-      val cand = phash64DocPairs(s, docs)
-        .withColumn("src_a", src(col("id_a")))
-        .withColumn("src_b", src(col("id_b")))
-      val grams = docs.select(col("doc_id"),
-        explode(Dedup.shingleUdf(col("text"))).as("g"))
-      val sizes = grams.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_grams"))
-      val inter = cand
-        .join(grams.select(col("doc_id").as("src_a"), col("g")),
-          Seq("src_a"))
-        .join(grams.select(col("doc_id").as("src_b"), col("g")),
-          Seq("src_b", "g"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"))
-      val union = col("n_grams_a") + col("n_grams_b") - col("n_common")
-      cand
-        .join(sizes.select(col("doc_id").as("src_a"),
-          col("n_grams").as("n_grams_a")), Seq("src_a"), "left_outer")
-        .join(sizes.select(col("doc_id").as("src_b"),
-          col("n_grams").as("n_grams_b")), Seq("src_b"), "left_outer")
-        .join(inter, Seq("id_a", "id_b"), "left_outer")
-        .select(col("id_a"), col("id_b"), col("hamming"),
-          coalesce(col("n_grams_a"), lit(0L)).as("n_grams_a"),
-          coalesce(col("n_grams_b"), lit(0L)).as("n_grams_b"),
-          coalesce(col("n_common"), lit(0L)).as("n_common"))
-        .withColumn("jaccard_e6",
-          when(union === 0L, lit(0L)).otherwise(
-            round(lit(1000000.0d) * col("n_common") / union.cast("double"))
-              .cast("long")))
-        .withColumn("verdict",
-          when(col("jaccard_e6") >= 500000L, "dup_both")
-            .otherwise("image_only"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
+    "q_crossmodal_dedup" -> ((s, d) => crossmodalDedup(s, d)),
 
     // Image near-dup CLUSTER formation — completes the image-identity
     // ladder: q_image_phash groups exact fingerprints,
@@ -690,8 +654,9 @@ object Multimodal extends graft.QueryPack {
     // decision to make.
     "q_image_dedup_clusters" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val pairs = phash64DocPairs(s, Tables(s, d, "documents"))
-        .select(col("id_a"), col("id_b")).localCheckpoint()
+      val pairs = phash64DocPairs(s, Tables(s, d, "documents"),
+        PHASH_GROUP_CAP)
+        .select(col("id_a"), col("id_b")).cut()
       val cl = Dedup.ccStars(pairs.toDF("src", "dst"))
         .toDF("doc_id", "cluster_id")
       val wC = Window.partitionBy(col("cluster_id"))
@@ -763,7 +728,7 @@ object Multimodal extends graft.QueryPack {
           col("keeper").as("id_b")), Seq("ph_b"))
         .select(least(col("id_a"), col("id_b")).as("id_a"),
           greatest(col("id_a"), col("id_b")).as("id_b"))
-        .localCheckpoint()
+        .cut()
       val clusters = Dedup.ccStars(pairs.toDF("src", "dst"))
         .toDF("img_id", "cluster_id")
       val nearDrop = clusters.filter(col("img_id") =!= col("cluster_id"))
@@ -788,27 +753,27 @@ object Multimodal extends graft.QueryPack {
 
   /** Group-size cap for the pHash pair frames — a hash shared by more
     * images than this is a DEGENERATE asset class that fans out
-    * quadratically (Dedup's shingle df cap discipline). Sysprop so
-    * MultimodalSpec can exercise the cut at a second value (cap=2);
-    * read per call so engine and oracle always agree. */
-  private def phashGroupCap: Int =
-    sys.props.getOrElse("graft.phash.group.cap", "20").toInt
+    * quadratically (Dedup's shingle df cap discipline). The pair
+    * kernel and its oracle take the cap as a parameter, so
+    * MultimodalSpec exercises the cut at a second value (cap=2). */
+  private val PHASH_GROUP_CAP = 20
 
   /** DOC-level image near-dup candidate pairs at Hamming ≤ 3:
     * exact-collision pairs within a hash group ∪ radius-3 pairs from
-    * the pigeonhole join, both under the group-size ≤ [[phashGroupCap]]
-    * cap (the q_winnow_overlap df-cap device, same named reason: a hash
+    * the pigeonhole join, both under the group-size ≤ `cap` cap
+    * (the q_winnow_overlap df-cap device, same named reason: a hash
     * shared by dozens of images is a DEGENERATE asset class — the
     * fixture grows 100+-image groups at sf0.1 — that carries no pairing
     * signal and fans out quadratically; those groups stay fully
     * described by the q_image_phash grouping report). ONE definition
     * shared by q_crossmodal_dedup (text verification) and
     * q_image_dedup_clusters (component formation). */
-  private def phash64DocPairs(s: SparkSession, docs: DataFrame): DataFrame = {
+  private def phash64DocPairs(s: SparkSession, docs: DataFrame,
+      cap: Int): DataFrame = {
     val phAll = phash64Corpus(s, docs).filter(col("phash") =!= -1L)
     val grouped = phAll.groupBy(col("phash"))
       .agg(count(lit(1)).as("n_images"))
-      .filter(col("n_images") <= phashGroupCap.toLong)
+      .filter(col("n_images") <= cap.toLong)
     val ph = phAll.join(grouped.select(col("phash")), Seq("phash"),
       "left_semi")
     val same = ph.select(col("phash"), col("doc_id").as("id_a"))
@@ -833,7 +798,7 @@ object Multimodal extends graft.QueryPack {
     * with its source doc). Aggregated to distinct hashes BEFORE any
     * probe join, so a degenerate hash group (100+ images at sf0.1)
     * costs the index one row, not a fan-out — which is why admission
-    * needs no [[phashGroupCap]]: the quadratic group risk the cap
+    * needs no [[PHASH_GROUP_CAP]]: the quadratic group risk the cap
     * guards in pair mining cannot occur against an agg-collapsed
     * side. */
   private[operators] def phashIndex(s: SparkSession, docs: DataFrame): DataFrame =
@@ -948,6 +913,34 @@ object Multimodal extends graft.QueryPack {
       |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS y FROM xs)"""
       .stripMargin
 
+  /** DuckDB twin of [[imagePhash]] over the generated pixels: the
+    * 4×4 mean-threshold hash of each image's summed-channel grid,
+    * ending at ph(doc_id, phash). */
+  private val phash16SqlDuck: String =
+    s"""$pixelPxSqlDuck,
+      |g AS (
+      |  SELECT doc_id, (x * 4) // w AS ci, (y * 4) // h AS cj,
+      |    (doc_id * 31 + x * 7 + y * 13) % 256 +
+      |    (doc_id * 17 + x * 3 + y * 5) % 256 +
+      |    (doc_id * 23 + x * 11 + y * 2) % 256 AS gray3
+      |  FROM px),
+      |cells AS (
+      |  SELECT doc_id, ci, cj, CAST(SUM(gray3) AS BIGINT) AS s,
+      |    CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM g GROUP BY doc_id, ci, cj),
+      |tot AS (
+      |  SELECT doc_id, CAST(SUM(s) AS BIGINT) AS stot,
+      |    CAST(SUM(c) AS BIGINT) AS n
+      |  FROM cells GROUP BY doc_id),
+      |bits AS (
+      |  SELECT cells.doc_id,
+      |    CASE WHEN s * n > stot * c
+      |         THEN 1 << CAST(ci * 4 + cj AS INTEGER) ELSE 0 END AS bit
+      |  FROM cells JOIN tot ON cells.doc_id = tot.doc_id),
+      |ph AS (
+      |  SELECT doc_id, CAST(SUM(bit) AS BIGINT) AS phash
+      |  FROM bits GROUP BY doc_id)""".stripMargin
+
   private val pixelGridSqlDuck: String =
     s"""$pixelPxSqlDuck,
       |sums AS (
@@ -1016,22 +1009,110 @@ object Multimodal extends graft.QueryPack {
         |  FROM hs)"""
       .stripMargin
 
-  /** Shared oracle CTEs: the group-size-capped doc-level Hamming ≤ 3
-    * pair frame over the hash replay — used by the q_crossmodal_dedup
-    * and q_image_dedup_clusters oracles. `def` (not val) so the
-    * interpolated [[phashGroupCap]] tracks the sysprop per call, same
-    * as the engine side. */
-  private def phash64PairsSqlDuck: String =
+  /** DuckDB twin of [[phash64DocPairs]] at group-size cap `cap`: the
+    * doc-level Hamming ≤ 3 pair frame over the hash replay — used by
+    * the q_crossmodal_dedup and q_image_dedup_clusters oracles. */
+  private def phash64PairsSqlDuck(cap: Int): String =
     s"""capped AS (
         |  SELECT ph.doc_id, ph.phash FROM ph
         |  JOIN (SELECT phash FROM ph GROUP BY phash
-        |        HAVING COUNT(*) <= $phashGroupCap) ok USING (phash)),
+        |        HAVING COUNT(*) <= $cap) ok USING (phash)),
         |pairs AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |    CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
         |  FROM capped a JOIN capped b ON a.doc_id < b.doc_id
         |  WHERE bit_count(xor(a.phash, b.phash)) <= 3)"""
       .stripMargin
+
+  /** q_crossmodal_dedup at pHash group-size cap `cap`: the capped image
+    * near-dup pairs, each verified by the text trigram Jaccard of the
+    * two source documents. */
+  private[graft] def crossmodalDedup(s: SparkSession, d: String,
+      cap: Int = PHASH_GROUP_CAP): DataFrame = {
+    val docs = Tables(s, d, "documents")
+    def src(c: Column) =
+      when(c >= 1000000L, c - 1000000L).otherwise(c)
+    val cand = phash64DocPairs(s, docs, cap)
+      .withColumn("src_a", src(col("id_a")))
+      .withColumn("src_b", src(col("id_b")))
+    val grams = docs.select(col("doc_id"),
+      explode(Dedup.shingleUdf(col("text"))).as("g"))
+    val sizes = grams.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"))
+    val inter = cand
+      .join(grams.select(col("doc_id").as("src_a"), col("g")),
+        Seq("src_a"))
+      .join(grams.select(col("doc_id").as("src_b"), col("g")),
+        Seq("src_b", "g"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_common"))
+    val union = col("n_grams_a") + col("n_grams_b") - col("n_common")
+    cand
+      .join(sizes.select(col("doc_id").as("src_a"),
+        col("n_grams").as("n_grams_a")), Seq("src_a"), "left_outer")
+      .join(sizes.select(col("doc_id").as("src_b"),
+        col("n_grams").as("n_grams_b")), Seq("src_b"), "left_outer")
+      .join(inter, Seq("id_a", "id_b"), "left_outer")
+      .select(col("id_a"), col("id_b"), col("hamming"),
+        coalesce(col("n_grams_a"), lit(0L)).as("n_grams_a"),
+        coalesce(col("n_grams_b"), lit(0L)).as("n_grams_b"),
+        coalesce(col("n_common"), lit(0L)).as("n_common"))
+      .withColumn("jaccard_e6",
+        when(union === 0L, lit(0L)).otherwise(
+          round(lit(1000000.0d) * col("n_common") / union.cast("double"))
+            .cast("long")))
+      .withColumn("verdict",
+        when(col("jaccard_e6") >= 500000L, "dup_both")
+          .otherwise("image_only"))
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** The q_crossmodal_dedup oracle at group-size cap `cap`: ONE
+    * all-doc-pairs Hamming filter over the shared hash replay, text
+    * side as exact per-pair trigram Jaccard. */
+  private[graft] def crossmodalDedupOracle(cap: Int = PHASH_GROUP_CAP): String =
+    s"""WITH $phash64SqlDuck,
+      |${phash64PairsSqlDuck(cap)},
+      |tg AS (
+      |  SELECT doc_id,
+      |    unnest(list_distinct(list_transform(
+      |      range(1, greatest(len(string_split(lower(text),' ')) - 2, 1) + 1),
+      |      i -> array_to_string((string_split(lower(text),' '))[i:i+2], ' '))))
+      |      AS g
+      |  FROM documents),
+      |sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+      |       FROM tg GROUP BY doc_id),
+      |withsrc AS (
+      |  SELECT id_a, id_b, hamming,
+      |    CASE WHEN id_a >= 1000000 THEN id_a - 1000000 ELSE id_a END
+      |      AS src_a,
+      |    CASE WHEN id_b >= 1000000 THEN id_b - 1000000 ELSE id_b END
+      |      AS src_b
+      |  FROM pairs),
+      |inter AS (
+      |  SELECT w.id_a, w.id_b, CAST(COUNT(*) AS BIGINT) AS nc
+      |  FROM withsrc w JOIN tg ga ON ga.doc_id = w.src_a
+      |                 JOIN tg gb ON gb.doc_id = w.src_b AND gb.g = ga.g
+      |  GROUP BY w.id_a, w.id_b),
+      |scored AS (
+      |  SELECT w.id_a, w.id_b, w.hamming,
+      |    COALESCE(sa.n, 0) AS n_grams_a, COALESCE(sb.n, 0) AS n_grams_b,
+      |    COALESCE(i.nc, 0) AS n_common,
+      |    CASE WHEN COALESCE(sa.n, 0) + COALESCE(sb.n, 0)
+      |              - COALESCE(i.nc, 0) = 0 THEN 0
+      |      ELSE CAST(ROUND(1000000.0 * COALESCE(i.nc, 0) /
+      |        CAST(COALESCE(sa.n, 0) + COALESCE(sb.n, 0)
+      |             - COALESCE(i.nc, 0) AS DOUBLE)) AS BIGINT) END
+      |      AS jaccard_e6
+      |  FROM withsrc w
+      |    LEFT JOIN sz sa ON sa.doc_id = w.src_a
+      |    LEFT JOIN sz sb ON sb.doc_id = w.src_b
+      |    LEFT JOIN inter i ON i.id_a = w.id_a AND i.id_b = w.id_b)
+      |SELECT id_a, id_b, hamming, n_grams_a, n_grams_b, n_common,
+      |  jaccard_e6,
+      |  CASE WHEN jaccard_e6 >= 500000 THEN 'dup_both'
+      |       ELSE 'image_only' END AS verdict
+      |FROM scored ORDER BY id_a, id_b""".stripMargin
 
   def oracles: Map[String, String] = Map(
     // same 4×4 block-average grid over the closed-form pixels, same
@@ -1063,29 +1144,7 @@ object Multimodal extends graft.QueryPack {
         |ORDER BY doc_id, frame_no""".stripMargin,
 
     "q_image_phash" ->
-      s"""WITH $pixelPxSqlDuck,
-        |g AS (
-        |  SELECT doc_id, (x * 4) // w AS ci, (y * 4) // h AS cj,
-        |    (doc_id * 31 + x * 7 + y * 13) % 256 +
-        |    (doc_id * 17 + x * 3 + y * 5) % 256 +
-        |    (doc_id * 23 + x * 11 + y * 2) % 256 AS gray3
-        |  FROM px),
-        |cells AS (
-        |  SELECT doc_id, ci, cj, CAST(SUM(gray3) AS BIGINT) AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM g GROUP BY doc_id, ci, cj),
-        |tot AS (
-        |  SELECT doc_id, CAST(SUM(s) AS BIGINT) AS stot,
-        |    CAST(SUM(c) AS BIGINT) AS n
-        |  FROM cells GROUP BY doc_id),
-        |bits AS (
-        |  SELECT cells.doc_id,
-        |    CASE WHEN s * n > stot * c
-        |         THEN 1 << CAST(ci * 4 + cj AS INTEGER) ELSE 0 END AS bit
-        |  FROM cells JOIN tot ON cells.doc_id = tot.doc_id),
-        |ph AS (
-        |  SELECT doc_id, CAST(SUM(bit) AS BIGINT) AS phash
-        |  FROM bits GROUP BY doc_id)
+      s"""WITH $phash16SqlDuck
         |SELECT phash, CAST(COUNT(*) AS BIGINT) AS n_images,
         |  MIN(doc_id) AS min_doc
         |FROM ph GROUP BY phash ORDER BY phash""".stripMargin,
@@ -1109,29 +1168,7 @@ object Multimodal extends graft.QueryPack {
     // pigeonhole (the 16-bit domain is tiny in SQL); the Spark side
     // must reproduce it from block-keyed candidates only
     "q_phash_hamming" ->
-      s"""WITH $pixelPxSqlDuck,
-        |g AS (
-        |  SELECT doc_id, (x * 4) // w AS ci, (y * 4) // h AS cj,
-        |    (doc_id * 31 + x * 7 + y * 13) % 256 +
-        |    (doc_id * 17 + x * 3 + y * 5) % 256 +
-        |    (doc_id * 23 + x * 11 + y * 2) % 256 AS gray3
-        |  FROM px),
-        |cells AS (
-        |  SELECT doc_id, ci, cj, CAST(SUM(gray3) AS BIGINT) AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM g GROUP BY doc_id, ci, cj),
-        |tot AS (
-        |  SELECT doc_id, CAST(SUM(s) AS BIGINT) AS stot,
-        |    CAST(SUM(c) AS BIGINT) AS n
-        |  FROM cells GROUP BY doc_id),
-        |bits AS (
-        |  SELECT cells.doc_id,
-        |    CASE WHEN s * n > stot * c
-        |         THEN 1 << CAST(ci * 4 + cj AS INTEGER) ELSE 0 END AS bit
-        |  FROM cells JOIN tot ON cells.doc_id = tot.doc_id),
-        |ph AS (
-        |  SELECT doc_id, CAST(SUM(bit) AS BIGINT) AS phash
-        |  FROM bits GROUP BY doc_id),
+      s"""WITH $phash16SqlDuck,
         |grp AS (
         |  SELECT phash, CAST(COUNT(*) AS BIGINT) AS n_images
         |  FROM ph GROUP BY phash)
@@ -1203,49 +1240,7 @@ object Multimodal extends graft.QueryPack {
     // shared hash replay (the oracle does not need the pigeonhole or
     // the same-hash/cross-hash split), text side as exact per-pair
     // trigram Jaccard with the copy -> source id rule
-    "q_crossmodal_dedup" ->
-      s"""WITH $phash64SqlDuck,
-        |$phash64PairsSqlDuck,
-        |tg AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(string_split(lower(text),' ')) - 2, 1) + 1),
-        |      i -> array_to_string((string_split(lower(text),' '))[i:i+2], ' '))))
-        |      AS g
-        |  FROM documents),
-        |sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-        |       FROM tg GROUP BY doc_id),
-        |withsrc AS (
-        |  SELECT id_a, id_b, hamming,
-        |    CASE WHEN id_a >= 1000000 THEN id_a - 1000000 ELSE id_a END
-        |      AS src_a,
-        |    CASE WHEN id_b >= 1000000 THEN id_b - 1000000 ELSE id_b END
-        |      AS src_b
-        |  FROM pairs),
-        |inter AS (
-        |  SELECT w.id_a, w.id_b, CAST(COUNT(*) AS BIGINT) AS nc
-        |  FROM withsrc w JOIN tg ga ON ga.doc_id = w.src_a
-        |                 JOIN tg gb ON gb.doc_id = w.src_b AND gb.g = ga.g
-        |  GROUP BY w.id_a, w.id_b),
-        |scored AS (
-        |  SELECT w.id_a, w.id_b, w.hamming,
-        |    COALESCE(sa.n, 0) AS n_grams_a, COALESCE(sb.n, 0) AS n_grams_b,
-        |    COALESCE(i.nc, 0) AS n_common,
-        |    CASE WHEN COALESCE(sa.n, 0) + COALESCE(sb.n, 0)
-        |              - COALESCE(i.nc, 0) = 0 THEN 0
-        |      ELSE CAST(ROUND(1000000.0 * COALESCE(i.nc, 0) /
-        |        CAST(COALESCE(sa.n, 0) + COALESCE(sb.n, 0)
-        |             - COALESCE(i.nc, 0) AS DOUBLE)) AS BIGINT) END
-        |      AS jaccard_e6
-        |  FROM withsrc w
-        |    LEFT JOIN sz sa ON sa.doc_id = w.src_a
-        |    LEFT JOIN sz sb ON sb.doc_id = w.src_b
-        |    LEFT JOIN inter i ON i.id_a = w.id_a AND i.id_b = w.id_b)
-        |SELECT id_a, id_b, hamming, n_grams_a, n_grams_b, n_common,
-        |  jaccard_e6,
-        |  CASE WHEN jaccard_e6 >= 500000 THEN 'dup_both'
-        |       ELSE 'image_only' END AS verdict
-        |FROM scored ORDER BY id_a, id_b""".stripMargin,
+    "q_crossmodal_dedup" -> crossmodalDedupOracle(),
 
     // the three stages restated: analytic gate (truncation by image
     // key, dims by formula), hash replay filtered to gate survivors,
@@ -1270,13 +1265,7 @@ object Multimodal extends graft.QueryPack {
         |    greatest(a.keeper, b.keeper) AS id_b
         |  FROM keep2 a JOIN keep2 b ON a.phash < b.phash
         |  WHERE bit_count(xor(a.phash, b.phash)) BETWEEN 1 AND 3),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node),
+        |${Dedup.componentsSqlDuck},
         |cl AS (
         |  SELECT node AS doc_id, MIN(r) AS cluster_id
         |  FROM reach GROUP BY node),
@@ -1300,14 +1289,8 @@ object Multimodal extends graft.QueryPack {
     // minimum
     "q_image_dedup_clusters" ->
       s"""WITH RECURSIVE $phash64SqlDuck,
-        |$phash64PairsSqlDuck,
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node),
+        |${phash64PairsSqlDuck(PHASH_GROUP_CAP)},
+        |${Dedup.componentsSqlDuck},
         |cl AS (
         |  SELECT node AS doc_id, MIN(r) AS cluster_id
         |  FROM reach GROUP BY node)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Iterate.CutOps
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -33,23 +34,21 @@ object Similarity extends graft.QueryPack {
     * the coarse quantizers. Unlike K (derivable from a 1-row count on
     * both engine sides), the plane MATRIX is inlined as literals into
     * the static oracle SQL, so the width is a library configuration
-    * (`graft.lsh.planes` sysprop / `GRAFT_LSH_PLANES` env, default 8
-    * ≈ log2 of the testdata corpus + headroom) rather than a per-query
-    * derivation: both the Spark plan and the generated DuckDB oracle
-    * rebuild from the same constant, so any setting stays
-    * oracle-consistent by construction. LAUNCH-TIME ONLY: the knob is
-    * read once when this object initializes — set it before the first
-    * touch of Similarity (spark-submit --conf spark.driver.extraJavaOptions
-    * or the env var); flipping the sysprop later in a live JVM is
-    * silently ignored, by design (a mid-session width change would
+    * (the `graft.lsh.planes` sysprop, default 8 ≈ log2 of the
+    * testdata corpus + headroom) rather than a per-query derivation:
+    * both the Spark plan and the generated DuckDB oracle rebuild from
+    * the same constant, so any setting stays oracle-consistent by
+    * construction. LAUNCH-TIME ONLY: the knob is read once when this
+    * object initializes — set it before the first touch of Similarity
+    * (spark-submit --conf spark.driver.extraJavaOptions); flipping the
+    * sysprop later in a live JVM is silently ignored, by design (a mid-session width change would
     * desync already-generated oracle SQL from new plans).
     * [[planesFor]] draws planes as a prefix-stable sequence (same
     * seed, sequential draws), so wider configurations strictly REFINE
     * narrower buckets — NearDupSpec asserts the refinement and the
     * bucket-shrink factor. */
   val N_PLANES: Int =
-    sys.props.get("graft.lsh.planes").orElse(sys.env.get("GRAFT_LSH_PLANES"))
-      .map(_.toInt).getOrElse(8)
+    sys.props.get("graft.lsh.planes").map(_.toInt).getOrElse(8)
 
   /** First n ±1 hyperplanes of the java.util.Random(42) draw sequence —
     * the LCG sequence is specified by the JDK, so these are stable
@@ -876,7 +875,7 @@ object Similarity extends graft.QueryPack {
         .filter(col("rk") <= 3)
         .select(col("beam").as("abeam"), col("qid").as("aqid"),
           col("node").as("anid"))
-        .localCheckpoint() // grid-sized; read twice (truth + del count)
+        .cut() // grid-sized; read twice (truth + del count)
       val struth = qs
         .select(col("qid"), explode(typedlit(Seq(1, 2, 3))).as("c"))
         .select(col("qid"),
@@ -937,7 +936,7 @@ object Similarity extends graft.QueryPack {
       val (nodes, delIds, gPre) = deleteGraphParts(s, d)
       val aliveN = nodes.join(delIds.select(col("did").as("vec_id")),
         Seq("vec_id"), "left_anti")
-        .localCheckpoint() // reused: rebuild descent + 2 arms + entry
+        .cut() // reused: rebuild descent + 2 arms + entry
       // The INCREMENTAL repair (bounded 2-hop re-route off gPre) and
       // the FRESH rebuild (full 2-round descent over the survivors)
       // are the two arms under comparison — independent by
@@ -1083,7 +1082,7 @@ object Similarity extends graft.QueryPack {
       val entryAll = (routedEntry(nodes, qs) +: armed.map(_._4))
         .reduce(_ unionByName _)
       val visited = beamWalkFrom(nodesAll, gAll, qsAll, entryAll, beams,
-        hops = 7).localCheckpoint() // grid-sized; sliced 6 ways below
+        hops = 7).cut() // grid-sized; sliced 6 ways below
       // postfilter rows: the ONE full walk, tagged per predicate with
       // its match flag read off the label join
       val v0 = visited.filter(col("qid") < OFF)
@@ -1100,7 +1099,7 @@ object Similarity extends graft.QueryPack {
             col("beam"), (col("qid") - off).as("qid"),
             (col("node") - off).as("node"), col("sim"), lit(true).as("m"))
       }.reduce(_ unionByName _)
-      val allV = tagged0.unionByName(taggedI).localCheckpoint()
+      val allV = tagged0.unionByName(taggedI).cut()
       val counts = allV
         .groupBy(col("strategy").as("cs"), col("pred").as("cp"),
           col("beam").as("cb"), col("qid").as("cq"))
@@ -1777,6 +1776,105 @@ object Similarity extends graft.QueryPack {
       .select(col("qid"), col("rk"), col("nid"), col("centroid_id"), col("sim"))
   }
 
+  // DuckDB twins of the IVF frames: every IVF oracle builds its lists
+  // from these CTEs instead of restating them.
+
+  /** The row-to-list assignment every IVF oracle shares: per vec_id
+    * the argmax of `scored` by (csim desc, cid) — assigned(`cols`,
+    * centroid_id). */
+  private def assignedDuck(cols: String): String =
+    s"""assigned AS (
+       |  SELECT $cols, cid AS centroid_id FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                                 ORDER BY csim DESC, cid) AS rn
+       |    FROM scored) t WHERE rn = 1)""".stripMargin
+
+  /** DuckDB twin of the one-level quantizer ([[sampledCentroids]] +
+    * the list cosines): cents = the first ⌈√N⌉ non-query rows of e,
+    * N counted over `countFrom`, and scored(vec_id, embedding, nrm,
+    * cid, csim) = every row of e against every centroid. */
+  private def sampledScoredDuck(countFrom: String): String =
+    s"""cents AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
+       |          FROM e WHERE vec_id >= 10 AND vec_id < 10 +
+       |            (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM $countFrom)),
+       |scored AS (
+       |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
+       |    round(${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm), 9) AS csim
+       |  FROM e CROSS JOIN cents c)""".stripMargin
+
+  /** DuckDB twin of the two-level quantizer's list routing
+    * (`VectorExpressions.twoLevelModel`): each l2 centroid goes to its
+    * nearest l1 centroid, route(cid, l1cid). */
+  private lazy val ivfRouteDuck: String =
+    s"""route AS (
+       |  SELECT cid, l1cid FROM (
+       |    SELECT l2.cid, l1.cid AS l1cid,
+       |      ROW_NUMBER() OVER (PARTITION BY l2.cid ORDER BY
+       |        round(${dotDuck("l2.cv", "l1.cv")} / (l2.cnrm * l1.cnrm), 9)
+       |          DESC, l1.cid) AS rn
+       |    FROM l2 CROSS JOIN l1) t WHERE rn = 1)""".stripMargin
+
+  /** DuckDB twin of the two-level quantizer over e: l1/l2 = the first
+    * k1/k2 non-query rows, [[ivfRouteDuck]], each row's l1 group g, and
+    * scored(vec_id, embedding, nrm, cid, csim) against the lists routed
+    * to that group. */
+  private lazy val ivf2ScoredDuck: String =
+    s"""k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k2,
+       |             CAST(ceil(sqrt(ceil(sqrt(COUNT(*))))) AS BIGINT) AS k1
+       |      FROM embeddings),
+       |l1 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
+       |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k1),
+       |l2 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
+       |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k2),
+       |$ivfRouteDuck,
+       |g AS (
+       |  SELECT vec_id, embedding, nrm, l1cid FROM (
+       |    SELECT e.vec_id, e.embedding, e.nrm, l1.cid AS l1cid,
+       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+       |        round(${dotDuck("e.embedding", "l1.cv")} / (e.nrm * l1.cnrm), 9)
+       |          DESC, l1.cid) AS rn
+       |    FROM e CROSS JOIN l1) t WHERE rn = 1),
+       |scored AS (
+       |  SELECT g.vec_id, g.embedding, g.nrm, l2.cid,
+       |    round(${dotDuck("g.embedding", "l2.cv")} / (g.nrm * l2.cnrm), 9) AS csim
+       |  FROM g JOIN route r ON r.l1cid = g.l1cid JOIN l2 ON l2.cid = r.cid)""".stripMargin
+
+  /** [[ivf2ScoredDuck]] + assigned(vec_id, centroid_id) + each query's
+    * top-2 lists, probes(qid, probe_cid): the IVF side of the IVF-PQ
+    * oracles. */
+  private lazy val ivf2ProbesDuck: String =
+    s"""$ivf2ScoredDuck,
+       |${assignedDuck("vec_id")},
+       |probes AS (
+       |  SELECT vec_id AS qid, cid AS probe_cid
+       |  FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                                 ORDER BY csim DESC, cid) AS rn
+       |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2)""".stripMargin
+
+  /** DuckDB twin of [[ivfProbeTop3]] over `scored`: assigned rows,
+    * each query's top-2 probes, and the top-3 (qid, rk, nid,
+    * centroid_id, sim) of the probed lists. */
+  private lazy val ivfProbeTop3Duck: String =
+    s"""${assignedDuck("vec_id, embedding, nrm")},
+       |probes AS (
+       |  SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, cid AS probe_cid
+       |  FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                                 ORDER BY csim DESC, cid) AS rn
+       |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2),
+       |sims AS (
+       |  SELECT p.qid, a.centroid_id, a.vec_id AS nid,
+       |    round(${dotDuck("p.qv", "a.embedding")} / (p.qnrm * a.nrm), 9) AS sim
+       |  FROM assigned a JOIN probes p
+       |    ON a.centroid_id = p.probe_cid AND p.qid <> a.vec_id)
+       |SELECT qid, rk, nid, centroid_id, sim FROM (
+       |  SELECT qid, centroid_id, nid, sim,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
+       |                            ORDER BY sim DESC, nid) AS BIGINT) AS rk
+       |  FROM sims) t
+       |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin
+
   /** The hit count every recall grading shares: `truth` left-joined to
     * `approx` on the (truth, approx) column `pairs` — the neighbor pair
     * last — and grouped by the truth columns `by`: n_exact (truth rows)
@@ -1843,6 +1941,40 @@ object Similarity extends graft.QueryPack {
 
   private def pqCode(enc: Column, cb: Codebook, m: Int): Column =
     pqNearest(enc, cb, m).getField("negk") * -1
+
+  /** DuckDB twin of [[pqCodebook]] and [[pqD2]]: cw(k, embedding) = the
+    * `nCodes` sampled codeword rows, ms = the subspace ids, and d2(vec_id,
+    * m, k, d) = the squared L2 distance of each of `rows`' subvectors
+    * to each codeword, in the Spark side's (ss_a + ss_b) - dot*2 order. */
+  private def pqD2Duck(nCodes: Int, rows: String): String =
+    s"""cw AS (SELECT CAST(vec_id - 10 AS INTEGER) AS k, embedding
+       |       FROM embeddings WHERE vec_id BETWEEN 10 AND ${9 + nCodes}),
+       |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
+       |d2 AS (
+       |  SELECT e.vec_id, ms.m, cw.k,
+       |    (list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
+       |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
+       |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
+       |     + list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
+       |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
+       |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
+       |     - list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
+       |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
+       |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE))) * 2) AS d
+       |  FROM $rows, ms, cw)""".stripMargin
+
+  /** DuckDB twin of [[pqCode]] and the ADC table: codes(vec_id, m, code)
+    * = the argmin codeword per subspace by (d, k), and qtab(qid, m, k,
+    * dd) = each query's round-9 DECIMAL distance table. */
+  private lazy val pqCodesDuck: String =
+    s"""codes AS (
+       |  SELECT vec_id, m, k AS code FROM (
+       |    SELECT vec_id, m, k, ROW_NUMBER() OVER (PARTITION BY vec_id, m
+       |                                            ORDER BY d, k) AS rn
+       |    FROM d2) t WHERE rn = 1),
+       |qtab AS (
+       |  SELECT vec_id AS qid, m, k, CAST(round(d, 9) AS DECIMAL(18,9)) AS dd
+       |  FROM d2 WHERE vec_id < 10)""".stripMargin
 
   /** The ADC top-3 scan. Candidates are ENCODED once into PQ_M codes (a
     * map-side projection over literal codewords); each query builds its
@@ -1975,6 +2107,33 @@ object Similarity extends graft.QueryPack {
       .filter(col("rk") <= 3)
       .select(col("qid"), col("nid"))
   }
+
+  /** DuckDB twin of [[exactL2Top3]] per code_k cell of ks, graded: the
+    * exact L2 top-3 of each query over e, left-joined to approx(a_code_k,
+    * aqid, anid) into per-(code_k, qid) recall and each cell's macro
+    * recall — the tail of the IVF-PQ recall oracles. */
+  private lazy val exactL2RecallDuck: String =
+    s"""exact AS (
+       |  SELECT ks.code_k, t.qid, t.nid FROM (
+       |    SELECT q.vec_id AS qid, c.vec_id AS nid,
+       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+       |        round(q.nrm * q.nrm + c.nrm * c.nrm -
+       |          ${dotDuck("q.embedding", "c.embedding")} * 2, 9), c.vec_id)
+       |        AS rk
+       |    FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id) t, ks
+       |  WHERE rk <= 3),
+       |per_q AS (
+       |  SELECT exact.code_k, qid, CAST(COUNT(*) AS BIGINT) AS n_exact,
+       |    CAST(COUNT(anid) AS BIGINT) AS n_hits
+       |  FROM exact LEFT JOIN approx
+       |    ON exact.code_k = approx.a_code_k
+       |      AND exact.qid = approx.aqid AND exact.nid = approx.anid
+       |  GROUP BY exact.code_k, qid)
+       |SELECT CAST(code_k AS BIGINT) AS code_k, qid, n_exact, n_hits,
+       |  round(CAST(n_hits AS DOUBLE) / 3.0, 6) AS recall,
+       |  round(CAST(SUM(n_hits) OVER (PARTITION BY code_k) AS DOUBLE) /
+       |    (3.0 * COUNT(*) OVER (PARTITION BY code_k)), 6) AS macro_recall
+       |FROM per_q ORDER BY code_k, qid""".stripMargin
 
   /** Codewords per subspace for the COMPOSED IVF-PQ scan. PQ_K = 4 is
     * kept for q_ann_pq / q_pq_distortion (small oracle-restated
@@ -2312,11 +2471,36 @@ object Similarity extends graft.QueryPack {
     base.unionByName(planted)
   }
 
+  /** DuckDB twin of [[plantedCorpus]] up to its union: CTEs q0, planted
+    * and aug(vec_id, embedding). Oracles that widen the corpus rows
+    * themselves (q_ann_recall adds the LSH bucket) start here. */
+  private lazy val plantedAugDuck: String =
+    s"""q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
+       |            FROM embeddings WHERE vec_id < 10),
+       |planted AS (
+       |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
+       |    list_transform(range(1, ${DIM + 1}), i ->
+       |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
+       |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
+       |  FROM q0, (VALUES (1), (2), (3)) t(c)),
+       |aug AS (
+       |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
+       |      CAST(embedding[i] AS DOUBLE)) AS embedding
+       |  FROM embeddings
+       |  UNION ALL SELECT vec_id, embedding FROM planted)""".stripMargin
+
+  /** DuckDB twin of [[plantedCorpus]]: [[plantedAugDuck]] closed by
+    * e(vec_id, embedding, nrm), the frame every planted-corpus oracle
+    * indexes and searches. */
+  private lazy val plantedCorpusDuck: String =
+    s"""$plantedAugDuck,
+       |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug)""".stripMargin
+
   // ---- graph-based ANN: NN-Descent (q_ann_graph) -----------------------
 
   /** Init-block prefix width (chars of the LSH bucket signature) for the
-    * NN-Descent seed graph — read PER CALL (the graft.phash.group.cap
-    * discipline) so specs can exercise coarser/finer seeding. Default 4
+    * NN-Descent seed graph — a sysprop read PER CALL so specs can
+    * exercise coarser/finer seeding. Default 4
     * of the 8-char signature → 16 seed blocks on the test corpus; at
     * corpus scale the width grows with log2(N) exactly like
     * graft.lsh.planes, keeping within-block seed work constant. */
@@ -2337,7 +2521,7 @@ object Similarity extends graft.QueryPack {
   private def nnNodes(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("embedding"), col("nrm"),
         substring(col("bucket"), 1, nnInitWidth).as("blk"))
-      .localCheckpoint()
+      .cut()
 
   /** NN-Descent (Dong, Charikar & Li, WWW'11) with every source of
     * randomness replaced by a deterministic total order, which is what
@@ -2377,7 +2561,7 @@ object Similarity extends graft.QueryPack {
       .withColumn("rk", row_number().over(wH))
       .filter(col("rk") <= k)
       .select(col("src"), col("dst"))
-      .localCheckpoint()
+      .cut()
     descentRounds(nodes, init, rounds)
   }
 
@@ -2494,7 +2678,7 @@ object Similarity extends graft.QueryPack {
         .agg(transform(slice(array_sort(collect_list(col("sc")), ord), 1, k),
           x => x.getField("dst")).as("top"))
         .select(col("src"), explode(col("top")).as("dst"))
-        .localCheckpoint()
+        .cut()
       out += cur
     }
     out.toSeq
@@ -2561,13 +2745,7 @@ object Similarity extends graft.QueryPack {
     val head =
       s"""${symGraphDuck("g", "e2")},
          |qs AS MATERIALIZED ($qsSql),
-         |ent AS (SELECT qid, node FROM (
-         |  SELECT q.qid, n.vec_id AS node,
-         |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-         |      n.vec_id) AS rk
-         |  FROM qs q JOIN nodes n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-         | WHERE rk = 1),
+         |${routedEntryDuck("ent", "nodes")},
          |beams AS (SELECT * FROM (VALUES ${beams.map(b => s"($b)").mkString(", ")}) b(beam))""".stripMargin
     (head +: Seq(walkDuck("", "nodes", "g", "ent", "beams", hops)))
       .mkString(",\n")
@@ -2629,7 +2807,7 @@ object Similarity extends graft.QueryPack {
   private def nnSearchGraph(e2: DataFrame): DataFrame =
     biAdj(e2)
       .select(col("u").as("src"), explode(col("bi")).as("dst"))
-      .localCheckpoint()
+      .cut()
 
   /** q_ann_layered's UPPER LAYER: the ⌈√N⌉ non-query nodes with the
     * smallest (md5(vec_id), vec_id) — the deterministic analog of
@@ -2649,7 +2827,7 @@ object Similarity extends graft.QueryPack {
       .orderBy(col("h"), col("vec_id")).limit(nU)
       .withColumn("urk", row_number().over(wU).cast("long"))
       .drop("h")
-      .localCheckpoint()
+      .cut()
     (up, nU)
   }
 
@@ -2667,7 +2845,7 @@ object Similarity extends graft.QueryPack {
         col("tgt") === col("urk2"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
-      .localCheckpoint()
+      .cut()
 
   /** q_ann_delete's tombstone + NSW repair internals, factored so
     * GraphAnnSpec can assert the repair invariants on the frames
@@ -2725,9 +2903,29 @@ object Similarity extends graft.QueryPack {
     val delIds = nodes
       .filter(col("vec_id") % 9 === 4 && col("vec_id") >= 10)
       .select(col("vec_id").as("did"))
-      .localCheckpoint() // tombstone list: |D| rows, reused by 4 joins
+      .cut() // tombstone list: |D| rows, reused by 4 joins
     (nodes, delIds, gPre)
   }
+
+  /** DuckDB twin of [[deleteGraphParts]]: the planted-corpus nodes,
+    * the pre-delete search graph pg and the tombstones del(did). */
+  private lazy val deleteGraphDuck: String =
+    s"""$plantedCorpusDuck,
+       |${nnDescentDuck(2)},
+       |${symGraphDuck("pg", "e2")},
+       |del AS MATERIALIZED (SELECT vec_id AS did FROM nodes
+       |  WHERE vec_id % 9 = 4 AND vec_id >= 10)""".stripMargin
+
+  /** The query side of the delete oracles over [[deleteGraphDuck]]:
+    * qs(qid, qv, qnrm, qblk), the alive nodes an, and each query's
+    * routed entry into the pre-delete (pent) and alive (bent) nodes. */
+  private lazy val deleteEntriesDuck: String =
+    s"""qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
+       |  nrm AS qnrm, blk AS qblk FROM nodes WHERE vec_id < 10),
+       |an AS MATERIALIZED (SELECT * FROM nodes
+       |  WHERE vec_id NOT IN (SELECT did FROM del)),
+       |${routedEntryDuck("pent", "nodes")},
+       |${routedEntryDuck("bent", "an")}""".stripMargin
 
   /** ONE tombstone + NSW 2-hop repair application against an
     * ARBITRARY current edge frame — the kernel of q_ann_delete
@@ -2798,20 +2996,7 @@ object Similarity extends graft.QueryPack {
     * first, the rest second — the drain's file order), and the repair
     * chain unrolled in arrival order. Final edge set, sorted. */
   private[operators] def streamDeleteOracleSql: String =
-    s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-       |            FROM embeddings WHERE vec_id < 10),
-       |planted AS (
-       |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-       |    list_transform(range(1, ${DIM + 1}), i ->
-       |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-       |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-       |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-       |aug AS (
-       |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-       |      CAST(embedding[i] AS DOUBLE)) AS embedding
-       |  FROM embeddings
-       |  UNION ALL SELECT vec_id, embedding FROM planted),
-       |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+    s"""WITH $plantedCorpusDuck,
        |${nnDescentDuck(2)},
        |${symGraphDuck("pg", "e2")},
        |del1 AS MATERIALIZED (SELECT vec_id AS did FROM nodes
@@ -2865,25 +3050,27 @@ object Similarity extends graft.QueryPack {
         col("node").as("nid"), col("sim"))
   }
 
+  /** DuckDB twin of [[serveTopK]]: `name`(qid, rk, nid, sim) = each
+    * query's top-3 of the walk's visited set `visited` by round-9
+    * cosine against the node CTE `nodes`. */
+  private def serveTop3Duck(name: String, visited: String,
+      nodes: String): String =
+    s"""$name AS (SELECT qid, rk, nid, sim FROM (
+       |  SELECT v.qid, v.node AS nid,
+       |    round(${dotDuck("q.qv", "n.embedding")} /
+       |      (q.qnrm * n.nrm), 9) AS sim,
+       |    ROW_NUMBER() OVER (PARTITION BY v.qid ORDER BY
+       |      round(${dotDuck("q.qv", "n.embedding")} /
+       |        (q.qnrm * n.nrm), 9) DESC, v.node) AS rk
+       |  FROM $visited v JOIN $nodes n ON n.vec_id = v.node
+       |              JOIN qs q ON q.qid = v.qid) t WHERE rk <= 3)""".stripMargin
+
   /** Drain #32's oracle (pure graph-ANN machinery, so it lives by
     * its kernel): the one-shot batch walk at beam 4 over all queries
     * — statelessness makes the streamed union equal it exactly,
     * whatever the file batching. */
   private[operators] def streamServeOracleSql: String =
-    s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-       |            FROM embeddings WHERE vec_id < 10),
-       |planted AS (
-       |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-       |    list_transform(range(1, ${DIM + 1}), i ->
-       |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-       |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-       |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-       |aug AS (
-       |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-       |      CAST(embedding[i] AS DOUBLE)) AS embedding
-       |  FROM embeddings
-       |  UNION ALL SELECT vec_id, embedding FROM planted),
-       |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+    s"""WITH $plantedCorpusDuck,
        |${nnDescentDuck(2)},
        |${nnBeamDuck(7, Seq(4),
           "SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, " +
@@ -2906,64 +3093,14 @@ object Similarity extends graft.QueryPack {
     * over the alive set. The staged order (queries, deletes,
     * queries) is the semantics; the oracle unrolls it. */
   private[operators] def streamServeMaintainOracleSql: String =
-    s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-       |            FROM embeddings WHERE vec_id < 10),
-       |planted AS (
-       |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-       |    list_transform(range(1, ${DIM + 1}), i ->
-       |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-       |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-       |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-       |aug AS (
-       |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-       |      CAST(embedding[i] AS DOUBLE)) AS embedding
-       |  FROM embeddings
-       |  UNION ALL SELECT vec_id, embedding FROM planted),
-       |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
-       |${nnDescentDuck(2)},
-       |${symGraphDuck("pg", "e2")},
-       |del AS MATERIALIZED (SELECT vec_id AS did FROM nodes
-       |  WHERE vec_id % 9 = 4 AND vec_id >= 10),
+    s"""WITH $deleteGraphDuck,
        |${repairDuck("d", "pg", "del", "qg")},
-       |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
-       |  nrm AS qnrm, blk AS qblk FROM nodes WHERE vec_id < 10),
-       |an AS MATERIALIZED (SELECT * FROM nodes
-       |  WHERE vec_id NOT IN (SELECT did FROM del)),
-       |pent AS (SELECT qid, node FROM (
-       |  SELECT q.qid, n.vec_id AS node,
-       |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-       |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-       |      n.vec_id) AS rk
-       |  FROM qs q JOIN nodes n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-       | WHERE rk = 1),
-       |bent AS (SELECT qid, node FROM (
-       |  SELECT q.qid, n.vec_id AS node,
-       |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-       |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-       |      n.vec_id) AS rk
-       |  FROM qs q JOIN an n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-       | WHERE rk = 1),
+       |$deleteEntriesDuck,
        |svb AS (SELECT * FROM (VALUES (4)) b(beam)),
        |${walkDuck("pa", "nodes", "pg", "pent", "svb", 7)},
        |${walkDuck("pb", "an", "qg", "bent", "svb", 7)},
-       |parank AS (SELECT qid, rk, nid, sim FROM (
-       |  SELECT v.qid, v.node AS nid,
-       |    round(${dotDuck("q.qv", "n.embedding")} /
-       |      (q.qnrm * n.nrm), 9) AS sim,
-       |    ROW_NUMBER() OVER (PARTITION BY v.qid ORDER BY
-       |      round(${dotDuck("q.qv", "n.embedding")} /
-       |        (q.qnrm * n.nrm), 9) DESC, v.node) AS rk
-       |  FROM pav7 v JOIN nodes n ON n.vec_id = v.node
-       |              JOIN qs q ON q.qid = v.qid) t WHERE rk <= 3),
-       |pbrank AS (SELECT qid, rk, nid, sim FROM (
-       |  SELECT v.qid, v.node AS nid,
-       |    round(${dotDuck("q.qv", "n.embedding")} /
-       |      (q.qnrm * n.nrm), 9) AS sim,
-       |    ROW_NUMBER() OVER (PARTITION BY v.qid ORDER BY
-       |      round(${dotDuck("q.qv", "n.embedding")} /
-       |        (q.qnrm * n.nrm), 9) DESC, v.node) AS rk
-       |  FROM pbv7 v JOIN an n ON n.vec_id = v.node
-       |              JOIN qs q ON q.qid = v.qid) t WHERE rk <= 3)
+       |${serveTop3Duck("parank", "pav7", "nodes")},
+       |${serveTop3Duck("pbrank", "pbv7", "an")}
        |SELECT phase, qid, CAST(rk AS BIGINT) AS rk, nid, sim FROM (
        |  SELECT 'pre' AS phase, * FROM parank
        |  UNION ALL
@@ -3030,6 +3167,18 @@ object Similarity extends graft.QueryPack {
       .filter(col("rk") === 1)
       .select(col("qid"), col("node"))
   }
+
+  /** DuckDB twin of [[routedEntry]] over qs(qid, qblk) and the node
+    * CTE `nodes`: $name(qid, node) = per query the md5-first node of
+    * its block. */
+  private def routedEntryDuck(name: String, nodes: String): String =
+    s"""$name AS (SELECT qid, node FROM (
+       |  SELECT q.qid, n.vec_id AS node,
+       |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+       |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
+       |      n.vec_id) AS rk
+       |  FROM qs q JOIN $nodes n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
+       | WHERE rk = 1)""".stripMargin
 
   /** [[beamWalk]] with the entry frame SUPPLIED — the hook
     * q_ann_layered uses to feed hierarchy-routed entries into the
@@ -3126,7 +3275,7 @@ object Similarity extends graft.QueryPack {
     // 14.1/14.2 s.
     // Final cut: consumers slice the result several ways (recall
     // joins, per-arm filters) — materialize the grid-sized walk once
-    state.localCheckpoint()
+    state.cut()
       .select(col("beam"), col("qid"), explode(col("vis")).as("v"))
       .select(col("beam"), col("qid"),
         col("v.node").as("node"), col("v.sim").as("sim"))
@@ -3202,6 +3351,21 @@ object Similarity extends graft.QueryPack {
       .withColumn("bucket", bucketCol(col("embedding")))
   }
 
+  /** DuckDB twin of [[neardupCorpus]] before its widening: the CTE
+    * `name`(vec_id, embedding) = embeddings ∪ every 20th row shifted
+    * by 0.01 in dim 1 under vec_id + 100000. */
+  private def neardupCorpusDuck(name: String): String =
+    s"""$name AS (
+       |  SELECT vec_id,
+       |    list_transform(range(1,${DIM + 1}), i -> CAST(embedding[i] AS DOUBLE)) AS embedding
+       |  FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 100000,
+       |    list_transform(range(1,${DIM + 1}), i ->
+       |      CAST(embedding[i] AS DOUBLE) +
+       |      CASE WHEN i = 1 THEN CAST(0.01 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
+       |  FROM embeddings WHERE vec_id % 20 = 0)""".stripMargin
+
   /** Unbucketed all-pairs reference for q_neardup_embedding — O(n²), for
     * NearDupSpec's side-by-side equality check only, never benched. */
   private[graft] def neardupAllPairs(s: SparkSession, d: String): DataFrame = {
@@ -3218,61 +3382,12 @@ object Similarity extends graft.QueryPack {
   }
 
   /** Shared oracle prefix for the planted-corpus IVF-PQ recall
-    * sweeps: the q_ann_recall planted corpus + the q_ann_ivf2
-    * two-level routing/assignment/probe CTEs, ending at probes(qid,
-    * probe_cid) — ONE definition for the raw and residual variants. */
+    * sweeps: [[plantedCorpusDuck]] + [[ivf2ProbesDuck]], ending at
+    * probes(qid, probe_cid) — ONE definition for the raw and residual
+    * variants. */
   private lazy val ivfpqPlantedPrefixDuck: String =
-    s"""q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
-         |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k2,
-         |             CAST(ceil(sqrt(ceil(sqrt(COUNT(*))))) AS BIGINT) AS k1
-         |      FROM embeddings),
-         |l1 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k1),
-         |l2 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k2),
-         |route AS (
-         |  SELECT cid, l1cid FROM (
-         |    SELECT l2.cid, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY l2.cid ORDER BY
-         |        round(${dotDuck("l2.cv", "l1.cv")} / (l2.cnrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM l2 CROSS JOIN l1) t WHERE rn = 1),
-         |g AS (
-         |  SELECT vec_id, embedding, nrm, l1cid FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |        round(${dotDuck("e.embedding", "l1.cv")} / (e.nrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM e CROSS JOIN l1) t WHERE rn = 1),
-         |scored AS (
-         |  SELECT g.vec_id, g.embedding, g.nrm, l2.cid,
-         |    round(${dotDuck("g.embedding", "l2.cv")} / (g.nrm * l2.cnrm), 9) AS csim
-         |  FROM g JOIN route r ON r.l1cid = g.l1cid JOIN l2 ON l2.cid = r.cid),
-         |assigned AS (
-         |  SELECT vec_id, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, cid AS probe_cid
-         |  FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2)"""
-      .stripMargin
+    s"""$plantedCorpusDuck,
+       |$ivf2ProbesDuck""".stripMargin
 
   /** Generated oracle for q_ann_ivfpq_lloyd — the full unroll, every
     * stage restated in the house CTE shapes: coarse Lloyd
@@ -3399,20 +3514,7 @@ object Similarity extends graft.QueryPack {
     }
     val cells = for (v <- Seq("raw", "residual"); ck <- Seq(4, 16))
       yield Seq(cellCtes(v, ck), qtabCte(v, ck), apCte(v, ck)).mkString(",\n")
-    s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-       |            FROM embeddings WHERE vec_id < 10),
-       |planted AS (
-       |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-       |    list_transform(range(1, $D1), i ->
-       |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-       |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-       |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-       |aug AS (
-       |  SELECT vec_id, list_transform(range(1, $D1), i ->
-       |      CAST(embedding[i] AS DOUBLE)) AS embedding
-       |  FROM embeddings
-       |  UNION ALL SELECT vec_id, embedding FROM planted),
-       |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+    s"""WITH $plantedCorpusDuck,
        |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k2
        |      FROM embeddings),
        |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
@@ -3527,20 +3629,7 @@ object Similarity extends graft.QueryPack {
     // the graph unroll + the beam-search unroll; recall of the
     // cumulative visited set per beam width against the planted truth
     "q_ann_beam" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+      s"""WITH $plantedCorpusDuck,
          |${nnDescentDuck(2)},
          |${nnBeamDuck(7, Seq(1, 2, 4, 8),
              "SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, " +
@@ -3573,20 +3662,7 @@ object Similarity extends graft.QueryPack {
     // beam-1 greedy upper walk, then BOTH base arms (global entry /
     // layered entry) through the same walk CTEs at prefixes ga/la
     "q_ann_layered" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+      s"""WITH $plantedCorpusDuck,
          |${nnDescentDuck(2)},
          |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
          |  nrm AS qnrm FROM nodes WHERE vec_id < 10),
@@ -3668,43 +3744,9 @@ object Similarity extends graft.QueryPack {
     // pb = post-delete graph over alive nodes), scored against the
     // SURVIVING truth with the stale-tombstone top-3 count
     "q_ann_delete" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
-         |${nnDescentDuck(2)},
-         |${symGraphDuck("pg", "e2")},
-         |del AS MATERIALIZED (SELECT vec_id AS did FROM nodes
-         |  WHERE vec_id % 9 = 4 AND vec_id >= 10),
+      s"""WITH $deleteGraphDuck,
          |${repairDuck("d", "pg", "del", "qg")},
-         |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
-         |  nrm AS qnrm, blk AS qblk FROM nodes WHERE vec_id < 10),
-         |an AS MATERIALIZED (SELECT * FROM nodes
-         |  WHERE vec_id NOT IN (SELECT did FROM del)),
-         |pent AS (SELECT qid, node FROM (
-         |  SELECT q.qid, n.vec_id AS node,
-         |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-         |      n.vec_id) AS rk
-         |  FROM qs q JOIN nodes n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-         | WHERE rk = 1),
-         |bent AS (SELECT qid, node FROM (
-         |  SELECT q.qid, n.vec_id AS node,
-         |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-         |      n.vec_id) AS rk
-         |  FROM qs q JOIN an n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-         | WHERE rk = 1),
+         |$deleteEntriesDuck,
          |beams AS (SELECT * FROM (VALUES (1), (2), (4), (8)) b(beam)),
          |${walkDuck("pa", "nodes", "pg", "pent", "beams", 7)},
          |${walkDuck("pb", "an", "qg", "bent", "beams", 7)},
@@ -3765,24 +3807,7 @@ object Similarity extends graft.QueryPack {
     // prefix r -> rebuilt rg), scalar edge algebra, and both arms
     // through walkDuck over the same alive-routed entries
     "q_ann_rebuild_compare" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
-         |${nnDescentDuck(2)},
-         |${symGraphDuck("pg", "e2")},
-         |del AS MATERIALIZED (SELECT vec_id AS did FROM nodes
-         |  WHERE vec_id % 9 = 4 AND vec_id >= 10),
+      s"""WITH $deleteGraphDuck,
          |${repairDuck("d", "pg", "del", "ig")},
          |an AS MATERIALIZED (SELECT * FROM nodes
          |  WHERE vec_id NOT IN (SELECT did FROM del)),
@@ -3803,13 +3828,7 @@ object Similarity extends graft.QueryPack {
          |     SELECT src, dst FROM rg) t) AS n_common),
          |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
          |  nrm AS qnrm, blk AS qblk FROM nodes WHERE vec_id < 10),
-         |bent AS (SELECT qid, node FROM (
-         |  SELECT q.qid, n.vec_id AS node,
-         |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-         |      n.vec_id) AS rk
-         |  FROM qs q JOIN an n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-         | WHERE rk = 1),
+         |${routedEntryDuck("bent", "an")},
          |rcb AS (SELECT * FROM (VALUES (2), (4)) b(beam)),
          |${walkDuck("ia", "an", "ig", "bent", "rcb", 7)},
          |${walkDuck("ra", "an", "rg", "bent", "rcb", 7)},
@@ -3868,13 +3887,7 @@ object Similarity extends graft.QueryPack {
            |g$i AS MATERIALIZED (SELECT src, dst FROM fg
            |  WHERE src IN (SELECT vec_id FROM mn$i)
            |    AND dst IN (SELECT vec_id FROM mn$i)),
-           |ent$i AS (SELECT qid, node FROM (
-           |  SELECT q.qid, n.vec_id AS node,
-           |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-           |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-           |      n.vec_id) AS rk
-           |  FROM qs q JOIN mn$i n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-           | WHERE rk = 1),
+           |${routedEntryDuck(s"ent$i", s"mn$i")},
            |${walkDuck(s"i$i", s"mn$i", s"g$i", s"ent$i", "beams", 7)},
            |iv$i AS (SELECT 'induced' AS strategy,
            |    '${predsD(i0)._1}' AS pred, v.beam, v.qid, v.node,
@@ -3901,13 +3914,7 @@ object Similarity extends graft.QueryPack {
          |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv,
          |  nrm AS qnrm, blk AS qblk FROM nodes WHERE vec_id < 10),
          |beams AS (SELECT * FROM (VALUES (4), (8)) b(beam)),
-         |pfent AS (SELECT qid, node FROM (
-         |  SELECT q.qid, n.vec_id AS node,
-         |    ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |      md5(CAST(q.qid AS VARCHAR) || '|' || CAST(n.vec_id AS VARCHAR)),
-         |      n.vec_id) AS rk
-         |  FROM qs q JOIN nodes n ON n.blk = q.qblk AND n.vec_id <> q.qid) t
-         | WHERE rk = 1),
+         |${routedEntryDuck("pfent", "nodes")},
          |${walkDuck("pf", "nodes", "fg", "pfent", "beams", 7)},
          |pfv AS (SELECT v.beam, v.qid, v.node,
          |    round(${dotDuck("q.qv", "n.embedding")} /
@@ -3964,20 +3971,7 @@ object Similarity extends graft.QueryPack {
     // the planted-corpus prefix (q_ann_recall verbatim) feeding the
     // same unroll; recall measured per round against the planted truth
     "q_ann_graph_recall" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+      s"""WITH $plantedCorpusDuck,
          |${nnDescentDuck(2)},
          |g AS (SELECT 0 AS rnd, src, dst FROM e0
          |      UNION ALL SELECT 1, src, dst FROM e1
@@ -4008,19 +4002,7 @@ object Similarity extends graft.QueryPack {
     // both rankings from one sims CTE; the LSH side is the same frame
     // prefix-filtered per width (nested candidate sets by construction)
     "q_ann_recall" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
+      s"""WITH $plantedAugDuck,
          |e AS (SELECT vec_id, embedding, $normDuck AS nrm,
          |             $bucketDuck AS bucket
          |           FROM aug),
@@ -4128,35 +4110,8 @@ object Similarity extends graft.QueryPack {
     // same formula the Spark side derives from its 1-row count agg.
     "q_ann_ivf" ->
       s"""WITH e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
-         |cents AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |          FROM e WHERE vec_id >= 10 AND vec_id < 10 +
-         |            (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM embeddings)),
-         |scored AS (
-         |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-         |    round(${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm), 9) AS csim
-         |  FROM e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, nrm, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, cid AS probe_cid
-         |  FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2),
-         |sims AS (
-         |  SELECT p.qid, a.centroid_id, a.vec_id AS nid,
-         |    round(${dotDuck("p.qv", "a.embedding")} / (p.qnrm * a.nrm), 9) AS sim
-         |  FROM assigned a JOIN probes p
-         |    ON a.centroid_id = p.probe_cid AND p.qid <> a.vec_id)
-         |SELECT qid, rk, nid, centroid_id, sim FROM (
-         |  SELECT qid, centroid_id, nid, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-         |                            ORDER BY sim DESC, nid) AS BIGINT) AS rk
-         |  FROM sims) t
-         |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin,
+         |${sampledScoredDuck("embeddings")},
+         |$ivfProbeTop3Duck""".stripMargin,
 
     // the greedy rounds unrolled as chained argmin CTEs (the BPE
     // unroll precedent): each round's max-sim frame excludes the
@@ -4203,53 +4158,8 @@ object Similarity extends graft.QueryPack {
     // the group's lists — the same tail as q_ann_ivf
     "q_ann_ivf2" ->
       s"""WITH e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
-         |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k2,
-         |             CAST(ceil(sqrt(ceil(sqrt(COUNT(*))))) AS BIGINT) AS k1
-         |      FROM embeddings),
-         |l1 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k1),
-         |l2 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k2),
-         |route AS (
-         |  SELECT cid, l1cid FROM (
-         |    SELECT l2.cid, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY l2.cid ORDER BY
-         |        round(${dotDuck("l2.cv", "l1.cv")} / (l2.cnrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM l2 CROSS JOIN l1) t WHERE rn = 1),
-         |g AS (
-         |  SELECT vec_id, embedding, nrm, l1cid FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |        round(${dotDuck("e.embedding", "l1.cv")} / (e.nrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM e CROSS JOIN l1) t WHERE rn = 1),
-         |scored AS (
-         |  SELECT g.vec_id, g.embedding, g.nrm, l2.cid,
-         |    round(${dotDuck("g.embedding", "l2.cv")} / (g.nrm * l2.cnrm), 9) AS csim
-         |  FROM g JOIN route r ON r.l1cid = g.l1cid JOIN l2 ON l2.cid = r.cid),
-         |assigned AS (
-         |  SELECT vec_id, embedding, nrm, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, cid AS probe_cid
-         |  FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2),
-         |sims AS (
-         |  SELECT p.qid, a.centroid_id, a.vec_id AS nid,
-         |    round(${dotDuck("p.qv", "a.embedding")} / (p.qnrm * a.nrm), 9) AS sim
-         |  FROM assigned a JOIN probes p
-         |    ON a.centroid_id = p.probe_cid AND p.qid <> a.vec_id)
-         |SELECT qid, rk, nid, centroid_id, sim FROM (
-         |  SELECT qid, centroid_id, nid, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-         |                            ORDER BY sim DESC, nid) AS BIGINT) AS rk
-         |  FROM sims) t
-         |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin,
+         |$ivf2ScoredDuck,
+         |$ivfProbeTop3Duck""".stripMargin,
 
     // q_ann_ivf2's two-stage restatement, with centroids drawn from
     // the index corpus only (ROW_NUMBER-over-vec_id prefix, nested
@@ -4266,13 +4176,7 @@ object Similarity extends graft.QueryPack {
          |         FROM idx WHERE vec_id >= 10),
          |l1 AS (SELECT cid, cv, cnrm FROM cseq, k WHERE rn <= k1),
          |l2 AS (SELECT cid, cv, cnrm FROM cseq, k WHERE rn <= k2),
-         |route AS (
-         |  SELECT cid, l1cid FROM (
-         |    SELECT l2.cid, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY l2.cid ORDER BY
-         |        round(${dotDuck("l2.cv", "l1.cv")} / (l2.cnrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM l2 CROSS JOIN l1) t WHERE rn = 1),
+         |$ivfRouteDuck,
          |gi AS (
          |  SELECT vec_id, embedding, nrm, l1cid FROM (
          |    SELECT idx.vec_id, idx.embedding, idx.nrm, l1.cid AS l1cid,
@@ -4319,20 +4223,7 @@ object Similarity extends graft.QueryPack {
     // same planted CTEs as q_ann_recall, same IVF assignment CTEs as
     // q_ann_ivf, probe ranks generalized over the nprobe grid
     "q_ivf_tuning" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+      s"""WITH $plantedCorpusDuck,
          |cents AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
          |          FROM e WHERE vec_id >= 10 AND vec_id < 10 +
          |            (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM embeddings)),
@@ -4340,11 +4231,7 @@ object Similarity extends graft.QueryPack {
          |  SELECT e.vec_id, c.cid,
          |    round(${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm), 9) AS csim
          |  FROM e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
+         |${assignedDuck("vec_id")},
          |probes AS (
          |  SELECT vec_id AS pqid, cid AS probe_cid, rn AS prank FROM (
          |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -4387,29 +4274,8 @@ object Similarity extends graft.QueryPack {
     // association, argmin by (d, k), per-cell round(9) → DECIMAL sum.
     "q_ann_pq" ->
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |cw AS (SELECT CAST(vec_id - 10 AS INTEGER) AS k, embedding
-         |       FROM embeddings WHERE vec_id BETWEEN 10 AND ${9 + PQ_K}),
-         |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
-         |d2 AS (
-         |  SELECT e.vec_id, ms.m, cw.k,
-         |    (list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     + list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     - list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE))) * 2) AS d
-         |  FROM e, ms, cw),
-         |codes AS (
-         |  SELECT vec_id, m, k AS code FROM (
-         |    SELECT vec_id, m, k, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-         |                                            ORDER BY d, k) AS rn
-         |    FROM d2) t WHERE rn = 1),
-         |qtab AS (
-         |  SELECT vec_id AS qid, m, k, CAST(round(d, 9) AS DECIMAL(18,9)) AS dd
-         |  FROM d2 WHERE vec_id < 10),
+         |${pqD2Duck(PQ_K, "e")},
+         |$pqCodesDuck,
          |approx AS (
          |  SELECT q.qid, c.vec_id AS nid, SUM(q.dd) AS approx
          |  FROM codes c JOIN qtab q ON q.m = c.m AND q.k = c.code
@@ -4427,65 +4293,9 @@ object Similarity extends graft.QueryPack {
     // candidate set restricted to the probed lists
     "q_ann_ivfpq" ->
       s"""WITH e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
-         |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k2,
-         |             CAST(ceil(sqrt(ceil(sqrt(COUNT(*))))) AS BIGINT) AS k1
-         |      FROM embeddings),
-         |l1 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k1),
-         |l2 AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |       FROM e, k WHERE vec_id >= 10 AND vec_id < 10 + k2),
-         |route AS (
-         |  SELECT cid, l1cid FROM (
-         |    SELECT l2.cid, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY l2.cid ORDER BY
-         |        round(${dotDuck("l2.cv", "l1.cv")} / (l2.cnrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM l2 CROSS JOIN l1) t WHERE rn = 1),
-         |g AS (
-         |  SELECT vec_id, embedding, nrm, l1cid FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, l1.cid AS l1cid,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |        round(${dotDuck("e.embedding", "l1.cv")} / (e.nrm * l1.cnrm), 9)
-         |          DESC, l1.cid) AS rn
-         |    FROM e CROSS JOIN l1) t WHERE rn = 1),
-         |scored AS (
-         |  SELECT g.vec_id, g.embedding, g.nrm, l2.cid,
-         |    round(${dotDuck("g.embedding", "l2.cv")} / (g.nrm * l2.cnrm), 9) AS csim
-         |  FROM g JOIN route r ON r.l1cid = g.l1cid JOIN l2 ON l2.cid = r.cid),
-         |assigned AS (
-         |  SELECT vec_id, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS qid, cid AS probe_cid
-         |  FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored WHERE vec_id < 10) t WHERE rn <= 2),
-         |cw AS (SELECT CAST(vec_id - 10 AS INTEGER) AS k, embedding
-         |       FROM embeddings WHERE vec_id BETWEEN 10 AND ${9 + IVFPQ_K}),
-         |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
-         |d2 AS (
-         |  SELECT e.vec_id, ms.m, cw.k,
-         |    (list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     + list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     - list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE))) * 2) AS d
-         |  FROM e, ms, cw),
-         |codes AS (
-         |  SELECT vec_id, m, k AS code FROM (
-         |    SELECT vec_id, m, k, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-         |                                            ORDER BY d, k) AS rn
-         |    FROM d2) t WHERE rn = 1),
-         |qtab AS (
-         |  SELECT vec_id AS qid, m, k, CAST(round(d, 9) AS DECIMAL(18,9)) AS dd
-         |  FROM d2 WHERE vec_id < 10),
+         |$ivf2ProbesDuck,
+         |${pqD2Duck(IVFPQ_K, "e")},
+         |$pqCodesDuck,
          |candlist AS (
          |  SELECT p.qid, a.vec_id AS nid, a.centroid_id
          |  FROM assigned a JOIN probes p
@@ -4510,21 +4320,7 @@ object Similarity extends graft.QueryPack {
     // scored against the exact L2 top-3
     "q_ann_ivfpq_recall" ->
       s"""WITH $ivfpqPlantedPrefixDuck,
-         |cw AS (SELECT CAST(vec_id - 10 AS INTEGER) AS k, embedding
-         |       FROM embeddings WHERE vec_id BETWEEN 10 AND ${9 + IVFPQ_K}),
-         |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
-         |d2 AS (
-         |  SELECT e.vec_id, ms.m, cw.k,
-         |    (list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     + list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     - list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE))) * 2) AS d
-         |  FROM e, ms, cw),
+         |${pqD2Duck(IVFPQ_K, "e")},
          |ks AS (SELECT * FROM (VALUES (4), (16)) t(code_k)),
          |codes AS (
          |  SELECT code_k, vec_id, m, k AS code FROM (
@@ -4552,27 +4348,7 @@ object Similarity extends graft.QueryPack {
          |        JOIN codes c ON c.vec_id = cl.nid
          |        JOIN qtab q ON q.qid = cl.qid AND q.m = c.m AND q.k = c.code
          |      GROUP BY c.code_k, cl.qid, cl.nid) t) u WHERE rk <= 3),
-         |exact AS (
-         |  SELECT ks.code_k, t.qid, t.nid FROM (
-         |    SELECT q.vec_id AS qid, c.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-         |        round(q.nrm * q.nrm + c.nrm * c.nrm -
-         |          ${dotDuck("q.embedding", "c.embedding")} * 2, 9), c.vec_id)
-         |        AS rk
-         |    FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id) t, ks
-         |  WHERE rk <= 3),
-         |per_q AS (
-         |  SELECT exact.code_k, qid, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |    CAST(COUNT(anid) AS BIGINT) AS n_hits
-         |  FROM exact LEFT JOIN approx
-         |    ON exact.code_k = approx.a_code_k
-         |      AND exact.qid = approx.aqid AND exact.nid = approx.anid
-         |  GROUP BY exact.code_k, qid)
-         |SELECT CAST(code_k AS BIGINT) AS code_k, qid, n_exact, n_hits,
-         |  round(CAST(n_hits AS DOUBLE) / 3.0, 6) AS recall,
-         |  round(CAST(SUM(n_hits) OVER (PARTITION BY code_k) AS DOUBLE) /
-         |    (3.0 * COUNT(*) OVER (PARTITION BY code_k)), 6) AS macro_recall
-         |FROM per_q ORDER BY code_k, qid""".stripMargin,
+         |$exactL2RecallDuck""".stripMargin,
 
     // the residual twin: codewords are residuals of the sources
     // BEYOND the centroid range (10+k2 .. 10+k2+16) under their
@@ -4650,46 +4426,12 @@ object Similarity extends graft.QueryPack {
          |          AND q.probe_cid = cl.centroid_id
          |          AND q.m = c.m AND q.k = c.code
          |      GROUP BY c.code_k, cl.qid, cl.nid) t) u WHERE rk <= 3),
-         |exact AS (
-         |  SELECT ks.code_k, t.qid, t.nid FROM (
-         |    SELECT q.vec_id AS qid, c.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-         |        round(q.nrm * q.nrm + c.nrm * c.nrm -
-         |          ${dotDuck("q.embedding", "c.embedding")} * 2, 9), c.vec_id)
-         |        AS rk
-         |    FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id) t, ks
-         |  WHERE rk <= 3),
-         |per_q AS (
-         |  SELECT exact.code_k, qid, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |    CAST(COUNT(anid) AS BIGINT) AS n_hits
-         |  FROM exact LEFT JOIN approx
-         |    ON exact.code_k = approx.a_code_k
-         |      AND exact.qid = approx.aqid AND exact.nid = approx.anid
-         |  GROUP BY exact.code_k, qid)
-         |SELECT CAST(code_k AS BIGINT) AS code_k, qid, n_exact, n_hits,
-         |  round(CAST(n_hits AS DOUBLE) / 3.0, 6) AS recall,
-         |  round(CAST(SUM(n_hits) OVER (PARTITION BY code_k) AS DOUBLE) /
-         |    (3.0 * COUNT(*) OVER (PARTITION BY code_k)), 6) AS macro_recall
-         |FROM per_q ORDER BY code_k, qid""".stripMargin,
+         |$exactL2RecallDuck""".stripMargin,
 
     // same codebook/d² CTEs as q_ann_pq, argmin row kept WITH its d,
     // grid zero-fill via the range cross join
     "q_pq_distortion" ->
-      s"""WITH cw AS (SELECT CAST(vec_id - 10 AS INTEGER) AS k, embedding
-         |       FROM embeddings WHERE vec_id BETWEEN 10 AND ${9 + PQ_K}),
-         |ms AS (SELECT unnest(range(0, $PQ_M)) AS m),
-         |d2 AS (
-         |  SELECT e.vec_id, ms.m, cw.k,
-         |    (list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     + list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE)))
-         |     - list_sum(list_transform(range(1, ${PQ_SUB + 1}), i ->
-         |       CAST(e.embedding[ms.m*$PQ_SUB+i] AS DOUBLE) *
-         |       CAST(cw.embedding[ms.m*$PQ_SUB+i] AS DOUBLE))) * 2) AS d
-         |  FROM embeddings e, ms, cw),
+      s"""WITH ${pqD2Duck(PQ_K, "embeddings e")},
          |codes AS (
          |  SELECT vec_id, m, k AS code, d FROM (
          |    SELECT vec_id, m, k, d,
@@ -4955,20 +4697,7 @@ object Similarity extends graft.QueryPack {
     // zero-norm reconstructions dropped (rnrm > 0) as on the Spark
     // side
     "q_sq8_recall" ->
-      s"""WITH q0 AS (SELECT vec_id, embedding, $normDuck AS nrm
-         |            FROM embeddings WHERE vec_id < 10),
-         |planted AS (
-         |  SELECT 1000000 + vec_id * 10 + c AS vec_id,
-         |    list_transform(range(1, ${DIM + 1}), i ->
-         |      CASE WHEN i = c THEN CAST(embedding[i] AS DOUBLE) + 0.1 * nrm
-         |           ELSE CAST(embedding[i] AS DOUBLE) END) AS embedding
-         |  FROM q0, (VALUES (1), (2), (3)) t(c)),
-         |aug AS (
-         |  SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL SELECT vec_id, embedding FROM planted),
-         |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM aug),
+      s"""WITH $plantedCorpusDuck,
          |mx AS (
          |  SELECT dim, MAX(ABS(embedding[CAST(dim AS INTEGER)])) AS m
          |  FROM (SELECT unnest(range(1, ${DIM + 1})) AS dim, embedding FROM e)
@@ -5025,16 +4754,7 @@ object Similarity extends graft.QueryPack {
     // so the oracle match is structural — see the recall-contract
     // comment on the query.
     "q_neardup_embedding" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |    list_transform(range(1,${DIM + 1}), i -> CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 100000,
-         |    list_transform(range(1,${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE) +
-         |      CASE WHEN i = 1 THEN CAST(0.01 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |  FROM embeddings WHERE vec_id % 20 = 0),
+      s"""WITH ${neardupCorpusDuck("corpus")},
          |e AS (SELECT vec_id, embedding, $normDuck AS nrm,
          |        $bucketDuck AS bkt
          |      FROM corpus)
@@ -5051,29 +4771,10 @@ object Similarity extends graft.QueryPack {
     // (nearest by rounded cosine, lowest cid on ties), dropped iff a
     // smaller-id same-cluster vector matches at >= 0.95.
     "q_semdedup" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id,
-         |    list_transform(range(1,${DIM + 1}), i -> CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 100000,
-         |    list_transform(range(1,${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE) +
-         |      CASE WHEN i = 1 THEN CAST(0.01 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |  FROM embeddings WHERE vec_id % 20 = 0),
+      s"""WITH ${neardupCorpusDuck("corpus")},
          |e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM corpus),
-         |cents AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |          FROM e WHERE vec_id >= 10 AND vec_id < 10 +
-         |            (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM corpus)),
-         |scored AS (
-         |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-         |    round(${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm), 9) AS csim
-         |  FROM e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, nrm, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
+         |${sampledScoredDuck("corpus")},
+         |${assignedDuck("vec_id, embedding, nrm")},
          |dup AS (
          |  SELECT DISTINCT b.vec_id
          |  FROM assigned a JOIN assigned b
@@ -5111,18 +4812,8 @@ object Similarity extends graft.QueryPack {
     // counts, TakeOrdered under (k_occ DESC, vec_id)
     "q_ann_hubness" ->
       s"""WITH e AS (SELECT vec_id, embedding, $normDuck AS nrm FROM embeddings),
-         |cents AS (SELECT vec_id AS cid, embedding AS cv, nrm AS cnrm
-         |          FROM e WHERE vec_id >= 10 AND vec_id < 10 +
-         |            (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM embeddings)),
-         |scored AS (
-         |  SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-         |    round(${dotDuck("e.embedding", "c.cv")} / (e.nrm * c.cnrm), 9) AS csim
-         |  FROM e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, nrm, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
+         |${sampledScoredDuck("embeddings")},
+         |${assignedDuck("vec_id, embedding, nrm")},
          |knn AS (
          |  SELECT nid FROM (
          |    SELECT a.vec_id AS qid, b.vec_id AS nid,
@@ -5148,16 +4839,7 @@ object Similarity extends graft.QueryPack {
     // survivors, the q_split_hash shard bucket — first-failing-stage
     // CASE at the end
     "q_embedding_pipeline" ->
-      s"""WITH corpus0 AS (
-         |  SELECT vec_id,
-         |    list_transform(range(1,${DIM + 1}), i -> CAST(embedding[i] AS DOUBLE)) AS embedding
-         |  FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 100000,
-         |    list_transform(range(1,${DIM + 1}), i ->
-         |      CAST(embedding[i] AS DOUBLE) +
-         |      CASE WHEN i = 1 THEN CAST(0.01 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |  FROM embeddings WHERE vec_id % 20 = 0),
+      s"""WITH ${neardupCorpusDuck("corpus0")},
          |corpus AS (
          |  SELECT vec_id,
          |    CASE WHEN vec_id % 41 = 7
@@ -5175,11 +4857,7 @@ object Similarity extends graft.QueryPack {
          |  SELECT s1.vec_id, s1.embedding, s1.nrm, c.cid,
          |    round(${dotDuck("s1.embedding", "c.cv")} / (s1.nrm * c.cnrm), 9) AS csim
          |  FROM s1 CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, nrm, cid AS centroid_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                                 ORDER BY csim DESC, cid) AS rn
-         |    FROM scored) t WHERE rn = 1),
+         |${assignedDuck("vec_id, embedding, nrm")},
          |dup AS (
          |  SELECT DISTINCT b.vec_id
          |  FROM assigned a JOIN assigned b

@@ -294,6 +294,22 @@ object Sketches extends graft.QueryPack {
     })
   )
 
+  /** The q_sketch_topk oracle over `table`: the hot/mid/cold skewed
+    * items of its `id` column and the exact top-2 with the sketch's
+    * guarantee as a constant-true column. */
+  private[operators] def topkOracleDuck(table: String, id: String): String =
+    s"""WITH stream AS (
+       |  SELECT CASE
+       |    WHEN $id % 4 < 2 THEN 'hot_' || CAST($id % 2 AS VARCHAR)
+       |    WHEN $id % 4 = 2 THEN 'mid_' || CAST($id % 16 AS VARCHAR)
+       |    ELSE 'cold_' || CAST($id AS VARCHAR) END AS item
+       |  FROM $table)
+       |SELECT item, exact_cnt, true AS within_bound FROM (
+       |  SELECT item, COUNT(*) AS exact_cnt
+       |  FROM stream GROUP BY item
+       |  ORDER BY exact_cnt DESC, item LIMIT 2)
+       |ORDER BY item""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // the exact statistic is recomputed; the contract boolean is the
     // assertion — a sketch outside its bound breaks the hash match
@@ -346,17 +362,7 @@ object Sketches extends graft.QueryPack {
     // same skewed stream derivation, same top-2 tie-break; the sketch
     // guarantees are the constant-true boolean
     "q_sketch_topk" ->
-      """WITH stream AS (
-        |  SELECT CASE
-        |    WHEN doc_id % 4 < 2 THEN 'hot_' || CAST(doc_id % 2 AS VARCHAR)
-        |    WHEN doc_id % 4 = 2 THEN 'mid_' || CAST(doc_id % 16 AS VARCHAR)
-        |    ELSE 'cold_' || CAST(doc_id AS VARCHAR) END AS item
-        |  FROM documents)
-        |SELECT item, exact_cnt, true AS within_bound FROM (
-        |  SELECT item, COUNT(*) AS exact_cnt
-        |  FROM stream GROUP BY item
-        |  ORDER BY exact_cnt DESC, item LIMIT 2)
-        |ORDER BY item""".stripMargin,
+      topkOracleDuck("documents", "doc_id"),
 
     // the full sketch restated: same md5 cells, same grid sums, same
     // row-min — est is VALUE-checked, the guarantees constant-true

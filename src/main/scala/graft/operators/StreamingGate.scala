@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.streaming.EventsStream
+import graft.operators.Iterate.CutOps
 
 /** Structured Streaming under the DuckDB oracle gate.
   *
@@ -207,7 +208,7 @@ object StreamingGate extends graft.QueryPack {
         min(col("first_doc")).as("first_doc"),
         max(col("last_doc")).as("last_doc"),
         sum(col("n_tokens")).as("n_tokens"))
-      .localCheckpoint()
+      .cut()
     import org.apache.spark.sql.expressions.Window
     val wS = Window.partitionBy(col("source")).orderBy(col("seq_id").desc)
     val marked = merged
@@ -332,7 +333,7 @@ object StreamingGate extends graft.QueryPack {
     // parquet reads per batch.
     val prior: Option[DataFrame] =
       if (exists)
-        Some(Tables.parquet(batch.sparkSession, state).localCheckpoint())
+        Some(Tables.parquet(batch.sparkSession, state).cut())
       else None
     val replayed = prior.exists { p =>
       p.agg(max(col("last_id"))).collect()(0).getLong(0) >= id
@@ -1221,8 +1222,8 @@ object StreamingGate extends graft.QueryPack {
         .filter(col("doc_id") % 7 === 3)
         .select(col("doc_id"), col("text"))
       val (hashedIdxRaw, bandedIdxRaw) = Dedup.dedupIndex(s, d)
-      val hashedIdx = hashedIdxRaw.localCheckpoint()
-      val bandedIdx = bandedIdxRaw.localCheckpoint()
+      val hashedIdx = hashedIdxRaw.cut()
+      val bandedIdx = bandedIdxRaw.cut()
       val stream = stagedReplay(s, root, thirds(newDocs, "doc_id"))
       drain(s, stream, "append") { (batch, id) =>
         Dedup.dedupAdmit(batch, hashedIdx, bandedIdx)
@@ -1430,7 +1431,7 @@ object StreamingGate extends graft.QueryPack {
           newG.write.mode("overwrite").parquet(s"$state/g$id"))
         val qrows = batch.filter(col("kind") === "q")
           .select(col("phase"), col("qid"), col("qv"), col("qnrm"),
-            col("qblk")).localCheckpoint()
+            col("qblk")).cut()
         if (!qrows.isEmpty) {
           val ph = qrows.select(col("phase")).first().getString(0)
           Similarity.serveTopK(
@@ -1508,7 +1509,7 @@ object StreamingGate extends graft.QueryPack {
       val out = root + "/out"
       val docs = Tables(s, d, "documents").select(col("doc_id"))
       val newDocs = docs.filter(col("doc_id") % 7 === 3)
-      val idxh = Multimodal.phashIndex(s, docs).localCheckpoint()
+      val idxh = Multimodal.phashIndex(s, docs).cut()
       val stream = stagedReplay(s, root, thirds(newDocs, "doc_id"))
       drain(s, stream, "append") { (batch, id) =>
         Multimodal.phashAdmit(s, batch, idxh)
@@ -1543,7 +1544,7 @@ object StreamingGate extends graft.QueryPack {
       Similarity.annIndexModel(s, d) match {
         case None => Similarity.annAdmitEmpty(s)
         case Some((model, candRaw)) =>
-          val cand = candRaw.localCheckpoint()
+          val cand = candRaw.cut()
           val stream = stagedReplay(s, root, thirds(newVecs, "vec_id"))
           drain(s, stream, "append") { (batch, id) =>
             Similarity.annAdmitWith(model, cand, batch)
@@ -1963,6 +1964,19 @@ object StreamingGate extends graft.QueryPack {
     })
   )
 
+  /** The events table as an exactly-once drain must rebuild it: every
+    * event once, in event_id order. */
+  private val eventsTableDuck: String =
+    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
+      |FROM events ORDER BY event_id""".stripMargin
+
+  /** The exact stream size of the KLL drains; the sketch contracts are
+    * constant-true columns (the q_sketch_kll oracle shape). */
+  private val quantileContractDuck: String =
+    """SELECT CAST(COUNT(*) AS BIGINT) AS n,
+      |  true AS counts_match, true AS within_bound
+      |FROM events""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // the drained monitor must hash-equal the batch detector — the
     // q_burst_detect oracle VERBATIM (one definition, two paths)
@@ -1990,24 +2004,19 @@ object StreamingGate extends graft.QueryPack {
     // table: every planted cross-file duplicate deduped, nothing lost
     // to the crash, nothing double-emitted by the re-run batch
     "q_stream_restart" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
+      eventsTableDuck,
 
     // exact stream size; the folded sketch's rank-window and
     // count-conservation contracts are the constant-true booleans
     // (the q_sketch_kll oracle shape)
     "q_stream_quantile" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  true AS counts_match, true AS within_bound
-        |FROM events""".stripMargin,
+      quantileContractDuck,
 
     // same contract as q_stream_quantile: a batch lost to the crash
     // undercounts n, a double-folded replay overcounts — counts_match
     // is the exactly-once proof
     "q_stream_quantile_restart" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  true AS counts_match, true AS within_bound
-        |FROM events""".stripMargin,
+      quantileContractDuck,
 
     // exact stream size + exact distinct; the fold-conservation and
     // union-accuracy contracts are the constant-true booleans (the
@@ -2074,29 +2083,8 @@ object StreamingGate extends graft.QueryPack {
     // first — counts_match / ngrams_ok / novel_ok (computed against the
     // 4·rse band in the query body above) localize which contract
     // broke before any hash diffing.
-    "q_stream_novelty_theta" ->
-      """WITH sp AS (
-        |  SELECT text,
-        |    CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-        |              AS INTEGER) < 58982 THEN 'train'
-        |         WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-        |              AS INTEGER) < 62259 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT split,
-        |    unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(string_split(lower(text),' ')) - 2, 1) + 1),
-        |      i -> array_to_string((string_split(lower(text),' '))[i:i+2], ' '))))
-        |      AS g
-        |  FROM sp),
-        |train AS (SELECT g, 1 AS seen FROM grams WHERE split = 'train')
-        |SELECT e.split, CAST(COUNT(*) AS BIGINT) AS n_ngrams,
-        |  CAST(COUNT(train.seen) AS BIGINT) AS n_seen,
-        |  TRUE AS counts_match, TRUE AS ngrams_ok, TRUE AS novel_ok
-        |FROM grams e LEFT JOIN train ON train.g = e.g
-        |WHERE e.split <> 'train'
-        |GROUP BY e.split ORDER BY e.split""".stripMargin,
+    "q_stream_novelty_theta" -> Dedup.ngramCoverageDuck(
+      "  TRUE AS counts_match, TRUE AS ngrams_ok, TRUE AS novel_ok"),
 
     // the drained per-cell maps re-derive the batch zone aggregate —
     // the zorder-layout zones of q_zonemap_prune restated
@@ -2114,36 +2102,10 @@ object StreamingGate extends graft.QueryPack {
 
     // the drained (MAX, SUM) state re-derives the batch freshness
     // audit — q_freshness' oracle verbatim
-    "q_stream_freshness" ->
-      """WITH per_type AS (
-        |  SELECT event_type, MAX(epoch_us(ts)) AS last_us,
-        |    CAST(COUNT(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY event_type),
-        |frontier AS (SELECT MAX(last_us) AS front_us FROM per_type)
-        |SELECT event_type, n_events,
-        |  CAST((front_us - last_us) // 60000000 AS BIGINT)
-        |    AS staleness_min,
-        |  (front_us - last_us) // 60000000 > 60 AS violates_slo
-        |FROM per_type, frontier ORDER BY event_type""".stripMargin,
+    "q_stream_freshness" -> Discovery.oracles("q_freshness"),
 
-    // the drained day-count state re-derives the exact-integer CUSUM:
-    // q_cusum's oracle with the epoch-day encoding
     // the batch q_label_vote restated — the streamed fold must agree
-    "q_stream_label_vote" ->
-      """WITH ann AS (
-        |  SELECT event_id % 500 AS item, event_type AS label FROM events),
-        |counts AS (
-        |  SELECT item, label, CAST(COUNT(*) AS BIGINT) AS votes
-        |  FROM ann GROUP BY item, label),
-        |ranked AS (
-        |  SELECT item, label, votes,
-        |    CAST(SUM(votes) OVER (PARTITION BY item) AS BIGINT) AS n_ann,
-        |    ROW_NUMBER() OVER (PARTITION BY item
-        |      ORDER BY votes DESC, label) AS rk
-        |  FROM counts)
-        |SELECT item, label AS winner, votes, n_ann,
-        |  round(CAST(votes AS DOUBLE) / CAST(n_ann AS DOUBLE), 6) AS margin
-        |FROM ranked WHERE rk = 1 ORDER BY item""".stripMargin,
+    "q_stream_label_vote" -> Inference.oracles("q_label_vote"),
 
     // batch restatement of the streamed sentinel→alert map
     "q_stream_alerts" ->
@@ -2155,6 +2117,8 @@ object StreamingGate extends graft.QueryPack {
         |FROM events WHERE event_id % 97 IN (0, 1, 2)
         |ORDER BY event_id""".stripMargin,
 
+    // the drained day-count state re-derives the exact-integer CUSUM:
+    // q_cusum's oracle with the epoch-day encoding
     "q_stream_cusum" ->
 """WITH daily AS (
         |  SELECT event_type,
@@ -2226,18 +2190,7 @@ object StreamingGate extends graft.QueryPack {
     // same skewed event_id stream as the Spark side, same top-2
     // tie-break; the sketch-state guarantees are the constant-true
     // boolean (the q_sketch_* convention)
-    "q_stream_topk" ->
-      """WITH stream AS (
-        |  SELECT CASE
-        |    WHEN event_id % 4 < 2 THEN 'hot_' || CAST(event_id % 2 AS VARCHAR)
-        |    WHEN event_id % 4 = 2 THEN 'mid_' || CAST(event_id % 16 AS VARCHAR)
-        |    ELSE 'cold_' || CAST(event_id AS VARCHAR) END AS item
-        |  FROM events)
-        |SELECT item, exact_cnt, true AS within_bound FROM (
-        |  SELECT item, COUNT(*) AS exact_cnt
-        |  FROM stream GROUP BY item
-        |  ORDER BY exact_cnt DESC, item LIMIT 2)
-        |ORDER BY item""".stripMargin,
+    "q_stream_topk" -> Sketches.topkOracleDuck("events", "event_id"),
 
     // the drained stream-stream interval join == the batch self-join.
     "q_stream_join" ->
@@ -2251,44 +2204,17 @@ object StreamingGate extends graft.QueryPack {
 
     // streaming dedup of (events ∪ every-7th copy) == the events table.
     "q_stream_dedup" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
+      eventsTableDuck,
 
     // identical to q_window_time's oracle: streaming == batch.
-    "q_stream_window" ->
-      """SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "q_stream_window" -> Relational.oracles("q_window_time"),
 
     // identical to q_sessionize's oracle: custom streaming state
     // reproduces the batch window-function sessionization.
-    "q_stream_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN LAG(ts) OVER w IS NULL THEN 1
-        |         WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 30 * 60 * 1000000 THEN 1
-        |         ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, COUNT(*) AS n_events,
-        |  MIN(epoch_us(ts)) AS start_us, MAX(epoch_us(ts)) AS end_us
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
+    "q_stream_sessions" -> Analytic.oracles("q_sessionize"),
 
     // identical to q_latest_per_key's oracle: the drained MERGE target
     // is the batch latest-per-key result.
-    "q_stream_upsert" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value FROM (
-        |  SELECT event_id, ts, user_id, event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rk
-        |  FROM events) t
-        |WHERE rk = 1 ORDER BY user_id""".stripMargin
+    "q_stream_upsert" -> Relational.oracles("q_latest_per_key")
   )
 }

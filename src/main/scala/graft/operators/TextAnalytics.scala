@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.PorterStemmer
+import graft.operators.Iterate.CutOps
 
 /** Text-analysis operator pack over the `documents` table.
   *
@@ -37,7 +38,7 @@ object TextAnalytics extends graft.QueryPack {
         catch { case e: java.io.IOException =>
           throw new IllegalArgumentException(
             s"graft stopword override file not readable: $p " +
-              "(from graft.stopwords.files / GRAFT_STOPWORDS_FILES)", e)
+              "(from graft.stopwords.files)", e)
         }
       try src.getLines().map(_.trim).filter(_.nonEmpty).toList
       finally src.close()
@@ -47,9 +48,8 @@ object TextAnalytics extends graft.QueryPack {
     * module/instagram/lda/index.js:23-28). Default: Spark ML's bundled
     * stopword resources (public Spark data files) rather than copying
     * the reference's 1,400-line lists — a DOCUMENTED divergence.
-    * Reference-verbatim mode: set `graft.stopwords.files` (system
-    * property) or `GRAFT_STOPWORDS_FILES` (env) to a comma-separated
-    * list of one-word-per-line files — e.g. the reference's own
+    * Reference-verbatim mode: set the `graft.stopwords.files` system
+    * property to a comma-separated list of one-word-per-line files — e.g. the reference's own
     * stopwords_en/stopwords_es dumped to text — and every stopword-
     * dependent operator (T6 filter, topics, tf/tf-idf, quality score)
     * reproduces its exact semantics. Deterministic order either way,
@@ -67,8 +67,7 @@ object TextAnalytics extends graft.QueryPack {
     * ExceptionInInitializerError on this object — every TextAnalytics
     * query. */
   lazy val stopwords: Seq[String] =
-    resolveStopwords(sys.props.get("graft.stopwords.files")
-      .orElse(sys.env.get("GRAFT_STOPWORDS_FILES")))
+    resolveStopwords(sys.props.get("graft.stopwords.files"))
 
   /** Marker words per language for the n-gram/marker language-ID heuristic. */
   val langMarkers: Map[String, Seq[String]] = Map(
@@ -1472,8 +1471,7 @@ object TextAnalytics extends graft.QueryPack {
     * EM round keeps, the way real SentencePiece shrinks toward its
     * target vocabulary by a per-round percentage instead of one hard
     * cut. Non-increasing by construction (a prune can only remove);
-    * read PER CALL (the graft.phash.group.cap discipline) so specs
-    * exercise a second schedule, and embedded into the generated
+    * a sysprop read PER CALL so specs exercise a second schedule, and embedded into the generated
     * oracle SQL from the same read — both engines in lockstep under
     * any setting. Default 24 → 16: round 1 scores the full seed
     * vocabulary and keeps 24 grams, round 2 re-scores under the
@@ -1574,7 +1572,7 @@ object TextAnalytics extends graft.QueryPack {
               .orderBy(col("cnt").desc, col("piece")))))
         .withColumn("kept", col("len") === 1L ||
           coalesce(col("grk") <= keep, lit(false)))
-        .localCheckpoint()
+        .cut()
       rounds += ((kept, pin))
       val keptAgg = kept.filter(col("kept"))
         .agg(sum(col("cnt")).as("ktot"), count(lit(1)).as("nk"))
@@ -2371,6 +2369,28 @@ object TextAnalytics extends graft.QueryPack {
     (1 to d).foldLeft(inner)((acc, r) =>
       s"replace($acc, mm.t$r, mm.m$r)")
   }
+
+  /** DuckDB twin of the Winnow kernel (`WinnowExpression.winnow`) over
+    * the docs of `src`: every 8-char rolling hash h at position i, and
+    * wins = each window-of-4 minimum fp with the doc's hash count nh. */
+  private[operators] def winnowDuck(src: String): String =
+    s"""positions AS (
+       |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS i
+       |  FROM $src),
+       |hashes AS (
+       |  SELECT doc_id, i,
+       |    CAST(list_sum(list_transform(range(0, 8), j ->
+       |      ascii(substr(text, CAST(i + j AS INTEGER), 1)) *
+       |      ([27512614111, 887503681, 28629151, 923521,
+       |        29791, 961, 31, 1])[CAST(j + 1 AS INTEGER)])) AS BIGINT)
+       |      % 1048576 AS h
+       |  FROM positions),
+       |wins AS (
+       |  SELECT doc_id, i, h,
+       |    MIN(h) OVER (PARTITION BY doc_id ORDER BY i
+       |                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
+       |    COUNT(*) OVER (PARTITION BY doc_id) AS nh
+       |  FROM hashes)""".stripMargin
 
   def oracles: Map[String, String] = Map(
     // the Viterbi EM restated: recursive-CTE min-plus DP + backtrack
@@ -3262,23 +3282,7 @@ object TextAnalytics extends graft.QueryPack {
     // guarantees (verified octet_length == length for every doc); a
     // non-ASCII corpus needs a byte-level oracle.
     "q_fingerprint_winnow" ->
-      """WITH positions AS (
-        |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS i
-        |  FROM documents),
-        |hashes AS (
-        |  SELECT doc_id, i,
-        |    CAST(list_sum(list_transform(range(0, 8), j ->
-        |      ascii(substr(text, CAST(i + j AS INTEGER), 1)) *
-        |      ([27512614111, 887503681, 28629151, 923521,
-        |        29791, 961, 31, 1])[CAST(j + 1 AS INTEGER)])) AS BIGINT)
-        |      % 1048576 AS h
-        |  FROM positions),
-        |wins AS (
-        |  SELECT doc_id, i, h,
-        |    MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-        |                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    COUNT(*) OVER (PARTITION BY doc_id) AS nh
-        |  FROM hashes)
+      s"""WITH ${winnowDuck("documents")}
         |SELECT DISTINCT doc_id, fp FROM wins WHERE i <= nh - 3
         |ORDER BY doc_id, fp""".stripMargin,
 

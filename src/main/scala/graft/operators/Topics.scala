@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.feature.CountVectorizer
+import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.ml.clustering.LDA
 import graft.Tables
 
@@ -42,12 +42,20 @@ object Topics extends graft.QueryPack {
     // keyless round-robin would itself vary run to run)
     val docs = inputPartitions.map(docs0.repartition(_, col("doc_id")))
       .getOrElse(docs0)
-    val cv = new CountVectorizer()
-      .setInputCol("tokens").setOutputCol("features").fit(docs)
-    val vectorized = cv.transform(docs)
+    // The vocabulary orders terms by (corpus count desc, term asc), at
+    // most CountVectorizer's default 2^18 of them. CountVectorizer.fit
+    // orders by count alone through RDD.top, so equal-count terms took
+    // the order in which its tasks finished, and the term indices are
+    // part of the seeded LDA's starting point.
+    val vocab = docs.select(explode(col("tokens")).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("term"))
+      .limit(1 << 18)
+      .collect().map(_.getString(0))
+    val vectorized = new CountVectorizerModel(vocab)
+      .setInputCol("tokens").setOutputCol("features").transform(docs)
     val lda = new LDA().setK(K).setSeed(42L).setMaxIter(10)
     val model = lda.fit(vectorized)
-    val vocab = cv.vocabulary
     import spark.implicits._
     model.describeTopics(TOP_TERMS)
       .as[(Int, Array[Int], Array[Double])]

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Analytic, Dedup}
 
 /** The `graft.checkpoint.dir` knob (operators/Iterate.scala): unset →
   * localCheckpoint (executor blocks, local-mode default); set → a
@@ -17,15 +17,17 @@ class CheckpointModeSpec extends AnyFunSuite {
     try f finally spark.conf.unset("graft.checkpoint.dir")
   }
 
-  test("reliable mode writes into graft.checkpoint.dir and results are unchanged") {
-    val base = Dedup.queries("q_cc_stars")(spark, TestSpark.sf)
-      .collect().map(_.toSeq).toSet
+  /** Runs `query` in local and in reliable mode: the rows must match
+    * and checkpoint part files must land under the configured dir. */
+  private def assertReliableMode(
+      query: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Unit = {
+    val base = query(spark, TestSpark.sf).collect().map(_.toSeq).toSet
     TestSpark.housekeeping()
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
     try {
       val reliable = withCheckpointDir(dir.getAbsolutePath) {
-        Dedup.queries("q_cc_stars")(spark, TestSpark.sf)
-          .collect().map(_.toSeq).toSet
+        query(spark, TestSpark.sf).collect().map(_.toSeq).toSet
       }
       assert(reliable == base)
       // checkpoint() must have materialized RDDs under the dir
@@ -38,6 +40,16 @@ class CheckpointModeSpec extends AnyFunSuite {
       TestSpark.housekeeping()
       Fs.deleteRec(dir)
     }
+  }
+
+  test("reliable mode writes into graft.checkpoint.dir and results are unchanged") {
+    assertReliableMode(Dedup.queries("q_cc_stars"))
+  }
+
+  // label propagation's single final cut goes through Iterate.cut too,
+  // so reliable mode covers it like every other iterative kernel
+  test("reliable mode covers label propagation (q_modularity)") {
+    assertReliableMode(Analytic.queries("q_modularity"))
   }
 
   test("clearCheckpoints reclaims accumulated reliable-checkpoint data between queries") {

@@ -350,9 +350,9 @@ class MultimodalSpec extends AnyFunSuite {
     assert(expected.exists(_._8 == "image_only"), "image_only never fires")
   }
 
-  test("graft.phash.group.cap: the pair frame honors the sysprop, exercised at cap=2") {
-    // The q_winnow_overlap df-cap discipline (VERDICT r11 item 4): the
-    // group-size cut must be the SYSPROP, not a baked literal — run the
+  test("phash group cap: the pair frame honors the cap, exercised at cap=2") {
+    // The q_winnow_overlap df-cap discipline: the group-size cut must
+    // be the cap the kernel is given, not a baked literal — run the
     // pair-producing query at cap=2 against a brute recompute that
     // applies the same cap, and require the cut to be non-vacuous
     // (cap=2 drops pairs that cap=20 keeps on this fixture).
@@ -377,17 +377,13 @@ class MultimodalSpec extends AnyFunSuite {
     val at2 = brutePairs(2)
     assert(at2.size < at20.size,
       s"cap=2 cuts nothing on this fixture (${at2.size} vs ${at20.size})")
-    sys.props("graft.phash.group.cap") = "2"
-    try {
-      val actual = Multimodal
-        .queries("q_crossmodal_dedup")(spark, TestSpark.sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(actual == at2,
-        s"first diff: ${actual.zip(at2).find { case (x, y) => x != y }}")
-      // oracle side tracks the same sysprop (def, interpolated per call)
-      assert(Multimodal.oracles("q_crossmodal_dedup").contains("<= 2"),
-        "oracle SQL does not interpolate the cap")
-    } finally sys.props.remove("graft.phash.group.cap")
+    val actual = Multimodal.crossmodalDedup(spark, TestSpark.sf, cap = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(actual == at2,
+      s"first diff: ${actual.zip(at2).find { case (x, y) => x != y }}")
+    // the oracle builder interpolates the cap it is given
+    assert(Multimodal.crossmodalDedupOracle(cap = 2).contains("<= 2"),
+      "oracle SQL does not interpolate the cap")
   }
 
   test("q_image_dedup_clusters equals a plain-Scala union-find over the brute pair graph") {

@@ -41,18 +41,14 @@ class PlanningSpec extends AnyFunSuite {
       try graft.operators.Analytic.queries("q_item_cf")(spark, TestSpark.sf)
         .collect()
       finally TestSpark.housekeeping()
-    sys.props("graft.cf.order.cap") = "2"
     try {
       val capped = graft.operators.Analytic
-        .queries("q_item_cf")(spark, TestSpark.sf).collect()
+        .itemCf(spark, TestSpark.sf, cap = 2).collect()
       assert(capped.length < default.length,
         "cap=2 must drop pairs that 3+-part baskets contributed")
-      // and the oracle restates the live cap value
-      assert(graft.operators.Analytic.oracles("q_item_cf").contains("<= 2"))
-    } finally {
-      sys.props.remove("graft.cf.order.cap")
-      TestSpark.housekeeping()
-    }
+      // and the oracle restates the cap it is given
+      assert(graft.operators.Analytic.itemCfOracle(cap = 2).contains("<= 2"))
+    } finally TestSpark.housekeeping()
   }
 
   test("q_seq_patterns: well-formed 3-patterns, ordered, bounded support") {

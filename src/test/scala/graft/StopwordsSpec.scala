@@ -23,7 +23,7 @@ class StopwordsSpec extends AnyFunSuite {
 
   test("default list is the deterministic EN∪ES union (sorted, distinct)") {
     // resolve explicitly with no override — the assertions hold even in
-    // an environment where GRAFT_STOPWORDS_FILES is legitimately set
+    // a JVM where graft.stopwords.files is legitimately set
     val sw = TextAnalytics.resolveStopwords(None)
     assert(sw == sw.distinct.sorted)
     // both languages actually contributed

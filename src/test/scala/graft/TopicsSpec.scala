@@ -122,7 +122,7 @@ class TopicsSpec extends AnyFunSuite {
     assert(hash == PINNED_LDA_SF0001, s"content hash drifted: $hash\n$rows")
   }
   private val PINNED_LDA_SF0001 =
-    "b47b7fddab49a03d3ee548814d51f2d10f1545c2c5dce85c0c8a6badd5621bae"
+    "8c867781b94daf484da1618dbbf3aad30d73a7fcb4e0635c67491edccbee9b0f"
 
   test("degenerate-K oracle is impossible through the ML path: LDA rejects k=1") {
     // The r10 probe behind the q_lda_topics declaration (Topics.scala):
