@@ -164,6 +164,63 @@ object Analytic extends graft.QueryPack {
       .distinct()
   }
 
+  /** [[partGraph]]'s `raw(u, v)` with both edge directions,
+    * (src, dst); twin of [[partSymDuck]]. */
+  private def partSym(raw: DataFrame): DataFrame =
+    raw.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(raw.select(col("v").as("src"), col("u").as("dst")))
+
+  /** q_kcore's peel over undirected `edges(u, v)`: drop every edge with
+    * an endpoint of degree < [[KCORE_K]] until the count stops moving.
+    * `maxRounds` is the backstop the unrolled oracle states; a spec
+    * lowers it to fire the `require`. */
+  private[graft] def kcore(edges: DataFrame,
+      maxRounds: Int = KCORE_MAX_ROUNDS): DataFrame = {
+    val (core, _, converged) =
+      Iterate.fixpoint(edges.cut(), maxRounds)() { cur =>
+        val keep = cur.select(col("u").as("n"))
+          .unionAll(cur.select(col("v").as("n")))
+          .groupBy(col("n")).agg(count(lit(1)).as("dg"))
+          .filter(col("dg") >= KCORE_K).select(col("n"))
+        cur.join(keep.withColumnRenamed("n", "u"), Seq("u"))
+          .join(keep.withColumnRenamed("n", "v"), Seq("v"))
+          .select(col("u"), col("v"))
+      }
+    require(converged, s"q_kcore: peeling exceeded $maxRounds rounds — " +
+      "raise the backstop AND the unrolled oracle depth together (they " +
+      "state the same bound)")
+    core.select(col("u").as("part"))
+      .unionAll(core.select(col("v").as("part")))
+      .groupBy(col("part")).agg(count(lit(1)).as("core_deg"))
+      .orderBy(col("part"))
+  }
+
+  /** The frontier loop q_bfs_distance and q_sssp share, over the cut
+    * [[partSym]] adjacency: seed dist 0 at the [[BFS_HUBS]] highest-
+    * degree parts, then for r = 1..maxHops cut `relax(frontier, sym,
+    * dist, r)` — the rows (node, dist) that enter the table this round
+    * — stop on an empty one, and fold it in with `merge(dist, next)`.
+    * The hop cap is part of both operators' definitions. */
+  private def hubFrontier(s: SparkSession, d: String, maxHops: Int)(
+      relax: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val sym = partSym(partGraph(s, d)).cut()
+    val dist0 = sym.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("dg"))
+      .orderBy(col("dg").desc, col("node"))
+      .limit(BFS_HUBS)
+      .select(col("node"), lit(0L).as("dist"))
+      .cut()
+    @scala.annotation.tailrec
+    def go(dist: DataFrame, frontier: DataFrame, r: Int): DataFrame =
+      if (r > maxHops) dist
+      else {
+        val next = relax(frontier, sym, dist, r).cut()
+        if (next.isEmpty) dist else go(merge(dist, next), next, r + 1)
+      }
+    go(dist0, dist0, 1).orderBy(col("node"))
+  }
+
   /** DuckDB twin of [[partGraph]]'s thinned (order, part) rows: li. */
   private val partLiDuck: String =
     s"""li AS (
@@ -213,18 +270,25 @@ object Analytic extends graft.QueryPack {
        |  JOIN ori e2 ON e1.s = e2.s AND e1.ot < e2.ot
        |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t)""".stripMargin
 
+  /** The distinct customer→supplier pairs of every order line on
+    * packed-long node ids (customer 2k, supplier 2k+1): the directed
+    * half of [[tradeEdges]], and q_pagerank's edge source. */
+  private def tradePairs(s: SparkSession, d: String): DataFrame = {
+    val li = Tables(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
+    val o = Tables(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("src"),
+        (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+  }
+
   /** The symmetric customer↔supplier trade graph on packed-long node
     * ids (customers even, suppliers odd) shared by q_pagerank /
     * q_label_propagation / q_modularity. Persisted: the adjacency is
     * static across iterative rounds — the frame a Pregel engine keeps
     * resident (harness/suites clear caches between queries). */
   private def tradeEdges(s: SparkSession, d: String): DataFrame = {
-    val li = Tables(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-    val o = Tables(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
-    val e0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val e0 = tradePairs(s, d)
     // spread (r15, guide §2.4/§2.5): the distinct's byte-tiny output
     // AQE-coalesces to ~1 partition, serializing every iterative
     // round's edge join; hash-partitioning on src ALSO pre-aligns the
@@ -348,6 +412,23 @@ object Analytic extends graft.QueryPack {
        |    CAST(SUM(cnt) AS BIGINT) AS s1,
        |    CAST(SUM(cnt * cnt) AS BIGINT) AS s2
        |  FROM f GROUP BY event_type)""".stripMargin
+
+  /** The per-type daily event counts through [[burstZ]], each grid
+    * day's z cut into the SAX symbols a-d at the Gaussian quartile
+    * breakpoints ±0.6745 (a flat series, z NULL, reads as "b"):
+    * (event_type, day, cnt, z, is_burst, symbol). Twin of
+    * [[saxSymbolsDuck]]. */
+  private def saxSymbols(s: SparkSession, d: String): DataFrame =
+    burstZ(Tables(s, d, "events")
+        .select(col("event_type"),
+          expr("unix_micros(ts) div 86400000000").as("day"))
+        .groupBy(col("event_type"), col("day"))
+        .agg(count(lit(1)).as("cnt")))
+      .withColumn("symbol", when(col("z").isNull, lit("b"))
+        .when(col("z") < -0.6745d, lit("a"))
+        .when(col("z") < 0.0d, lit("b"))
+        .when(col("z") < 0.6745d, lit("c"))
+        .otherwise(lit("d")))
 
   /** [[burstMomentsDuck]] with each grid day's z-score cut into the SAX
     * symbols a-d, st(event_type, day, symbol). */
@@ -570,17 +651,7 @@ object Analytic extends graft.QueryPack {
     // structs — never a collect_list ordering assumption). Output is
     // one word per type plus the alphabet usage histogram folded in.
     "q_sax_words" -> ((s, d) => {
-      val z = burstZ(Tables(s, d, "events")
-        .select(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("cnt")))
-      val sym = when(col("z").isNull, lit("b"))
-        .when(col("z") < -0.6745d, lit("a"))
-        .when(col("z") < 0.0d, lit("b"))
-        .when(col("z") < 0.6745d, lit("c"))
-        .otherwise(lit("d"))
-      z.withColumn("symbol", sym)
+      saxSymbols(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"),
           array_join(transform(
@@ -605,18 +676,8 @@ object Analytic extends graft.QueryPack {
     // motif domain is ≤ 4⁴ rows — nothing scales past the grid.
     "q_sax_motifs" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val z = burstZ(Tables(s, d, "events")
-        .select(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("cnt")))
-      val sym = when(col("z").isNull, lit("b"))
-        .when(col("z") < -0.6745d, lit("a"))
-        .when(col("z") < 0.0d, lit("b"))
-        .when(col("z") < 0.6745d, lit("c"))
-        .otherwise(lit("d"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      z.withColumn("symbol", sym)
+      saxSymbols(s, d)
         .withColumn("motif", concat(col("symbol"),
           lead(col("symbol"), 1).over(w), lead(col("symbol"), 2).over(w),
           lead(col("symbol"), 3).over(w)))
@@ -1173,12 +1234,7 @@ object Analytic extends graft.QueryPack {
       // sorting and exchanging 8-byte keys beats variable-length
       // strings on each of the ~6 shuffles below (measured ~1.3× on
       // the whole query at sf0.1).
-      val li = Tables(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val o = Tables(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val e0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
+      val e0 = tradePairs(s, d)
       val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
       // The graph is static across iterations; without materialization
@@ -1735,42 +1791,12 @@ object Analytic extends graft.QueryPack {
     // aggregation + two semi-shaped equi-joins keyed on node id —
     // map-combinable, no driver data — and the edge frame only ever
     // SHRINKS, so the fixpoint probe is a 1-row count (next ⊆ cur:
-    // equal count == equal set). localCheckpoint per round cuts the
-    // 3×-per-round lineage growth (the ccStars rationale —
-    // Dedup.scala:628); rounds are bounded by the peel cascade depth,
-    // not graph size, with a loud 20-round backstop the unrolled
-    // oracle mirrors (testdata peels in 3-6 rounds).
-    "q_kcore" -> ((s, d) => {
-      val K = KCORE_K
-      var edges = partGraph(s, d).cut()
-      var m = edges.count()
-      var rounds = 0
-      var converged = m == 0L
-      while (!converged) {
-        require(rounds < KCORE_MAX_ROUNDS, s"q_kcore: peeling exceeded " +
-          s"$KCORE_MAX_ROUNDS rounds — raise the backstop AND the " +
-          "unrolled oracle depth together (they state the same bound)")
-        val deg = edges.select(col("u").as("n"))
-          .unionAll(edges.select(col("v").as("n")))
-          .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-        val keep = deg.filter(col("dg") >= K).select(col("n"))
-        val next = edges
-          .join(keep.withColumnRenamed("n", "u"), Seq("u"))
-          .join(keep.withColumnRenamed("n", "v"), Seq("v"))
-          .select(col("u"), col("v"))
-          .cut()
-        val m2 = next.count()
-        edges.unpersist(false)
-        edges = next
-        converged = m2 == m || m2 == 0L
-        m = m2
-        rounds += 1
-      }
-      edges.select(col("u").as("part"))
-        .unionAll(edges.select(col("v").as("part")))
-        .groupBy(col("part")).agg(count(lit(1)).as("core_deg"))
-        .orderBy(col("part"))
-    }),
+    // equal count == equal set). Iterate.fixpoint cuts each round (a
+    // round reads the frame three times); rounds are bounded by the
+    // peel cascade depth, not graph size, with a loud 20-round
+    // backstop the unrolled oracle mirrors (testdata peels in 3-6
+    // rounds).
+    "q_kcore" -> ((s, d) => kcore(partGraph(s, d))),
 
     // Multi-source BFS distance: min hop count from the 10 highest-
     // degree "hub" parts to every node within 8 hops of one — the
@@ -1783,45 +1809,23 @@ object Analytic extends graft.QueryPack {
     // nodes. Adjacency localCheckpointed once; rounds bounded by the
     // hop cap (part of the operator definition, restated in the
     // oracle), with early exit on an empty frontier.
-    "q_bfs_distance" -> ((s, d) => {
-      val raw = partGraph(s, d)
-      val sym = raw.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(raw.select(col("v").as("src"), col("u").as("dst")))
-        .cut()
-      val hubs = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("node"))
-        .limit(BFS_HUBS)
-        .select(col("node"))
-      var dist = hubs.withColumn("dist", lit(0L)).cut()
-      var frontier = dist
-      var r = 1
-      var done = false
-      while (!done && r <= BFS_MAX_HOPS) {
-        val expanded = frontier
-          .join(sym, col("node") === col("src"))
+    "q_bfs_distance" -> ((s, d) =>
+      hubFrontier(s, d, BFS_MAX_HOPS) { (frontier, sym, dist, r) =>
+        frontier.join(sym, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
           .withColumn("dist", lit(r.toLong))
-          .cut()
-        if (expanded.isEmpty) done = true
-        else {
-          // BFS only APPENDS rows (a settled node never changes
-          // dist), so the running table can stay a flat union of the
-          // already-cut per-round frontiers: lineage grows linearly
-          // (a list of materialized scans, each referenced once per
-          // anti-join) and the O(N)-row re-materialization the old
-          // per-round `union.cut()` paid was pure copy cost. SSSP
-          // below CANNOT do this — its update rewrites old rows
-          // (anti-join ∪ improved), so an uncut running table would
-          // re-derive per round (the exponential-lineage trap).
-          dist = dist.unionAll(expanded)
-          frontier = expanded
-          r += 1
-        }
-      }
-      dist.orderBy(col("node"))
-    }),
+      } { (dist, expanded) =>
+        // BFS only APPENDS rows (a settled node never changes dist),
+        // so the running table can stay a flat union of the already-
+        // cut per-round frontiers: lineage grows linearly (a list of
+        // materialized scans, each referenced once per anti-join) and
+        // a per-round `union.cut()` would be pure O(N)-row copy cost.
+        // SSSP below CANNOT do this — its update rewrites old rows
+        // (anti-join ∪ improved), so an uncut running table would
+        // re-derive per round (the exponential-lineage trap).
+        dist.unionAll(expanded)
+      }),
 
     // Weighted single-source (multi-hub) shortest paths — frontier
     // Bellman-Ford with a hop cap and a distance budget, the
@@ -1841,45 +1845,20 @@ object Analytic extends graft.QueryPack {
     // edges and cost ≤SSSP_DIST_CAP), early exit on an empty frontier;
     // per-round localCheckpoint keeps the logical plan flat across
     // iterations (the exponential-lineage trap).
-    "q_sssp" -> ((s, d) => {
-      val raw = partGraph(s, d)
-      val sym = raw.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(raw.select(col("v").as("src"), col("u").as("dst")))
-        .withColumn("wt", (col("src") + col("dst")) % 9 + 1)
-        .cut()
-      val hubs = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("node"))
-        .limit(BFS_HUBS)
-        .select(col("node"))
-      var dist = hubs.withColumn("dist", lit(0L)).cut()
-      var frontier = dist
-      var r = 1
-      var done = false
-      while (!done && r <= SSSP_MAX_HOPS) {
-        val relaxed = frontier
-          .join(sym, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("dist") + col("wt")).as("cand"))
+    "q_sssp" -> ((s, d) =>
+      hubFrontier(s, d, SSSP_MAX_HOPS) { (frontier, sym, dist, _) =>
+        frontier.join(sym, col("node") === col("src"))
+          .select(col("dst").as("node"),
+            (col("dist") + ((col("src") + col("dst")) % 9 + 1)).as("cand"))
           .filter(col("cand") <= SSSP_DIST_CAP)
           .groupBy(col("node")).agg(min(col("cand")).as("cand"))
-        val improved = relaxed
           .join(dist.select(col("node"), col("dist").as("best")),
             Seq("node"), "left_outer")
           .filter(col("best").isNull || col("cand") < col("best"))
           .select(col("node"), col("cand").as("dist"))
-          .cut()
-        if (improved.isEmpty) done = true
-        else {
-          val nd = dist.join(improved, Seq("node"), "left_anti")
-            .unionAll(improved).cut()
-          dist.unpersist(false)
-          frontier = improved
-          dist = nd
-          r += 1
-        }
-      }
-      dist.orderBy(col("node"))
-    }),
+      } { (dist, improved) =>
+        dist.join(improved, Seq("node"), "left_anti").unionAll(improved).cut()
+      }),
 
     // Last-touch attribution — each purchase is credited to the same
     // user's most recent click within a 7-day lookback (the marketing /
@@ -1927,9 +1906,7 @@ object Analytic extends graft.QueryPack {
     // documented skew case AQE splits); the symmetric graph has no
     // dead ends, so walks never shorten.
     "q_random_walks" -> ((s, d) => {
-      val raw = partGraph(s, d)
-      val sym = raw.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(raw.select(col("v").as("src"), col("u").as("dst")))
+      val sym = partSym(partGraph(s, d))
       // NOT cut (r16, measured): pinning adj/deg once (the pagerank
       // discipline) looked right — every step joins both and the
       // union-of-steps repeats their subtrees — but the A/B refuted
@@ -1987,8 +1964,7 @@ object Analytic extends graft.QueryPack {
       // the persists each reference re-runs the whole upstream
       // (measured 3.1 → 2.3 s at sf0.1; harness housekeeping clears)
       val raw = partGraph(s, d).persist()
-      val sym = raw.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(raw.select(col("v").as("src"), col("u").as("dst")))
+      val sym = partSym(raw)
       val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .persist()
       val inc = graft.Tables.spread(

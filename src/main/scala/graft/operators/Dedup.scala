@@ -403,44 +403,28 @@ object Dedup extends graft.QueryPack {
       // round 0 folded into initialization: label = min(self, neighbors)
       // from one groupBy on the edge list (no join) — tiny star-shaped
       // near-dup clusters converge here, leaving the loop a single
-      // fixpoint-confirming round
-      var labels = edges.groupBy(col("src"))
+      // fixpoint-confirming round. Persisted: the init probe
+      // materializes it, and no pairs means no labels (the count-0 exit).
+      val init = edges.groupBy(col("src"))
         .agg(min(col("dst")).as("mn"))
         .select(col("src").as("node"), least(col("mn"), col("src")).as("label"))
         .persist()
       // labels only ever decrease (next = min(old, neighbors)), so the
       // fixpoint test is one cheap agg — sum unchanged ⟺ converged —
-      // instead of a per-round change-detection join. The agg also
-      // MATERIALIZES the just-persisted frame (sum over an empty graph
-      // is NULL → 0).
-      def labelSum(): Long = {
-        val r = labels.agg(coalesce(sum(col("label")), lit(0L))).collect()(0)
-        r.getLong(0)
-      }
-      var prevSum = labelSum()
-      var converged = edges.isEmpty // no pairs → nothing to propagate
-      var rounds = 0
-      while (!converged && rounds < maxRounds) {
-        val prop = edges.join(labels, edges("dst") === labels("node"))
-          .select(edges("src").as("node"), col("label"))
-        // localCheckpoint, not persist: each round references `labels`
-        // twice, so cache-only iteration still grows the LOGICAL plan
-        // 2^r nodes — the analyzer walks the whole tree even when
-        // execution hits the cache, and a long-chain graph driving
-        // this toward the 50-round backstop would OOM the driver on
-        // the plan before the data ever hurt (same fix as ccStars; a
-        // cluster deployment uses checkpoint() on a reliable store)
-        val next = labels.unionByName(prop)
-          .groupBy(col("node")).agg(min(col("label")).as("label"))
-          .cut()
-        val old = labels
-        labels = next
-        val s = labelSum()
-        old.unpersist(false)
-        converged = s == prevSum
-        prevSum = s
-        rounds += 1
-      }
+      // instead of a per-round change-detection join. Each round
+      // references `labels` twice, so it must be cut: cache-only
+      // iteration still grows the LOGICAL plan 2^r nodes (same fix as
+      // ccStars).
+      val (labels, rounds, converged) =
+        Iterate.fixpoint(init, maxRounds)(sum(col("label"))) { cur =>
+          val prop = edges.join(cur, edges("dst") === cur("node"))
+            .select(edges("src").as("node"), col("label"))
+          cur.unionByName(prop)
+            .groupBy(col("node")).agg(min(col("label")).as("label"))
+        }
+      // after a round the labels are a cut frame, so the cached inputs
+      // can go (cut frames themselves have no cache entry to drop)
+      if (rounds > 0) init.unpersist(false)
       edges.unpersist(false)
       // Diameter escape hatch (r8): propagation advances one hop per
       // round, so its round count is the component RADIUS — 2-3 for
@@ -452,16 +436,10 @@ object Dedup extends graft.QueryPack {
       // compute component minima — one oracle restates both), so the
       // default named operator can no longer be diameter-killed while
       // the cheap radius≤10 fast path still serves the common shape.
-      val result =
-        if (converged)
-          labels.select(col("node").as("doc_id"),
-            col("label").as("cluster_id"))
-        else {
-          labels.unpersist(false)
-          ccStars(pairs.toDF("src", "dst"))
-            .toDF("doc_id", "cluster_id")
-        }
-      result
+      if (converged)
+        labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+      else
+        ccStars(pairs.toDF("src", "dst")).toDF("doc_id", "cluster_id")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1195,53 +1173,30 @@ object Dedup extends graft.QueryPack {
 
   /** The contraction loop, returning (labels, alternation count) — the
     * count lets CCStarsSpec assert diameter-independence (a 64-chain in
-    * O(log n) alternations) without reaching into the loop. */
-  private[graft] def ccStarsWithRounds(edges: DataFrame): (DataFrame, Int) = {
+    * O(log n) alternations) without reaching into the loop, and
+    * `maxRounds` lets FixpointSpec fire the backstop. */
+  private[graft] def ccStarsWithRounds(edges: DataFrame,
+      maxRounds: Int = 30): (DataFrame, Int) = {
     // constant-width fixpoint probe: a multiset hash of the edge set
     // (xxhash64 per edge, summed exactly in DECIMAL(38,0) — an ANSI
-    // Long sum overflows — plus the count). The driver never collects
-    // edges, only this one row per alternation.
-    def checksum(e: DataFrame): (Long, BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("src"), col("dst"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-          lit(java.math.BigDecimal.ZERO))).collect()(0)
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
-    }
-    // localCheckpoint (eager), NOT persist: one alternation references
-    // `cur` ~6 times, so a cache-only loop still grows the LOGICAL
-    // plan 6^r nodes — the analyzer walks (and stringifies) the full
-    // tree even though execution would hit the cache, and a ~10-round
-    // run OOMs the driver on the plan alone. Checkpointing cuts the
-    // lineage to a leaf each round; a cluster deployment pointing at a
-    // reliable store would use checkpoint() — same shape, durable
-    // blocks.
-    var cur = edges.filter(col("src") =!= col("dst")).distinct()
-      .cut()
-    var mark = checksum(cur)
-    var rounds = 0
-    var converged = mark._1 == 0L
-    while (!converged && rounds < 30) {
-      val next = smallStar(largeStar(cur)).cut()
-      val nmark = checksum(next)
-      cur.unpersist(false)
-      cur = next
-      converged = nmark == mark
-      mark = nmark
-      rounds += 1
-    }
-    // fail LOUDLY if the backstop fired: 2^30 tree-height halvings
-    // cover any graph that fits in storage, so hitting it means the
-    // contraction is broken, not the graph big
+    // Long sum overflows — next to the loop's count). The driver never
+    // collects edges, only this one row per alternation. Each
+    // alternation references `cur` ~6 times, so it must be cut: a
+    // cache-only loop grows the LOGICAL plan 6^r nodes and a ~10-round
+    // run OOMs the driver on the plan alone.
+    val init = edges.filter(col("src") =!= col("dst")).distinct().cut()
+    val digest = sum(xxhash64(col("src"), col("dst"))
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+    val (cur, rounds, converged) =
+      Iterate.fixpoint(init, maxRounds)(digest)(e => smallStar(largeStar(e)))
     require(converged, "ccStars: star contraction did not reach a " +
-      "fixpoint within 30 alternations — largeStar/smallStar broke an " +
-      "invariant (every finite graph converges in O(log² n) rounds)")
+      s"fixpoint within $maxRounds alternations — largeStar/smallStar broke " +
+      "an invariant (every finite graph converges in O(log² n) rounds)")
     // fixpoint edges form stars (child, root): child labels from the
     // edges, root labels from the distinct dst side
     val out = cur.select(col("src").as("node"), col("dst").as("label"))
       .unionByName(cur.select(col("dst").as("node"), col("dst").as("label")))
       .distinct()
-    cur.unpersist(false)
     (out, rounds)
   }
 

@@ -163,20 +163,8 @@ object Inference extends graft.QueryPack {
       val ann = Tables(s, d, "events")
         .select((col("event_id") % 500).as("item"),
           col("event_type").as("label"))
-      val counts = ann.groupBy(col("item"), col("label"))
-        .agg(count(lit(1)).as("votes"))
-      val wItem = Window.partitionBy(col("item"))
-      val wRank = Window.partitionBy(col("item"))
-        .orderBy(col("votes").desc, col("label"))
-      counts
-        .withColumn("n_ann", sum(col("votes")).over(wItem))
-        .withColumn("rk", row_number().over(wRank))
-        .filter(col("rk") === 1)
-        .select(col("item"), col("label").as("winner"), col("votes"),
-          col("n_ann"),
-          round(col("votes").cast("double") /
-            col("n_ann").cast("double"), 6).as("margin"))
-        .orderBy(col("item"))
+      labelVote(ann.groupBy(col("item"), col("label"))
+        .agg(count(lit(1)).as("votes")))
     }),
 
     // Inter-annotator agreement: Fleiss' kappa generalized to variable
@@ -892,6 +880,22 @@ object Inference extends graft.QueryPack {
         floor((u6 * 65L).cast("double") / lit(100.0d)).cast("long"))
         .as("score"))
   }
+
+  /** Per-item majority vote over an (item, label, votes) grid: the
+    * winner by (votes desc, label asc), the item's annotation count and
+    * the vote margin. Shared by q_label_vote and q_stream_label_vote,
+    * whose oracle is q_label_vote's. */
+  private[operators] def labelVote(grid: DataFrame): DataFrame =
+    grid
+      .withColumn("n_ann", sum(col("votes")).over(Window.partitionBy(col("item"))))
+      .withColumn("rk", row_number().over(Window.partitionBy(col("item"))
+        .orderBy(col("votes").desc, col("label"))))
+      .filter(col("rk") === 1)
+      .select(col("item"), col("label").as("winner"), col("votes"),
+        col("n_ann"),
+        round(col("votes").cast("double") /
+          col("n_ann").cast("double"), 6).as("margin"))
+      .orderBy(col("item"))
 
   /** The oracle-side restatement of [[plantedScores]] as a CTE body. */
   private val plantedScoresDuck: String =

@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Plan truncation for iterative kernels (connected components, label
   * propagation, PageRank/HITS, BFS/SSSP, k-core): each round's frame
   * must be materialized with its lineage CUT, or the logical plan
-  * doubles per round and the driver dies planning round ~20.
+  * doubles per round and the driver dies planning round ~20. Kernels
+  * whose round count depends on the data loop through [[fixpoint]],
+  * which cuts every round and never unpersists a cut frame.
   *
   * Two materialization modes, chosen by the `graft.checkpoint.dir`
   * session conf:
@@ -70,6 +73,40 @@ object Iterate {
         df.checkpoint(eager = true)
       case _ => df.localCheckpoint(eager = true)
     }
+  }
+
+  /** The one round loop for kernels whose round count depends on the
+    * data (k-core peeling, star contraction, hybrid CC). `init` is
+    * probed once; each round then cuts `step(cur)` and runs ONE probe
+    * job, `agg(count(*), probe: _*)`. The loop stops when the probe row
+    * equals the previous round's (each caller's probe is a one-row
+    * digest that repeats only at the fixpoint) or when the row count
+    * is 0, without running `step` on an empty frame. Returns
+    * (frame, rounds, converged); `converged` is false only when
+    * `maxRounds` rounds ran without reaching either exit, and what that
+    * means (fail loudly, fall back) is the caller's policy.
+    *
+    * Fixed-round kernels (PageRank, HITS, LPA, NN-Descent, the beam
+    * walk, Lloyd) stay plain `for`/`foldLeft` loops: they stop on a
+    * constant, so this loop would only wrap them.
+    *
+    * Cut frames are never unpersisted here: `Dataset.unpersist` only
+    * drops `CacheManager` entries, and a (local)checkpointed frame has
+    * none, so the call frees nothing. The round blocks stay until the
+    * harness's between-query housekeeping unpersists every RDD. */
+  def fixpoint(init: DataFrame, maxRounds: Int)(probe: Column*)(
+      step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    def measure(df: DataFrame): Row = df.agg(count(lit(1)), probe: _*).head()
+    @scala.annotation.tailrec
+    def go(cur: DataFrame, mark: Row, rounds: Int): (DataFrame, Int, Boolean) =
+      if (mark.getLong(0) == 0L) (cur, rounds, true)
+      else if (rounds >= maxRounds) (cur, rounds, false)
+      else {
+        val next = cut(step(cur))
+        val m = measure(next)
+        if (m == mark) (next, rounds + 1, true) else go(next, m, rounds + 1)
+      }
+    go(init, measure(init), 0)
   }
 
   /** Drop accumulated reliable-checkpoint data (no-op when the knob is

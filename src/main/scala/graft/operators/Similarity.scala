@@ -622,32 +622,7 @@ object Similarity extends graft.QueryPack {
     // round keeps the top-k of a superset, so found planted neighbors
     // can never be evicted) — the spec pins both ends. Same output
     // shape as q_ann_recall with the round index as the swept knob.
-    "q_ann_graph_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val nodes = nnNodes(plantedCorpus(s, d)
-        .withColumn("bucket", bucketCol(col("embedding"))))
-      val w = Window.partitionBy(col("rnd"), col("src"))
-        .orderBy(col("sim").desc, col("dst"))
-      val ranked = nnDescentEdges(nodes, rounds = 2).zipWithIndex
-        .map { case (df, i) =>
-          nnScored(df.filter(col("src") < 10), nodes)
-            .withColumn("rnd", lit(i)) }
-        .reduce(_ unionByName _)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("rnd").as("arnd"), col("src").as("aqid"),
-          col("dst").as("anid"))
-      val truth = nodes.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"),
-          explode(typedlit(Seq(1, 2, 3))).as("c"))
-        .select(col("qid"),
-          (lit(1000000L) + col("qid") * 10 + col("c")).as("nid"),
-          explode(typedlit(Seq(0, 1, 2))).as("rnd"))
-      recallAt3(truth, ranked, Seq("rnd" -> "arnd"))
-        .select(col("rnd").cast("long").as("rnd"), col("qid"),
-          col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
-        .orderBy(col("rnd"), col("qid"))
-    }),
+    "q_ann_graph_recall" -> ((s, d) => annGraphRecall(s, d)),
 
     // NSW beam SEARCH over the converged NN-Descent graph — the query
     // path of the graph index family (build = q_ann_graph, quality =
@@ -806,7 +781,7 @@ object Similarity extends graft.QueryPack {
       val qs = all.filter(col("vec_id") % 7 === 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"),
           col("nrm").as("qnrm"),
-          substring(col("bucket"), 1, nnInitWidth).as("qblk"))
+          substring(col("bucket"), 1, NN_INIT_WIDTH).as("qblk"))
       val wB = Window.partitionBy(col("beam"), col("qid"))
         .orderBy(col("sim").desc, col("node"))
       beamWalk(nodes, g, qs, Seq(8), hops = 7)
@@ -2499,13 +2474,12 @@ object Similarity extends graft.QueryPack {
   // ---- graph-based ANN: NN-Descent (q_ann_graph) -----------------------
 
   /** Init-block prefix width (chars of the LSH bucket signature) for the
-    * NN-Descent seed graph — a sysprop read PER CALL so specs can
-    * exercise coarser/finer seeding. Default 4
-    * of the 8-char signature → 16 seed blocks on the test corpus; at
-    * corpus scale the width grows with log2(N) exactly like
-    * graft.lsh.planes, keeping within-block seed work constant. */
-  private def nnInitWidth: Int =
-    sys.props.get("graft.nndescent.init.width").map(_.toInt).getOrElse(4)
+    * NN-Descent seed graph: 4 of the 8-char signature → 16 seed blocks
+    * on the test corpus; at corpus scale the width grows with log2(N)
+    * exactly like graft.lsh.planes, keeping within-block seed work
+    * constant. [[annGraphRecall]] and [[annGraphRecallOracle]] take it
+    * as a parameter so a spec can sweep a second width. */
+  private val NN_INIT_WIDTH = 4
 
   /** NN-Descent neighbor count (k of the k-NN graph). 4 ≥ the planted-
     * truth depth 3, which makes per-query recall provably monotone in
@@ -2515,13 +2489,43 @@ object Similarity extends graft.QueryPack {
   private val NN_K = 4
 
   /** Corpus rows widened to NN-Descent node frame: (vec_id, embedding,
-    * nrm, blk) where blk is the first [[nnInitWidth]] chars of the
+    * nrm, blk) where blk is the first `width` chars of the
     * hyperplane signature. localCheckpointed — every round joins it
     * twice. */
-  private def nnNodes(e: DataFrame): DataFrame =
+  private def nnNodes(e: DataFrame, width: Int = NN_INIT_WIDTH): DataFrame =
     e.select(col("vec_id"), col("embedding"), col("nrm"),
-        substring(col("bucket"), 1, nnInitWidth).as("blk"))
+        substring(col("bucket"), 1, width).as("blk"))
       .cut()
+
+  /** q_ann_graph_recall at seed-block width `width`: recall@3 of the
+    * NN-Descent graph after 0, 1 and 2 rounds on the planted corpus. */
+  private[graft] def annGraphRecall(s: SparkSession, d: String,
+      width: Int = NN_INIT_WIDTH): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val nodes = nnNodes(plantedCorpus(s, d)
+      .withColumn("bucket", bucketCol(col("embedding"))), width)
+    val w = Window.partitionBy(col("rnd"), col("src"))
+      .orderBy(col("sim").desc, col("dst"))
+    val ranked = nnDescentEdges(nodes, rounds = 2).zipWithIndex
+      .map { case (df, i) =>
+        nnScored(df.filter(col("src") < 10), nodes)
+          .withColumn("rnd", lit(i)) }
+      .reduce(_ unionByName _)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 3)
+      .select(col("rnd").as("arnd"), col("src").as("aqid"),
+        col("dst").as("anid"))
+    val truth = nodes.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"),
+        explode(typedlit(Seq(1, 2, 3))).as("c"))
+      .select(col("qid"),
+        (lit(1000000L) + col("qid") * 10 + col("c")).as("nid"),
+        explode(typedlit(Seq(0, 1, 2))).as("rnd"))
+    recallAt3(truth, ranked, Seq("rnd" -> "arnd"))
+      .select(col("rnd").cast("long").as("rnd"), col("qid"),
+        col("n_exact"), col("n_hits"), col("recall"), col("macro_recall"))
+      .orderBy(col("rnd"), col("qid"))
+  }
 
   /** NN-Descent (Dong, Charikar & Li, WWW'11) with every source of
     * randomness replaced by a deterministic total order, which is what
@@ -2687,13 +2691,13 @@ object Similarity extends graft.QueryPack {
   /** The [[nnDescentEdges]] rounds unrolled as chained DuckDB CTEs
     * (the q_kcenter_seeds/BPE unroll precedent). Expects an
     * `e(vec_id, embedding, nrm)` CTE in scope; emits `nodes` and
-    * `e0..e{rounds}`. Width read per call like the Spark side, so a
-    * spec-time sysprop flip keeps both engines in lockstep. */
-  private def nnDescentDuck(rounds: Int): String = {
+    * `e0..e{rounds}`, seeded at the same block `width` as the Spark
+    * side's [[nnNodes]]. */
+  private def nnDescentDuck(rounds: Int, width: Int = NN_INIT_WIDTH): String = {
     val k = NN_K
     val init =
       s"""nodes AS MATERIALIZED (SELECT vec_id, embedding, nrm,
-         |  substr($bucketDuck, 1, $nnInitWidth) AS blk FROM e),
+         |  substr($bucketDuck, 1, $width) AS blk FROM e),
          |e0 AS MATERIALIZED (SELECT src, dst FROM (
          |  SELECT l.vec_id AS src, r.vec_id AS dst,
          |    ROW_NUMBER() OVER (PARTITION BY l.vec_id ORDER BY
@@ -2703,6 +2707,40 @@ object Similarity extends graft.QueryPack {
          | WHERE rk <= $k)""".stripMargin
     (init +: Seq(descentStepsDuck("nodes", "e", rounds))).mkString(",\n")
   }
+
+  /** DuckDB twin of [[annGraphRecall]] at seed-block width `width`:
+    * the planted-corpus prefix (q_ann_recall verbatim) feeding the
+    * same unroll; recall measured per round against the planted
+    * truth. */
+  private[graft] def annGraphRecallOracle(width: Int = NN_INIT_WIDTH): String =
+    s"""WITH $plantedCorpusDuck,
+       |${nnDescentDuck(2, width)},
+       |g AS (SELECT 0 AS rnd, src, dst FROM e0
+       |      UNION ALL SELECT 1, src, dst FROM e1
+       |      UNION ALL SELECT 2, src, dst FROM e2),
+       |ranked AS (SELECT rnd, qid, nid FROM (
+       |  SELECT g.rnd, g.src AS qid, g.dst AS nid,
+       |    ROW_NUMBER() OVER (PARTITION BY g.rnd, g.src ORDER BY
+       |      round(${dotDuck("a.embedding", "b.embedding")} /
+       |        (a.nrm * b.nrm), 9) DESC, g.dst) AS rk
+       |  FROM g JOIN nodes a ON a.vec_id = g.src
+       |         JOIN nodes b ON b.vec_id = g.dst
+       |  WHERE g.src < 10) t WHERE rk <= 3),
+       |truth AS (SELECT q0.vec_id AS qid,
+       |    1000000 + q0.vec_id * 10 + c AS nid, rnd
+       |  FROM q0, (VALUES (1), (2), (3)) t(c),
+       |       (VALUES (0), (1), (2)) r(rnd)),
+       |per_q AS (
+       |  SELECT truth.rnd, truth.qid, CAST(COUNT(*) AS BIGINT) AS n_exact,
+       |    CAST(COUNT(ranked.nid) AS BIGINT) AS n_hits
+       |  FROM truth LEFT JOIN ranked ON ranked.rnd = truth.rnd
+       |    AND ranked.qid = truth.qid AND ranked.nid = truth.nid
+       |  GROUP BY truth.rnd, truth.qid)
+       |SELECT CAST(rnd AS BIGINT) AS rnd, qid, n_exact, n_hits,
+       |  round(CAST(n_hits AS DOUBLE) / 3.0, 6) AS recall,
+       |  round(CAST(SUM(n_hits) OVER (PARTITION BY rnd) AS DOUBLE) /
+       |    (3.0 * COUNT(*) OVER (PARTITION BY rnd)), 6) AS macro_recall
+       |FROM per_q ORDER BY rnd, qid""".stripMargin
 
   /** The descent-round CTEs over ANY node frame / edge prefix —
     * factored (r13) so q_ann_layered's √N upper layer unrolls with
@@ -3613,7 +3651,7 @@ object Similarity extends graft.QueryPack {
          |${nnDescentDuck(2)},
          |${nnBeamDuck(7, Seq(8),
                s"SELECT vec_id AS qid, embedding AS qv, $normDuck AS qnrm, " +
-                 s"substr($bucketDuck, 1, $nnInitWidth) AS qblk " +
+                 s"substr($bucketDuck, 1, $NN_INIT_WIDTH) AS qblk " +
                  "FROM embeddings WHERE vec_id % 7 = 3")}
          |SELECT qid, rk, nid, sim FROM (
          |  SELECT v.qid, v.node AS nid,
@@ -3968,37 +4006,7 @@ object Similarity extends graft.QueryPack {
          |ORDER BY p.strategy, p.pred, p.beam, p.qid""".stripMargin
     },
 
-    // the planted-corpus prefix (q_ann_recall verbatim) feeding the
-    // same unroll; recall measured per round against the planted truth
-    "q_ann_graph_recall" ->
-      s"""WITH $plantedCorpusDuck,
-         |${nnDescentDuck(2)},
-         |g AS (SELECT 0 AS rnd, src, dst FROM e0
-         |      UNION ALL SELECT 1, src, dst FROM e1
-         |      UNION ALL SELECT 2, src, dst FROM e2),
-         |ranked AS (SELECT rnd, qid, nid FROM (
-         |  SELECT g.rnd, g.src AS qid, g.dst AS nid,
-         |    ROW_NUMBER() OVER (PARTITION BY g.rnd, g.src ORDER BY
-         |      round(${dotDuck("a.embedding", "b.embedding")} /
-         |        (a.nrm * b.nrm), 9) DESC, g.dst) AS rk
-         |  FROM g JOIN nodes a ON a.vec_id = g.src
-         |         JOIN nodes b ON b.vec_id = g.dst
-         |  WHERE g.src < 10) t WHERE rk <= 3),
-         |truth AS (SELECT q0.vec_id AS qid,
-         |    1000000 + q0.vec_id * 10 + c AS nid, rnd
-         |  FROM q0, (VALUES (1), (2), (3)) t(c),
-         |       (VALUES (0), (1), (2)) r(rnd)),
-         |per_q AS (
-         |  SELECT truth.rnd, truth.qid, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |    CAST(COUNT(ranked.nid) AS BIGINT) AS n_hits
-         |  FROM truth LEFT JOIN ranked ON ranked.rnd = truth.rnd
-         |    AND ranked.qid = truth.qid AND ranked.nid = truth.nid
-         |  GROUP BY truth.rnd, truth.qid)
-         |SELECT CAST(rnd AS BIGINT) AS rnd, qid, n_exact, n_hits,
-         |  round(CAST(n_hits AS DOUBLE) / 3.0, 6) AS recall,
-         |  round(CAST(SUM(n_hits) OVER (PARTITION BY rnd) AS DOUBLE) /
-         |    (3.0 * COUNT(*) OVER (PARTITION BY rnd)), 6) AS macro_recall
-         |FROM per_q ORDER BY rnd, qid""".stripMargin,
+    "q_ann_graph_recall" -> annGraphRecallOracle(),
     // both rankings from one sims CTE; the LSH side is the same frame
     // prefix-filtered per width (nested candidate sets by construction)
     "q_ann_recall" ->

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -220,12 +220,8 @@ object Sketches extends graft.QueryPack {
     // guarantee booleans the oracle states as constant true.
     "q_sketch_topk" -> ((s, d) => {
       val K = 8
-      val item = when(col("doc_id") % 4 < 2,
-          concat(lit("hot_"), (col("doc_id") % 2).cast("string")))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("mid_"), (col("doc_id") % 16).cast("string")))
-        .otherwise(concat(lit("cold_"), col("doc_id").cast("string")))
-      val stream = Tables(s, d, "documents").select(item.as("item"))
+      val stream = Tables(s, d, "documents")
+        .select(skewedItem(col("doc_id")).as("item"))
       val sk = stream.agg(
         graft.functions.MisraGries.mgTopK(col("item"), K).as("sk"),
         count(lit(1)).as("n"))
@@ -259,12 +255,8 @@ object Sketches extends graft.QueryPack {
     // cells ≈ 8 colliders/cell).
     "q_sketch_countmin" -> ((s, d) => {
       val R = 3; val W = 64
-      val item = when(col("doc_id") % 4 < 2,
-          concat(lit("hot_"), (col("doc_id") % 2).cast("string")))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("mid_"), (col("doc_id") % 16).cast("string")))
-        .otherwise(concat(lit("cold_"), col("doc_id").cast("string")))
-      val cnt = Tables(s, d, "documents").select(item.as("item"))
+      val cnt = Tables(s, d, "documents")
+        .select(skewedItem(col("doc_id")).as("item"))
         .groupBy(col("item")).agg(count(lit(1)).as("c"))
       def cell = conv(substring(
         md5(concat_ws("#", col("item"), col("r"))), 1, 8), 16, 10)
@@ -293,6 +285,16 @@ object Sketches extends graft.QueryPack {
         .orderBy(col("item"))
     })
   )
+
+  /** The skewed item stream over an integer `key`: two hot items own
+    * ~25% of the keys each, 16 mid items ~1.5% each, and every other
+    * key is its own cold item. q_sketch_topk and q_sketch_countmin
+    * derive it from doc_id, q_stream_topk from event_id; the oracles
+    * restate it as a CASE ([[topkOracleDuck]], q_sketch_countmin's). */
+  private[operators] def skewedItem(key: Column): Column =
+    when(key % 4 < 2, concat(lit("hot_"), (key % 2).cast("string")))
+      .when(key % 4 === 2, concat(lit("mid_"), (key % 16).cast("string")))
+      .otherwise(concat(lit("cold_"), key.cast("string")))
 
   /** The q_sketch_topk oracle over `table`: the hot/mid/cold skewed
     * items of its `id` column and the exact top-2 with the sketch's

@@ -1011,11 +1011,7 @@ object StreamingGate extends graft.QueryPack {
     "q_stream_topk" -> ((s, d) => {
       val K = 8
       val state = freshDir("q_stream_topk") + "/sk"
-      val item = when(col("event_id") % 4 < 2,
-          concat(lit("hot_"), (col("event_id") % 2).cast("string")))
-        .when(col("event_id") % 4 === 2,
-          concat(lit("mid_"), (col("event_id") % 16).cast("string")))
-        .otherwise(concat(lit("cold_"), col("event_id").cast("string")))
+      val item = Sketches.skewedItem(col("event_id"))
       val stream = EventsStream.replay(s, d).select(item.as("item"))
       drain(s, stream, "append") { (batch, _) =>
         val r = batch.agg(
@@ -1767,26 +1763,11 @@ object StreamingGate extends graft.QueryPack {
           else bc
         swapState(merged, state)
       }
-      val grid = {
-        import org.apache.spark.sql.types.{LongType, StringType}
-        readStateOr(s, state, Seq(
-          ("item", "item", LongType),
-          ("label", "label", StringType),
-          ("n", "votes", LongType)))
-      }
-      import org.apache.spark.sql.expressions.Window
-      val wItem = Window.partitionBy(col("item"))
-      val wRank = Window.partitionBy(col("item"))
-        .orderBy(col("votes").desc, col("label"))
-      grid
-        .withColumn("n_ann", sum(col("votes")).over(wItem))
-        .withColumn("rk", row_number().over(wRank))
-        .filter(col("rk") === 1)
-        .select(col("item"), col("label").as("winner"), col("votes"),
-          col("n_ann"),
-          round(col("votes").cast("double") /
-            col("n_ann").cast("double"), 6).as("margin"))
-        .orderBy(col("item"))
+      import org.apache.spark.sql.types.{LongType, StringType}
+      Inference.labelVote(readStateOr(s, state, Seq(
+        ("item", "item", LongType),
+        ("label", "label", StringType),
+        ("n", "votes", LongType))))
     }),
 
     // Streaming alert sink — K6 run as a stream (the ELEVENTH

@@ -6,14 +6,13 @@ import TestSpark.spark
 /** q_ann_graph / q_ann_graph_recall — the deterministic NN-Descent
   * graph index (VERDICT r11 item 2). Pins the two curve ends the
   * oracle can't see as *properties* (monotonicity, non-degeneracy),
-  * the no-cartesian cost bound, and the init-width knob's measured
-  * trade (fine seed blocks start high, coarse blocks descend further).
+  * the no-cartesian cost bound, and the init width's measured trade
+  * (fine seed blocks start high, coarse blocks descend further).
   */
 class GraphAnnSpec extends AnyFunSuite {
 
-  private def recallRows(): Seq[(Long, Long, Long)] =
-    graft.operators.Similarity
-      .queries("q_ann_graph_recall")(spark, TestSpark.sf)
+  private def recallRows(width: Int = 4): Seq[(Long, Long, Long)] =
+    graft.operators.Similarity.annGraphRecall(spark, TestSpark.sf, width)
       .collect()
       .toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))) // (rnd, qid, n_hits)
@@ -337,29 +336,20 @@ class GraphAnnSpec extends AnyFunSuite {
     TestSpark.housekeeping()
   }
 
-  test("graft.nndescent.init.width knob: fine blocks seed high, coarse blocks recover by descent (both engines read it per call)") {
+  test("init width 8: fine blocks seed high, coarse blocks recover by descent") {
     val dflt = recallRows().groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    val old = sys.props.get("graft.nndescent.init.width")
-    try {
-      sys.props("graft.nndescent.init.width") = "8"
-      val fine = recallRows().groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      // width 8 = full-signature blocks: the planted near-dups share the
-      // query's tight bucket, so the md5 SEED already contains many of
-      // them — measured 0.53 vs 0.07 macro at width 4 (sf0.01)
-      assert(fine(0L) > dflt(0L),
-        s"fine seed blocks did not raise round-0 recall: fine=$fine default=$dflt")
-      // and the knob must reach the oracle too: the generated DuckDB SQL
-      // embeds the active width (lockstep by construction)
-      assert(graft.operators.Similarity.oracles("q_ann_graph_recall")
-        .contains("substr(") )
-      assert(graft.operators.Similarity.oracles("q_ann_graph_recall")
-        .contains(", 1, 8) AS blk"))
-    } finally {
-      old match {
-        case Some(v) => sys.props("graft.nndescent.init.width") = v
-        case None => sys.props -= "graft.nndescent.init.width"
-      }
-    }
+    val fine = recallRows(8).groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    // width 8 = full-signature blocks: the planted near-dups share the
+    // query's tight bucket, so the md5 SEED already contains many of
+    // them — measured 0.53 vs 0.07 macro at width 4 (sf0.01)
+    assert(fine(0L) > dflt(0L),
+      s"fine seed blocks did not raise round-0 recall: fine=$fine default=$dflt")
+    // and the width must reach the oracle too: the generated DuckDB SQL
+    // embeds it (lockstep by construction)
+    val oracle = graft.operators.Similarity.annGraphRecallOracle(8)
+    assert(oracle.contains(", 1, 8) AS blk"))
+    assert(graft.operators.Similarity.oracles("q_ann_graph_recall") ==
+      graft.operators.Similarity.annGraphRecallOracle(4))
     TestSpark.housekeeping()
   }
 }
