@@ -11,11 +11,10 @@ object Bench {
     // load: the END-of-run loadavg of a local[32] leg is dominated by
     // the leg itself (measured 7.9 on an idle host), so the idle-host
     // claim a round archive makes is carried by the START reading
-    val loadStart: String = try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ").take(3).mkString(",")
-    } catch { case _: Exception => "" }
+    def loadAvg(): String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
+      .split(" ").take(3).mkString(",")
+    val loadStart: String = try loadAvg() catch { case _: Exception => "" }
     val spark = Harness.session(warm = true)
     def housekeeping(): Unit = Harness.housekeeping(spark)
 
@@ -83,9 +82,7 @@ object Bench {
     // field 9 of the aggregate cpu line in /proc/stat (ticks the
     // hypervisor withheld from this guest).
     def hostLoad: String = try {
-      val la = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ").take(3).mkString(",")
+      val la = loadAvg()
       val steal = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/stat")), "UTF-8")
         .linesIterator.find(_.startsWith("cpu "))

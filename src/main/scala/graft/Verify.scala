@@ -58,20 +58,14 @@ object Verify {
     val report = new java.util.concurrent.ConcurrentHashMap[
       String, (Option[Long], Option[String])]()
     def flushProgress(): Unit = report.synchronized {
-      def js(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       val body = {
         import scala.jdk.CollectionConverters._
         report.asScala.toSeq.sortBy(_._1).map { case (k, (rows, err)) =>
-          js(k) + ": {\"rows_match\": null, \"schema_match\": null, " +
+          json(k) + ": {\"rows_match\": null, \"schema_match\": null, " +
             "\"hash_match\": null, " +
             "\"spark_rows\": " + rows.map(_.toString).getOrElse("null") +
             ", \"oracle_rows\": null, \"err\": " +
-            err.map(js).getOrElse("null") + "}"
+            err.map(json).getOrElse("null") + "}"
         }.mkString("{", ",\n", "}")
       }
       val tmp = Paths.get(s"$outDir/.verify_progress.json.tmp")
@@ -151,27 +145,30 @@ object Verify {
     spark.stop()
   }
 
-  /** Dump the (possibly filtered) oracle map. JSON string escape:
-    * backslash, quote, and ALL control chars (<0x20) — a tab or CR in
-    * builder-authored SQL would otherwise make the driver's json.load
-    * fail and silently zero the round's correctness. Under a dev
+  /** Dump the (possibly filtered) oracle map, each string through
+    * [[json]]. Under a dev
     * filter, write only the filtered subset: a full oracle_sql.json
     * next to a partial dump would let an unfiltered check.py compare
     * other queries against STALE parquet from an earlier run and
     * false-PASS. */
   private def writeOracles(outDir: String, only: Set[String]): Unit = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
+    val body = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), body)
   }
+
+  /** A JSON string literal: quote, backslash and every control char
+    * below 0x20 are escaped (newline, CR and tab by their short forms),
+    * so a tab or CR in builder-authored SQL or an error message cannot
+    * break the driver's json.load. */
+  private def json(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1056,15 +1056,7 @@ object Analytic extends graft.QueryPack {
     // Gap-based sessionization: new session when >30 min since the
     // previous event; session id = running count of session starts.
     "q_sessionize" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val newSession = when(
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1)
-          .over(w) > 30L * 60 * 1000000, 1L)
-        .otherwise(when(lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L))
-      Tables(s, d, "events")
-        .withColumn("new_s", newSession)
-        .withColumn("session_id",
-          sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      withSessionIds(Tables(s, d, "events"))
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
           min(unix_micros(col("ts"))).as("start_us"),
@@ -2222,16 +2214,7 @@ object Analytic extends graft.QueryPack {
     // with (count desc, path) as the deterministic tie-break, restated
     // in the oracle.
     "q_session_paths" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val newSession = when(
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1)
-          .over(w) > 30L * 60 * 1000000, 1L)
-        .otherwise(when(lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L))
-      Tables(s, d, "events")
-        .withColumn("new_s", newSession)
-        .withColumn("session_id",
-          sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      withSessionIds(Tables(s, d, "events"))
         .groupBy(col("user_id"), col("session_id"))
         .agg(
           expr("""array_join(transform(
@@ -2358,19 +2341,7 @@ object Analytic extends graft.QueryPack {
         .groupBy(col("event_type"), col("bin"))
         .agg(sum(when(col("half") === "ref", 1L).otherwise(0L)).as("n_ref"),
           sum(when(col("half") === "cur", 1L).otherwise(0L)).as("n_cur"))
-      val wt = Window.partitionBy(col("event_type"))
-      val p = greatest(col("n_ref").cast("double") /
-        sum(col("n_ref")).over(wt).cast("double"), lit(1e-6))
-      val q = greatest(col("n_cur").cast("double") /
-        sum(col("n_cur")).over(wt).cast("double"), lit(1e-6))
-      cells
-        .withColumn("contrib", round((p - q) * log(p / q), 9))
-        .withColumn("psi",
-          sum(col("contrib").cast(DecimalType(24, 9))).over(wt)
-            .cast("double"))
-        .select(col("event_type"), col("bin"), col("n_ref"), col("n_cur"),
-          col("contrib"), col("psi"))
-        .orderBy(col("event_type"), col("bin"))
+      psiReport(cells)
     }),
 
     // Chi-square independence diagnostics: event_type × day-of-week
@@ -2411,6 +2382,77 @@ object Analytic extends graft.QueryPack {
         .orderBy(col("event_type"), col("dow"))
     })
   )
+
+  /** The PSI tail of q_psi_drift and q_stream_drift over (event_type,
+    * bin, n_ref, n_cur) cells: shares floored at 1e-6, round-9
+    * per-bin contributions (p−q)·ln(p/q), and their DECIMAL sum per
+    * type. */
+  private[operators] def psiReport(cells: DataFrame): DataFrame = {
+    val wt = Window.partitionBy(col("event_type"))
+    val p = greatest(col("n_ref").cast("double") /
+      sum(col("n_ref")).over(wt).cast("double"), lit(1e-6))
+    val q = greatest(col("n_cur").cast("double") /
+      sum(col("n_cur")).over(wt).cast("double"), lit(1e-6))
+    cells
+      .withColumn("contrib", round((p - q) * log(p / q), 9))
+      .withColumn("psi",
+        sum(col("contrib").cast(DecimalType(24, 9))).over(wt)
+          .cast("double"))
+      .select(col("event_type"), col("bin"), col("n_ref"), col("n_cur"),
+        col("contrib"), col("psi"))
+      .orderBy(col("event_type"), col("bin"))
+  }
+
+  /** DuckDB twin of q_psi_drift's cells plus [[psiReport]]. `curCase`
+    * is the 1/0 current-half indicator of a row: the batch query counts
+    * a NULL `ts` as current (`... ELSE 1`), while q_stream_drift's
+    * stream filter drops it (`us * 2 > lo_us + hi_us`). */
+  private[operators] def psiDriftDuck(curCase: String): String =
+    s"""WITH ev AS (
+      |  SELECT event_type, epoch_us(ts) AS us,
+      |    CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS v
+      |  FROM events),
+      |rng AS (
+      |  SELECT MIN(us) AS lo_us, MAX(us) AS hi_us,
+      |    MIN(v) AS lo_v, MAX(v) AS hi_v FROM ev),
+      |cells AS (
+      |  SELECT event_type,
+      |    CASE WHEN hi_v = lo_v THEN 0
+      |         ELSE LEAST(9, CAST(FLOOR((v - lo_v) * 10 / (hi_v - lo_v))
+      |           AS BIGINT)) END AS bin,
+      |    CAST(SUM(CASE WHEN us * 2 <= lo_us + hi_us THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS n_ref,
+      |    CAST(SUM($curCase)
+      |      AS BIGINT) AS n_cur
+      |  FROM ev, rng GROUP BY 1, 2),
+      |sh AS (
+      |  SELECT event_type, bin, n_ref, n_cur,
+      |    GREATEST(CAST(n_ref AS DOUBLE) /
+      |      CAST(SUM(n_ref) OVER (PARTITION BY event_type) AS DOUBLE),
+      |      1e-6) AS p,
+      |    GREATEST(CAST(n_cur AS DOUBLE) /
+      |      CAST(SUM(n_cur) OVER (PARTITION BY event_type) AS DOUBLE),
+      |      1e-6) AS q
+      |  FROM cells)
+      |SELECT event_type, bin, n_ref, n_cur,
+      |  round((p - q) * ln(p / q), 9) AS contrib,
+      |  CAST(SUM(CAST(round((p - q) * ln(p / q), 9) AS DECIMAL(24,9)))
+      |    OVER (PARTITION BY event_type) AS DOUBLE) AS psi
+      |FROM sh ORDER BY event_type, bin""".stripMargin
+
+  /** Gap-based session ids over the events table: a session starts at
+    * a user's first event or after a gap of more than 30 minutes, and
+    * `session_id` is the running count of starts per user. */
+  private def withSessionIds(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val newSession = when(
+      unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1)
+        .over(w) > 30L * 60 * 1000000, 1L)
+      .otherwise(when(lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L))
+    ev.withColumn("new_s", newSession)
+      .withColumn("session_id",
+        sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+  }
 
   /** q_kcore's K and round backstop — restated in the unrolled oracle,
     * so both live here as the single source. */
@@ -3606,38 +3648,8 @@ object Analytic extends graft.QueryPack {
         |    AS w1
         |FROM filled GROUP BY source, n_src, n_all ORDER BY source""".stripMargin,
 
-    "q_psi_drift" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) AS us,
-        |    CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS v
-        |  FROM events),
-        |rng AS (
-        |  SELECT MIN(us) AS lo_us, MAX(us) AS hi_us,
-        |    MIN(v) AS lo_v, MAX(v) AS hi_v FROM ev),
-        |cells AS (
-        |  SELECT event_type,
-        |    CASE WHEN hi_v = lo_v THEN 0
-        |         ELSE LEAST(9, CAST(FLOOR((v - lo_v) * 10 / (hi_v - lo_v))
-        |           AS BIGINT)) END AS bin,
-        |    CAST(SUM(CASE WHEN us * 2 <= lo_us + hi_us THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_ref,
-        |    CAST(SUM(CASE WHEN us * 2 <= lo_us + hi_us THEN 0 ELSE 1 END)
-        |      AS BIGINT) AS n_cur
-        |  FROM ev, rng GROUP BY 1, 2),
-        |sh AS (
-        |  SELECT event_type, bin, n_ref, n_cur,
-        |    GREATEST(CAST(n_ref AS DOUBLE) /
-        |      CAST(SUM(n_ref) OVER (PARTITION BY event_type) AS DOUBLE),
-        |      1e-6) AS p,
-        |    GREATEST(CAST(n_cur AS DOUBLE) /
-        |      CAST(SUM(n_cur) OVER (PARTITION BY event_type) AS DOUBLE),
-        |      1e-6) AS q
-        |  FROM cells)
-        |SELECT event_type, bin, n_ref, n_cur,
-        |  round((p - q) * ln(p / q), 9) AS contrib,
-        |  CAST(SUM(CAST(round((p - q) * ln(p / q), 9) AS DECIMAL(24,9)))
-        |    OVER (PARTITION BY event_type) AS DOUBLE) AS psi
-        |FROM sh ORDER BY event_type, bin""".stripMargin,
+    "q_psi_drift" -> psiDriftDuck(
+      "CASE WHEN us * 2 <= lo_us + hi_us THEN 0 ELSE 1 END"),
 
     // the DEFINITION itself: dominance as a NOT-EXISTS pair predicate
     // (fine at oracle scale; the Spark plan never forms pairs)

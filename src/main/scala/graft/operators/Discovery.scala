@@ -46,6 +46,46 @@ object Discovery extends graft.QueryPack {
       .orderBy(col("event_type"), col(dayCol))
   }
 
+  /** The staleness report of q_freshness and q_stream_freshness over
+    * per-type (event_type, last_us, n_events): minutes behind the
+    * frontier (the newest last_us of any type) and the 60-minute SLO
+    * flag. */
+  private[operators] def freshnessReport(perType: DataFrame): DataFrame = {
+    val frontier = perType.agg(max(col("last_us")).as("front_us"))
+    perType.crossJoin(broadcast(frontier))
+      .select(col("event_type"), col("n_events"),
+        expr("(front_us - last_us) div 60000000").as("staleness_min"),
+        (expr("(front_us - last_us) div 60000000") > 60L)
+          .as("violates_slo"))
+      .orderBy(col("event_type"))
+  }
+
+  /** DuckDB twin of [[cusumFromDaily]] over the events table, with the
+    * day as `dayExpr AS dayCol`: q_cusum's calendar date, or
+    * q_stream_cusum's epoch day number. */
+  private[operators] def cusumDuck(dayExpr: String, dayCol: String): String =
+    s"""WITH daily AS (
+      |  SELECT event_type, $dayExpr AS $dayCol,
+      |    CAST(COUNT(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2),
+      |tot AS (
+      |  SELECT *,
+      |    SUM(x) OVER (PARTITION BY event_type) AS tx,
+      |    COUNT(*) OVER (PARTITION BY event_type) AS nd
+      |  FROM daily),
+      |c AS (
+      |  SELECT *, SUM(x * nd - tx) OVER (PARTITION BY event_type
+      |    ORDER BY $dayCol) AS cdev
+      |  FROM tot),
+      |s AS (
+      |  SELECT *, cdev - least(0, MIN(cdev) OVER (PARTITION BY event_type
+      |    ORDER BY $dayCol)) AS s_units
+      |  FROM c)
+      |SELECT event_type, $dayCol, x AS n_events,
+      |  CAST(s_units AS BIGINT) AS s_units,
+      |  s_units * 8 > tx AS drift_flag
+      |FROM s ORDER BY event_type, $dayCol""".stripMargin
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Functional-dependency audit (the g3 approximation measure of
@@ -197,13 +237,7 @@ object Discovery extends graft.QueryPack {
         .groupBy(col("event_type"))
         .agg(max(unix_micros(col("ts"))).as("last_us"),
           count(lit(1)).as("n_events"))
-      val frontier = perType.agg(max(col("last_us")).as("front_us"))
-      perType.crossJoin(broadcast(frontier))
-        .select(col("event_type"), col("n_events"),
-          expr("(front_us - last_us) div 60000000").as("staleness_min"),
-          (expr("(front_us - last_us) div 60000000") > 60L)
-            .as("violates_slo"))
-        .orderBy(col("event_type"))
+      freshnessReport(perType)
     }),
 
     // Probabilistic record linkage (Fellegi & Sunter, JASA 1969) —
@@ -496,26 +530,5 @@ object Discovery extends graft.QueryPack {
         |FROM base LEFT JOIN means ON base.event_type = means.event_type
         |ORDER BY event_id""".stripMargin,
 
-    "q_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT *,
-        |    SUM(x) OVER (PARTITION BY event_type) AS tx,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS nd
-        |  FROM daily),
-        |c AS (
-        |  SELECT *, SUM(x * nd - tx) OVER (PARTITION BY event_type
-        |    ORDER BY day) AS cdev
-        |  FROM tot),
-        |s AS (
-        |  SELECT *, cdev - least(0, MIN(cdev) OVER (PARTITION BY event_type
-        |    ORDER BY day)) AS s_units
-        |  FROM c)
-        |SELECT event_type, day, x AS n_events,
-        |  CAST(s_units AS BIGINT) AS s_units,
-        |  s_units * 8 > tx AS drift_flag
-        |FROM s ORDER BY event_type, day""".stripMargin)
+    "q_cusum" -> cusumDuck("CAST(ts AS DATE)", "day"))
 }

@@ -1698,6 +1698,16 @@ object Extras extends graft.QueryPack {
     s"((((a >> $i) & 1) << ${2 * i}) + (((b >> $i) & 1) << ${2 * i + 1}))")
     .mkString(" + ")
 
+  /** DuckDB twin of [[zorderEvents]]: the `ev` (event_id, a, b) and
+    * `z` (event_id, a, b, zkey) CTEs of q_zorder_layout,
+    * q_zonemap_prune and q_stream_zonemap. */
+  private[operators] val zorderEvDuck: String =
+    s"""ev AS (
+       |  SELECT event_id, user_id % 256 AS a,
+       |    CAST(floor(epoch(ts) / 86400) AS BIGINT) % 256 AS b
+       |  FROM events),
+       |z AS (SELECT event_id, a, b, CAST($zTermsSql AS BIGINT) AS zkey FROM ev)""".stripMargin
+
   /** DuckDB twin of the seq-pack token spans ([[seqPackToks]],
     * [[seqPackSpans]]): per doc its token count, its running start
     * offset within its source, and x = one row per 128-token sequence
@@ -2060,20 +2070,12 @@ object Extras extends graft.QueryPack {
         |FROM sc ORDER BY custkey""".stripMargin,
 
     "q_zorder_layout" ->
-      s"""WITH ev AS (
-        |  SELECT event_id, user_id % 256 AS a,
-        |    CAST(floor(epoch(ts) / 86400) AS BIGINT) % 256 AS b
-        |  FROM events),
-        |z AS (SELECT event_id, CAST($zTermsSql AS BIGINT) AS zkey FROM ev)
+      s"""WITH $zorderEvDuck
         |SELECT event_id, zkey, CAST(zkey >> 4 AS BIGINT) AS zcell
         |FROM z ORDER BY zkey, event_id""".stripMargin,
 
     "q_zonemap_prune" ->
-      s"""WITH ev AS (
-        |  SELECT event_id, user_id % 256 AS a,
-        |    CAST(floor(epoch(ts) / 86400) AS BIGINT) % 256 AS b
-        |  FROM events),
-        |z AS (SELECT event_id, a, b, CAST($zTermsSql AS BIGINT) AS zkey FROM ev),
+      s"""WITH $zorderEvDuck,
         |mx AS (SELECT MAX(event_id) AS mx FROM ev),
         |rws AS (
         |  SELECT event_id, a, b,

@@ -25,30 +25,21 @@ object Similarity extends graft.QueryPack {
 
   private val DIM = 64
 
-  /** LSH bucket width in bits — the deployment-scale knob for every
-    * hyperplane-bucketed query (q_ann_lsh, q_neardup_embedding): with
-    * p planes, expected bucket size is N/2^p, so ONE MORE plane per
-    * corpus doubling keeps within-bucket candidate work constant —
-    * without it, fixed-width buckets grow ∝N and the bucket self-join
+  /** LSH bucket width in bits for every hyperplane-bucketed query
+    * (q_ann_lsh, q_neardup_embedding): with p planes, expected bucket
+    * size is N/2^p, so a deployment adds ONE MORE plane per corpus
+    * doubling to keep within-bucket candidate work constant — without
+    * it, fixed-width buckets grow ∝N and the bucket self-join
     * quadratically, the same failure class the sqrt-K rule fixes for
     * the coarse quantizers. Unlike K (derivable from a 1-row count on
     * both engine sides), the plane MATRIX is inlined as literals into
-    * the static oracle SQL, so the width is a library configuration
-    * (the `graft.lsh.planes` sysprop, default 8 ≈ log2 of the
-    * testdata corpus + headroom) rather than a per-query derivation:
-    * both the Spark plan and the generated DuckDB oracle rebuild from
-    * the same constant, so any setting stays oracle-consistent by
-    * construction. LAUNCH-TIME ONLY: the knob is read once when this
-    * object initializes — set it before the first touch of Similarity
-    * (spark-submit --conf spark.driver.extraJavaOptions); flipping the
-    * sysprop later in a live JVM is silently ignored, by design (a mid-session width change would
-    * desync already-generated oracle SQL from new plans).
-    * [[planesFor]] draws planes as a prefix-stable sequence (same
-    * seed, sequential draws), so wider configurations strictly REFINE
-    * narrower buckets — NearDupSpec asserts the refinement and the
-    * bucket-shrink factor. */
-  val N_PLANES: Int =
-    sys.props.get("graft.lsh.planes").map(_.toInt).getOrElse(8)
+    * the static oracle SQL, so the width is a constant (8 ≈ log2 of
+    * the testdata corpus + headroom): the Spark plan and the generated
+    * DuckDB oracle rebuild from it. [[planesFor]] draws planes as a
+    * prefix-stable sequence (same seed, sequential draws), so a wider
+    * width strictly REFINES narrower buckets — NearDupSpec asserts the
+    * refinement and the bucket-shrink factor at 12 planes. */
+  val N_PLANES: Int = 8
 
   /** First n ±1 hyperplanes of the java.util.Random(42) draw sequence —
     * the LCG sequence is specified by the JDK, so these are stable
@@ -600,7 +591,7 @@ object Similarity extends graft.QueryPack {
     // neighbor lists of the 10 query nodes ranked by round-9 cosine.
     // Scale: each round is ≤ N·(2k)² candidate sims through equi-joins
     // only — no cartesian, hub fan-out bounded by the md5 reverse cap,
-    // seed-block width a sysprop that grows like graft.lsh.planes.
+    // seed-block width a constant that grows like N_PLANES.
     "q_ann_graph" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val nodes = nnNodes(loadEmbeddings(s, d)
@@ -2476,7 +2467,7 @@ object Similarity extends graft.QueryPack {
   /** Init-block prefix width (chars of the LSH bucket signature) for the
     * NN-Descent seed graph: 4 of the 8-char signature → 16 seed blocks
     * on the test corpus; at corpus scale the width grows with log2(N)
-    * exactly like graft.lsh.planes, keeping within-block seed work
+    * exactly like [[N_PLANES]], keeping within-block seed work
     * constant. [[annGraphRecall]] and [[annGraphRecallOracle]] take it
     * as a parameter so a spec can sweep a second width. */
   private val NN_INIT_WIDTH = 4
@@ -3113,15 +3104,7 @@ object Similarity extends graft.QueryPack {
        |${nnBeamDuck(7, Seq(4),
           "SELECT vec_id AS qid, embedding AS qv, nrm AS qnrm, " +
             "blk AS qblk FROM nodes WHERE vec_id < 10")},
-       |ranked AS (SELECT qid, rk, nid, sim FROM (
-       |  SELECT v.qid, v.node AS nid,
-       |    round(${dotDuck("q.qv", "n.embedding")} /
-       |      (q.qnrm * n.nrm), 9) AS sim,
-       |    ROW_NUMBER() OVER (PARTITION BY v.qid ORDER BY
-       |      round(${dotDuck("q.qv", "n.embedding")} /
-       |        (q.qnrm * n.nrm), 9) DESC, v.node) AS rk
-       |  FROM v7 v JOIN nodes n ON n.vec_id = v.node
-       |            JOIN qs q ON q.qid = v.qid) t WHERE rk <= 3)
+       |${serveTop3Duck("ranked", "v7", "nodes")}
        |SELECT qid, CAST(rk AS BIGINT) AS rk, nid, sim
        |FROM ranked ORDER BY qid, rk""".stripMargin
 

@@ -28,6 +28,21 @@ import graft.operators.Iterate.CutOps
   * the next invocation); checkpointed INCREMENTAL reruns — AvailableNow
   * resuming from committed offsets — are exercised separately in
   * StreamingSpec's checkpoint-restart test.
+  *
+  * Mergeable state: most drains fold each micro-batch into a parquet
+  * state dir through a mergeable aggregate (Structured Streaming's
+  * incremental state maintenance, done in the sink). [[mergeFold]]
+  * owns that protocol once: [[recoverState]] (undo a crash inside the
+  * swap), build the batch's partial aggregate, take `merge(prior ∪
+  * partial)` when a state exists or the partial alone when none does,
+  * then the crash-safe [[swapState]]. Each fold supplies only its
+  * partial and merge columns, and [[countFold]] is the count monoid
+  * four of them share. Three state writers stay outside, because each
+  * needs something the shared def would have to branch on:
+  * [[foldSeqPack]] is order-dependent and emits closed rows besides
+  * its state, q_stream_topk merges Misra-Gries summaries on the
+  * driver, and [[foldKllIdem]] first probes the state's last batch id
+  * to skip a replayed batch (it reuses [[foldKll]]'s KLL aggregates).
   */
 object StreamingGate extends graft.QueryPack {
 
@@ -286,30 +301,55 @@ object StreamingGate extends graft.QueryPack {
       require(old.renameTo(dir), s"state recovery failed: $old -> $state")
   }
 
+  /** The merge-fold protocol of every mergeable-state drain (see the
+    * object scaladoc): recover, build `partial` from the batch, then
+    * swap in `merge(prior ∪ partial)` when a state exists, else the
+    * partial alone. `merge` must re-aggregate to the partial's schema. */
+  private[graft] def mergeFold(state: String)(
+      partial: DataFrame => DataFrame)(
+      merge: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+    (batch, _) => {
+      recoverState(state)
+      val bp = partial(batch)
+      val merged =
+        if (new java.io.File(state).exists())
+          merge(Tables.parquet(batch.sparkSession, state).unionByName(bp))
+        else bp
+      swapState(merged, state)
+    }
+
+  /** The count monoid over `keys`: `count(1) AS n` per batch,
+    * `sum(n) AS n` on merge — batching-invariant, grid-sized state. */
+  private[graft] def countFold(state: String,
+      keys: String*): (DataFrame, Long) => Unit = {
+    val ks = keys.map(col)
+    mergeFold(state)(_.groupBy(ks: _*).agg(count(lit(1)).as("n")))(
+      _.groupBy(ks: _*).agg(sum(col("n")).as("n")))
+  }
+
+  /** The q_stream_quantile sketch: one (KLL sketch, count) row per
+    * batch. A batch with no rows contributes a NULL sketch. */
+  private def kllPartial(k: Int)(batch: DataFrame): DataFrame =
+    batch.agg(expr(s"kll_sketch_agg_bigint(cents, $k)").as("sk"),
+      count(lit(1)).as("n"))
+
+  /** The KLL merge columns: the FILTER skips NULL sketches and is
+    * scoped to the sketch column only, so the row count keeps summing
+    * even when every sketch so far is NULL (a row-level filter would
+    * empty the agg input and turn `n` NULL, miscounting an
+    * all-empty-batch history). */
+  private def kllMerge(k: Int): Seq[org.apache.spark.sql.Column] = Seq(
+    expr(s"kll_merge_agg_bigint(sk, $k) FILTER (WHERE sk IS NOT NULL)")
+      .as("sk"),
+    sum(col("n")).as("n"))
+
   /** The q_stream_quantile state fold: merge a micro-batch's `cents`
     * column into one persistent (KLL sketch, count) row — the third
     * mergeable-summary fold next to the count/max monoids and the MG
-    * sketch. A batch with no rows contributes a NULL sketch, which the
-    * merge agg's FILTER clause skips — scoped to the sketch column only,
-    * so the row count keeps summing even when every sketch so far is
-    * NULL (a row-level filter here would empty the agg input and turn
-    * `n` NULL, miscounting an all-empty-batch history). */
+    * sketch. */
   private[graft] def foldKll(state: String, k: Int)(
-      batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bsk = batch.agg(
-      expr(s"kll_sketch_agg_bigint(cents, $k)").as("sk"),
-      count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bsk).agg(
-          expr(s"kll_merge_agg_bigint(sk, $k) FILTER (WHERE sk IS NOT NULL)")
-            .as("sk"),
-          sum(col("n")).as("n"))
-      } else bsk
-    swapState(merged, state)
-  }
+      batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(kllPartial(k))(_.select(kllMerge(k): _*))(batch, id)
 
   /** [[foldKll]] made idempotent under micro-batch REPLAY: the state
     * row carries the last merged batch id, and a batch whose id is
@@ -339,17 +379,10 @@ object StreamingGate extends graft.QueryPack {
       p.agg(max(col("last_id"))).collect()(0).getLong(0) >= id
     }
     if (!replayed) {
-      val bsk = batch.agg(
-        expr(s"kll_sketch_agg_bigint(cents, $k)").as("sk"),
-        count(lit(1)).as("n"))
-        .withColumn("last_id", lit(id))
+      val bsk = kllPartial(k)(batch).withColumn("last_id", lit(id))
       val merged = prior match {
-        case Some(p) =>
-          p.unionByName(bsk).agg(
-            expr(
-              s"kll_merge_agg_bigint(sk, $k) FILTER (WHERE sk IS NOT NULL)")
-              .as("sk"),
-            sum(col("n")).as("n"), max(col("last_id")).as("last_id"))
+        case Some(p) => p.unionByName(bsk)
+          .select(kllMerge(k) :+ max(col("last_id")).as("last_id"): _*)
         case None => bsk
       }
       swapState(merged, state)
@@ -404,21 +437,13 @@ object StreamingGate extends graft.QueryPack {
     * NULL-sketch FILTER scoping is foldKll's (empty batches keep n
     * summing). */
   private[graft] def foldHll(state: String, lgK: Int)(
-      batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bsk = batch.agg(
+      batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(_.agg(
       expr(s"hll_sketch_agg(user_id, $lgK)").as("sk"),
-      count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bsk).agg(
-          expr(s"hll_union_agg(sk, false) FILTER (WHERE sk IS NOT NULL)")
-            .as("sk"),
-          sum(col("n")).as("n"))
-      } else bsk
-    swapState(merged, state)
-  }
+      count(lit(1)).as("n")))(_.agg(
+      expr(s"hll_union_agg(sk, false) FILTER (WHERE sk IS NOT NULL)")
+        .as("sk"),
+      sum(col("n")).as("n")))(batch, id)
 
   /** The q_stream_freshness state fold: merge a micro-batch's
     * (event_type, us) rows into per-type (last_us, n_events) state —
@@ -427,19 +452,12 @@ object StreamingGate extends graft.QueryPack {
     * any stream length and the fold is batching-invariant (max and
     * sum are associative/commutative — asserted in
     * StatefulStreamingSpec). */
-  def foldTypeMax(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bc = batch.groupBy(col("event_type"))
-      .agg(max(col("us")).as("last_us"), count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bc)
-          .groupBy(col("event_type"))
-          .agg(max(col("last_us")).as("last_us"), sum(col("n")).as("n"))
-      } else bc
-    swapState(merged, state)
-  }
+  def foldTypeMax(state: String)(batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(_.groupBy(col("event_type"))
+      .agg(max(col("us")).as("last_us"), count(lit(1)).as("n")))(
+      _.groupBy(col("event_type"))
+        .agg(max(col("last_us")).as("last_us"), sum(col("n")).as("n")))(
+      batch, id)
 
   /** The q_stream_zonemap state fold: merge a micro-batch's z-cell
     * rows into persistent per-cell zone maps — a (MIN, MAX, SUM)
@@ -448,23 +466,15 @@ object StreamingGate extends graft.QueryPack {
     * commits. State is cell-count-sized (≤4096 rows — the 12-bit
     * cell space) at any stream length; batching-invariant because min/max/sum are associative;
     * writes ride the crash-safe swap. */
-  def foldZoneMap(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bc = batch.groupBy(col("zcell"))
+  def foldZoneMap(state: String)(batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(_.groupBy(col("zcell"))
       .agg(min(col("a")).as("min_a"), max(col("a")).as("max_a"),
         min(col("b")).as("min_b"), max(col("b")).as("max_b"),
-        count(lit(1)).as("n_rows"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bc)
-          .groupBy(col("zcell"))
-          .agg(min(col("min_a")).as("min_a"), max(col("max_a")).as("max_a"),
-            min(col("min_b")).as("min_b"), max(col("max_b")).as("max_b"),
-            sum(col("n_rows")).as("n_rows"))
-      } else bc
-    swapState(merged, state)
-  }
+        count(lit(1)).as("n_rows")))(
+      _.groupBy(col("zcell"))
+        .agg(min(col("min_a")).as("min_a"), max(col("max_a")).as("max_a"),
+          min(col("min_b")).as("min_b"), max(col("max_b")).as("max_b"),
+          sum(col("n_rows")).as("n_rows")))(batch, id)
 
   /** Stage one parquet file of a replayed multi-batch source: write
     * `df` as a single part file under `src/name.parquet` with a pinned
@@ -557,16 +567,8 @@ object StreamingGate extends graft.QueryPack {
     * accounting requires remembering what was seen; the O(sketch)
     * alternative is an HLL per split, which prices totals but cannot
     * answer per-gram membership). */
-  def foldGramSet(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bg = Dedup.gramSplits(batch)
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bg).distinct()
-      } else bg
-    swapState(merged, state)
-  }
+  def foldGramSet(state: String)(batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(Dedup.gramSplits)(_.distinct())(batch, id)
 
   /** The q_stream_novelty_theta state fold — [[foldGramSet]]'s BOUNDED
     * twin: instead of the exact distinct-gram set (the one drain state
@@ -580,27 +582,20 @@ object StreamingGate extends graft.QueryPack {
     * probe (foldHll's `n` discipline). NULL-sketch FILTER keeps
     * doc-only splits (all texts too short for a trigram) merging. */
   def foldGramTheta(state: String, lgK: Int)(
-      batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bsk = Dedup.gramSplits(batch)
-      .groupBy(col("split"))
-      .agg(expr(s"theta_sketch_agg(g, $lgK)").as("sk"))
-    val dc = batch.select(Dedup.splitCol.as("split"))
-      .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-    val bstate = dc.join(bsk, Seq("split"), "left_outer")
-      .select(col("split"), col("sk"), col("n_docs"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bstate)
-          .groupBy(col("split"))
-          .agg(
-            expr(s"theta_union_agg(sk, $lgK) FILTER (WHERE sk IS NOT NULL)")
-              .as("sk"),
-            sum(col("n_docs")).as("n_docs"))
-      } else bstate
-    swapState(merged, state)
-  }
+      batch: DataFrame, id: Long): Unit =
+    mergeFold(state) { b =>
+      val bsk = Dedup.gramSplits(b)
+        .groupBy(col("split"))
+        .agg(expr(s"theta_sketch_agg(g, $lgK)").as("sk"))
+      b.select(Dedup.splitCol.as("split"))
+        .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
+        .join(bsk, Seq("split"), "left_outer")
+        .select(col("split"), col("sk"), col("n_docs"))
+    }(_.groupBy(col("split"))
+      .agg(
+        expr(s"theta_union_agg(sk, $lgK) FILTER (WHERE sk IS NOT NULL)")
+          .as("sk"),
+        sum(col("n_docs")).as("n_docs")))(batch, id)
 
   /** The q_stream_bm25_admission state fold: each arriving document
     * slice tokenizes through the SAME bm25 kernel
@@ -613,22 +608,13 @@ object StreamingGate extends graft.QueryPack {
     * their NULL sums to 0 (the q_bm25_incremental totality
     * discipline) so they merge as the additive identity. */
   def foldBm25Stats(state: String, terms: Seq[String])(
-      batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val raw = TextAnalytics.bm25Stats(
-      TextAnalytics.bm25DocsFrom(batch), terms)
-    val bs = raw.select(
+      batch: DataFrame, id: Long): Unit =
+    mergeFold(state)(b => TextAnalytics.bm25Stats(
+      TextAnalytics.bm25DocsFrom(b), terms).select(
       col("nd") +: coalesce(col("sdl"), lit(0L)).as("sdl") +:
-        terms.map(t => coalesce(col(s"dfl_$t"), lit(0L)).as(s"dfl_$t")): _*)
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        val aggs = sum(col("sdl")).as("sdl") +:
-          terms.map(t => sum(col(s"dfl_$t")).as(s"dfl_$t"))
-        prior.unionByName(bs).agg(sum(col("nd")).as("nd"), aggs: _*)
-      } else bs
-    swapState(merged, state)
-  }
+        terms.map(t => coalesce(col(s"dfl_$t"), lit(0L)).as(s"dfl_$t")): _*))(
+      _.agg(sum(col("nd")).as("nd"), sum(col("sdl")).as("sdl") +:
+        terms.map(t => sum(col(s"dfl_$t")).as(s"dfl_$t")): _*))(batch, id)
 
   /** The q_stream_dim_audit state fold: merge a micro-batch's per-dim
     * (n, Σs, Σs²) moments into the persistent 64-row grid by addition
@@ -637,37 +623,12 @@ object StreamingGate extends graft.QueryPack {
     * dimReport as the batch audit. DECIMAL(38,0) state columns keep
     * the squared sums exact at any stream length. */
   def foldDimMoments(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
     import org.apache.spark.sql.types.DecimalType
-    val bc = Similarity.dimMoments(Similarity.dimCells(batch))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bc)
-          .groupBy(col("dim"))
-          .agg(sum(col("n")).as("n"),
-            sum(col("s1")).cast(DecimalType(38, 0)).as("s1"),
-            sum(col("s2")).cast(DecimalType(38, 0)).as("s2"))
-      } else bc
-    swapState(merged, state)
-  }
-
-  /** The q_stream_schema_drift state fold: merge a micro-batch's
-    * (key, jtype) cells into persistent per-cell counts — the same
-    * count monoid as foldBinCounts on the schema-audit grid (keys ×
-    * type classes ≤ a few dozen rows at any stream length). */
-  def foldSchemaCells(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bc = batch.groupBy(col("key"), col("jtype"))
-      .agg(count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bc)
-          .groupBy(col("key"), col("jtype"))
-          .agg(sum(col("n")).as("n"))
-      } else bc
-    swapState(merged, state)
+    mergeFold(state)(b => Similarity.dimMoments(Similarity.dimCells(b)))(
+      _.groupBy(col("dim"))
+        .agg(sum(col("n")).as("n"),
+          sum(col("s1")).cast(DecimalType(38, 0)).as("s1"),
+          sum(col("s2")).cast(DecimalType(38, 0)).as("s2")))(batch, id)
   }
 
   /** The q_stream_drift state fold: merge a micro-batch's (event_type,
@@ -675,21 +636,9 @@ object StreamingGate extends graft.QueryPack {
     * mergeable count monoid, so the final state is independent of how
     * the stream was batched (asserted across batchings in
     * StatefulStreamingSpec). State stays grid-sized (types × bins)
-    * at any stream length; the staged-swap tail is the single-writer
-    * harness convention the other streaming sinks share. */
-  def foldBinCounts(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
-    val bc = batch.groupBy(col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(batch.sparkSession, state)
-        prior.unionByName(bc)
-          .groupBy(col("event_type"), col("bin"))
-          .agg(sum(col("n")).as("n"))
-      } else bc
-    swapState(merged, state)
-  }
+    * at any stream length. */
+  def foldBinCounts(state: String)(batch: DataFrame, id: Long): Unit =
+    countFold(state, "event_type", "bin")(batch, id)
 
   /** The q_stream_media_gate state fold: each arriving document slice
     * generates its media (sources + retouched copies, with the
@@ -701,10 +650,9 @@ object StreamingGate extends graft.QueryPack {
     * drain where executor-side binary work crosses the streaming
     * boundary, not just row arithmetic. */
   def foldMediaGate(state: String)(batch: DataFrame, id: Long): Unit = {
-    recoverState(state)
     val s = batch.sparkSession
     import s.implicits._
-    val bc = batch.select(col("doc_id")).as[Long]
+    val reasons = batch.select(col("doc_id")).as[Long]
       .mapPartitions(_.grouped(64).flatMap(_.flatMap { d =>
         def gated(imgId: Long, png: Array[Byte]) =
           Multimodal.imageInfo(imgId,
@@ -719,14 +667,7 @@ object StreamingGate extends graft.QueryPack {
       .select(when(col("width") === 0L, "undecodable")
         .when(least(col("width"), col("height")) < 10L, "too_small")
         .otherwise("ok").as("reason"))
-      .groupBy(col("reason")).agg(count(lit(1)).as("n"))
-    val merged =
-      if (new java.io.File(state).exists()) {
-        val prior = Tables.parquet(s, state)
-        prior.unionByName(bc)
-          .groupBy(col("reason")).agg(sum(col("n")).as("n"))
-      } else bc
-    swapState(merged, state)
+    countFold(state, "reason")(reasons, id)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1661,7 +1602,7 @@ object StreamingGate extends graft.QueryPack {
       val stream = Scalars.schemaCells(EventsStream.replay(s, d)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type")))
-      drain(s, stream, "append")(foldSchemaCells(state))
+      drain(s, stream, "append")(countFold(state, "key", "jtype"))
       import org.apache.spark.sql.types.{LongType, StringType}
       val counts = readStateOr(s, state, Seq(
         ("key", "key", StringType),
@@ -1714,13 +1655,7 @@ object StreamingGate extends graft.QueryPack {
           ("last_us", "last_us", LongType),
           ("n", "n_events", LongType)))
       }
-      val frontier = perType.agg(max(col("last_us")).as("front_us"))
-      perType.crossJoin(broadcast(frontier))
-        .select(col("event_type"), col("n_events"),
-          expr("(front_us - last_us) div 60000000").as("staleness_min"),
-          (expr("(front_us - last_us) div 60000000") > 60L)
-            .as("violates_slo"))
-        .orderBy(col("event_type"))
+      Discovery.freshnessReport(perType)
     }),
 
     // Streaming CUSUM changepoint monitor — q_cusum maintained
@@ -1750,19 +1685,7 @@ object StreamingGate extends graft.QueryPack {
       val stream = EventsStream.replay(s, d)
         .select((col("event_id") % 500).as("item"),
           col("event_type").as("label"))
-      drain(s, stream, "append") { (batch, _) =>
-        recoverState(state)
-        val bc = batch.groupBy(col("item"), col("label"))
-          .agg(count(lit(1)).as("n"))
-        val merged =
-          if (new java.io.File(state).exists())
-            Tables.parquet(batch.sparkSession, state)
-              .unionByName(bc)
-              .groupBy(col("item"), col("label"))
-              .agg(sum(col("n")).as("n"))
-          else bc
-        swapState(merged, state)
-      }
+      drain(s, stream, "append")(countFold(state, "item", "label"))
       import org.apache.spark.sql.types.{LongType, StringType}
       Inference.labelVote(readStateOr(s, state, Seq(
         ("item", "item", LongType),
@@ -1867,23 +1790,11 @@ object StreamingGate extends graft.QueryPack {
       drain(s, stream, "append")(foldBinCounts(state))
       val cur = readBinState(s, state, "bin")
         .withColumnRenamed("n", "n_cur")
-      val cells = ref.join(cur, Seq("event_type", "bin"), "full_outer")
-        .select(col("event_type"), col("bin"),
-          coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-          coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-      val wt = Window.partitionBy(col("event_type"))
-      val p = greatest(col("n_ref").cast("double") /
-        sum(col("n_ref")).over(wt).cast("double"), lit(1e-6))
-      val q = greatest(col("n_cur").cast("double") /
-        sum(col("n_cur")).over(wt).cast("double"), lit(1e-6))
-      cells
-        .withColumn("contrib", round((p - q) * log(p / q), 9))
-        .withColumn("psi",
-          sum(col("contrib").cast(DecimalType(24, 9))).over(wt)
-            .cast("double"))
-        .select(col("event_type"), col("bin"), col("n_ref"), col("n_cur"),
-          col("contrib"), col("psi"))
-        .orderBy(col("event_type"), col("bin"))
+      Analytic.psiReport(
+        ref.join(cur, Seq("event_type", "bin"), "full_outer")
+          .select(col("event_type"), col("bin"),
+            coalesce(col("n_ref"), lit(0L)).as("n_ref"),
+            coalesce(col("n_cur"), lit(0L)).as("n_cur")))
       }
     }),
 
@@ -2070,11 +1981,7 @@ object StreamingGate extends graft.QueryPack {
     // the drained per-cell maps re-derive the batch zone aggregate —
     // the zorder-layout zones of q_zonemap_prune restated
     "q_stream_zonemap" ->
-      s"""WITH ev AS (
-        |  SELECT user_id % 256 AS a,
-        |    CAST(floor(epoch(ts) / 86400) AS BIGINT) % 256 AS b
-        |  FROM events),
-        |z AS (SELECT a, b, CAST(${Extras.zTermsSql} AS BIGINT) AS zkey FROM ev)
+      s"""WITH ${Extras.zorderEvDuck}
         |SELECT CAST(zkey >> 4 AS BIGINT) AS zcell,
         |  MIN(a) AS min_a, MAX(a) AS max_a,
         |  MIN(b) AS min_b, MAX(b) AS max_b,
@@ -2100,63 +2007,13 @@ object StreamingGate extends graft.QueryPack {
 
     // the drained day-count state re-derives the exact-integer CUSUM:
     // q_cusum's oracle with the epoch-day encoding
-    "q_stream_cusum" ->
-"""WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day_no,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT *,
-        |    SUM(x) OVER (PARTITION BY event_type) AS tx,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS nd
-        |  FROM daily),
-        |c AS (
-        |  SELECT *, SUM(x * nd - tx) OVER (PARTITION BY event_type
-        |    ORDER BY day_no) AS cdev
-        |  FROM tot),
-        |s AS (
-        |  SELECT *, cdev - least(0, MIN(cdev) OVER (PARTITION BY event_type
-        |    ORDER BY day_no)) AS s_units
-        |  FROM c)
-        |SELECT event_type, day_no, x AS n_events,
-        |  CAST(s_units AS BIGINT) AS s_units,
-        |  s_units * 8 > tx AS drift_flag
-        |FROM s ORDER BY event_type, day_no""".stripMargin,
+    "q_stream_cusum" -> Discovery.cusumDuck(
+      "CAST(epoch_us(ts) // 86400000000 AS BIGINT)", "day_no"),
 
     // the drained incremental PSI state must equal the one-pass batch
     // PSI — q_psi_drift's oracle verbatim (same halves, same floor)
-    "q_stream_drift" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) AS us,
-        |    CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS v
-        |  FROM events),
-        |rng AS (
-        |  SELECT min(us) AS lo_us, max(us) AS hi_us,
-        |    min(v) AS lo_v, max(v) AS hi_v FROM ev),
-        |cells AS (
-        |  SELECT event_type,
-        |    CASE WHEN hi_v = lo_v THEN 0
-        |         ELSE least(9, CAST(floor((v - lo_v) * 10 / (hi_v - lo_v))
-        |           AS BIGINT)) END AS bin,
-        |    CAST(SUM(CASE WHEN us * 2 <= lo_us + hi_us
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-        |    CAST(SUM(CASE WHEN us * 2 > lo_us + hi_us
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-        |  FROM ev, rng GROUP BY 1, 2),
-        |shares AS (
-        |  SELECT *,
-        |    greatest(CAST(n_ref AS DOUBLE) /
-        |      SUM(n_ref) OVER (PARTITION BY event_type), 1e-6) AS p,
-        |    greatest(CAST(n_cur AS DOUBLE) /
-        |      SUM(n_cur) OVER (PARTITION BY event_type), 1e-6) AS q
-        |  FROM cells),
-        |contribs AS (
-        |  SELECT *, round((p - q) * ln(p / q), 9) AS contrib FROM shares)
-        |SELECT event_type, bin, n_ref, n_cur, contrib,
-        |  CAST(SUM(CAST(contrib AS DECIMAL(24,9)))
-        |    OVER (PARTITION BY event_type) AS DOUBLE) AS psi
-        |FROM contribs ORDER BY event_type, bin""".stripMargin,
+    "q_stream_drift" -> Analytic.psiDriftDuck(
+      "CASE WHEN us * 2 > lo_us + hi_us THEN 1 ELSE 0 END"),
 
     // the batch statement of the drained stream-static enrichment
     "q_stream_enrich" ->

@@ -8,7 +8,9 @@ import graft.operators.{Analytic, Dedup}
   * RELIABLE checkpoint() into the configured fault-tolerant dir, the
   * lost-executor-safe posture for iterative kernels on a real
   * cluster. The contract under test: the knob is honored (files
-  * actually land in the dir) and results are mode-invariant. */
+  * actually land in the dir) and results are mode-invariant. A
+  * source-level case also pins the set of `-Dgraft.*` JVM properties
+  * that main source reads. */
 class CheckpointModeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -72,6 +74,36 @@ class CheckpointModeSpec extends AnyFunSuite {
       TestSpark.housekeeping()
       Fs.deleteRec(dir)
     }
+  }
+
+  test("src/main reads exactly the four -Dgraft.* properties README lists") {
+    // grep-level pin against knob creep: every JVM system property
+    // read in main source must have a literal key, and the graft.*
+    // keys must be the README's list (graft.checkpoint.dir above is a
+    // session conf, not a JVM property)
+    val read = """(?:sys\.props|System\.getProperty)\b(.{0,40})""".r
+    val graftKey = """^(?:\.get|\.contains|\.getOrElse)?\(\s*"(graft\.[^"]+)"""".r
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java"))
+        Seq(f)
+      else Nil
+    val calls = sources(new java.io.File("src/main")).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      read.findAllMatchIn(text).map(m => f.getName -> m.group(1)).toSeq
+    }
+    assert(calls.nonEmpty, "the scan found no property reads at all")
+    val keys = calls.flatMap { case (file, rest) =>
+      graftKey.findFirstMatchIn(rest).map(_.group(1)).orElse {
+        assert(rest.startsWith("(\"java."),
+          s"$file reads a system property without a literal graft.* key: $rest")
+        None
+      }
+    }.toSet
+    assert(keys == Set("graft.explain", "graft.stopwords.files",
+      "graft.unigram.keep", "graft.bpe.rounds"),
+      s"-Dgraft.* properties read in src/main: ${keys.toSeq.sorted}")
   }
 
   test("iterative kernel still runs with the knob unset (local mode)") {

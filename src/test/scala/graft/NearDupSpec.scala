@@ -36,7 +36,7 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("LSH width knob: wider plane sets strictly refine buckets (scale path)") {
-    // The 100 TB contract of graft.lsh.planes: one more plane per
+    // The 100 TB contract of N_PLANES: one more plane per
     // corpus doubling keeps bucket size constant. That only works if
     // (a) plane i is identical under every width >= i+1 (so a wider
     // deployment REFINES buckets instead of reshuffling them) and

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Semantic gates for the recommendation and layout-planning operators:
   * ranking well-formedness and the basket cap actually firing for
   * q_item_cf (testdata orders are small, so the cap is exercised by
-  * lowering its sysprop — the graft.lsh.planes pattern), and bin
+  * calling it with a lower cap), and bin
   * well-formedness/conservation for q_compaction_plan.
   */
 class PlanningSpec extends AnyFunSuite {

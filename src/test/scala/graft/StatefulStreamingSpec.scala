@@ -229,6 +229,40 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(oneShot == exact, "folded state must equal the batch count")
   }
 
+  test("countFold on the (key, jtype) and (item, label) grids is batching-invariant and exact") {
+    import spark.implicits._
+    // each grid row's second key column is typed as its drain has it:
+    // jtype a string, label a string, item a long
+    val cells = (0 until 240).map(i => (s"k${i % 5}", Seq("int", "string", "null")(i % 3)))
+    val votes = (0 until 240).map(i => ((i % 11).toLong, s"l${i * 7 % 4}"))
+    def foldWith(df: Seq[Int] => org.apache.spark.sql.DataFrame,
+        keys: Seq[String], cuts: Seq[Int]): Map[Seq[Any], Long] = {
+      val dir = java.nio.file.Files.createTempDirectory("countfold")
+        .toFile.getAbsolutePath + "/st"
+      val fold = graft.operators.StreamingGate.countFold(dir, keys: _*)
+      (0 +: cuts :+ 240).sliding(2).zipWithIndex.foreach {
+        case (Seq(lo, hi), id) => fold(df(lo until hi), id.toLong)
+      }
+      spark.read.parquet(dir).collect()
+        .map(r => keys.indices.map(r.get) -> r.getLong(keys.size)).toMap
+    }
+    for ((df, keys, rows) <- Seq(
+        ((ix: Seq[Int]) => ix.map(cells).toDF("key", "jtype"),
+          Seq("key", "jtype"), cells.map(c => Seq[Any](c._1, c._2))),
+        ((ix: Seq[Int]) => ix.map(votes).toDF("item", "label"),
+          Seq("item", "label"), votes.map(v => Seq[Any](v._1, v._2))))) {
+      val oneShot = foldWith(df, keys, Nil)
+      // an empty batch in the middle, a one-row batch, uneven slices
+      val staggered = foldWith(df, keys, Seq(31, 31, 32, 200))
+      val tenths = foldWith(df, keys, (24 until 240 by 24))
+      assert(oneShot == staggered && oneShot == tenths,
+        s"${keys.mkString(",")} fold must be batching-invariant")
+      val exact = rows.groupBy(identity)
+        .map { case (k, xs) => k -> xs.size.toLong }
+      assert(oneShot == exact, s"${keys.mkString(",")} counts must be exact")
+    }
+  }
+
   test("freshness (MAX, SUM) fold is batching-invariant and exact") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
