@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
   * harness mains (Bench / Verify / TimeQuery / Smoke).
   * Previously each main hand-maintained an identical builder block and
   * housekeeping sequence; a fix landing in one copy and not another
-  * (e.g. the BPE memo clear) silently skews that entry point's
-  * numbers. One definition, one place to fix. */
+  * silently skews that entry point's numbers. One definition, one
+  * place to fix. */
 object Harness {
 
   /** The one local session shape every main uses: graft extensions,
@@ -64,15 +64,13 @@ object Harness {
     * actually released — without this, driver-side state from ~25+
     * queries in one JVM degrades later queries by an order of
     * magnitude (observed at sf0.1; thread counts growing ~10/query
-    * are the symptom).
-    * @param clearMemos also drop JVM-side memos (the BPE merge
-    *   table) so a TIMED rep pays its query's full cost; correctness
-    *   paths (Verify) keep memos — they measure results, not time,
-    *   and the memo key already fingerprints the source file */
-  def housekeeping(spark: SparkSession, clearMemos: Boolean = true): Unit = {
+    * are the symptom). The same steps for every main: no query keeps
+    * JVM-side state between runs (the tokenizer trainers are plain
+    * functions of their inputs), so a timed rep and a Verify run both
+    * pay each query's full cost. */
+  def housekeeping(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    if (clearMemos) graft.operators.TextAnalytics.clearMemos()
     // reliable-mode checkpoint data is never GC'd by Spark itself
     // (see Iterate.scala scaladoc) — between queries no checkpointed
     // lineage is live, so the whole dir's contents can go

@@ -60,8 +60,8 @@ object Tables {
     * leaves idle. Each chain stays serial inside itself; the frames /
     * models produced are identical to the sequential build, only the
     * materialization SCHEDULE overlaps. Callers must pass chains with
-    * no order dependence (trainer memos are ConcurrentHashMaps; frame
-    * builds touch only their own lineage). */
+    * no order dependence: each builds only its own lineage and keeps
+    * no state outside it (the tokenizer trainers share nothing). */
   def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     val Seq(a, b) = inParallelSeq(Seq(() => (fa: Any), () => (fb: Any)))
     (a.asInstanceOf[A], b.asInstanceOf[B])

@@ -16,8 +16,8 @@ import java.nio.file.{Files, Paths}
   * dev-loop speed knob. Safety of the lanes: every query
   * is partition-count invariant by gate (DeterminismSpec), writes to
   * its own outDir subdir, and no query registers session-global named
-  * state (no temp views / listeners; the BPE memo is a
-  * ConcurrentHashMap). Housekeeping moves from per-query to a barrier
+  * state (no temp views / listeners) or JVM-global memo.
+  * Housekeeping moves from per-query to a barrier
   * between WAVES of queries (an unpersist landing mid-flight on a
   * sibling's cached frame is correctness-safe — Spark recomputes — so
   * the barrier is about reclaiming state often enough, not about
@@ -110,8 +110,7 @@ object Verify {
     if (par == 1) {
       selected.foreach { case (name, fn) =>
         runQuery(name, fn)
-        // memos kept: Verify measures results, not time (Harness doc)
-        Harness.housekeeping(spark, clearMemos = false)
+        Harness.housekeeping(spark)
       }
     } else {
       val (drains, batch) =
@@ -124,12 +123,12 @@ object Verify {
               override def run(): Unit = runQuery(name, fn) })
           }
           futures.foreach(_.get())
-          Harness.housekeeping(spark, clearMemos = false)
+          Harness.housekeeping(spark)
         }
       } finally pool.shutdown()
       drains.foreach { case (name, fn) =>
         runQuery(name, fn)
-        Harness.housekeeping(spark, clearMemos = false)
+        Harness.housekeeping(spark)
       }
     }
 

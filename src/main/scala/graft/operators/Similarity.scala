@@ -357,8 +357,8 @@ object Similarity extends graft.QueryPack {
     // maxGroup)·D) dot products instead of the flat O(sqrt(N)·D) —
     // the r8 verdict's named watch item. Routing is a one-time
     // K2 × K1 pass inside the model object; rows score the K1 heads
-    // then ONLY their group's lists (TwoLevelCentroidScores — one
-    // codegen node, plan size independent of both K's). Same sampled
+    // then ONLY their group's lists (a TwoLevelCentroidModel in one
+    // CentroidScores codegen node, plan size independent of both K's). Same sampled
     // centroids, same round-9/lowest-cid argmax discipline at every
     // stage, so the whole two-stage assignment restates in plain SQL
     // and the oracle stays exact. Queries probe the top-2 lists
@@ -1144,11 +1144,10 @@ object Similarity extends graft.QueryPack {
       val e = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val best = (0 until PQ_M).map { m =>
-        val b = pqNearest(col("embedding"), cb, m)
+        val b = array_min(pqL2(col("embedding"), cb, m))
         struct(lit(m).cast("long").as("m"),
-          (b.getField("negk") * -1).cast("long").as("code"),
-          round(b.getField("negd") * -1.0d, 9).cast(DecimalType(18, 9))
-            .as("dr"))
+          b.getField("k").cast("long").as("code"),
+          round(b.getField("d2"), 9).cast(DecimalType(18, 9)).as("dr"))
       }
       val counts = e.select(explode(array(best: _*)).as("a"))
         .select(col("a.m").as("m"), col("a.code").as("code"), col("a.dr").as("dr"))
@@ -1884,31 +1883,28 @@ object Similarity extends graft.QueryPack {
 
   // The one PQ/ADC kernel: q_ann_pq, q_pq_distortion, the IVF-PQ scans
   // and their codebook training all encode, tabulate and rank through
-  // pqSub/pqD2/pqNearest/pqCode/adcTop3, so the formula the oracles
+  // pqSub/pqL2/pqCode/adcTop3, so the formula the oracles
   // restate — association, tie-break, round-9 DECIMAL cells — has one
   // definition.
 
   /** Subspace m of the vector column `enc`. */
   private def pqSub(enc: Column, m: Int): Column = slice(enc, m * PQ_SUB + 1, PQ_SUB)
 
-  /** ||sub − cw||² = (sub·sub + cw·cw) − sub·cw·2 — reuses the
-    * codegen'd dot kernel; identical association in the oracle SQL. */
-  private def pqD2(enc: Column, m: Int, cw: Seq[Double]): Column = {
-    val sub = pqSub(enc, m); val c = typedlit(cw)
-    (dot(sub, sub) + dot(c, c)) - dot(sub, c) * 2.0d
-  }
+  /** array<struct<d2, k>>: ||sub − cw||² of subspace m to every
+    * codeword k of cb(m), through the one `centroidL2` kernel —
+    * (sub·sub + cw·cw) − sub·cw·2 with left-to-right folds, the
+    * association the oracle SQL restates — in one plan node however
+    * many codewords. */
+  private def pqL2(enc: Column, cb: Codebook, m: Int): Column =
+    graft.plans.VectorExpressions.centroidL2(pqSub(enc, m),
+      cb(m).toSeq.zipWithIndex.map(_.swap))
 
-  /** Nearest codeword of subspace m as struct(negd, negk): argmin on
-    * raw doubles with lowest-k tie-break (the struct-max trick, as in
-    * IVF). */
-  private def pqNearest(enc: Column, cb: Codebook, m: Int): Column =
-    array_max(array(cb(m).indices.map(k =>
-      struct((pqD2(enc, m, cb(m)(k)) * -1.0d).as("negd"), lit(-k).as("negk"))): _*))
-
+  /** Nearest codeword of subspace m: array_min over (d2, k), so ties
+    * go to the lowest k. */
   private def pqCode(enc: Column, cb: Codebook, m: Int): Column =
-    pqNearest(enc, cb, m).getField("negk") * -1
+    array_min(pqL2(enc, cb, m)).getField("k")
 
-  /** DuckDB twin of [[pqCodebook]] and [[pqD2]]: cw(k, embedding) = the
+  /** DuckDB twin of [[pqCodebook]] and [[pqL2]]: cw(k, embedding) = the
     * `nCodes` sampled codeword rows, ms = the subspace ids, and d2(vec_id,
     * m, k, d) = the squared L2 distance of each of `rows`' subvectors
     * to each codeword, in the Spark side's (ss_a + ss_b) - dot*2 order. */
@@ -1962,8 +1958,8 @@ object Similarity extends graft.QueryPack {
       lists.map(l => col(l._1)) ++ ms.map(m => pqCode(enc, cb, m).as(s"c$m")): _*)
     val tables = queries.select(Seq(col("vec_id").as("qid")) ++
       lists.map(l => col(l._2)) ++ ms.map(m =>
-        array(cb(m).map(cw => round(pqD2(enc, m, cw), 9).cast(DecimalType(18, 9))).toSeq: _*)
-          .as(s"dtab$m")): _*)
+        transform(pqL2(enc, cb, m), x =>
+          round(x.getField("d2"), 9).cast(DecimalType(18, 9))).as(s"dtab$m")): _*)
     val approx = ms.map(m =>
       element_at(col(s"dtab$m"), (col(s"c$m") + 1).cast("int"))).reduce(_ + _)
     val notSelf = col("qid") =!= col("nid")

@@ -1363,11 +1363,11 @@ object TextAnalytics extends graft.QueryPack {
       per.reduce(_ unionByName _).orderBy(col("qid"))
     }),
 
-    // BPE tokenizer-training merges: the first graft.bpe.rounds
-    // (default 3) rounds of byte-pair encoding over the corpus
-    // vocabulary (words weighted by frequency, symbols = characters)
-    // — round count a per-call sysprop since r15 (VERDICT r14 item 3)
-    // so the bake-off runs un-toyed depths. Each round is ONE distributed weighted
+    // BPE tokenizer-training merges: the first BPE_ROUNDS (3) rounds
+    // of byte-pair encoding over the corpus vocabulary (words weighted
+    // by frequency, symbols = characters) — the round count is a
+    // trainer parameter since r15 (VERDICT r14 item 3) so the bake-off
+    // runs un-toyed depths. Each round is ONE distributed weighted
     // pair-count aggregation — the part that scales with the corpus —
     // plus a 1-row argmax collected driver-side (a scalar per round,
     // the q_dedup_clusters coordination pattern); the merge then
@@ -1378,11 +1378,7 @@ object TextAnalytics extends graft.QueryPack {
     // semantics); an occurrence sharing a boundary with a just-merged
     // neighbor defers to a later round (documented divergence from
     // canonical BPE's rescan, which is inherently sequential).
-    "q_bpe_merges" -> ((s, d) => {
-      import s.implicits._
-      learnBpeMerges(s, d).toDF("round", "pair", "merged", "cnt")
-        .orderBy(col("round"))
-    }),
+    "q_bpe_merges" -> ((s, d) => bpeMerges(s, d)),
 
     // The ENCODE side of the tokenizer: apply the 3 learned merges to
     // every document and count the resulting BPE tokens — learn is a
@@ -1405,33 +1401,11 @@ object TextAnalytics extends graft.QueryPack {
     // the tokenizer it audits. One corpus pass, exact integer sums per
     // source, two round-9 ratios at the end; the merge table rides as
     // literals (broadcast-sized at any corpus).
-    "q_tokenizer_fertility" -> ((s, d) => {
-      val merges = learnBpeMerges(s, d)
-      val toksF = filter(tokens(col("text")), w => length(w) > 0)
-      Tables(s, d, "documents")
-        .select(col("source"),
-          size(toksF).cast("long").as("ws"),
-          aggregate(toksF, lit(0), (acc, w) => acc + bpeCountCol(merges)(w))
-            .cast("long").as("bpe"),
-          length(regexp_replace(col("text"), " ", "")).cast("long").as("ch"))
-        .groupBy(col("source"))
-        .agg(sum(col("ws")).as("n_ws_tokens"),
-          sum(col("bpe")).as("n_bpe_tokens"),
-          sum(col("ch")).as("n_chars"))
-        .select(col("source"), col("n_ws_tokens"), col("n_bpe_tokens"),
-          col("n_chars"),
-          round(col("n_bpe_tokens").cast("double") /
-            nullif(col("n_ws_tokens"), lit(0L)).cast("double"), 9)
-            .as("fertility"),
-          round(col("n_chars").cast("double") /
-            nullif(col("n_bpe_tokens"), lit(0L)).cast("double"), 9)
-            .as("chars_per_token"))
-        .orderBy(col("source"))
-    }),
+    "q_tokenizer_fertility" -> ((s, d) => tokenizerFertility(s, d)),
 
     // BPE vocabulary-size curve (r15, with VERDICT r14 item 3's
     // un-toyed depth knob): corpus fertility under every merge-table
-    // PREFIX 0..graft.bpe.rounds — merge 0 is the character baseline
+    // PREFIX 0..BPE_ROUNDS — merge 0 is the character baseline
     // (fertility = mean word length), each further row prices one
     // more merge. The "how many merges do I actually need" question a
     // tokenizer-training pipeline answers before committing a vocab
@@ -1470,22 +1444,20 @@ object TextAnalytics extends graft.QueryPack {
   /** The PRUNE SCHEDULE (VERDICT r13 item 5): how many 2-grams each
     * EM round keeps, the way real SentencePiece shrinks toward its
     * target vocabulary by a per-round percentage instead of one hard
-    * cut. Non-increasing by construction (a prune can only remove);
-    * a sysprop read PER CALL so specs exercise a second schedule, and embedded into the generated
-    * oracle SQL from the same read — both engines in lockstep under
-    * any setting. Default 24 → 16: round 1 scores the full seed
-    * vocabulary and keeps 24 grams, round 2 re-scores under the
-    * survivors' smoothed model and keeps 16, and the final report
-    * round re-segments under the end model. */
-  private def uniKeepSchedule: Seq[Int] = {
-    val sched = sys.props.get("graft.unigram.keep")
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(24, 16))
-    require(sched.nonEmpty && sched.forall(_ > 0) &&
-      sched.sliding(2).forall(p => p.length < 2 || p(1) <= p(0)),
-      s"graft.unigram.keep must be a non-increasing positive schedule, got $sched")
-    sched
-  }
+    * cut. Non-increasing by construction (a prune can only remove).
+    * A parameter of the trainer and of its oracle builders, which
+    * embed it into the generated SQL, so both engines train in
+    * lockstep under any schedule (specs call both at a second one).
+    * 24 → 16: round 1 scores the full seed vocabulary and keeps 24
+    * grams, round 2 re-scores under the survivors' smoothed model and
+    * keeps 16, and the final report round re-segments under the end
+    * model. */
+  private[graft] val UNI_KEEP: Seq[Int] = Seq(24, 16)
+
+  private def requireSchedule(schedule: Seq[Int]): Unit =
+    require(schedule.nonEmpty && schedule.forall(_ > 0) &&
+      schedule.sliding(2).forall(p => p.length < 2 || p(1) <= p(0)),
+      s"the unigram keep schedule must be non-increasing and positive, got $schedule")
 
   /** The q_unigram_lm trainer frames, shared with q_unigram_encode:
     * word-frequency table, then one (kept_r, probs_{r-1}) pair per
@@ -1502,8 +1474,9 @@ object TextAnalytics extends graft.QueryPack {
   private final case class UniTrain(words: DataFrame,
       rounds: Seq[(DataFrame, DataFrame)], probsFinal: DataFrame)
 
-  private def uniTrainFrames(s: SparkSession, d: String): UniTrain = {
-    val schedule = uniKeepSchedule
+  private def uniTrainFrames(s: SparkSession, d: String,
+      schedule: Seq[Int]): UniTrain = {
+    requireSchedule(schedule)
     // spread: the tokens explode otherwise runs at the 1-split scan's
     // parallelism, and the per-word char split + every round's DP
     // fold inherit the AQE-coalesced single partition (measured
@@ -1530,7 +1503,7 @@ object TextAnalytics extends graft.QueryPack {
     // The model state (probs) is VOCABULARY-sized by construction —
     // |alphabet| singles + |2-grams with weighted count >= UNI_FLOOR|
     // <= alphabet² — a scale-INDEPENDENT bound (the same bound the
-    // long-standing trainedUnigramCosts collect already relies on).
+    // trained cost map of [[unigramCosts]] relies on).
     // r15 optimization (guide §2.3/§2.4, measured in
     // OPTIMIZATION_r15.md): hold it as collected LOCAL rows instead
     // of a checkpointed distributed frame, so each EM round's costs
@@ -1561,7 +1534,7 @@ object TextAnalytics extends graft.QueryPack {
       // each round reports its FULL incoming vocabulary: a piece the
       // Viterbi paths never used reads cnt = 0 — it competes in the
       // prune and its mass stays visible
-      val c = uniViterbiCountsLit(words, uniCostMap(pin))
+      val c = uniViterbiCounts(words, uniCostMap(pin))
       val kept = vocab
         .join(c, Seq("piece"), "left_outer")
         .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
@@ -1599,15 +1572,6 @@ object TextAnalytics extends graft.QueryPack {
     probs.select(col("piece"), round(-log(col("p")), 9).as("cost"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-  /** The trained unigram COST table (piece → round9(−ln p) under the
-    * final post-prune smoothed model) as a collected map —
-    * vocabulary-sized (singles + the schedule's last keep width),
-    * memoized per (dataset, schedule) exactly like the BPE merge
-    * table so a sweep running both unigram queries pays the
-    * corpus-pass trainer once. */
-  private val uniCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, Double]]()
-
   /** Inert marker stamped into every TRAINED cost map: the encode
     * kernel looks costs up by 1- and 2-char pieces only, so an 8-char
     * key can never win a lookup — it exists so a model trained on an
@@ -1616,16 +1580,44 @@ object TextAnalytics extends graft.QueryPack {
     * rejects loudly. */
   private[graft] val UNI_TRAINED = "\u0000trained"
 
-  private[operators] def trainedUnigramModelFor(s: SparkSession,
-      d: String): Map[String, Double] =
-    trainedUnigramCosts(s, d)
+  /** The trained unigram COST table: piece → round9(−ln p) under the
+    * final post-prune smoothed model of `schedule`, plus the
+    * [[UNI_TRAINED]] marker. Vocabulary-sized (singles + the
+    * schedule's last keep width). A plain function of the corpus and
+    * the schedule: every call trains. */
+  private[graft] def unigramCosts(s: SparkSession, d: String,
+      schedule: Seq[Int] = UNI_KEEP): Map[String, Double] =
+    uniCostMap(uniTrainFrames(s, d, schedule).probsFinal) + (UNI_TRAINED -> 0.0)
+
+  /** q_unigram_lm at a given prune schedule (the registry runs
+    * [[UNI_KEEP]]). */
+  private[graft] def unigramLm(s: SparkSession, d: String,
+      schedule: Seq[Int] = UNI_KEEP): DataFrame = {
+    val t = uniTrainFrames(s, d, schedule)
+    val n = t.rounds.length
+    val perRound = t.rounds.zipWithIndex.map { case ((kept, pin), i) =>
+      kept.join(pin, Seq("piece"))
+        .select(lit((i + 1).toLong).as("rnd"), col("piece"), col("len"),
+          col("cnt"), col("p").as("prob_in"), col("kept"))
+    }
+    val cF = uniViterbiCounts(t.words, uniCostMap(t.probsFinal))
+    val last = t.rounds.last._1.filter(col("kept"))
+      .select(col("piece"), col("len"))
+      .join(cF, Seq("piece"), "left_outer")
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+      .join(t.probsFinal, Seq("piece"))
+      .select(lit((n + 1).toLong).as("rnd"), col("piece"), col("len"),
+        col("cnt"), col("p").as("prob_in"), lit(true).as("kept"))
+    (perRound :+ last).reduce(_ unionByName _)
+      .orderBy(col("rnd"), col("piece"))
+  }
 
   /** ENCODE one (doc_id, text) frame under an explicitly-passed
     * trained unigram cost map — the shared kernel of
     * q_unigram_encode and streaming drain #30 (one definition, two
-    * paths; each caller trains via [[trainedUnigramModelFor]] and
-    * hands its map in, so concurrent multi-dataset sweeps can never
-    * encode under the wrong model). The Viterbi fold runs
+    * paths; each caller trains via [[unigramCosts]] and hands its map
+    * in, so concurrent multi-dataset sweeps can never encode under
+    * the wrong model). The Viterbi fold runs
     * ONCE PER DISTINCT WORD of the frame, then joins back to the
     * exploded occurrences (exactly the oracle's wp-join shape): the
     * nested higher-order fold is interpreted (non-codegen), so
@@ -1641,14 +1633,14 @@ object TextAnalytics extends graft.QueryPack {
     // empty-input contract holds: encoding zero docs returns zero rows
     require(costs.contains(UNI_TRAINED),
       "unigramEncodeFrame needs a trained cost map — call " +
-        "trainedUnigramModelFor(s, d) and pass its result")
+        "unigramCosts(s, d) and pass its result")
     val dw = docs.select(col("doc_id"),
       explode(filter(tokens(col("text")), w => length(w) > 0)).as("w"))
     // spread: the distinct's output is byte-tiny so AQE coalesces it
     // to ~1 partition, serializing the interpreted Viterbi fold —
     // the expensive step this distinct exists to bound
     val wp = Tables.spread(dw.select(col("w")).distinct(), col("w"))
-      .withColumn("k", uniPieceCountCol(costs)(col("w")))
+      .transform(uniPieceCount(costs, "k"))
     val agg = dw.join(wp, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_ws"), sum(col("k")).as("n_p"))
@@ -1661,138 +1653,101 @@ object TextAnalytics extends graft.QueryPack {
           round(col("n_pieces").cast("double") / col("n_ws_tokens"), 9)))
   }
 
-  private def trainedUnigramCosts(s: SparkSession, d: String)
-      : Map[String, Double] = {
-    def fp(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(p => s"${p.getName}{${fp(p)}}").mkString(",")
-      else s"${f.length()}:${f.lastModified()}"
-    // schedule in the key: a spec-time sysprop flip must retrain, not
-    // read a model memoized under another schedule
-    val key = s"$d|${uniKeepSchedule.mkString(",")}|" +
-      fp(new java.io.File(d, "documents.parquet"))
-    uniCache.computeIfAbsent(key, _ =>
-      uniTrainFrames(s, d).probsFinal
-        .select(col("piece"), round(-log(col("p")), 9).as("cost"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap +
-        (UNI_TRAINED -> 0.0))
-  }
-
-  /** Viterbi piece count of one word column under a LITERAL cost
-    * map — the unigram ENCODE kernel (the bpeCountCol analog): the
-    * same min-plus fold as [[uniViterbiCounts]] with costs read from
-    * the broadcast literal instead of a join, and the backtrack
-    * collapsed to a step counter. */
-  private def uniPieceCountCol(costs: Map[String, Double])(
-      w: Column): Column = {
+  /** The one unigram Viterbi kernel, shared by the trainer's EM rounds
+    * and the encoder. Over a frame of words as chars `cs` and length
+    * `n`, it adds the choice array `chs`: chs(i) = 2 iff the best
+    * segmentation of chars 1..i ends in a 2-gram. Costs round9(−ln p)
+    * come from ONE map literal (r15 optimization, guide §2.3/§2.4;
+    * element_at on the broadcast literal, a missing piece → null →
+    * BIG — a word is always single-char segmentable, so the sentinel
+    * never wins). The map is vocabulary-sized (≤ alphabet + alphabet²
+    * pieces — scale-independent). The min-plus DP is an ARRAY FOLD
+    * (`aggregate` over positions — per-row work, no shuffle, any word
+    * length). Path costs are SUMS of the round-9 constants — no
+    * per-step rounding, so both engines compare bit-identical
+    * doubles; ties prefer the single-char step (strict < for the
+    * 2-gram). The cost arrays and the DP are separate projections, so
+    * each is computed once per word. */
+  private def uniChoices(costs: Map[String, Double])(
+      words: DataFrame): DataFrame = {
     val BIG = 1e15d
     val cm = typedlit(costs)
-    val cs = regexp_extract_all(w, lit("."), lit(0))
-    val n = size(cs)
-    val k1s = transform(cs, c => coalesce(element_at(cm, c), lit(BIG)))
-    val k2s = transform(sequence(lit(1), n), i =>
-      when(i >= 2, coalesce(element_at(cm,
-        concat(element_at(cs, i - 1), element_at(cs, i))), lit(BIG)))
-        .otherwise(lit(BIG)))
-    val vs = aggregate(sequence(lit(1), n), array(lit(0.0d)),
-      (acc, i) => concat(acc, array(least(
-        element_at(acc, i) + element_at(k1s, i),
-        when(i >= 2, element_at(acc, i - 1) + element_at(k2s, i))
-          .otherwise(lit(BIG))))))
-    val chs = transform(sequence(lit(1), n), i =>
-      when(i >= 2 &&
-        element_at(vs, i - 1) + element_at(k2s, i) <
-          element_at(vs, i) + element_at(k1s, i),
-        lit(2)).otherwise(lit(1)))
-    aggregate(sequence(lit(1), n),
-      struct(n.as("pos"), lit(0L).as("cnt")),
-      (acc, _) => {
-        val pos = acc.getField("pos")
-        when(pos <= 0, acc).otherwise(
-          when(element_at(chs, pos) === 2,
-            struct((pos - 2).as("pos"),
-              (acc.getField("cnt") + 1L).as("cnt")))
-          .otherwise(struct((pos - 1).as("pos"),
-            (acc.getField("cnt") + 1L).as("cnt"))))
-      }).getField("cnt")
-  }
-
-  /** One Viterbi-EM round of q_unigram_lm: exact piece counts of
-    * every word's single best segmentation under the given piece
-    * probabilities. Costs round9(-ln p) come from two vocabulary
-    * joins (collected into position order; unknown 2-grams read the
-    * sentinel — a word is always single-char segmentable, so the
-    * sentinel never wins); the min-plus DP and its backtrack run as
-    * ARRAY FOLDS (`aggregate` over positions — per-row codegen work,
-    * no shuffle, any word length). Path costs are SUMS of the round-9
-    * constants — no per-step rounding, so both engines compare
-    * bit-identical doubles; ties prefer the single-char step (strict
-    * < for the 2-gram). Returns (piece, cnt BIGINT) — exact integers,
-    * bit-stable under any partitioning. */
-  private def uniViterbiCounts(words: DataFrame, probs: DataFrame)
-      : DataFrame = uniViterbiCountsLit(words, uniCostMap(probs))
-
-  /** [[uniViterbiCounts]] with the cost table delivered as ONE map
-    * literal instead of two left-outer joins (r15 optimization,
-    * guide §2.3/§2.4): the per-position k1/k2 lookups become
-    * element_at on the broadcast literal — value-identical to the
-    * join+coalesce (missing key → null → BIG) — so the
-    * char-position explode, both cost-join exchanges and the
-    * collect_list/array_sort regroup that rebuilt per-word arrays
-    * all disappear; the k1s/k2s arrays are computed directly on the
-    * word row. The map is vocabulary-sized (≤ alphabet + alphabet²
-    * pieces — scale-independent), the same bound the memoized encode
-    * model already ships as a literal. */
-  private def uniViterbiCountsLit(words: DataFrame,
-      costs: Map[String, Double]): DataFrame = {
-    val BIG = 1e15d
-    val cm = typedlit(costs)
-    val withC = words
-      .select(col("cw"), col("cs"), col("n"),
-        transform(col("cs"), c =>
-          coalesce(element_at(cm, c), lit(BIG))).as("k1s"),
-        transform(sequence(lit(1), col("n")), i =>
-          when(i >= 2, coalesce(element_at(cm,
-            concat(element_at(col("cs"), i - 1),
-              element_at(col("cs"), i))), lit(BIG)))
-            .otherwise(lit(BIG))).as("k2s"))
-    // forward min-plus: vs = [v0 .. vn];
-    // v_i = least(v_{i-1} + k1_i, v_{i-2} + k2_i)
-    val withV = withC.withColumn("vs",
-      aggregate(sequence(lit(1), col("n")), array(lit(0.0d)),
+    val (cs, n) = (col("cs"), col("n"))
+    words
+      .withColumn("k1s", transform(cs, c =>
+        coalesce(element_at(cm, c), lit(BIG))))
+      .withColumn("k2s", transform(sequence(lit(1), n), i =>
+        when(i >= 2, coalesce(element_at(cm,
+          concat(element_at(cs, i - 1), element_at(cs, i))), lit(BIG)))
+          .otherwise(lit(BIG))))
+      // forward min-plus: vs = [v0 .. vn];
+      // v_i = least(v_{i-1} + k1_i, v_{i-2} + k2_i)
+      .withColumn("vs", aggregate(sequence(lit(1), n), array(lit(0.0d)),
         (acc, i) => concat(acc, array(least(
           element_at(acc, i) + element_at(col("k1s"), i),
           when(i >= 2,
             element_at(acc, i - 1) + element_at(col("k2s"), i))
             .otherwise(lit(BIG)))))))
-    // choice at i: the 2-gram step iff STRICTLY cheaper (ties take
-    // the single — the deterministic tie rule both engines share)
-    val withCh = withV.withColumn("chs",
-      transform(sequence(lit(1), col("n")), i =>
+      // choice at i: the 2-gram step iff STRICTLY cheaper (ties take
+      // the single — the deterministic tie rule both engines share)
+      .withColumn("chs", transform(sequence(lit(1), n), i =>
         when(i >= 2 &&
           element_at(col("vs"), i - 1) + element_at(col("k2s"), i) <
             element_at(col("vs"), i) + element_at(col("k1s"), i),
           lit(2)).otherwise(lit(1))))
+      .drop("k1s", "k2s", "vs")
+  }
+
+  /** Viterbi piece count of every word `w` of `words` under a LITERAL
+    * cost map, as the BIGINT column `out` — the unigram ENCODE kernel
+    * (the bpeCountCol analog): [[uniChoices]], then a backtrack that
+    * only counts its steps. */
+  private def uniPieceCount(costs: Map[String, Double], out: String)(
+      words: DataFrame): DataFrame =
+    words.withColumn("cs", regexp_extract_all(col("w"), lit("."), lit(0)))
+      .withColumn("n", size(col("cs")))
+      .transform(uniChoices(costs))
+      .withColumn(out, aggregate(sequence(lit(1), col("n")),
+        struct(col("n").as("pos"), lit(0L).as("cnt")),
+        (acc, _) => {
+          val pos = acc.getField("pos")
+          when(pos <= 0, acc).otherwise(
+            when(element_at(col("chs"), pos) === 2,
+              struct((pos - 2).as("pos"),
+                (acc.getField("cnt") + 1L).as("cnt")))
+            .otherwise(struct((pos - 1).as("pos"),
+              (acc.getField("cnt") + 1L).as("cnt"))))
+        }).getField("cnt"))
+      .drop("cs", "n", "chs")
+
+  /** One Viterbi-EM round of q_unigram_lm: exact piece counts of
+    * every word's single best segmentation under `costs` —
+    * [[uniChoices]], then a backtrack that collects the chosen pieces.
+    * Returns (piece, cnt BIGINT) — exact integers, bit-stable under
+    * any partitioning. */
+  private def uniViterbiCounts(words: DataFrame,
+      costs: Map[String, Double]): DataFrame = {
     // backtrack fold: walk pos from n by the chosen step widths,
     // collecting 2-gram and single positions (n iterations, no-ops
     // once pos reaches 0)
-    val bt = withCh.withColumn("bt",
-      aggregate(sequence(lit(1), col("n")),
-        struct(col("n").as("pos"),
-          array().cast("array<int>").as("gs"),
-          array().cast("array<int>").as("ss")),
-        (acc, _) => {
-          val pos = acc.getField("pos")
-          val take2 = element_at(col("chs"), pos) === 2
-          when(pos <= 0, acc).otherwise(
-            when(take2, struct((pos - 2).as("pos"),
-              concat(acc.getField("gs"), array(pos)).as("gs"),
-              acc.getField("ss").as("ss")))
-            .otherwise(struct((pos - 1).as("pos"),
-              acc.getField("gs").as("gs"),
-              concat(acc.getField("ss"), array(pos)).as("ss"))))
-        }))
+    val bt = words.select(col("cw"), col("cs"), col("n"))
+      .transform(uniChoices(costs))
+      .withColumn("bt",
+        aggregate(sequence(lit(1), col("n")),
+          struct(col("n").as("pos"),
+            array().cast("array<int>").as("gs"),
+            array().cast("array<int>").as("ss")),
+          (acc, _) => {
+            val pos = acc.getField("pos")
+            val take2 = element_at(col("chs"), pos) === 2
+            when(pos <= 0, acc).otherwise(
+              when(take2, struct((pos - 2).as("pos"),
+                concat(acc.getField("gs"), array(pos)).as("gs"),
+                acc.getField("ss").as("ss")))
+              .otherwise(struct((pos - 1).as("pos"),
+                acc.getField("gs").as("gs"),
+                concat(acc.getField("ss"), array(pos)).as("ss"))))
+          }))
     val sRows = bt.select(col("cw"), col("cs"),
         explode(col("bt.ss")).as("i"))
       .select(element_at(col("cs"), col("i")).as("piece"), col("cw"))
@@ -1831,11 +1786,6 @@ object TextAnalytics extends graft.QueryPack {
           round(col("n_bpe_tokens").cast("double") / col("n_ws_tokens"), 9)))
   }
 
-  /** Memoized merge-table access for callers OUTSIDE the pack (the
-    * streaming drain) — the unigram trainedUnigramModelFor analog. */
-  private[graft] def trainedBpeMergesFor(s: SparkSession, d: String)
-      : Seq[(Long, String, String, Long)] = learnBpeMerges(s, d)
-
   /** BPE token count of one word column under the learned merge
     * table — the ENCODE kernel, shared by q_tokenize_bpe (per-doc) and
     * q_tokenizer_fertility (per-source) so the audit and the tokenizer
@@ -1851,56 +1801,27 @@ object TextAnalytics extends graft.QueryPack {
     size(split(trim(seqN, "|"), "\\|"))
   }
 
-  /** The first ROUNDS byte-pair-encoding merges over the corpus
-    * vocabulary — shared by q_bpe_merges (the merge table itself) and
-    * q_tokenize_bpe (which applies them). Returns (round, "l r",
-    * merged, weighted count). Memoized per dataset dir: the learn is
-    * fully deterministic, and without the memo a sweep that runs both
-    * BPE queries pays the 3-round train (3 agg+collect jobs) twice.
-    * The memo key folds in the source file's (size, mtime) fingerprint
-    * so a documents.parquet regenerated under the same path within one
-    * long-lived JVM (spec session, dev REPL) can never serve a stale
-    * merge table — correctness paths don't depend on clearMemos(). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, Long)]]()
-
-  /** Drop JVM-side memos. Bench calls this between timed reps so every
-    * measurement pays its true cost; Verify/specs keep the memo (they
-    * measure correctness, not time). */
-  def clearMemos(): Unit = { bpeCache.clear(); uniCache.clear() }
-  private def learnBpeMerges(s: SparkSession, d: String)
-      : Seq[(Long, String, String, Long)] = {
-    // fingerprint handles ALL layouts: a single file (length+mtime), a
-    // flat directory, and a PARTITIONED directory tree — a directory's
-    // own length/mtime does not change when files inside it are
-    // overwritten in place, so fold every file's (name, length, mtime)
-    // RECURSIVELY. The full fingerprint string is the cache key (no
-    // 32-bit hashCode collapse — a collision would silently serve a
-    // stale merge table).
-    def fp(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(p => s"${p.getName}{${fp(p)}}").mkString(",")
-      else s"${f.length()}:${f.lastModified()}"
-    val key = s"$d|r=$bpeRounds|${fp(new java.io.File(d, "documents.parquet"))}"
-    bpeCache.computeIfAbsent(key, _ => learnBpeMergesUncached(s, d))
-  }
-
   /** BPE merge-round count (VERDICT r14 item 3 — un-toy the bake-off
-    * side): read PER CALL like graft.unigram.keep, embedded into the
-    * generated oracle SQL from the same read so both engines train
-    * the identical merge table under any setting. Default 3 keeps
-    * the per-round sweep cost (each round = one corpus agg + a 1-row
-    * argmax); the bake-off row in BASELINE.md runs at 12. */
-  private def bpeRounds: Int = {
-    val r = sys.props.get("graft.bpe.rounds").map(_.trim.toInt).getOrElse(3)
-    require(r >= 1 && r <= 64, s"graft.bpe.rounds must be in [1,64], got $r")
-    r
-  }
+    * side): a parameter of the trainer and of its oracle builders,
+    * which embed it into the generated SQL, so both engines train the
+    * identical merge table under any count (specs call both at a
+    * second one). 3 keeps the per-round sweep cost (each round = one
+    * corpus agg + a 1-row argmax); the bake-off row in BASELINE.md
+    * runs at 12. */
+  private[graft] val BPE_ROUNDS = 3
 
-  private def learnBpeMergesUncached(s: SparkSession, d: String)
-      : Seq[(Long, String, String, Long)] = {
-    val ROUNDS = bpeRounds
+  private def requireRounds(rounds: Int): Unit =
+    require(rounds >= 1 && rounds <= 64,
+      s"the BPE round count must be in [1,64], got $rounds")
+
+  /** The first `rounds` byte-pair-encoding merges over the corpus
+    * vocabulary — the one trainer behind q_bpe_merges (the merge
+    * table itself), every BPE encoder and streaming drain #33.
+    * Returns (round, "l r", merged, weighted count). A plain function
+    * of the corpus and the round count: every call trains. */
+  private[graft] def learnBpeMerges(s: SparkSession, d: String,
+      rounds: Int = BPE_ROUNDS): Seq[(Long, String, String, Long)] = {
+    requireRounds(rounds)
     def syms = split(trim(col("seq"), "|"), "\\|")
     val words0 = Tables.spread(Tables(s, d, "documents"), col("doc_id"))
         .select(explode(tokens(col("text"))).as("w"))
@@ -1917,7 +1838,7 @@ object TextAnalytics extends graft.QueryPack {
         .persist()
       var words = words0
       val out = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-      for (r <- 1 to ROUNDS) {
+      for (r <- 1 to rounds) {
         // ordering by the "l r" string equals ordering by (l, r):
         // symbols never contain a space and ' ' sorts below word chars
         val top = words.filter(size(syms) >= 2)
@@ -1936,6 +1857,42 @@ object TextAnalytics extends graft.QueryPack {
       }
       words0.unpersist(false)
       out.toSeq
+  }
+
+  /** q_bpe_merges at a given round count (the registry runs
+    * [[BPE_ROUNDS]]). */
+  private[graft] def bpeMerges(s: SparkSession, d: String,
+      rounds: Int = BPE_ROUNDS): DataFrame = {
+    import s.implicits._
+    learnBpeMerges(s, d, rounds).toDF("round", "pair", "merged", "cnt")
+      .orderBy(col("round"))
+  }
+
+  /** q_tokenizer_fertility at a given BPE round count (the registry
+    * runs [[BPE_ROUNDS]]). */
+  private[graft] def tokenizerFertility(s: SparkSession, d: String,
+      rounds: Int = BPE_ROUNDS): DataFrame = {
+    val merges = learnBpeMerges(s, d, rounds)
+    val toksF = filter(tokens(col("text")), w => length(w) > 0)
+    Tables(s, d, "documents")
+      .select(col("source"),
+        size(toksF).cast("long").as("ws"),
+        aggregate(toksF, lit(0), (acc, w) => acc + bpeCountCol(merges)(w))
+          .cast("long").as("bpe"),
+        length(regexp_replace(col("text"), " ", "")).cast("long").as("ch"))
+      .groupBy(col("source"))
+      .agg(sum(col("ws")).as("n_ws_tokens"),
+        sum(col("bpe")).as("n_bpe_tokens"),
+        sum(col("ch")).as("n_chars"))
+      .select(col("source"), col("n_ws_tokens"), col("n_bpe_tokens"),
+        col("n_chars"),
+        round(col("n_bpe_tokens").cast("double") /
+          nullif(col("n_ws_tokens"), lit(0L)).cast("double"), 9)
+          .as("fertility"),
+        round(col("n_chars").cast("double") /
+          nullif(col("n_bpe_tokens"), lit(0L)).cast("double"), 9)
+          .as("chars_per_token"))
+      .orderBy(col("source"))
   }
 
   /** Continuation of the query registry — purely a file-layout split
@@ -1999,10 +1956,10 @@ object TextAnalytics extends graft.QueryPack {
     // Min-plus over exact cost constants has neither failure mode at
     // any word length. Ties prefer the single-char step
     // (deterministic, both engines strict-<). Rounds follow the
-    // PRUNE SCHEDULE [[uniKeepSchedule]] (default 24 → 16,
-    // graft.unigram.keep, the SentencePiece shrink-toward-target
-    // discipline): round r scores the incoming vocabulary and keeps
-    // the schedule's r-th-best 2-gram count by (count desc, piece);
+    // PRUNE SCHEDULE [[UNI_KEEP]] (24 → 16, the SentencePiece
+    // shrink-toward-target discipline): round r scores the incoming
+    // vocabulary and keeps the schedule's r-th-best 2-gram count by
+    // (count desc, piece);
     // a final report round re-segments under the end model's
     // re-normalized probabilities (mass redistributes onto kept
     // pieces). Scale: everything is vocabulary-sized after the one
@@ -2011,41 +1968,23 @@ object TextAnalytics extends graft.QueryPack {
     // array folds over word length — no shuffle, no recursion in the
     // engine. Output: (rnd, piece, len, cnt, prob_in, kept);
     // UnigramLmSpec pins the prune-round invariants.
-    "q_unigram_lm" -> ((s, d) => {
-      val t = uniTrainFrames(s, d)
-      val n = t.rounds.length
-      val perRound = t.rounds.zipWithIndex.map { case ((kept, pin), i) =>
-        kept.join(pin, Seq("piece"))
-          .select(lit((i + 1).toLong).as("rnd"), col("piece"), col("len"),
-            col("cnt"), col("p").as("prob_in"), col("kept"))
-      }
-      val cF = uniViterbiCounts(t.words, t.probsFinal)
-      val last = t.rounds.last._1.filter(col("kept"))
-        .select(col("piece"), col("len"))
-        .join(cF, Seq("piece"), "left_outer")
-        .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-        .join(t.probsFinal, Seq("piece"))
-        .select(lit((n + 1).toLong).as("rnd"), col("piece"), col("len"),
-          col("cnt"), col("p").as("prob_in"), lit(true).as("kept"))
-      (perRound :+ last).reduce(_ unionByName _)
-        .orderBy(col("rnd"), col("piece"))
-    }),
+    "q_unigram_lm" -> ((s, d) => unigramLm(s, d)),
 
     // The ENCODE side of the unigram tokenizer — q_tokenize_bpe's
     // twin under the TRAINED unigram model (the post-prune smoothed
     // probabilities q_unigram_lm's round 2 runs under): every
     // document is Viterbi-segmented and its piece count reported
     // next to the whitespace token count. Learn is the corpus-pass
-    // trainer above (memoized per dataset like the BPE merges —
-    // the trained model is vocabulary-sized, ~40 rows); APPLY is a
+    // trainer above (the trained model is vocabulary-sized, ~40
+    // rows); APPLY is a
     // pure narrow map with the cost table inlined as a literal map —
     // at 100 TB the learned vocab broadcasts and rows never shuffle
     // to tokenize, exactly the q_tokenize_bpe posture. Counts are
     // exact integers (the min-plus fold; no per-step rounding).
     "q_unigram_encode" -> ((s, d) => {
-      // the model trains on the FULL corpus (memoized), then apply is
-      // a pure narrow map — one definition, batch + drain #30
-      val model = trainedUnigramModelFor(s, d)
+      // the model trains on the FULL corpus, then apply is a pure
+      // narrow map — one definition, batch + drain #30
+      val model = unigramCosts(s, d)
       Tables(s, d, "documents").select(col("doc_id"), col("text"))
         .transform(unigramEncodeFrame(model))
         .orderBy(col("doc_id"))
@@ -2056,11 +1995,11 @@ object TextAnalytics extends graft.QueryPack {
     // between merge-based and probabilistic vocabularies from measured
     // output"; this is that choice, measured): per source, the SAME
     // corpus encoded under BOTH trained tokenizers — the
-    // graft.bpe.rounds-merge BPE table and the schedule-pruned
+    // BPE_ROUNDS-merge BPE table and the schedule-pruned
     // unigram LM — with each family's
     // fertility (pieces per whitespace word) and the per-source winner
     // (fewer pieces = more content per token budget; ties explicit).
-    // Both models are memoized corpus-pass trainers; the encode is one
+    // Both models are corpus-pass trainers; the encode is one
     // pass over DISTINCT words (the q_unigram_encode device — both
     // count kernels are interpreted folds, so per-occurrence
     // evaluation pays vocabulary×occurrence instead of vocabulary)
@@ -2071,10 +2010,9 @@ object TextAnalytics extends graft.QueryPack {
       // the two trainers under comparison are independent collect-
       // bounded driver loops (BPE argmax rounds; unigram EM rounds)
       // over their own frames — overlap them (Tables.inParallel,
-      // guide §2.6) instead of serializing the two training passes;
-      // memos are ConcurrentHashMaps, models identical either way
+      // guide §2.6) instead of serializing the two training passes
       val (merges, uni) = Tables.inParallel(
-        learnBpeMerges(s, d), trainedUnigramModelFor(s, d))
+        learnBpeMerges(s, d), unigramCosts(s, d))
       val dw = Tables.spread(Tables(s, d, "documents"), col("doc_id"))
         .select(col("source"),
           explode(filter(tokens(col("text")), w => length(w) > 0)).as("w"))
@@ -2083,7 +2021,7 @@ object TextAnalytics extends graft.QueryPack {
       // (measured 1-task ~1 s stages) — parallelize the fold pass
       val wp = Tables.spread(dw.select(col("w")).distinct(), col("w"))
         .withColumn("kb", bpeCountCol(merges)(col("w")).cast("long"))
-        .withColumn("ku", uniPieceCountCol(uni)(col("w")))
+        .transform(uniPieceCount(uni, "ku"))
       dw.join(wp, Seq("w"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_ws_tokens"),
@@ -2212,10 +2150,11 @@ object TextAnalytics extends graft.QueryPack {
   /** The q_unigram_lm TRAINING prefix (seed vocab, then per schedule
     * round r: Viterbi counts under uprobs{r-1} → prune at the round's
     * keep width → smoothed post-prune probs uprobs{r}) — shared by
-    * the q_unigram_lm and q_unigram_encode oracles. A def: the
-    * schedule is re-read per call, so a spec-time sysprop flip keeps
-    * both engines in lockstep. */
-  private def uniTrainDuck: String = {
+    * the q_unigram_lm and q_unigram_encode oracles. A function of the
+    * schedule, as the Spark trainer is, so both engines train in
+    * lockstep under any schedule. */
+  private def uniTrainDuck(schedule: Seq[Int]): String = {
+    requireSchedule(schedule)
     val head =
       s"""uwords AS MATERIALIZED (
          |  SELECT w, CAST(COUNT(*) AS BIGINT) AS cw,
@@ -2241,7 +2180,7 @@ object TextAnalytics extends graft.QueryPack {
          |uposx AS MATERIALIZED (SELECT w, cw, n, cs,
          |  unnest(range(1, n + 1)) AS i
          |        FROM uwords)""".stripMargin
-    val steps = uniKeepSchedule.zipWithIndex.map { case (keep, i0) =>
+    val steps = schedule.zipWithIndex.map { case (keep, i0) =>
       val r = i0 + 1
       s"""${uniRoundDuck(s"$r", s"uprobs${r - 1}")},
          |ukept$r AS MATERIALIZED (
@@ -2310,13 +2249,12 @@ object TextAnalytics extends graft.QueryPack {
        |  WHERE b.piece IS NOT NULL GROUP BY b.piece)""".stripMargin
 
   /** The BPE learn CTE prefix (w0, then p{r}/b{r}[/w{r}] per round)
-    * — GENERATED for [[bpeRounds]] rounds from the same per-call
-    * sysprop read the Spark trainer uses (the graft.unigram.keep
-    * recipe), so both engines unroll the identical merge chain under
-    * any setting. The last round emits no w{R}: nothing reads the
-    * applied table after the final argmax. A def, not a val: the
-    * round count is re-read per oracle generation. */
-  private def bpeLearnSqlDuck: String = {
+    * — GENERATED for `rounds` rounds, the round count the Spark
+    * trainer takes, so both engines unroll the identical merge chain
+    * under any count. The last round emits no w{R}: nothing reads the
+    * applied table after the final argmax. */
+  private def bpeLearnSqlDuck(rounds: Int): String = {
+    requireRounds(rounds)
     val head =
       """w0 AS MATERIALIZED (
         |  SELECT '|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'
@@ -2325,7 +2263,7 @@ object TextAnalytics extends graft.QueryPack {
         |          SELECT unnest(string_split(lower(text), ' ')) AS w
         |          FROM documents) t
         |        WHERE length(w) > 0 GROUP BY w) v)""".stripMargin
-    val rounds = (1 to bpeRounds).map { r =>
+    val arms = (1 to rounds).map { r =>
       val core =
         s"""p$r AS (
            |  SELECT pair, SUM(cnt) AS c FROM (
@@ -2337,7 +2275,7 @@ object TextAnalytics extends graft.QueryPack {
            |    WHERE len(ss) >= 2) t
            |  GROUP BY pair),
            |b$r AS (SELECT pair, c FROM p$r ORDER BY c DESC, pair LIMIT 1)""".stripMargin
-      if (r == bpeRounds) core
+      if (r == rounds) core
       else core +
         s""",
            |w$r AS MATERIALIZED (SELECT replace(seq,
@@ -2345,14 +2283,14 @@ object TextAnalytics extends graft.QueryPack {
            |         (SELECT '|' || replace(pair, ' ', '') || '|' FROM b$r))
            |         AS seq, cnt FROM w${r - 1})""".stripMargin
     }
-    (head +: rounds).mkString(",\n")
+    (head +: arms).mkString(",\n")
   }
 
   /** The merge-scalar CTE (t{r} = '|l|r|' target, m{r} = '|lr|'
     * replacement per round) the encode lambdas cross-join so the
-    * merge table rides as columns — generated for [[bpeRounds]]. */
-  private def bpeMmDuck: String = {
-    val cols = (1 to bpeRounds).map { r =>
+    * merge table rides as columns — generated for `rounds` rounds. */
+  private def bpeMmDuck(rounds: Int): String = {
+    val cols = (1 to rounds).map { r =>
       s"""  (SELECT '|' || replace(pair, ' ', '|') || '|' FROM b$r) AS t$r,
          |  (SELECT '|' || replace(pair, ' ', '') || '|' FROM b$r) AS m$r""".stripMargin
     }.mkString(",\n")
@@ -2361,14 +2299,12 @@ object TextAnalytics extends graft.QueryPack {
 
   /** The encode replace chain over a sentineled symbol string —
     * round r's replace wraps round r-1's, exactly the Spark
-    * [[bpeCountCol]] foldLeft. `depth` < bpeRounds gives the
-    * merge-table PREFIX chain (q_bpe_vocab_curve's per-depth
-    * encodes). */
-  private def bpeReplDuck(inner: String, depth: Int = -1): String = {
-    val d = if (depth < 0) bpeRounds else depth
-    (1 to d).foldLeft(inner)((acc, r) =>
+    * [[bpeCountCol]] foldLeft, over the first `depth` merges (a
+    * depth below the trained round count gives the merge-table PREFIX
+    * chain of q_bpe_vocab_curve's per-depth encodes). */
+  private def bpeReplDuck(inner: String, depth: Int): String =
+    (1 to depth).foldLeft(inner)((acc, r) =>
       s"replace($acc, mm.t$r, mm.m$r)")
-  }
 
   /** DuckDB twin of the Winnow kernel (`WinnowExpression.winnow`) over
     * the docs of `src`: every 8-char rolling hash h at position i, and
@@ -2392,36 +2328,53 @@ object TextAnalytics extends graft.QueryPack {
        |    COUNT(*) OVER (PARTITION BY doc_id) AS nh
        |  FROM hashes)""".stripMargin
 
+  /** The q_unigram_lm oracle at a given prune schedule: the Viterbi
+    * EM restated — recursive-CTE min-plus DP + backtrack per word,
+    * exact integer counts, the prune-schedule rounds plus the final
+    * re-segmentation round. */
+  private[graft] def unigramLmOracle(schedule: Seq[Int]): String = {
+    val n = schedule.length
+    val perRound = (1 to n).map { r =>
+      s"""SELECT CAST($r AS BIGINT) AS rnd, k.piece, k.len, k.cnt,
+         |  p.p AS prob_in, k.kept
+         |FROM ukept$r k JOIN uprobs${r - 1} p ON p.piece = k.piece""".stripMargin
+    }.mkString("\nUNION ALL\n")
+    s"""WITH RECURSIVE ${uniTrainDuck(schedule)},
+       |${uniRoundDuck(s"${n + 1}", s"uprobs$n")}
+       |$perRound
+       |UNION ALL
+       |SELECT CAST(${n + 1} AS BIGINT), k.piece, k.len,
+       |  COALESCE(cf.cnt, 0) AS cnt, pn.p, TRUE
+       |FROM ukept$n k
+       |LEFT JOIN cnt${n + 1} cf ON cf.piece = k.piece
+       |JOIN uprobs$n pn ON pn.piece = k.piece
+       |WHERE k.kept
+       |ORDER BY rnd, piece""".stripMargin
+  }
+
+  /** The q_bpe_merges oracle at a given round count: the rounds
+    * unrolled; each b_k is the 1-row argmax the Spark driver collects,
+    * applied via the same sentinel-guarded replace. */
+  private[graft] def bpeMergesOracle(rounds: Int): String = {
+    val arms = (1 to rounds).map { r =>
+      s"""  SELECT CAST($r AS BIGINT) AS round, pair,
+         |         replace(pair, ' ', '') AS merged, CAST(c AS BIGINT) AS cnt FROM b$r""".stripMargin
+    }.mkString("\n  UNION ALL\n")
+    s"""WITH ${bpeLearnSqlDuck(rounds)}
+      |SELECT * FROM (
+      |$arms) m
+      |ORDER BY round""".stripMargin
+  }
+
   def oracles: Map[String, String] = Map(
-    // the Viterbi EM restated: recursive-CTE min-plus DP + backtrack
-    // per word, exact integer counts, the prune-schedule rounds plus
-    // the final re-segmentation round
-    "q_unigram_lm" -> {
-      val n = uniKeepSchedule.length
-      val perRound = (1 to n).map { r =>
-        s"""SELECT CAST($r AS BIGINT) AS rnd, k.piece, k.len, k.cnt,
-           |  p.p AS prob_in, k.kept
-           |FROM ukept$r k JOIN uprobs${r - 1} p ON p.piece = k.piece""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH RECURSIVE $uniTrainDuck,
-         |${uniRoundDuck(s"${n + 1}", s"uprobs$n")}
-         |$perRound
-         |UNION ALL
-         |SELECT CAST(${n + 1} AS BIGINT), k.piece, k.len,
-         |  COALESCE(cf.cnt, 0) AS cnt, pn.p, TRUE
-         |FROM ukept$n k
-         |LEFT JOIN cnt${n + 1} cf ON cf.piece = k.piece
-         |JOIN uprobs$n pn ON pn.piece = k.piece
-         |WHERE k.kept
-         |ORDER BY rnd, piece""".stripMargin
-    },
+    "q_unigram_lm" -> unigramLmOracle(UNI_KEEP),
 
     // the trained model's final backtrack already carries every
     // word's best segmentation — per-word piece counts fall out of
     // the last bt for free, then one doc-words join
     "q_unigram_encode" -> {
-      val n = uniKeepSchedule.length
-      s"""WITH RECURSIVE $uniTrainDuck,
+      val n = UNI_KEEP.length
+      s"""WITH RECURSIVE ${uniTrainDuck(UNI_KEEP)},
          |${uniRoundDuck(s"${n + 1}", s"uprobs$n")},
          |wp AS (SELECT b.w, CAST(COUNT(b.piece) AS BIGINT) AS k
          |       FROM bt${n + 1} b WHERE b.piece IS NOT NULL GROUP BY b.w),
@@ -3086,25 +3039,14 @@ object TextAnalytics extends graft.QueryPack {
          |ORDER BY qid""".stripMargin
     },
 
-    // the 3 rounds unrolled; each b_k is the 1-row argmax the Spark
-    // driver collects, applied via the same sentinel-guarded replace.
-    "q_bpe_merges" -> {
-      val arms = (1 to bpeRounds).map { r =>
-        s"""  SELECT CAST($r AS BIGINT) AS round, pair,
-           |         replace(pair, ' ', '') AS merged, CAST(c AS BIGINT) AS cnt FROM b$r""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH $bpeLearnSqlDuck
-        |SELECT * FROM (
-        |$arms) m
-        |ORDER BY round""".stripMargin
-    },
+    "q_bpe_merges" -> bpeMergesOracle(BPE_ROUNDS),
 
     // learn prefix shared with q_bpe_merges; the encode applies the
     // learned merge scalars (cross-joined as columns so the lambda
     // can see them) to every word of every document.
     "q_tokenize_bpe" ->
-      s"""WITH $bpeLearnSqlDuck,
-        |$bpeMmDuck,
+      s"""WITH ${bpeLearnSqlDuck(BPE_ROUNDS)},
+        |${bpeMmDuck(BPE_ROUNDS)},
         |docs AS (
         |  SELECT doc_id,
         |    list_filter(string_split(lower(text), ' '), w -> length(w) > 0)
@@ -3114,7 +3056,7 @@ object TextAnalytics extends graft.QueryPack {
         |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_ws_tokens,
         |    CAST(COALESCE(list_sum(list_transform(toks, w ->
         |      len(string_split(trim(${bpeReplDuck(
-               "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'")},
+               "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'", BPE_ROUNDS)},
         |        '|'), '|')))), 0)
         |      AS BIGINT) AS n_bpe_tokens
         |  FROM docs, mm)
@@ -3127,8 +3069,8 @@ object TextAnalytics extends graft.QueryPack {
     // the same learn prefix + encode lambda, grouped by source; the
     // two ratios restated with the same nullif guards
     "q_tokenizer_fertility" ->
-      s"""WITH $bpeLearnSqlDuck,
-        |$bpeMmDuck,
+      s"""WITH ${bpeLearnSqlDuck(BPE_ROUNDS)},
+        |${bpeMmDuck(BPE_ROUNDS)},
         |docs AS (
         |  SELECT source, text,
         |    list_filter(string_split(lower(text), ' '), w -> length(w) > 0)
@@ -3138,7 +3080,7 @@ object TextAnalytics extends graft.QueryPack {
         |  SELECT source, CAST(len(toks) AS BIGINT) AS ws,
         |    CAST(COALESCE(list_sum(list_transform(toks, w ->
         |      len(string_split(trim(${bpeReplDuck(
-               "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'")},
+               "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'", BPE_ROUNDS)},
         |        '|'), '|')))), 0)
         |      AS BIGINT) AS bpe,
         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS ch
@@ -3160,18 +3102,18 @@ object TextAnalytics extends graft.QueryPack {
     // family's own machinery (bt backtrack / merge-replace lambda)
     // over the distinct-word frame, one source-grain join-back
     "q_tokenizer_compare" -> {
-      val n = uniKeepSchedule.length
-      s"""WITH RECURSIVE $uniTrainDuck,
+      val n = UNI_KEEP.length
+      s"""WITH RECURSIVE ${uniTrainDuck(UNI_KEEP)},
          |${uniRoundDuck(s"${n + 1}", s"uprobs$n")},
          |wpu AS (SELECT b.w, CAST(COUNT(b.piece) AS BIGINT) AS ku
          |        FROM bt${n + 1} b WHERE b.piece IS NOT NULL GROUP BY b.w),
-         |$bpeLearnSqlDuck,
-         |$bpeMmDuck,
+         |${bpeLearnSqlDuck(BPE_ROUNDS)},
+         |${bpeMmDuck(BPE_ROUNDS)},
          |docw AS (SELECT source, w FROM (
          |    SELECT source, unnest(string_split(lower(text), ' ')) AS w
          |    FROM documents) t WHERE length(w) > 0),
          |wpb AS (SELECT w, CAST(len(string_split(trim(${bpeReplDuck(
-                "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'")},
+                "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'", BPE_ROUNDS)},
          |      '|'), '|'))
          |    AS BIGINT) AS kb
          |  FROM (SELECT DISTINCT w FROM docw) x, mm),
@@ -3195,7 +3137,7 @@ object TextAnalytics extends graft.QueryPack {
     // columns from the same mm scalars (prefix chains), 1-row sums
     // unpivoted — fertility per merge-table prefix 0..R
     "q_bpe_vocab_curve" -> {
-      val depths = 0 to bpeRounds
+      val depths = 0 to BPE_ROUNDS
       val inner =
         "'|' || array_to_string(regexp_extract_all(w, '.'), '|') || '|'"
       val encCols = depths.map { k =>
@@ -3209,8 +3151,8 @@ object TextAnalytics extends graft.QueryPack {
            |    round(CAST(s$k AS DOUBLE) /
            |      CAST(nullif(ws, 0) AS DOUBLE), 9) AS fertility FROM tot""".stripMargin
       }.mkString("\n  UNION ALL\n")
-      s"""WITH $bpeLearnSqlDuck,
-         |$bpeMmDuck,
+      s"""WITH ${bpeLearnSqlDuck(BPE_ROUNDS)},
+         |${bpeMmDuck(BPE_ROUNDS)},
          |dw AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cw FROM (
          |    SELECT unnest(string_split(lower(text), ' ')) AS w
          |    FROM documents) t WHERE length(w) > 0 GROUP BY w),

@@ -64,109 +64,89 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** K centroids carried as ONE serializable value inside a single
-  * expression node — the delivery vehicle that makes coarse-quantizer
-  * plans K-independent. The sqrt-K rule (nlist = ceil(sqrt N)) means K
-  * grows with the corpus; inlining K per-centroid literal subtrees into
-  * the projection made the expression TREE grow with the data (fine at
-  * K≈45, fatal at the K~10⁵ a 100 TB corpus implies: Catalyst analysis
-  * and codegen blow up long before execution starts). Here the matrix
-  * rides as one `ctx.addReferenceObj` constant — the same mechanism
-  * Spark uses to ship broadcast values into generated code — so plan
-  * size, analysis time, and generated-code size are all O(1) in K and
-  * the K×D floats are shipped once per task, not unrolled into code.
+/** A centroid set carried as ONE serializable value inside a single
+  * expression node ([[CentroidScores]]) — the delivery vehicle that
+  * makes coarse-quantizer plans K-independent. The sqrt-K rule
+  * (nlist = ceil(sqrt N)) means K grows with the corpus; inlining K
+  * per-centroid literal subtrees into the projection made the
+  * expression TREE grow with the data (fine at K≈45, fatal at the
+  * K~10⁵ a 100 TB corpus implies: Catalyst analysis and codegen blow up
+  * long before execution starts). Here the matrix rides as one
+  * `ctx.addReferenceObj` constant — the same mechanism Spark uses to
+  * ship broadcast values into generated code — so plan size, analysis
+  * time, and generated-code size are all O(1) in K and the K×D floats
+  * are shipped once per task, not unrolled into code.
   *
-  * Scoring loops are plain fused Java loops with strictly left-to-right
-  * DOUBLE accumulation and (cosine mode) the exact semantics of Spark's
-  * `round(_, 9)` (BigDecimal HALF_UP, NaN/Inf passthrough), so results
-  * are bit-identical to the former literal-array formulation and to the
-  * DuckDB oracles. */
+  * Scoring loops are plain Java loops with strictly left-to-right
+  * DOUBLE accumulation ([[dot]]) and the exact semantics of Spark's
+  * `round(_, 9)` ([[round9]]), so results are bit-identical to the
+  * former literal-array formulation and to the DuckDB oracles. */
+trait CentroidKernel extends Serializable {
+
+  /** The array<struct> type [[compute]] returns. */
+  def dataType: DataType
+
+  /** Score one row's embedding; `nrm` is its precomputed norm. */
+  def compute(emb: ArrayData, nrm: Double): ArrayData
+
+  protected final def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  // Mirrors Spark RoundBase on DoubleType: NaN/Infinity pass through,
+  // else BigDecimal.valueOf(v).setScale(9, HALF_UP).
+  protected final def round9(v: Double): Double =
+    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
+    else java.math.BigDecimal.valueOf(v)
+      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
+}
+
+object CentroidKernel {
+  val cosineType: DataType =
+    ArrayType(StructType(Seq(
+      StructField("sim", DoubleType, nullable = false),
+      StructField("negcid", LongType, nullable = false))), containsNull = false)
+
+  val l2Type: DataType =
+    ArrayType(StructType(Seq(
+      StructField("d2", DoubleType, nullable = false),
+      StructField("k", IntegerType, nullable = false))), containsNull = false)
+}
+
+/** K flat centroids: (round-9 cosine, -cid) per centroid [cosine], or
+  * the exact squared L2 distance (v·v + c·c) − v·c·2 with its id as
+  * `k` [L2]. */
 final class CentroidModel(
     val cents: Array[Array[Double]],
     val cnrms: Array[Double],
     val ids: Array[Long],
-    val cosine: Boolean) extends Serializable {
+    val cosine: Boolean) extends CentroidKernel {
 
   def dataType: DataType =
-    if (cosine)
-      ArrayType(StructType(Seq(
-        StructField("sim", DoubleType, nullable = false),
-        StructField("negcid", LongType, nullable = false))), containsNull = false)
-    else
-      ArrayType(StructType(Seq(
-        StructField("d2", DoubleType, nullable = false),
-        StructField("k", IntegerType, nullable = false))), containsNull = false)
+    if (cosine) CentroidKernel.cosineType else CentroidKernel.l2Type
 
-  // Mirrors Spark RoundBase on DoubleType: NaN/Infinity pass through,
-  // else BigDecimal.valueOf(v).setScale(9, HALF_UP).
-  private def round9(v: Double): Double =
-    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** (sim, -cid) per centroid [cosine] or (d², k) per centroid [L2]. */
-  def compute(emb: ArrayData, nrm: Double): ArrayData = {
-    val k = cents.length
-    val out = new Array[Any](k)
-    val n = emb.numElements()
+  def compute(embA: ArrayData, nrm: Double): ArrayData = {
+    val emb = embA.toDoubleArray()
     // v·v is centroid-independent; computed once per row (L2 mode).
-    var vv = 0.0
-    if (!cosine) { var i = 0; while (i < n) { val x = emb.getDouble(i); vv += x * x; i += 1 } }
+    val vv = if (cosine) 0.0 else dot(emb, emb)
+    val out = new Array[Any](cents.length)
     var c = 0
-    while (c < k) {
-      val cv = cents(c)
-      val m = math.min(n, cv.length)
-      var vc = 0.0
-      var i = 0
-      while (i < m) { vc += emb.getDouble(i) * cv(i); i += 1 }
+    while (c < cents.length) {
+      val vc = dot(emb, cents(c))
       out(c) =
         if (cosine)
           org.apache.spark.sql.catalyst.InternalRow(
             round9(vc / (nrm * cnrms(c))), -ids(c))
-        else {
-          var cc = 0.0
-          i = 0
-          while (i < cv.length) { cc += cv(i) * cv(i); i += 1 }
-          org.apache.spark.sql.catalyst.InternalRow((vv + cc) - vc * 2.0, ids(c).toInt)
-        }
+        else
+          org.apache.spark.sql.catalyst.InternalRow(
+            (vv + dot(cents(c), cents(c))) - vc * 2.0, ids(c).toInt)
       c += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-/** Score a row's embedding against every centroid of a [[CentroidModel]]
-  * in one expression node. `right` is the precomputed row norm (cosine
-  * mode) or any double placeholder (L2 mode ignores it). Generated code
-  * is a single kernel call on the reference object, so the surrounding
-  * projection stays inside whole-stage codegen. */
-case class CentroidScores(left: Expression, right: Expression, model: CentroidModel)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_centroid_scores expects (array<double>, double), got " +
-            s"${l.simpleString} / ${r.simpleString}")
-    }
-  override def dataType: DataType = model.dataType
-  override def prettyName: String = "graft_centroid_scores"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    model.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidModel", model, classOf[CentroidModel].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = $ref.compute($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CentroidScores =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Two-level coarse quantizer (IVF-within-IVF): K1 = ⌈√K2⌉ first-stage
@@ -186,24 +166,9 @@ case class CentroidScores(left: Expression, right: Expression, model: CentroidMo
 final class TwoLevelCentroidModel(
     l1: Array[Array[Double]], l1nrms: Array[Double], l1ids: Array[Long],
     l2: Array[Array[Double]], l2nrms: Array[Double], l2ids: Array[Long])
-    extends Serializable {
+    extends CentroidKernel {
 
-  def dataType: DataType =
-    ArrayType(StructType(Seq(
-      StructField("sim", DoubleType, nullable = false),
-      StructField("negcid", LongType, nullable = false))), containsNull = false)
-
-  private def round9(v: Double): Double =
-    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private def dotArr(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var acc = 0.0; var i = 0
-    while (i < n) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
+  def dataType: DataType = CentroidKernel.cosineType
 
   /** group(g) = indexes into l2 of the lists routed to first-stage
     * centroid g — the one-time K2×K1 routing pass. */
@@ -214,7 +179,7 @@ final class TwoLevelCentroidModel(
       var best = -1; var bestSim = 0.0
       var i = 0
       while (i < l1.length) {
-        val sim = round9(dotArr(l2(j), l1(i)) / (l2nrms(j) * l1nrms(i)))
+        val sim = round9(dot(l2(j), l1(i)) / (l2nrms(j) * l1nrms(i)))
         // higher sim wins; ties to the LOWEST l1 cid (ids are sorted
         // ascending, so first-seen strictly-greater is exactly that)
         if (best < 0 || sim > bestSim) { best = i; bestSim = sim }
@@ -233,15 +198,12 @@ final class TwoLevelCentroidModel(
     l1.length + (if (groups.isEmpty) 0 else groups.map(_.length).max)
 
   def compute(embA: ArrayData, nrm: Double): ArrayData = {
-    val n = embA.numElements()
-    val emb = new Array[Double](n)
-    var i = 0
-    while (i < n) { emb(i) = embA.getDouble(i); i += 1 }
+    val emb = embA.toDoubleArray()
     // stage 1: nearest first-stage centroid (round-9 sim, lowest cid)
     var g = -1; var bestSim = 0.0
-    i = 0
+    var i = 0
     while (i < l1.length) {
-      val sim = round9(dotArr(emb, l1(i)) / (nrm * l1nrms(i)))
+      val sim = round9(dot(emb, l1(i)) / (nrm * l1nrms(i)))
       if (g < 0 || sim > bestSim) { g = i; bestSim = sim }
       i += 1
     }
@@ -252,17 +214,21 @@ final class TwoLevelCentroidModel(
     while (m < members.length) {
       val j = members(m)
       out(m) = org.apache.spark.sql.catalyst.InternalRow(
-        round9(dotArr(emb, l2(j)) / (nrm * l2nrms(j))), -l2ids(j))
+        round9(dot(emb, l2(j)) / (nrm * l2nrms(j))), -l2ids(j))
       m += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }
 
-/** [[CentroidScores]]' two-level sibling — same one-reference-object
-  * delivery, so the plan stays O(1) in BOTH centroid counts. */
-case class TwoLevelCentroidScores(left: Expression, right: Expression,
-    model: TwoLevelCentroidModel) extends BinaryExpression {
+/** Score a row's embedding against every centroid of a
+  * [[CentroidKernel]] in one expression node. `right` is the
+  * precomputed row norm (cosine models) or any double placeholder (L2
+  * ignores it). Generated code is a single kernel call on the
+  * reference object, so the surrounding projection stays inside
+  * whole-stage codegen. */
+case class CentroidScores(left: Expression, right: Expression, model: CentroidKernel)
+    extends BinaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -270,24 +236,23 @@ case class TwoLevelCentroidScores(left: Expression, right: Expression,
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_centroid_scores2 expects (array<double>, double), got " +
+          s"graft_centroid_scores expects (array<double>, double), got " +
             s"${l.simpleString} / ${r.simpleString}")
     }
   override def dataType: DataType = model.dataType
-  override def prettyName: String = "graft_centroid_scores2"
+  override def prettyName: String = "graft_centroid_scores"
 
   override def nullSafeEval(a: Any, b: Any): Any =
     model.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("twoLevelModel", model,
-      classOf[TwoLevelCentroidModel].getName)
+    val ref = ctx.addReferenceObj("centroidModel", model, classOf[CentroidKernel].getName)
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = $ref.compute($a, $b);")
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TwoLevelCentroidScores =
+      newLeft: Expression, newRight: Expression): CentroidScores =
     copy(left = newLeft, right = newRight)
 }
 
@@ -322,12 +287,12 @@ object VectorExpressions {
     * centroids only (two-stage assignment, one plan node). */
   def twoLevelCentroidCosines(emb: Column, nrm: Column,
       model: TwoLevelCentroidModel): Column =
-    GraftShim.column(TwoLevelCentroidScores(
+    GraftShim.column(CentroidScores(
       GraftShim.expression(emb), GraftShim.expression(nrm), model))
 
   /** array<struct<d2,k>> of exact squared L2 distances vs every centroid
     * ((v·v + c·c) − v·c·2, left-to-right folds) — the k-means assignment
-    * kernel, same one-node delivery. */
+    * and PQ encode kernel, same one-node delivery. */
   def centroidL2(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
     GraftShim.column(CentroidScores(
       GraftShim.expression(v),

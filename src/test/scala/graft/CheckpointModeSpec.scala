@@ -76,7 +76,7 @@ class CheckpointModeSpec extends AnyFunSuite {
     }
   }
 
-  test("src/main reads exactly the four -Dgraft.* properties README lists") {
+  test("src/main reads exactly the two -Dgraft.* properties README lists") {
     // grep-level pin against knob creep: every JVM system property
     // read in main source must have a literal key, and the graft.*
     // keys must be the README's list (graft.checkpoint.dir above is a
@@ -101,8 +101,7 @@ class CheckpointModeSpec extends AnyFunSuite {
         None
       }
     }.toSet
-    assert(keys == Set("graft.explain", "graft.stopwords.files",
-      "graft.unigram.keep", "graft.bpe.rounds"),
+    assert(keys == Set("graft.explain", "graft.stopwords.files"),
       s"-Dgraft.* properties read in src/main: ${keys.toSeq.sorted}")
   }
 

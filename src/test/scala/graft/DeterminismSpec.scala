@@ -267,6 +267,11 @@ class DeterminismSpec extends AnyFunSuite {
     // min-plus folds over round-9 cost constants (no per-step
     // rounding), exact-count prune grid, smoothed single-round ratios
     "q_unigram_lm", "q_unigram_encode",
+    // both tokenizer trainers are plain functions of the corpus, so
+    // every run here retrains under its own layout: the BPE argmax
+    // rounds are corpus-global total orders (count desc, pair), and
+    // the bake-off is exact integer sums of both encoders
+    "q_bpe_merges", "q_tokenizer_compare",
     // novelty audit: md5 split + distinct gram sets + exact counts —
     // a layout term means a distinct leaked partition-local rows
     "q_ngram_coverage",

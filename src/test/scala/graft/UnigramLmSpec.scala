@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.TextAnalytics
 import TestSpark.spark
 
 /** q_unigram_lm — the Viterbi-EM unigram tokenizer trainer (VERDICT
@@ -12,20 +14,20 @@ import TestSpark.spark
   * char-conservation law of a Viterbi segmentation (every char of
   * every word is covered by exactly one piece, so Σ cnt·len over the
   * piece table equals the corpus' weighted char total — an integer
-  * identity, not an approximation), and the schedule knob itself at a
-  * second setting.
+  * identity, not an approximation), and the trainers' schedule and
+  * round-count parameters at a second value.
   */
 class UnigramLmSpec extends AnyFunSuite {
 
   // (rnd, piece, len, cnt, p, kept)
-  private def trainRows(): Array[(Long, String, Long, Long, Double, Boolean)] =
-    graft.operators.TextAnalytics
-      .queries("q_unigram_lm")(spark, TestSpark.sf)
-      .collect()
+  private def trainRows(df: DataFrame)
+      : Array[(Long, String, Long, Long, Double, Boolean)] =
+    df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getBoolean(5)))
 
-  private lazy val rows = trainRows()
+  private lazy val rows =
+    trainRows(TextAnalytics.queries("q_unigram_lm")(spark, TestSpark.sf))
 
   // default schedule 24 -> 16: prune rounds 1..2, final report round 3
   private val SCHED = Seq(24L, 16L)
@@ -95,7 +97,7 @@ class UnigramLmSpec extends AnyFunSuite {
   }
 
   test("encode = train: q_unigram_encode piece totals equal the final round's counts exactly") {
-    val enc = graft.operators.TextAnalytics
+    val enc = TextAnalytics
       .queries("q_unigram_encode")(spark, TestSpark.sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -113,40 +115,34 @@ class UnigramLmSpec extends AnyFunSuite {
     TestSpark.housekeeping()
   }
 
-  test("graft.unigram.keep: a second schedule retrains in lockstep on both engines (VERDICT r13 item 5)") {
-    val old = sys.props.get("graft.unigram.keep")
-    try {
-      sys.props("graft.unigram.keep") = "16"
-      val alt = trainRows()
-      // single-cut legacy schedule: rounds 1 (prune at 16) + 2 (final)
-      assert(alt.map(_._1).distinct.sorted.toSeq == Seq(1L, 2L),
-        s"rounds under schedule [16]: ${alt.map(_._1).distinct.toSeq}")
-      assert(alt.count(r => r._1 == 1L && r._3 == 2L && r._6) <= 16)
-      // the conservation law is schedule-independent
-      Seq(1L, 2L).foreach { rnd =>
-        val covered = alt.filter(_._1 == rnd).map(r => r._4 * r._3).sum
-        assert(covered == weightedChars,
-          s"schedule [16] round $rnd covers $covered of $weightedChars")
-      }
-      // and the generated oracle re-reads the schedule: exactly one
-      // prune round (ukept1, no ukept2) at width 16
-      val sql = graft.operators.TextAnalytics.oracles("q_unigram_lm")
-      assert(sql.contains("rk <= 16") && sql.contains("ukept1") &&
-        !sql.contains("ukept2"), "oracle SQL not in lockstep with the schedule")
-      // invalid schedules fail loudly
-      sys.props("graft.unigram.keep") = "16,24"
-      intercept[IllegalArgumentException] { trainRows() }
-    } finally {
-      old match {
-        case Some(v) => sys.props("graft.unigram.keep") = v
-        case None => sys.props -= "graft.unigram.keep"
-      }
+  test("keep schedule [16]: a second schedule retrains in lockstep on both engines (VERDICT r13 item 5)") {
+    val alt = trainRows(TextAnalytics.unigramLm(spark, TestSpark.sf, Seq(16)))
+    // single-cut legacy schedule: rounds 1 (prune at 16) + 2 (final)
+    assert(alt.map(_._1).distinct.sorted.toSeq == Seq(1L, 2L),
+      s"rounds under schedule [16]: ${alt.map(_._1).distinct.toSeq}")
+    assert(alt.count(r => r._1 == 1L && r._3 == 2L && r._6) <= 16)
+    // the conservation law is schedule-independent
+    Seq(1L, 2L).foreach { rnd =>
+      val covered = alt.filter(_._1 == rnd).map(r => r._4 * r._3).sum
+      assert(covered == weightedChars,
+        s"schedule [16] round $rnd covers $covered of $weightedChars")
+    }
+    // and the generated oracle takes the same schedule: exactly one
+    // prune round (ukept1, no ukept2) at width 16
+    val sql = TextAnalytics.unigramLmOracle(Seq(16))
+    assert(sql.contains("rk <= 16") && sql.contains("ukept1") &&
+      !sql.contains("ukept2"), "oracle SQL not in lockstep with the schedule")
+    assert(TextAnalytics.oracles("q_unigram_lm") ==
+      TextAnalytics.unigramLmOracle(SCHED.map(_.toInt)))
+    // invalid schedules fail loudly
+    intercept[IllegalArgumentException] {
+      TextAnalytics.unigramLm(spark, TestSpark.sf, Seq(16, 24))
     }
     TestSpark.housekeeping()
   }
 
   test("q_tokenizer_compare: bake-off totals are the encode identity; winner non-degenerate (r14)") {
-    val cmp = graft.operators.TextAnalytics
+    val cmp = TextAnalytics
       .queries("q_tokenizer_compare")(spark, TestSpark.sf)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -154,7 +150,7 @@ class UnigramLmSpec extends AnyFunSuite {
     assert(cmp.nonEmpty)
     // the unigram column counts the SAME Viterbi segmentations as
     // q_unigram_encode — their corpus totals are an integer identity
-    val encTotal = graft.operators.TextAnalytics
+    val encTotal = TextAnalytics
       .queries("q_unigram_encode")(spark, TestSpark.sf)
       .collect().map(_.getLong(2)).sum
     assert(cmp.map(_._4).sum == encTotal,
@@ -172,52 +168,44 @@ class UnigramLmSpec extends AnyFunSuite {
     TestSpark.housekeeping()
   }
 
-  test("graft.bpe.rounds: a deeper merge table trains in lockstep on both engines (VERDICT r14 item 3)") {
-    val old = sys.props.get("graft.bpe.rounds")
-    def merges(): Array[(Long, String, String, Long)] =
-      graft.operators.TextAnalytics
-        .queries("q_bpe_merges")(spark, TestSpark.sf)
+  test("6 BPE rounds: a deeper merge table trains in lockstep on both engines (VERDICT r14 item 3)") {
+    def merges(rounds: Int): Array[(Long, String, String, Long)] =
+      TextAnalytics.bpeMerges(spark, TestSpark.sf, rounds)
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    def bpeTotal(): Long = graft.operators.TextAnalytics
-      .queries("q_tokenizer_fertility")(spark, TestSpark.sf)
-      .collect().map(_.getLong(2)).sum
-    try {
-      val base = bpeTotal() // default 3 merges
-      sys.props("graft.bpe.rounds") = "6"
-      val m = merges()
-      assert(m.map(_._1).toSeq == (1L to 6L),
-        s"rounds under graft.bpe.rounds=6: ${m.map(_._1).toSeq}")
-      m.foreach { case (_, pair, merged, _) =>
-        assert(merged == pair.replace(" ", ""))
-      }
-      // max pair count is weakly non-increasing across merge rounds:
-      // a new pair (x, lr) can only occur where (l r) just merged, so
-      // its count is bounded by the merged pair's; old pairs only
-      // lose occurrences
-      m.map(_._4).toSeq.sliding(2).foreach { case Seq(a, b) =>
-        assert(b <= a, s"pair counts increased: ${m.map(_._4).toSeq}")
-      }
-      // more merges can only shrink (or hold) the encoded token total
-      assert(bpeTotal() <= base,
-        "6-merge encode produced more tokens than 3-merge")
-      // the generated oracle re-reads the knob: 6 argmax CTEs, not 7
-      val sql = graft.operators.TextAnalytics.oracles("q_bpe_merges")
-      assert(sql.contains("b6 ") && !sql.contains("b7"),
-        "oracle SQL not in lockstep with graft.bpe.rounds")
-      sys.props("graft.bpe.rounds") = "0"
-      intercept[IllegalArgumentException] { merges() }
-    } finally {
-      old match {
-        case Some(v) => sys.props("graft.bpe.rounds") = v
-        case None => sys.props -= "graft.bpe.rounds"
-      }
+    def bpeTotal(fertility: DataFrame): Long =
+      fertility.collect().map(_.getLong(2)).sum
+    // the registry's 3 merges
+    val base = bpeTotal(
+      TextAnalytics.queries("q_tokenizer_fertility")(spark, TestSpark.sf))
+    val m = merges(6)
+    assert(m.map(_._1).toSeq == (1L to 6L),
+      s"rounds under 6 BPE rounds: ${m.map(_._1).toSeq}")
+    m.foreach { case (_, pair, merged, _) =>
+      assert(merged == pair.replace(" ", ""))
     }
+    // max pair count is weakly non-increasing across merge rounds:
+    // a new pair (x, lr) can only occur where (l r) just merged, so
+    // its count is bounded by the merged pair's; old pairs only
+    // lose occurrences
+    m.map(_._4).toSeq.sliding(2).foreach { case Seq(a, b) =>
+      assert(b <= a, s"pair counts increased: ${m.map(_._4).toSeq}")
+    }
+    // more merges can only shrink (or hold) the encoded token total
+    assert(bpeTotal(TextAnalytics.tokenizerFertility(spark, TestSpark.sf, 6)) <= base,
+      "6-merge encode produced more tokens than 3-merge")
+    // the generated oracle takes the same count: 6 argmax CTEs, not 7
+    val sql = TextAnalytics.bpeMergesOracle(6)
+    assert(sql.contains("b6 ") && !sql.contains("b7"),
+      "oracle SQL not in lockstep with the BPE round count")
+    assert(TextAnalytics.oracles("q_bpe_merges") ==
+      TextAnalytics.bpeMergesOracle(3))
+    intercept[IllegalArgumentException] { merges(0) }
     TestSpark.housekeeping()
   }
 
   test("q_bpe_vocab_curve: char baseline at depth 0, non-increasing fertility, full depth = the fertility report total (r15)") {
-    val curve = graft.operators.TextAnalytics
+    val curve = TextAnalytics
       .queries("q_bpe_vocab_curve")(spark, TestSpark.sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -233,7 +221,7 @@ class UnigramLmSpec extends AnyFunSuite {
     }
     // the full-depth point is exactly the fertility report's corpus
     // total (one encode kernel, two groupings)
-    val fert = graft.operators.TextAnalytics
+    val fert = TextAnalytics
       .queries("q_tokenizer_fertility")(spark, TestSpark.sf)
       .collect().map(_.getLong(2)).sum
     assert(curve.last._2 == fert,
@@ -248,7 +236,7 @@ class UnigramLmSpec extends AnyFunSuite {
     val docs = Tables(spark, TestSpark.sf, "documents")
       .select(col("doc_id"), col("text"))
     val e = intercept[IllegalArgumentException] {
-      graft.operators.TextAnalytics.unigramEncodeFrame(Map.empty)(docs)
+      TextAnalytics.unigramEncodeFrame(Map.empty)(docs)
     }
     assert(e.getMessage.contains("trained cost map"))
   }
