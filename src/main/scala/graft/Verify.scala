@@ -16,15 +16,15 @@ import java.nio.file.{Files, Paths}
   * dev-loop speed knob. Safety of the lanes: every query
   * is partition-count invariant by gate (DeterminismSpec), writes to
   * its own outDir subdir, and no query registers session-global named
-  * state (no temp views / listeners) or JVM-global memo.
-  * Housekeeping moves from per-query to a barrier
-  * between WAVES of queries (an unpersist landing mid-flight on a
-  * sibling's cached frame is correctness-safe — Spark recomputes — so
-  * the barrier is about reclaiming state often enough, not about
-  * safety). The q_stream_* drains keep the sequential lane +
-  * per-query housekeeping: each stages files, drains a real stream
-  * and (restart gates) plants a mid-drain death — semantics that are
-  * exactly today's under one-at-a-time execution.
+  * state (no temp views / listeners) or JVM-global memo. Housekeeping
+  * moves from per-query to a barrier between WAVES of queries (an
+  * unpersist landing mid-flight on a sibling's cached frame is
+  * correctness-safe — Spark recomputes — so the barrier is about
+  * reclaiming state often enough, not about safety). The q_stream_*
+  * drains keep the sequential lane + per-query housekeeping: each
+  * stages files, drains a real stream and (restart gates) plants a
+  * mid-drain death — semantics that are exactly today's under
+  * one-at-a-time execution.
   *
   * MEMORY ENVELOPE (ADVICE r11): with wave-barrier housekeeping, up
   * to a full 32-query wave of persisted frames can accumulate before

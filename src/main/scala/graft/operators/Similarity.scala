@@ -358,12 +358,12 @@ object Similarity extends graft.QueryPack {
     // the r8 verdict's named watch item. Routing is a one-time
     // K2 × K1 pass inside the model object; rows score the K1 heads
     // then ONLY their group's lists (a TwoLevelCentroidModel in one
-    // CentroidScores codegen node, plan size independent of both K's). Same sampled
-    // centroids, same round-9/lowest-cid argmax discipline at every
-    // stage, so the whole two-stage assignment restates in plain SQL
-    // and the oracle stays exact. Queries probe the top-2 lists
-    // WITHIN their routed group (the two-level probe path); the tail
-    // is [[ivfProbeTop3]], shared with q_ann_ivf.
+    // CentroidScores codegen node, plan size independent of both
+    // K's). Same sampled centroids, same round-9/lowest-cid argmax
+    // discipline at every stage, so the whole two-stage assignment
+    // restates in plain SQL and the oracle stays exact. Queries probe
+    // the top-2 lists WITHIN their routed group (the two-level probe
+    // path); the tail is [[ivfProbeTop3]], shared with q_ann_ivf.
     "q_ann_ivf2" -> ((s, d) => {
       val e = loadEmbeddings(s, d)
       val k2 = sqrtK(Tables(s, d, "embeddings").count())

@@ -1200,8 +1200,8 @@ object StreamingGate extends graft.QueryPack {
       val root = freshDir("q_stream_unigram_encode")
       val out = root + "/out"
       // train BEFORE the drain: the stream only applies — the map is
-      // captured in the foreachBatch closure, so the drain
-      // can never encode under a model trained for another dataset.
+      // captured in the foreachBatch closure, so the drain can never
+      // encode under a model trained for another dataset.
       // Training (collect-bounded EM driver loop) and the 3-file
       // staging (scan+write jobs) are independent setup chains —
       // overlapped (Tables.inParallel, guide §2.6); mtimes are pinned

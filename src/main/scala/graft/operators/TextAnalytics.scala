@@ -1976,11 +1976,11 @@ object TextAnalytics extends graft.QueryPack {
     // document is Viterbi-segmented and its piece count reported
     // next to the whitespace token count. Learn is the corpus-pass
     // trainer above (the trained model is vocabulary-sized, ~40
-    // rows); APPLY is a
-    // pure narrow map with the cost table inlined as a literal map —
-    // at 100 TB the learned vocab broadcasts and rows never shuffle
-    // to tokenize, exactly the q_tokenize_bpe posture. Counts are
-    // exact integers (the min-plus fold; no per-step rounding).
+    // rows); APPLY is a pure narrow map with the cost table inlined as
+    // a literal map — at 100 TB the learned vocab broadcasts and rows
+    // never shuffle to tokenize, exactly the q_tokenize_bpe posture.
+    // Counts are exact integers (the min-plus fold; no per-step
+    // rounding).
     "q_unigram_encode" -> ((s, d) => {
       // the model trains on the FULL corpus, then apply is a pure
       // narrow map — one definition, batch + drain #30
@@ -1995,12 +1995,11 @@ object TextAnalytics extends graft.QueryPack {
     // between merge-based and probabilistic vocabularies from measured
     // output"; this is that choice, measured): per source, the SAME
     // corpus encoded under BOTH trained tokenizers — the
-    // BPE_ROUNDS-merge BPE table and the schedule-pruned
-    // unigram LM — with each family's
-    // fertility (pieces per whitespace word) and the per-source winner
-    // (fewer pieces = more content per token budget; ties explicit).
-    // Both models are corpus-pass trainers; the encode is one
-    // pass over DISTINCT words (the q_unigram_encode device — both
+    // BPE_ROUNDS-merge BPE table and the schedule-pruned unigram LM —
+    // with each family's fertility (pieces per whitespace word) and
+    // the per-source winner (fewer pieces = more content per token
+    // budget; ties explicit). Both models are corpus-pass trainers;
+    // the encode is one pass over DISTINCT words (the q_unigram_encode device — both
     // count kernels are interpreted folds, so per-occurrence
     // evaluation pays vocabulary×occurrence instead of vocabulary)
     // joined back to occurrences. At 100 TB both models broadcast as
