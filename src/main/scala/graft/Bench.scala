@@ -29,6 +29,11 @@ object Bench {
       case None      => SparkEntry.queries
     }
     val failed = scala.collection.mutable.ListBuffer[String]()
+    // live threads and used heap on the driver after each query's last
+    // rep and its housekeeping: a per-query leak shows as a climb here
+    val driver = scala.collection.mutable.LinkedHashMap[String, (Int, Double)]()
+    val threadBean = java.lang.management.ManagementFactory.getThreadMXBean
+    val memBean = java.lang.management.ManagementFactory.getMemoryMXBean
     val results = selected.map { case (name, fn) =>
       // Some(seconds) on success, None on failure.
       def once(): Option[Double] = {
@@ -40,8 +45,11 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-24s ${dt}%8.2f s  ok=$ok  threads=${Thread.activeCount()}  heapMB=${(Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) / 1024 / 1024}")
         housekeeping()
+        val threads = threadBean.getThreadCount
+        val heapMb = memBean.getHeapMemoryUsage.getUsed / 1048576.0
+        driver(name) = (threads, heapMb)
+        System.err.println(f"[bench] $name%-24s ${dt}%8.2f s  ok=$ok  threads=$threads  heapMB=$heapMb%.1f")
         if (ok) Some(dt) else None
       }
       // A measurement far above the sub-second norm MAY be transient
@@ -76,6 +84,9 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = if (good.nonEmpty) good.values.sum else 0.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val driverJson = driver.map { case (k, (t, h)) =>
+      "\"" + k + "\":{\"threads\":" + t + ",\"heap_mb\":" + fmt(h) + "}"
+    }.mkString("{", ",", "}")
     // host-tenancy evidence in every archived bench JSON (VERDICT r12
     // item 7): 1/5/15-min load averages + cumulative steal ticks, so
     // future band attributions are mechanical, not forensic. steal =
@@ -92,7 +103,7 @@ object Bench {
     } catch { case _: Exception =>
       s""""loadavg_start":[$loadStart],"loadavg":[],"steal_ticks":-1""" }
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,$hostLoad,"queries":${qsJson(good)},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,$hostLoad,"queries":${qsJson(good)},"failed":$failedJson,"driver_after_housekeeping":$driverJson,"sf":"$sfDir"}"""
     // The harness stores only the LAST ~2000 chars of stdout: the full
     // per-query line alone overflows that window and loses the total
     // (r2/r3). So: full line first (and to bench_full.json for offline

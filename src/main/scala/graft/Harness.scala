@@ -9,6 +9,11 @@ import org.apache.spark.sql.SparkSession
   * place to fix. */
 object Harness {
 
+  /** Live status-store limits of [[session]]: jobs, stages and SQL
+    * executions kept, and tasks kept per stage. */
+  private val Retained = 10L
+  private val RetainedTasks = 100L
+
   /** The one local session shape every main uses: graft extensions,
     * `local[SPARK_GRAFT_CPUS]` (default 32), shuffle partitions =
     * cpus (NOT the 200 default — see SURVEY §9 config row), AQE with
@@ -33,6 +38,14 @@ object Harness {
     * versions write the same bytes and `.crc` files and fork none. Set
     * on the builder so the SparkContext's Hadoop conf carries them
     * before the first `FileSystem` for `file://` is created and cached.
+    *
+    * The live status store keeps [[Retained]] jobs, stages and SQL
+    * executions (tasks per stage: [[RetainedTasks]]). With the UI off
+    * Spark still records every job, stage, task and SQL execution
+    * there, each execution with its formatted plan text, and by default
+    * keeps 1,000 jobs and 1,000 executions, which no graft run reaches;
+    * no graft main reads the store. The limits are read when the
+    * context is created, hence the builder.
     * @param warm run one tiny job to absorb session/codegen/committer
     *   init, so timed queries measure the queries (Bench-style mains) */
   def session(warm: Boolean = false): SparkSession = {
@@ -45,6 +58,10 @@ object Harness {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.ui.retainedJobs", Retained)
+      .config("spark.ui.retainedStages", Retained)
+      .config("spark.ui.retainedTasks", RetainedTasks)
+      .config("spark.sql.ui.retainedExecutions", Retained)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config(Fs.nioLocalConf)
       .getOrCreate()
@@ -63,11 +80,18 @@ object Harness {
     * ContextCleaner a GC so accumulated broadcast/shuffle state is
     * actually released — without this, driver-side state from ~25+
     * queries in one JVM degrades later queries by an order of
-    * magnitude (observed at sf0.1; thread counts growing ~10/query
-    * are the symptom). The same steps for every main: no query keeps
-    * JVM-side state between runs (the tokenizer trainers are plain
-    * functions of their inputs), so a timed rep and a Verify run both
-    * pay each query's full cost. */
+    * magnitude (observed at sf0.1). The live thread count does not
+    * track it. A census of thread names over repeated etl_batch passes
+    * found two kinds of pool behind its growth. The drains' state
+    * stores each kept a 4-thread `ChecksumCheckpointFileManager` pool
+    * (1,024 of 1,870 live threads mid-run); a drain now closes its
+    * stores on exit. The `shuffle-exchange`, `ResultQueryStage` and
+    * `broadcast-exchange` pools are Spark's core = max pools with a
+    * 60 s keepalive, so their threads sit idle and die on their own.
+    * The same steps for every main: no query keeps JVM-side state
+    * between runs (the tokenizer trainers are plain functions of their
+    * inputs), so a timed rep and a Verify run both pay each query's
+    * full cost. */
   def housekeeping(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

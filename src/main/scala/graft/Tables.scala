@@ -130,7 +130,10 @@ object Tables {
     *
     * For flat layouts only: a path with `k=v` partition directories,
     * or with no data file at all, falls back to Spark's own inference
-    * (and its partition discovery or its error). */
+    * (and its partition discovery or its error). The footer comes only
+    * from a file Spark itself reads, never from a plain subdir's files,
+    * which Spark skips: a dir whose files sit only there must fail
+    * Spark's inference, not read as 0 rows under a borrowed schema. */
   def parquet(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
@@ -147,19 +150,24 @@ object Tables {
       val n = p.getName
       (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     }
-    def entries(st: FileStatus): Seq[FileStatus] =
-      st +: (if (!st.isDirectory) Nil
-        else fs.listStatus(st.getPath).toSeq
-          .filterNot(f => hidden(f.getPath)).flatMap(entries))
+    def children(st: FileStatus): Seq[FileStatus] =
+      fs.listStatus(st.getPath).toSeq.filterNot(f => hidden(f.getPath))
+    def partitioned(st: FileStatus): Boolean = st.isDirectory &&
+      (st.getPath.getName.contains("=") || children(st).exists(partitioned))
+    // what Spark reads of an unpartitioned root: the root if it is a
+    // file, else the root dir's own files
     val (dirs, files) = Option(fs.globStatus(root)).map(_.toSeq)
-      .getOrElse(Nil).flatMap(entries).partition(_.isDirectory)
-    if (dirs.exists(_.getPath.getName.contains("="))) None // partitioned
-    else files.minByOption(_.getPath.toString).map { first =>
-      val meta = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(first, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
+      .getOrElse(Nil)
+      .flatMap(st => if (st.isDirectory) children(st) else Seq(st))
+      .partition(_.isDirectory)
+    if (dirs.exists(partitioned)) None
+    else files.filter(_.getLen > 0)
+      .minByOption(_.getPath.toString).map { first =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(first, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
   }
 }

@@ -123,7 +123,8 @@ object StreamingGate extends graft.QueryPack {
     * they run no schema-inference job. What remains is the trigger
     * lifecycle itself: stream planning, file index, the data batch,
     * the watermark-finalize batch and the sink read-back. At
-    * deployment scale it amortizes: it is per-trigger, not per-row. */
+    * deployment scale it amortizes: it is per-trigger, not per-row.
+    * A drain releases its state stores on exit ([[drainImpl]]). */
   private def drain(s: SparkSession, stream: DataFrame,
       mode: String)(sink: (DataFrame, Long) => Unit): Unit =
     drainImpl(s, stream, mode, None)(sink)
@@ -149,6 +150,13 @@ object StreamingGate extends graft.QueryPack {
       mode: String, ckpt: String)(sink: (DataFrame, Long) => Unit): Unit =
     drainImpl(s, stream, mode, Some(ckpt))(sink)
 
+  /** The one `.start()` of the drains. On exit, whether the query
+    * finished or died, it closes the state stores this run loaded
+    * (`GraftShim.closeStateStores`). Spark unloads a stopped query's
+    * providers only in its 60 s maintenance pass; until then each one
+    * keeps a 4-thread checksum file-manager pool and its last two
+    * state-map versions, so every q_stream_window drain left 8
+    * providers and 32 threads behind on the driver. */
   private def drainImpl(s: SparkSession, stream: DataFrame,
       mode: String, ckpt: Option[String])(
       sink: (DataFrame, Long) => Unit): Unit = {
@@ -161,7 +169,8 @@ object StreamingGate extends graft.QueryPack {
       val q = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
         .foreachBatch(sink)
         .start()
-      q.awaitTermination()
+      try q.awaitTermination()
+      finally org.apache.spark.sql.graftshim.GraftShim.closeStateStores(q)
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

@@ -33,4 +33,40 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** The state-store providers a finished streaming query loaded in
+    * this JVM: one per stateful operator × partition × store name of
+    * its last micro-batch's plan, keyed by the query's run id. Empty
+    * for a query that never planned a batch. */
+  def stateProviders(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[org.apache.spark.sql.execution.streaming.state.StateStoreProviderId] = {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+    import org.apache.spark.sql.execution.streaming.state.StateStoreProviderId
+    val exec = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution
+    if (exec == null) Nil
+    else exec.executedPlan.collect { case w: StateStoreWriter => w }.flatMap { w =>
+      val info = w.getStateInfo
+      for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+        yield StateStoreProviderId(info, p, name)
+    }
+  }
+
+  /** Unload and close a finished query's state-store providers
+    * ([[stateProviders]]). Closing stops each HDFS provider's checksum
+    * file-manager pool (4 threads) and drops its cached state maps;
+    * left loaded, they live until Spark's 60 s maintenance pass. Only
+    * this query's ids are touched, so a concurrently running query
+    * keeps its stores. */
+  def closeStateStores(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    stateProviders(q).foreach(
+      org.apache.spark.sql.execution.streaming.state.StateStore
+        .removeFromLoadedProvidersAndClose(_))
+
+  /** Whether a state-store provider is loaded in this JVM. */
+  def isLoaded(
+      id: org.apache.spark.sql.execution.streaming.state.StateStoreProviderId)
+      : Boolean =
+    org.apache.spark.sql.execution.streaming.state.StateStore.isLoaded(id)
 }

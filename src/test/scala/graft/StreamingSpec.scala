@@ -221,6 +221,62 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.length.toLong == n)
   }
 
+  /** The streaming queries `body` starts, in start order. The started
+    * event reaches session listeners synchronously on the query's own
+    * thread, after the manager has registered the query. */
+  private def queriesStartedBy(body: => Any)
+      : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQuery]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.add(spark.streams.get(e.id))
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try body finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    started.asScala.toSeq
+  }
+
+  /** Live threads of the state stores' checksum file-manager pools. */
+  private def checksumThreads: Int = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith("ChecksumCheckpointFileManager"))
+  }
+
+  test("a finished drain closes its state stores: three q_stream_window drains leave no pool threads") {
+    import org.apache.spark.sql.graftshim.GraftShim
+    val before = checksumThreads
+    val qs = queriesStartedBy((1 to 3).foreach(_ =>
+      graft.operators.StreamingGate.queries("q_stream_window")(
+        spark, TestSpark.sf).collect()))
+    assert(qs.length == 3)
+    val ids = qs.flatMap(GraftShim.stateProviders)
+    assert(ids.length == 3 * 8, ids)
+    assert(ids.forall(!GraftShim.isLoaded(_)), "a drain left a provider loaded")
+    assert(checksumThreads <= before)
+  }
+
+  test("the killed first run of q_stream_restart releases its state stores too") {
+    import org.apache.spark.sql.graftshim.GraftShim
+    val before = checksumThreads
+    val qs = queriesStartedBy(graft.operators.StreamingGate
+      .queries("q_stream_restart")(spark, TestSpark.sf).collect())
+    TestSpark.housekeeping()
+    assert(qs.length == 2)
+    assert(qs.head.exception.nonEmpty, "the first drain did not die")
+    val dying = GraftShim.stateProviders(qs.head)
+    assert(dying.nonEmpty)
+    assert(dying.forall(!GraftShim.isLoaded(_)),
+      "the dying drain left a provider loaded")
+    assert(checksumThreads <= before)
+  }
+
   test("staged replay: k slices drain as exactly k micro-batches, batch i holding slice i") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.Trigger

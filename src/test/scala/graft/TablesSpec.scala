@@ -104,6 +104,23 @@ class TablesSpec extends AnyFunSuite {
       spark.read.parquet(s"$root/parted").schema)
   }
 
+  test("a dir whose files sit only in plain subdirs fails as Spark's read does") {
+    // Spark reads an unpartitioned root's own files only; a footer
+    // borrowed from a subdir would turn its error into 0 rows
+    val root = Files.createTempDirectory("graft_tables_nested").toString
+    val df = spark.range(0, 10).toDF("id")
+    df.write.parquet(s"$root/b0")
+    df.write.parquet(s"$root/b1")
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(root))
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.parquet(spark, root))
+    assert(ours.getCondition == "UNABLE_TO_INFER_SCHEMA")
+    assert(ours.getMessage == theirs.getMessage)
+    // the subdirs themselves read through the footer as before
+    assert(Tables.parquet(spark, s"$root/b0").count() == 10)
+  }
+
   test("Tables reads start no Spark job; a bare spark.read.parquet does") {
     Tables.names.foreach { name =>
       assert(jobsDuring(Tables(spark, TestSpark.sf, name)) == 0, name)
